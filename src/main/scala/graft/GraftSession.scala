@@ -25,14 +25,6 @@ object GraftSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // Broadcast budget: the 10 MB default predates 100 GiB executor
-      // heaps; mid-size build sides (pruned band sets, dimension
-      // aggregates) sitting just above it force shuffles a modern
-      // executor absorbs trivially as broadcasts. Env-tunable so bench
-      // A/Bs run both arms on one jar; the committed default is the
-      // measured winner for this suite (see SCALE_HEADROOM round 12).
-      .config("spark.sql.autoBroadcastJoinThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BCAST", "10485760"))
       .config("spark.sql.session.timeZone", "UTC")
       // Whole-operator Catalyst extensions (grouped top-k strategy) via
       // the standard deploy path — the same line a cluster spark-submit

@@ -179,7 +179,11 @@ object CteAnalytics {
     // A1: OLS slope of ratio vs chip-2 ypos from sufficient moments;
     // scipy stderr formula; slopestdev = stderr·√n
     // (uvis_external_cte_plots.py:193-196). n=2 groups produce an exact
-    // fit with 0/0 stderr → NaN, matching scipy's n−2 = 0 division.
+    // fit with a NaN stderr, matching scipy's n−2 = 0 division; an n=1
+    // group (reachable without clipping — a clip round empties it) has
+    // no slope either, so slope and stderr are both NaN. A zero
+    // denominator becomes NaN before dividing: ANSI mode throws
+    // DIVIDE_BY_ZERO on x/0, even for doubles.
     val m = clipped.groupBy(groups.map(col): _*)
       .agg(count(lit(1)).as("n"),
         sum(col("ypos")).as("sx"), sum(col("ypos") * col("ypos")).as("sxx"),
@@ -189,9 +193,11 @@ object CteAnalytics {
     val sxxc = col("sxx") - col("sx") * col("sx") / dn
     val sxyc = col("sxy") - col("sx") * col("sy") / dn
     val syyc = col("syy") - col("sy") * col("sy") / dn
-    val slope = sxyc / sxxc
+    def nonZero(c: Column) = when(c =!= 0.0, c).otherwise(lit(Double.NaN))
+    val slope = sxyc / nonZero(sxxc)
     // SSE clamped at 0: an exact fit can go −1e-18 in fp and NaN the sqrt.
-    val stderr = sqrt(greatest(lit(0.0), syyc - slope * sxyc) / (dn - 2.0) / sxxc)
+    val stderr = sqrt(greatest(lit(0.0), syyc - slope * sxyc) /
+      nonZero(dn - 2.0) / nonZero(sxxc))
     val fitted = m.select(
       col("imagename_1"), col("imagename_2"), col("aperture"),
       col("bin_lo"), col("bin_hi"),

@@ -41,11 +41,8 @@ object KMeans {
     val spark = embeddings.sparkSession
     val corpus = embeddings.select("vec_id", "embedding")
 
-    // SPARK_GRAFT_KMEANS_FIT=loop forces the distributed loop for
-    // same-jar A/Bs (the engine's knob convention)
-    val forceLoop = sys.env.get("SPARK_GRAFT_KMEANS_FIT").contains("loop")
     val nBound = maxN.getOrElse(corpus.count())
-    if (!forceLoop && nBound <= localThreshold)
+    if (nBound <= localThreshold)
       return fitLocal(corpus, k, iters)
 
     // deterministic seed: the k lowest vec_ids

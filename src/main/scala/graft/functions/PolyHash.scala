@@ -22,7 +22,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Arithmetic contract (oracle-critical): Spark's `split(s, '')` emits one
   * element per CODE POINT (a surrogate pair stays one element) and
-  * `ascii(c)` returns the full code point (AsciiProbe: "a😀b" →
+  * `ascii(c)` returns the full code point ("a😀b" →
   * [97, 128512, 98]), so the fold here decodes UTF-8 code points — exact
   * same int64 sequence, same mod arithmetic. Empty string → 0, null →
   * null, both identical to the expr form. Pinned by PolyHashSpec against
@@ -74,7 +74,7 @@ case class PosChecksum(child: Expression) extends UnaryExpression {
 }
 
 object PolyHash {
-  private final val P = 1000000007L
+  import TextPrims.P
 
   /** The fold, decoding UTF-8 code points in place (valid UTF-8 assumed —
     * Spark string columns are). Called from generated code. */

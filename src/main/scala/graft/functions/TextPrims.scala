@@ -19,7 +19,9 @@ object TextPrims {
   case object SparkD extends Dialect
   case object DuckD extends Dialect
 
-  val P = 1000000007L // hash modulus (fits products with seeds in int64)
+  // hash modulus (fits products with seeds in int64); a constant value
+  // definition, so PolyHash's hot fold still sees a compile-time literal
+  final val P = 1000000007L
 
   /** Characters of `s` as a BIGINT ascii array (empty-safe both dialects;
     * Spark's split('', -1) emits a trailing "" which must be filtered). */
@@ -34,12 +36,9 @@ object TextPrims {
     * expression (registered as `graft_polyhash` by GraftExtensions) — the
     * expr form allocated one string per character plus two lambda
     * dispatches before any arithmetic, on the hottest path of the whole
-    * text family. `SPARK_GRAFT_POLYHASH=expr` restores the old fragment
-    * for same-jar A/Bs; PolyHashSpec pins the two bit-identical. */
+    * text family. PolyHashSpec pins it bit-identical to [[polyhashExpr]]. */
   def polyhash(s: String, d: Dialect): String = d match {
-    case SparkD =>
-      if (sys.env.get("SPARK_GRAFT_POLYHASH").contains("expr")) polyhashExpr(s)
-      else s"graft_polyhash($s)"
+    case SparkD => s"graft_polyhash($s)"
     case DuckD =>
       s"list_reduce(list_prepend(CAST(0 AS BIGINT), ${asciiChars(s, d)}), (acc, c) -> (acc*31 + c) % $P)"
   }
@@ -51,17 +50,15 @@ object TextPrims {
 
   /** Position-weighted checksum: sum of codepoint × 1-based position
     * (t4's pos_checksum). Spark side plans as the native
-    * [[graft.functions.PosChecksum]]; same knob and spec as [[polyhash]]. */
+    * [[graft.functions.PosChecksum]]; same spec as [[polyhash]]. */
   def posChecksum(s: String, d: Dialect): String = d match {
-    case SparkD =>
-      if (sys.env.get("SPARK_GRAFT_POLYHASH").contains("expr"))
-        posChecksumExpr(s)
-      else s"graft_poschecksum($s)"
+    case SparkD => s"graft_poschecksum($s)"
     case DuckD =>
       s"CAST(list_sum(list_transform(${asciiChars(s, d)}, (c, i) -> c * CAST(i AS BIGINT))) AS BIGINT)"
   }
 
-  /** The pre-native Spark fragment for [[posChecksum]]. */
+  /** The pre-native Spark fragment for [[posChecksum]] — the equivalence
+    * baseline PolyHashSpec pins it against. */
   def posChecksumExpr(s: String): String =
     s"aggregate(transform(${asciiChars(s, SparkD)}, " +
       "(c, i) -> c * (CAST(i AS BIGINT) + 1)), CAST(0 AS BIGINT), (acc, x) -> acc + x)"

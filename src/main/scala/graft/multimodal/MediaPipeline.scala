@@ -1,5 +1,6 @@
 package graft.multimodal
 
+import graft.functions.TextPrims.P
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -40,7 +41,6 @@ object MediaPipeline {
   }
 
   val BatchSize = 64
-  private val P = 1000000007L
 
   /** Wrap documents as media rows: payload = utf-8 bytes of `text`
     * (standing in for real blobs), metadata typed. */

@@ -206,24 +206,10 @@ object CorpusCuration extends QueryPack {
     // One narrow aggregate pass replaces two persist+count barriers and
     // the chunk explode that materialized every 50-token chunk array
     // just to count rows (guide §1.2 step 1: don't compute things you
-    // throw away). SPARK_GRAFT_C1_TAIL=stages restores the staged tail
-    // for same-jar A/Bs.
+    // throw away). CorpusCurationSpec pins tailCounts against the stages.
     val (nClean, nSampled, nChunks) =
-      if (sys.env.get("SPARK_GRAFT_C1_TAIL").contains("stages")) {
-        val c = decontamStage(n, heldOut, cfg).persist()
-        val nCl = c.count()
-        n.unpersist(blocking = false)
-        val sm = sampleStage(c, cfg).persist()
-        val nSm = sm.count()
-        c.unpersist(blocking = false)
-        val nCh = chunkStage(sm, cfg).count()
-        sm.unpersist(blocking = false)
-        (nCl, nSm, nCh)
-      } else {
-        val counts = tailCounts(decontamStage(n, heldOut, cfg), cfg)
-        n.unpersist(blocking = false)
-        counts
-      }
+      tailCounts(decontamStage(n, heldOut, cfg), cfg)
+    n.unpersist(blocking = false)
     s.range(1).select(
       lit(nInput).as("n_input"), lit(nQuality).as("n_quality"),
       lit(nExact).as("n_exact"), lit(nNear).as("n_neardedup"),

@@ -130,24 +130,6 @@ object Dedup extends QueryPack {
               col("band.bh").as("bh"))
   }
 
-  /** Exact Jaccard over candidate (left, right) id pairs, shingles joined
-    * from `sigTable`; keeps pairs ≥ `threshold`. */
-  private def exactJaccard(cand: org.apache.spark.sql.DataFrame,
-                           sigTable: org.apache.spark.sql.DataFrame,
-                           left: String, right: String,
-                           threshold: String)
-      : org.apache.spark.sql.DataFrame = {
-    val sh = sigTable.select(col("doc_id"), col("hs"))
-    cand
-      .join(sh.select(col("doc_id").as(left), col("hs").as("hs_a")), left)
-      .join(sh.select(col("doc_id").as(right), col("hs").as("hs_b")), right)
-      .withColumn("inter", TextKernels.intersectCountUdf(col("hs_a"), col("hs_b")))
-      .withColumn("jac",
-        col("inter").cast("double") /
-        (expr("size(hs_a)") + expr("size(hs_b)") - col("inter")).cast("double"))
-      .filter(col("jac") >= expr(threshold))
-  }
-
   /** MinHash-LSH near-duplicate pairs (doc_a < doc_b, exact Jaccard ≥
     * threshold) — d4's machinery as a reusable operator. */
   def nearDupPairs(docs: org.apache.spark.sql.DataFrame,
@@ -173,11 +155,7 @@ object Dedup extends QueryPack {
     * on d4/d10/gr5, and whole-stream chunking at sf1 (2 hot buckets,
     * 916 members max) taxed d21 +45% — the cap must cost nothing where
     * the hazard it bounds is absent. */
-  private[graft] val bucketChunkSize =
-    // measurement knob (A/B instrument, not a tuning surface): the
-    // SCALE_HEADROOM cap-attribution runs disable / resize the cap from
-    // the environment so both arms run the SAME jar
-    sys.env.get("SPARK_GRAFT_CHUNK_CAP").map(_.toInt).getOrElse(512)
+  private[graft] val bucketChunkSize = 512
 
   /** Cap on the driver-side hot-bucket list: 64k (band_id, bh) keys ≈
     * 1 MB broadcast. A corpus with MORE oversized buckets than this
@@ -313,12 +291,6 @@ object Dedup extends QueryPack {
     * the driver probe finds buckets over `chunkSize`, in which case ONLY
     * those split into chunk-pair rows via the broadcast nch left-join
     * (cold buckets ride through with nch = 1). */
-  private[graft] def groupedOneSidedDiag(
-      bands: org.apache.spark.sql.DataFrame,
-      sig: org.apache.spark.sql.DataFrame,
-      chunkSize: Int): org.apache.spark.sql.DataFrame =
-    groupedOneSided(bands, sig, chunkSize)
-
   private def groupedOneSided(bands: org.apache.spark.sql.DataFrame,
                               sig: org.apache.spark.sql.DataFrame,
                               chunkSize: Int)
@@ -858,18 +830,10 @@ object Dedup extends QueryPack {
     * task (same kernel + same threshold gate as d4's verification, so
     * the pair set is bit-identical — DedupBucketLocalSpec pins the
     * kernel against the textbook join, and both audits' oracles hash
-    * the resulting counts). `SPARK_GRAFT_D15_TRUTH=join` switches back
-    * for same-jar A/Bs. */
-  private def sampleTruthPairs(base: org.apache.spark.sql.DataFrame,
-                               threshold: String)
+    * the resulting counts). */
+  private[graft] def sampleTruthPairs(base: org.apache.spark.sql.DataFrame,
+                                      threshold: String)
       : org.apache.spark.sql.DataFrame = {
-    if (sys.env.get("SPARK_GRAFT_D15_TRUTH").contains("join")) {
-      val allPairs = base.select(col("doc_id").as("doc_a")).join(
-        base.select(col("doc_id").as("doc_b")),
-        col("doc_a") < col("doc_b"))
-      return exactJaccard(allPairs, base, "doc_a", "doc_b", threshold)
-        .select("doc_a", "doc_b")
-    }
     // cap 128 (vs the production 512): the sample is a single synthetic
     // bucket of k = 1000 members, and a smaller chunk spreads its C(k,2)
     // checks over ~36 grouped rows instead of 3 — parallelism for a
@@ -878,12 +842,14 @@ object Dedup extends QueryPack {
     // ADVICE r12: fail fast on a non-literal threshold — a silent
     // NegativeInfinity gate would disable kernel-side pruning and emit
     // all C(k,2) pairs before the outer filter (a quiet perf trap)
-    val kernelMin = threshold.toDouble
+    val kernelMin = threshold.toDoubleOption
+    require(kernelMin.isDefined, "sampleTruthPairs accepts only a literal " +
+      s"numeric threshold (the kernel gate needs its value), got: $threshold")
     val oneBucket = base.select(col("doc_id"), lit(0).as("band_id"),
       lit(0L).as("bh"))
     groupedOneSided(oneBucket, base, cap)
       .select(explode(graft.functions.TextKernels.chunkPairJaccardsUdf(
-        col("amem"), col("bmem"), lit(kernelMin), lit(cap * 8))).as("p"))
+        col("amem"), col("bmem"), lit(kernelMin.get), lit(cap * 8))).as("p"))
       .select(col("p._1").as("doc_a"), col("p._2").as("doc_b"),
         col("p._3").as("jac"))
       .filter(col("jac") >= expr(threshold))
@@ -1153,18 +1119,11 @@ object Dedup extends QueryPack {
     * anything past it gets the memory-bounded kernel. */
   private val d6JoinMaxDocs = 65536L
 
+  // adaptive: one metadata-cheap count picks the plan (the Graph hybrid
+  // discipline — both paths are spec-pinned bit-equal)
   private val d6CharJaccard: Q = (s, dir) =>
-    sys.env.get("SPARK_GRAFT_D6_PLAN") match {
-      case Some("join")   => d6Plan(s, dir,
-        splitByBlock = !sys.env.get("SPARK_GRAFT_D6_BAND").contains("nolang"))
-      case Some("kernel") => d6Kernel(s, dir)
-      case _ =>
-        // adaptive: one metadata-cheap count picks the plan (the Graph
-        // hybrid discipline — both paths are spec-pinned bit-equal)
-        val n = Tables.documents(s, dir).count()
-        if (n <= d6JoinMaxDocs) d6Plan(s, dir, splitByBlock = true)
-        else d6Kernel(s, dir)
-    }
+    if (Tables.documents(s, dir).count() <= d6JoinMaxDocs) d6Plan(s, dir)
+    else d6Kernel(s, dir)
 
   /** d6 through the bucket-local kernel discipline (r13): the candidate
     * join carried BOTH 3-gram shingle arrays on every candidate row —
@@ -1174,7 +1133,7 @@ object Dedup extends QueryPack {
     * the same intersect/divide arithmetic runs in-task (d4/d9/d15's
     * plan family) — the jac double is bit-identical (same integer
     * intersect, same IEEE divide), so the hashed output is unchanged;
-    * DedupGuardSpec pins kernel == join on both banding variants.
+    * DedupGuardSpec pins kernel == join.
     * Blocks fold into the bucket key COLLISION-FREE as
     * bh' = blockId·P + bh (bh < P; the block dictionary is
     * dimension-sized, collected once — the engine's established
@@ -1242,18 +1201,17 @@ object Dedup extends QueryPack {
       .orderBy("lang", "source", "doc_a", "doc_b")
   }
 
-  // (lang, source) ride the band key when `splitByBlock` (r13 default):
-  // the query's OUTPUT demands lang/source equality anyway, so splitting
-  // every band bucket by the block key removes exactly the pairs the old
-  // post-join filter would drop — but BEFORE the heavy 3-gram shingle
-  // arrays are fetched for them (guide §2.3: decide with small rows,
-  // move heavy bytes once), and it shrinks the largest buckets
-  // (boilerplate shared across sources collides cross-block). The
-  // post-join filter stays, now redundant; DedupGuardSpec pins both
-  // variants bit-equal. SPARK_GRAFT_D6_BAND=nolang restores the unsplit
-  // banding for same-jar A/Bs.
+  // (lang, source) ride the band key: the query's OUTPUT demands
+  // lang/source equality anyway, so splitting every band bucket by the
+  // block key removes exactly the pairs the old post-join filter would
+  // drop — but BEFORE the heavy 3-gram shingle arrays are fetched for
+  // them (guide §2.3: decide with small rows, move heavy bytes once),
+  // and it shrinks the largest buckets (boilerplate shared across
+  // sources collides cross-block). The post-join filter stays, now
+  // redundant; the oracle's d6Sql bands without the block key, so the
+  // oracle check pins the split against the unsplit banding.
   private[graft] def d6Plan(s: org.apache.spark.sql.SparkSession,
-                            dir: String, splitByBlock: Boolean)
+                            dir: String)
       : org.apache.spark.sql.DataFrame = {
     val base = Tables.documents(s, dir)
       .select(col("doc_id"), col("lang"), col("source"),
@@ -1265,9 +1223,7 @@ object Dedup extends QueryPack {
       expr(s"struct(CAST($i AS INT) AS band_id, " +
            s"(element_at(csig, ${2 * i + 1})*131 + element_at(csig, ${2 * i + 2})) % $P AS bh)")
     }
-    val bandKey: Seq[String] =
-      if (splitByBlock) Seq("band_id", "bh", "lang", "source")
-      else Seq("band_id", "bh")
+    val bandKey = Seq("band_id", "bh", "lang", "source")
     val banded = base
       .select(col("doc_id"), col("lang"), col("source"),
         explode(array(bandCols: _*)).as("band"))
@@ -1354,9 +1310,7 @@ object Dedup extends QueryPack {
     * the prefix key restores ~linear cost because class size never
     * reaches the pairwise stage. Cross-class pairs survive via the
     * representative. */
-  private[graft] def editDistancePairs(
-      docs: org.apache.spark.sql.DataFrame,
-      dpFull: Boolean = sys.env.get("SPARK_GRAFT_D9_DP").contains("full"))
+  private[graft] def editDistancePairs(docs: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     val reps = docs
       .groupBy(md5(substring(col("text"), 1, d9Prefix)).as("_h"))
@@ -1386,48 +1340,31 @@ object Dedup extends QueryPack {
     // Here each bucket's (doc_id, pfx) members cross ONE grouped
     // exchange (chunk-capped like d4/d7/d21), the threshold DP runs
     // in-task via Spark's own UTF8String.levenshteinDistance (values
-    // bit-identical to the join formulation — RankSelectSpec-style pin
-    // in DedupGuardSpec), and only SURVIVORS (dist ≤ gate) reach the
-    // distinct. `SPARK_GRAFT_D9_DP=full` switches back to the r11
-    // textbook plan for same-jar A/Bs.
-    // The scored pairs are persisted either way: the final orderBy's
+    // bit-identical to the join formulation — DedupGuardSpec pins it
+    // against a spec-local copy of the textbook plan), and only
+    // SURVIVORS (dist ≤ gate) reach the distinct.
+    // The scored pairs are persisted: the final orderBy's
     // range-partitioner sampling executes its child once for bounds and
     // again for the exchange, and this child is the expensive part.
-    val scored =
-      if (dpFull) {
-        val cand = banded.as("a").join(banded.as("b"),
-            col("a.band_id") === col("b.band_id") && col("a.bh") === col("b.bh") &&
-            col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-          .distinct()
-        cand
-          .join(base.select(col("doc_id").as("doc_a"), col("pfx").as("pfx_a")), "doc_a")
-          .join(base.select(col("doc_id").as("doc_b"), col("pfx").as("pfx_b")), "doc_b")
-          .withColumn("dist", levenshtein(col("pfx_a"), col("pfx_b")))
-          .filter(col("dist") <= d9Prefix / 2)
-          .select("doc_a", "doc_b", "dist")
-          .persist()
-      } else {
-        val members = base.select(col("doc_id"), col("pfx").as("hs"))
-        // The grouped chunk-pair rows are CPU-HEAVY but BYTE-LIGHT
-        // (~100 KB of members buys up to C(2·cap, 2) ≈ 0.5M DPs), so
-        // AQE's byte-based partition coalescing packs them into a
-        // handful of partitions — observed at sf10: the whole 443M-DP
-        // kernel stage on ~7 coalesced partitions with 2 stragglers
-        // owning the mega bucket. Round-robin the rows across the
-        // session's full parallelism (derived, not a local constant);
-        // ×4 smooths residual per-row cost variance.
-        val par = docs.sparkSession.sparkContext.defaultParallelism * 4
-        groupedOneSided(banded, members, bucketChunkSize)
-          .repartition(par)
-          .select(explode(graft.functions.TextKernels.chunkPairEditsUdf(
-            col("amem"), col("bmem"), lit(d9Prefix / 2),
-            lit(bucketChunkSize * 8))).as("p"))
-          .select(col("p._1").as("doc_a"), col("p._2").as("doc_b"),
-            col("p._3").as("dist"))
-          .distinct()
-          .persist()
-      }
+    val members = base.select(col("doc_id"), col("pfx").as("hs"))
+    // The grouped chunk-pair rows are CPU-HEAVY but BYTE-LIGHT
+    // (~100 KB of members buys up to C(2·cap, 2) ≈ 0.5M DPs), so
+    // AQE's byte-based partition coalescing packs them into a
+    // handful of partitions — observed at sf10: the whole 443M-DP
+    // kernel stage on ~7 coalesced partitions with 2 stragglers
+    // owning the mega bucket. Round-robin the rows across the
+    // session's full parallelism (derived, not a local constant);
+    // ×4 smooths residual per-row cost variance.
+    val par = docs.sparkSession.sparkContext.defaultParallelism * 4
+    val scored = groupedOneSided(banded, members, bucketChunkSize)
+      .repartition(par)
+      .select(explode(graft.functions.TextKernels.chunkPairEditsUdf(
+        col("amem"), col("bmem"), lit(d9Prefix / 2),
+        lit(bucketChunkSize * 8))).as("p"))
+      .select(col("p._1").as("doc_a"), col("p._2").as("doc_b"),
+        col("p._3").as("dist"))
+      .distinct()
+      .persist()
     scored.orderBy("doc_a", "doc_b")
   }
 

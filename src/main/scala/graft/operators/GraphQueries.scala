@@ -81,42 +81,13 @@ object GraphQueries extends QueryPack {
       .distinct()
     // no dedup needed: pairs is distinct and the two direction copies
     // cannot collide (customer nodes are even, supplier nodes odd), so
-    // the union IS the edge set — one shuffle saved vs a distinct()
-    if (sys.env.get("SPARK_GRAFT_GR1_PLAN").contains("unrolled")) {
-      // the pre-r13 unrolled-join formulation, for same-jar A/Bs
-      val edges = pairs.select(col("c").as("src"), col("p").as("dst"))
-        .unionByName(pairs.select(col("p").as("src"), col("c").as("dst")))
-        .repartition(col("src"))
-        .persist()
-      val deg = edges.groupBy("src").agg(count(lit(1)).as("outdeg")).persist()
-      var ranks = deg.select(col("src").as("node"), lit(unitE12).as("r"))
-      for (_ <- 1 to iters) {
-        val contrib = ranks
-          .join(deg, ranks("node") === deg("src"))
-          .select(col("node"), expr("r div outdeg").as("cpe"))
-        ranks = edges
-          .join(contrib, edges("src") === contrib("node"))
-          .groupBy(col("dst"))
-          .agg(sum(col("cpe")).as("sc"))
-          .select(col("dst").as("node"),
-            (lit(dampBaseE12) + expr("(85 * sc) div 100")).as("r"))
-      }
-      val result = ranks
-        .select(
-          when(col("node") % 2 === 0, lit("customer"))
-            .otherwise(lit("supplier")).as("node_kind"),
-          expr("node div 2").as("node_id"),
-          col("r").as("rank_e12"))
-        .orderBy(col("rank_e12").desc, col("node_kind"), col("node_id"))
-        .limit(20)
-      return (result, Seq(edges, deg))
-    }
+    // the union IS the edge set — one shuffle saved vs a distinct().
     // The 3-round unroll routed through the hybrid fixpoint driver with a
     // round bound (the gr3/gr4 pattern): on the symmetrized sink-free
     // graph, rounds = Some(3) is bit-identical to the unrolled joins
     // (every node has outdeg ≥ 1 and appears as a dst, so the unroll's
     // inner joins never drop a node — GraphFixpointSpec pins rank
-    // equality), and below the edge threshold the 3 rounds run in ONE
+    // equality against a verbatim copy of the unrolled joins), and below the edge threshold the 3 rounds run in ONE
     // executor task instead of ~9 shuffle stages of scheduling overhead
     // on a dimension-sized graph. Persist the half-size pair table only
     // (the driver persists its own symmetrized copy — the gr3 note).

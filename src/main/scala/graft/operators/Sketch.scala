@@ -172,12 +172,10 @@ object Sketch extends QueryPack {
   private val qkK = 256
   private val qkPs = Seq("50" -> 0.5, "90" -> 0.9, "99" -> 0.99)
 
-  private val k3BottomkQuantiles: Q = (s, dir) =>
-    k3Plan(s, dir, sys.env.get("SPARK_GRAFT_RANKSEL").contains("window"))
+  private val k3BottomkQuantiles: Q = k3Plan
 
   private[graft] def k3Plan(s: org.apache.spark.sql.SparkSession,
-                            dir: String, windowSel: Boolean)
-      : org.apache.spark.sql.DataFrame = {
+                            dir: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val li = Tables.lineitem(s, dir)
       .select(col("l_returnflag"), col("l_orderkey"), col("l_linenumber"),
@@ -202,24 +200,9 @@ object Sketch extends QueryPack {
     // lands on — so the element at rank ceil(p·m) is the smallest price
     // whose cumulative count reaches it: one map-side-combined aggregate
     // over (flag, price), cumulative pass over distinct prices only.
-    // Identical output (RankSelectSpec); `SPARK_GRAFT_RANKSEL=window`
-    // switches back for same-jar A/Bs.
-    def discW(df: org.apache.spark.sql.DataFrame, prefix: String) = {
-      val w = Window.partitionBy("l_returnflag")
-        .orderBy(col("l_extendedprice").asc, col("h").asc,
-          col("l_orderkey").asc, col("l_linenumber").asc)
-      val ranked = df
-        .withColumn("r", row_number().over(w))
-        .withColumn("m", count(lit(1)).over(Window.partitionBy("l_returnflag")))
-      val qs = qkPs.map { case (tag, p) =>
-        max(when(col("r") ===
-            ceil(lit(p) * col("m").cast("double")), col("l_extendedprice")))
-          .as(s"${prefix}p$tag")
-      }
-      ranked.groupBy("l_returnflag")
-        .agg(max(col("m")).as(s"${prefix}n"), qs: _*)
-    }
-    def discC(df: org.apache.spark.sql.DataFrame, prefix: String) = {
+    // Identical output to the oracle's row_number form (RankSelectSpec
+    // pins golden rows recorded from it).
+    def disc(df: org.apache.spark.sql.DataFrame, prefix: String) = {
       val cum = df.groupBy("l_returnflag", "l_extendedprice")
         .agg(count(lit(1)).as("c"))
         .withColumn("cum", sum(col("c")).over(
@@ -234,8 +217,6 @@ object Sketch extends QueryPack {
       cum.groupBy("l_returnflag")
         .agg(max(col("m")).as(s"${prefix}n"), qs: _*)
     }
-    def disc(df: org.apache.spark.sql.DataFrame, prefix: String) =
-      if (windowSel) discW(df, prefix) else discC(df, prefix)
     disc(smp, "est_").join(disc(li, "true_"), "l_returnflag")
       .orderBy("l_returnflag")
   }

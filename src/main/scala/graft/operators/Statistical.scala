@@ -139,55 +139,25 @@ object Statistical extends QueryPack {
       |FROM lineitem""".stripMargin
 
   // -- a2: 3-pass 4σ sigma clip per (returnflag, linestatus), reporting
-  //    survivor count + clipped mean/std. Multi-pass clips use WINDOW
-  //    stats instead of clipPass's aggregate+broadcast-join: the first
-  //    window shuffles+sorts on the group key once, and every later pass
-  //    reuses that partitioning and order (filters are narrow), so three
-  //    passes are ONE exchange + sort and then a linear pipeline. The
-  //    join formulation never shuffles the fact data, but each pass reads
-  //    its input twice (stats + filter), which forces a full persist per
-  //    pass to avoid 2^passes lineage blowup — at 100 TB, caching the
-  //    corpus three times loses to shuffling it once, and the linear plan
-  //    has no cache-eviction failure mode. Measured head-to-head
-  //    (round-5 A2Probe harness, retired r10 — 6 alternating reps at sf0.1): window
-  //    min/med/mean 2.90/3.31/3.18 s vs join 3.99/4.46/4.52 s — the
-  //    window plan is ~30% faster locally too (the r04 full-bench 5.96 s
-  //    reading was suite-context noise). The arithmetic is the same
-  //    exact-decimal
-  //    sums (order-independent), so survivors and the hashed output are
-  //    bit-identical to the join formulation the oracle SQL spells out.
-  //    Single-pass users (a4, a9) keep clipPass: one pass has no reuse to
-  //    exploit, and the broadcast join avoids the sort entirely.
-  private def clipPassW(df: DataFrame, groupCols: Seq[String], k: Double): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(groupCols.map(col): _*)
-    val mean = sum(col("vdec")).over(w).cast("double") /
-      count(lit(1)).over(w).cast("double")
-    val std = sqrt(
-      sum((col("vdec") * col("vdec")).cast(DecimalType(38, 4))).over(w)
-        .cast("string").cast("double") /
-        count(lit(1)).over(w).cast("double") - mean * mean)
-    df.withColumn("_mean", mean).withColumn("_std", std)
-      .filter(col("vd") >= col("_mean") - lit(k) * col("_std") &&
-              col("vd") <= col("_mean") + lit(k) * col("_std"))
-      .drop("_mean", "_std")
-  }
-
-  /** a2's default plan: per-pass HASH AGGREGATE + literal bounds instead
-    * of the window formulation. The window plan's one exchange+sort moves
-    * the WHOLE fact table (at 100 TB that is a full-corpus shuffle and
-    * sort for statistics over a handful of groups); this shape shuffles
+  //    survivor count + clipped mean/std. The arithmetic is the same
+  //    exact-decimal sums (order-independent) as the join formulation
+  //    the oracle SQL spells out, so survivors and the hashed output are
+  //    bit-identical to it. Single-pass users (a4, a9) keep clipPass:
+  //    one pass has no reuse to exploit, and its broadcast join never
+  //    shuffles the fact rows.
+  /** a2's plan: per-pass HASH AGGREGATE + literal bounds instead of a
+    * window formulation, whose one exchange+sort moves the WHOLE fact
+    * table (at 100 TB that is a full-corpus shuffle and sort for
+    * statistics over a handful of groups); this shape shuffles
     * ZERO fact rows — each pass is a fresh columnar scan → partial-
     * aggregated group stats (rows crossing the exchange = #groups), the
     * per-group clip bounds come back as literal predicates, and the next
     * pass's scan applies every accumulated predicate. The group key is
     * the (l_returnflag × l_linestatus) flag alphabet — bounded by the
     * data dictionary, so the driver materialization is dimension-sized
-    * (the GraphQueries finish rule). Bounds are computed by the SAME
-    * Column expressions as the window plan (decimal sums → the identical
-    * double casts), so survivor sets and the hashed output are
-    * bit-identical; A2PlanSpec pins both plans against each other.
-    * `SPARK_GRAFT_A2_PLAN=window` switches back for same-jar A/Bs. */
+    * (the GraphQueries finish rule). Bounds are decimal sums → double
+    * casts, the oracle's own expressions, so the hashed output is
+    * bit-exact; A2PlanSpec pins it to golden rows. */
   private[graft] def a2ByAggregate(s: SparkSession, dir: String): DataFrame = {
     val groups = Seq("l_returnflag", "l_linestatus")
     val gc = groups.map(col)
@@ -205,10 +175,10 @@ object Statistical extends QueryPack {
       // survivor predicate as a literal CASE over the bounded group
       // domain: rows of a group absent from `bounds` cannot exist in
       // `df` (the stats came from the same rows), so the NaN default
-      // arm is unreachable — it mirrors the window plan's NaN-bound
-      // behavior (NaN comparisons drop the row) exactly anyway.
+      // arm is unreachable — a NaN bound drops the row (NaN
+      // comparisons are false) anyway.
       // ADVICE r12: a null bound (conceivable only if a decimal sum ever
-      // overflowed to null) must degrade like the window plan — NaN
+      // overflowed to null) must degrade the same way — NaN
       // comparisons drop the group's rows — not throw on getDouble.
       def side(i: Int) = bounds.foldLeft(lit(Double.NaN)) { (acc, r) =>
         val v = if (r.isNullAt(groups.size + i)) Double.NaN
@@ -231,28 +201,7 @@ object Statistical extends QueryPack {
       .orderBy(groups.head, groups.tail: _*)
   }
 
-  /** The retired window formulation (one exchange+sort carrying the whole
-    * fact table, then three in-partition window passes) — kept for the
-    * same-jar A/B knob and the equivalence spec. */
-  private[graft] def a2ByWindow(s: SparkSession, dir: String): DataFrame = {
-    val groups = Seq("l_returnflag", "l_linestatus")
-    var df = clipInput(s, dir)
-    for (_ <- 1 to 3) df = clipPassW(df, groups, 4.0)
-    df.groupBy(groups.map(col): _*)
-      .agg(count(lit(1)).as("n_kept"),
-           sum(col("vdec")).as("_s"),
-           sum((col("vdec") * col("vdec")).cast(DecimalType(38, 4))).as("_ss"))
-      .withColumn("clip_mean", col("_s").cast("double") / col("n_kept").cast("double"))
-      .withColumn("clip_std",
-        sqrt(col("_ss").cast("string").cast("double") / col("n_kept").cast("double") -
-             col("clip_mean") * col("clip_mean")))
-      .drop("_s", "_ss")
-      .orderBy(groups.head, groups.tail: _*)
-  }
-
-  private val a2SigmaClip: Q = (s, dir) =>
-    if (sys.env.get("SPARK_GRAFT_A2_PLAN").contains("window")) a2ByWindow(s, dir)
-    else a2ByAggregate(s, dir)
+  private val a2SigmaClip: Q = a2ByAggregate
 
   private val a2Sql = {
     val g = "l_returnflag, l_linestatus"

@@ -345,10 +345,10 @@ object WindowedScalar extends QueryPack {
       |GROUP BY o_orderstatus, o_orderpriority
       |ORDER BY o_orderstatus, o_orderpriority""".stripMargin
 
-  // -- w8: exact discrete percentiles (p50/p90/p99) per group. Exact
-  //    quantiles need the within-group sort — that cost is inherent — but
-  //    ONE shuffle+sort serves all three percentiles: row_number + count
-  //    over the same window, then a pivot-style conditional aggregate.
+  // -- w8: exact discrete percentiles (p50/p90/p99) per group. The
+  //    oracle's formulation: ONE shuffle+sort serves all three
+  //    percentiles — row_number + count over the same window, then a
+  //    pivot-style conditional aggregate.
   //    Rank targets use pure-integer ceil division ((p·n + q−1) div q) so
   //    both engines pick the same element; (value, event_id) ordering
   //    makes ties deterministic. Values cross as per-row doubles (no
@@ -363,25 +363,8 @@ object WindowedScalar extends QueryPack {
   //    ONE map-side-combined hash aggregate over (event_type, v); only
   //    distinct values cross the exchange, and the cumulative pass runs
   //    over the aggregated table, never the fact rows. Identical output
-  //    (RankSelectSpec pins both plans); `SPARK_GRAFT_RANKSEL=window`
-  //    switches back for same-jar A/Bs.
-  private[graft] def w8ByWindow(s: SparkSession, dir: String): DataFrame = {
-    val byVal = Window.partitionBy("event_type")
-      .orderBy(col("v"), col("event_id"))
-    val all = Window.partitionBy("event_type")
-    val t = Tables.events(s, dir)
-      .select(col("event_type"), col("event_id"),
-        graft.Exact.dec2(col("value")).cast("double").as("v"))
-      .withColumn("rn", row_number().over(byVal))
-      .withColumn("n", count(lit(1)).over(all))
-    t.groupBy("event_type")
-      .agg(max(col("n")).as("n"),
-        max(when(col("rn") === expr("(n + 1) div 2"), col("v"))).as("p50"),
-        max(when(col("rn") === expr("(n * 9 + 9) div 10"), col("v"))).as("p90"),
-        max(when(col("rn") === expr("(n * 99 + 99) div 100"), col("v"))).as("p99"))
-      .orderBy("event_type")
-  }
-
+  //    to the row_number formulation the oracle SQL keeps (RankSelectSpec
+  //    pins golden rows recorded from it).
   private[graft] def w8ByCumDist(s: SparkSession, dir: String): DataFrame = {
     val cnt = Tables.events(s, dir)
       .select(col("event_type"),
@@ -401,9 +384,7 @@ object WindowedScalar extends QueryPack {
       .orderBy("event_type")
   }
 
-  private val w8Percentiles: Q = (s, dir) =>
-    if (sys.env.get("SPARK_GRAFT_RANKSEL").contains("window")) w8ByWindow(s, dir)
-    else w8ByCumDist(s, dir)
+  private val w8Percentiles: Q = w8ByCumDist
 
   private val w8Sql =
     """WITH t AS (
@@ -429,7 +410,7 @@ object WindowedScalar extends QueryPack {
   //    outlier rule |v − med| > 3·MAD uses only IEEE-exact ops
   //    (subtract, abs, multiply, compare) on identical operands — so
   //    both engines flag identical rows, no tolerance needed.
-  //    Scale shape: two window sorts + three narrow aggregates, all
+  //    Oracle shape: two window sorts + three narrow aggregates, all
   //    keyed on event_type. Exact per-group medians are sort-based by
   //    nature; the sorts partition by group key, so 1000 executors each
   //    sort their own groups — no global sort, no driver state.
@@ -441,40 +422,8 @@ object WindowedScalar extends QueryPack {
   //    selection over distinct values (w8's rewrite), the deviation
   //    table derives from the SAME aggregate with counts carried, and
   //    the outlier count is the count-weighted sum. The fact table is
-  //    scanned once and never sorted. Identical output (RankSelectSpec);
-  //    `SPARK_GRAFT_RANKSEL=window` switches back for same-jar A/Bs.
-  private[graft] def dq2ByWindow(s: SparkSession, dir: String): DataFrame = {
-    val byVal = Window.partitionBy("event_type")
-      .orderBy(col("v"), col("event_id"))
-    val all = Window.partitionBy("event_type")
-    val t = Tables.events(s, dir)
-      .select(col("event_type"), col("event_id"),
-        graft.Exact.dec2(col("value")).cast("double").as("v"))
-      .withColumn("rn", row_number().over(byVal))
-      .withColumn("n", count(lit(1)).over(all))
-    val med = t.groupBy("event_type")
-      .agg(max(col("n")).as("n"),
-        max(when(col("rn") === expr("(n + 1) div 2"), col("v"))).as("med"))
-    val dev = t.select(col("event_type"), col("event_id"), col("v"))
-      .join(broadcast(med), "event_type")
-      .withColumn("dev", abs(col("v") - col("med")))
-    val byDev = Window.partitionBy("event_type")
-      .orderBy(col("dev"), col("event_id"))
-    val mad = dev
-      .withColumn("rn2", row_number().over(byDev))
-      .groupBy("event_type")
-      .agg(max(when(col("rn2") === expr("(n + 1) div 2"), col("dev")))
-        .as("mad"))
-    dev.join(broadcast(mad), "event_type")
-      .groupBy("event_type")
-      .agg(max(col("n")).as("n"),
-        max(col("med")).as("med"),
-        max(col("mad")).as("mad"),
-        sum(when(col("dev") > lit(3.0) * col("mad"), 1L).otherwise(0L))
-          .as("n_outliers"))
-      .orderBy("event_type")
-  }
-
+  //    scanned once and never sorted. Identical output to the window
+  //    formulation the oracle SQL keeps (RankSelectSpec pins golden rows).
   private[graft] def dq2ByCumDist(s: SparkSession, dir: String): DataFrame = {
     // referenced three times (median select, deviation table, outlier
     // count) — materialized once via localCheckpoint so the fact scan
@@ -517,9 +466,7 @@ object WindowedScalar extends QueryPack {
       .orderBy("event_type")
   }
 
-  private val dq2MadOutliers: Q = (s, dir) =>
-    if (sys.env.get("SPARK_GRAFT_RANKSEL").contains("window")) dq2ByWindow(s, dir)
-    else dq2ByCumDist(s, dir)
+  private val dq2MadOutliers: Q = dq2ByCumDist
 
   private val dq2Sql =
     """WITH t AS (

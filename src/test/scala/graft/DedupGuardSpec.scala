@@ -48,17 +48,51 @@ class DedupGuardSpec extends SparkSpecBase {
       s"prefix-class flood: ${pairs.length} pairs from one boilerplate class")
   }
 
+  /** The textbook d9 plan the bucket-local kernel replaced, verbatim:
+    * band self-join → distinct candidates → both prefixes joined in →
+    * Spark's `levenshtein` per pair. Spec-local reference only. */
+  private def editDistanceByJoin(docs: org.apache.spark.sql.DataFrame) = {
+    import org.apache.spark.sql.functions._
+    import graft.operators.Dedup.{bandK, d9Prefix, nBands}
+    val reps = docs
+      .groupBy(md5(substring(col("text"), 1, d9Prefix)).as("_h"))
+      .agg(min(col("doc_id")).as("doc_id"))
+      .drop("_h")
+    val base = docs.join(reps, Seq("doc_id"))
+      .select(col("doc_id"),
+        substring(col("text"), 1, d9Prefix).as("pfx"),
+        graft.functions.TextKernels.charMinhashSigsUdf(bandK)(col("text"))
+          .as("csig"))
+      .filter(length(col("pfx")) >= bandK)
+    val bandCols = (0 until nBands).map { i =>
+      expr(s"struct(CAST($i AS INT) AS band_id, " +
+           s"(element_at(csig, ${2 * i + 1})*131 + " +
+           s"element_at(csig, ${2 * i + 2})) % ${graft.functions.TextPrims.P} AS bh)")
+    }
+    val banded = base
+      .select(col("doc_id"), explode(array(bandCols: _*)).as("band"))
+      .select(col("doc_id"), col("band.band_id").as("band_id"),
+              col("band.bh").as("bh"))
+    banded.as("a").join(banded.as("b"),
+        col("a.band_id") === col("b.band_id") && col("a.bh") === col("b.bh") &&
+        col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+      .distinct()
+      .join(base.select(col("doc_id").as("doc_a"), col("pfx").as("pfx_a")), "doc_a")
+      .join(base.select(col("doc_id").as("doc_b"), col("pfx").as("pfx_b")), "doc_b")
+      .withColumn("dist", levenshtein(col("pfx_a"), col("pfx_b")))
+      .filter(col("dist") <= d9Prefix / 2)
+      .select("doc_a", "doc_b", "dist")
+      .orderBy("doc_a", "doc_b")
+  }
+
   test("d9 bucket-local kernel plan == textbook join plan, bit-exact, " +
        "including a forced hot bucket") {
     import spark.implicits._
     // near-dup families whose members band-collide (one-char edits keep
-    // most 7-gram minhashes) plus enough same-family members to push one
-    // band bucket past the chunk cap when it is lowered via the
-    // SPARK_GRAFT_CHUNK_CAP measurement knob — here the default cap
-    // stays, so the hot path is exercised by family size alone when the
-    // cap is small; both plans must agree pair-for-pair regardless of
-    // which grouping path engaged
-    // 600 members > the default 512 chunk cap ⇒ the family's band
+    // most 7-gram minhashes); both plans must agree pair-for-pair
+    // regardless of which grouping path engaged.
+    // 600 members > the 512 chunk cap ⇒ the family's band
     // buckets split into chunk-pair rows, so the CHUNKED grouping (not
     // just the one-row fast path) is what the equivalence pins
     val fam = (0L until 600L).map { i =>
@@ -69,32 +103,34 @@ class DedupGuardSpec extends SparkSpecBase {
       (900L, "completely unrelated text one with its own vocabulary set"),
       (901L, "completely unrelated text two with its own vocabulary kit"))
     val docs = (fam ++ singles).toDF("doc_id", "text")
-    def rows(dpFull: Boolean) =
-      graft.operators.Dedup.editDistancePairs(docs, dpFull = dpFull)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
-    val kernel = rows(dpFull = false)
-    val join = rows(dpFull = true)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
+    val kernel = rows(graft.operators.Dedup.editDistancePairs(docs))
+    val join = rows(editDistanceByJoin(docs))
     assert(kernel == join, "d9 plans diverge")
     assert(kernel.nonEmpty, "planted near-dup family produced no pairs")
   }
 
-  test("d6 kernel plan == join plan (both banding variants), bit-exact") {
-    // (lang, source) in the band key removes exactly the pairs the
-    // post-join block filter drops, and the bucket-local kernel's
-    // intersect/divide is the join plan's arithmetic — all three
-    // formulations must hash identically
-    def rows(split: Boolean) =
-      graft.operators.Dedup.d6Plan(spark, sfDir, splitByBlock = split)
-        .collect().map(_.toSeq).toVector
-    val a = rows(split = true)
-    spark.catalog.clearCache()
-    val b = rows(split = false)
+  test("d6 kernel plan == join plan, bit-exact") {
+    // the bucket-local kernel's intersect/divide is the join plan's
+    // arithmetic, so both must hash identically (the unsplit banding the
+    // join plan replaced is the oracle's d6Sql, checked by Verify)
+    val a = graft.operators.Dedup.d6Plan(spark, sfDir)
+      .collect().map(_.toSeq).toVector
     spark.catalog.clearCache()
     val k = graft.operators.Dedup.d6Kernel(spark, sfDir)
       .collect().map(_.toSeq).toVector
     spark.catalog.clearCache()
-    assert(a == b, "d6 banding variants diverge")
     assert(k == a, "d6 kernel plan diverges from the join plan")
     assert(a.nonEmpty, "sf0.001 corpus produced no d6 pairs")
+  }
+
+  test("d15 truth pairs reject a non-literal threshold with a clear message") {
+    val e = intercept[IllegalArgumentException] {
+      graft.operators.Dedup.sampleTruthPairs(spark.range(1).toDF("doc_id"),
+        "jac_threshold")
+    }
+    assert(e.getMessage.contains("accepts only a literal numeric threshold"),
+      e.getMessage)
   }
 }

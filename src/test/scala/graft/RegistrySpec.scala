@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Registry invariants, enforced at test time so a future query-pack
   * addition cannot silently ship outside the correctness gate: every
@@ -31,5 +32,28 @@ class RegistrySpec extends AnyFunSuite {
     val oracleTotal = packs.map(_.oracles.size).sum
     assert(oracleTotal == SparkEntry.oracleSql.size,
       "two query packs register the same oracle name")
+  }
+
+  test("the engine reads only the deployment/path SPARK_GRAFT_* variables") {
+    // A/B-only plan switches are deleted, not kept behind env knobs: the
+    // DuckDB oracle decides equivalence. A new knob must be a deployment
+    // or path setting and be added here deliberately.
+    val allowed = Set("CPUS", "SF_DIR", "BENCH_FILTER", "BENCH_OUT",
+      "WARM_DIR", "SCALE_NOTES")
+    val knob = "SPARK_GRAFT_([A-Z0-9_]+)".r
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), s"no sources at $root")
+    val files = java.nio.file.Files.walk(root)
+    val found = try {
+      files.iterator().asScala
+        .filter(_.toString.endsWith(".scala"))
+        .flatMap { f =>
+          knob.findAllMatchIn(java.nio.file.Files.readString(f))
+            .map(m => m.group(1) -> root.relativize(f).toString)
+        }.toSeq
+    } finally files.close()
+    val stray = found.filterNot { case (name, _) => allowed(name) }
+    assert(found.nonEmpty, s"no SPARK_GRAFT_* reads found under $root")
+    assert(stray.isEmpty, s"unlisted SPARK_GRAFT_* knobs: ${stray.distinct}")
   }
 }

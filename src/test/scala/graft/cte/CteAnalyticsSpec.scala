@@ -53,6 +53,46 @@ class CteAnalyticsSpec extends SparkSpecBase {
     }
   }
 
+  test("1- and 2-star bins fit to NaN without a division by zero") {
+    import spark.implicits._
+    // pair A, aperture 3: star 1 alone in bin 250-500; stars 2-3 in the
+    // overlapping bins 2000-4000 and 2000-8000, ratio 1 − 1e-4·ypos
+    val d0 = java.sql.Date.valueOf("2026-01-01")
+    val stars = Seq((1, 300.0), (2, 3000.0), (3, 3000.0))
+    val phot = stars.flatMap { case (i, base) =>
+      val ypos = 100.0 * i
+      Seq(
+        (i, "iaaa01a1q", d0, i, 50.0, ypos, 0.1, 0.1, 3,
+          10.0 + base * (1.0 - 1e-4 * ypos), 1.0, 10.0, CteFixtures.T),
+        (i, "iaaa01a2q", d0, i, 50.0, ypos, 0.1, 0.1, 3,
+          10.0 + base, 1.0, 10.0, CteFixtures.T))
+    }.toDF("find_id", "imagename", "ingest_date", "master_id", "xpix",
+      "ypix", "ra", "dec", "aperture", "flux", "mnbkgrd", "totbkgrd",
+      "targname")
+    def fit(clipRounds: Int) =
+      CteAnalytics.fluxRatioSlopes(phot, fi, CteFixtures.T, clipRounds)
+        .filter(col("numpoints") > 0)
+        .orderBy("bin_lo", "bin_hi").collect()
+        .map(r => (r.getAs[Int]("bin_lo"), r.getAs[Int]("bin_hi"),
+          r.getAs[Int]("numpoints"), r.getAs[Double]("slope"),
+          r.getAs[Double]("slopestdev")))
+        .toSeq
+
+    // scipy's sigmaclip empties the 1-star bin (std 0), so only the
+    // 2-star bins are fitted: an exact slope and a NaN stderr (n − 2 = 0)
+    val clipped = fit(clipRounds = 3)
+    assert(clipped.map(r => (r._1, r._2, r._3)) ==
+      Seq((2000, 4000, 2), (2000, 8000, 2)))
+    clipped.foreach { r =>
+      assert(math.abs(r._4 - (-1e-4)) < 1e-12, s"slope ${r._4}")
+      assert(r._5.isNaN, s"slopestdev ${r._5}")
+    }
+    // unclipped, the 1-star bin reaches the fit: no slope, no stderr
+    val one = fit(clipRounds = 0).filter(_._3 == 1)
+    assert(one.map(r => (r._1, r._2)) == Seq((250, 500)))
+    assert(one.head._4.isNaN && one.head._5.isNaN, s"1-star fit ${one.head}")
+  }
+
   test("wide results view pivots to the reference 24-column layout") {
     val long = CteAnalytics.fluxRatioSlopes(ph, fi, CteFixtures.T)
     val wide = CteAnalytics.resultsWideView(
