@@ -1,4 +1,5 @@
 package graft
+import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectMapper}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
@@ -77,73 +78,77 @@ object Bench {
       all, firstGc ++ rerunGc, warm, spreadSuspect(pick))
   }
 
-  /** Render the bench record (pure, spec-covered). `partial` marks an
-    * in-progress file write so a killed run leaves an honest record.
-    * `extra` is a pre-serialized JSON fragment (",\"key\":…") appended
-    * before the closing brace — the scale-headroom embed below. */
+  private val mapper = new ObjectMapper()
+
+  /** Render the bench record (pure, spec-covered) as one compact JSON
+    * line. `partial` marks an in-progress file write so a killed run
+    * leaves an honest record. `scaleHeadroom` is embedded whole under
+    * `"scale_headroom"` (see [[scaleNotes]]). */
   def renderJson(stats: Seq[(String, Rec)], failed: Seq[String],
                  sfDir: String, partial: Boolean,
-                 extra: String = ""): String = {
-    def fmtD(xs: Seq[Double]) = xs.mkString("[", ",", "]")
-    val results = stats.map { case (k, r) => k -> r.median }
-    val qs = results.sortBy(_._1)
-      .map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val statsJson = stats.sortBy(_._1).map { case (k, r) =>
-      s"""\"$k\":{"median":${r.median},"min":${r.min},"max":${r.max},""" +
-        s""""runs":${r.times.size},"times":${fmtD(r.times)},""" +
-        s""""gc_ms":${r.gcMs.mkString("[", ",", "]")},"warm":${r.warm}""" +
-        (if (r.spreadFlagged) s""","spread_flagged":true""" else "") + "}"
-    }.mkString("{", ",", "}")
-    val fl = failed.distinct.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val flagged = stats.collect { case (k, r) if r.spreadFlagged => k }
-      .sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val total = results.map(_._2).sum
+                 scaleHeadroom: Option[JsonNode] = None): String = {
+    val root = mapper.createObjectNode()
+    root.put("metric", "total")
+    root.put("value", stats.map(_._2.median).sum)
+    root.put("unit", "sec")
+    val sorted = stats.sortBy(_._1)
+    val qs = root.putObject("queries")
+    sorted.foreach { case (k, r) => qs.put(k, r.median) }
+    val st = root.putObject("stats")
+    sorted.foreach { case (k, r) =>
+      val o = st.putObject(k)
+      o.put("median", r.median)
+      o.put("min", r.min)
+      o.put("max", r.max)
+      o.put("runs", r.times.size)
+      val times = o.putArray("times")
+      r.times.foreach(t => times.add(t))
+      val gc = o.putArray("gc_ms")
+      r.gcMs.foreach(g => gc.add(g))
+      o.put("warm", r.warm)
+      if (r.spreadFlagged) o.put("spread_flagged", true)
+    }
+    val fl = root.putArray("failed")
+    failed.distinct.sorted.foreach(f => fl.add(f))
+    val flagged = root.putArray("spread_flagged")
+    sorted.collect { case (k, r) if r.spreadFlagged => k }
+      .foreach(k => flagged.add(k))
+    root.put("sf", sfDir)
+    if (partial) root.put("partial", true)
     // v6 retrains its IVF index in-query; v13 probes a persisted one. The
     // pair pins how much of v6's time is training vs search.
-    val note = (results.toMap.get("v6_ivf_topk"),
-                results.toMap.get("v13_ivf_pq_probe")) match {
-      case (Some(a), Some(b)) =>
-        s""","notes":{"v6_train_plus_probe_sec":$a,"v13_probe_only_sec":$b}"""
-      case _ => ""
+    val medians = stats.toMap
+    for (a <- medians.get("v6_ivf_topk"); b <- medians.get("v13_ivf_pq_probe")) {
+      val notes = root.putObject("notes")
+      notes.put("v6_train_plus_probe_sec", a.median)
+      notes.put("v13_probe_only_sec", b.median)
     }
-    val part = if (partial) s""","partial":true""" else ""
-    s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-      s""""stats":$statsJson,"failed":$fl,"spread_flagged":$flagged,""" +
-      s""""sf":"$sfDir"$part$note$extra}"""
+    scaleHeadroom.foreach(root.set[JsonNode]("scale_headroom", _))
+    mapper.writeValueAsString(root)
   }
 
   /** Scale-headroom embed: if `scale_notes.json` exists (a committed,
     * hand-validated record of sf1-vs-sf0.1 per-query scaling from
-    * tools/ScaleUp corpora), inline it so the round's bench JSON carries
-    * the measured headroom evidence alongside the same-SF timings. */
-  def scaleNotesExtra(): String = {
+    * tools/ScaleUp corpora), parse it so the round's bench JSON carries
+    * the measured headroom evidence alongside the same-SF timings. A
+    * malformed file or one with trailing content (FAIL_ON_TRAILING_TOKENS
+    * rejects `{..}junk`) is skipped rather than embedded. [[renderJson]]
+    * re-serializes it compact: scale_notes.json is committed
+    * pretty-printed, and the bench record must stay one JSON line. */
+  def scaleNotes(): Option[JsonNode] = {
     val p = java.nio.file.Paths.get(sys.env.getOrElse(
       "SPARK_GRAFT_SCALE_NOTES", "/root/repo/scale_notes.json"))
-    if (!java.nio.file.Files.exists(p)) return ""
-    val body = java.nio.file.Files.readString(p).trim
-    // A malformed or trailing-content fragment would corrupt EVERY future
-    // bench record at the splice point — parse-validate before embedding
-    // (Jackson ships with Spark; FAIL_ON_TRAILING_TOKENS rejects `{..}junk`
-    // which a balanced-brace scan would wave through inside strings).
-    // MINIFIED re-serialization, not the raw body: scale_notes.json is
-    // committed pretty-printed, and splicing it verbatim turned the
-    // driver's "one JSON line" stdout contract into ~450 lines — every
-    // BENCH record since r6 parsed as null. Jackson's default
-    // writeValueAsString is compact (single line).
-    val minified = try {
-      val m = new com.fasterxml.jackson.databind.ObjectMapper()
-      m.enable(com.fasterxml.jackson.databind.DeserializationFeature
-        .FAIL_ON_TRAILING_TOKENS)
-      val tree = m.readTree(body)
-      if (tree.isObject) Some(m.writeValueAsString(tree)) else None
+    if (!java.nio.file.Files.exists(p)) return None
+    val tree = try {
+      Option(mapper.reader()
+        .`with`(DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
+        .readTree(java.nio.file.Files.readString(p)))
     } catch { case _: Throwable => None }
-    minified match {
-      case Some(j) => s""","scale_headroom":$j"""
-      case None =>
-        System.err.println(
-          s"[bench] $p is not a single JSON object — skipping embed")
-        ""
-    }
+    val obj = tree.filter(_.isObject)
+    if (obj.isEmpty)
+      System.err.println(
+        s"[bench] $p is not a single JSON object — skipping embed")
+    obj
   }
 
   private def gcMillis(): Long =
@@ -232,7 +237,7 @@ object Bench {
       // opt-in is the env var's PRESENCE, not its value: explicitly
       // setting it to the default path is still explicit (ADVICE r11).
       if (filter.isDefined && !sys.env.contains("SPARK_GRAFT_BENCH_OUT")) return
-      val json = renderJson(stats, failed, sfDir, partial, scaleNotesExtra())
+      val json = renderJson(stats, failed, sfDir, partial, scaleNotes())
       try Files.writeString(Paths.get(out), json + "\n")
       catch { case e: Throwable =>
         System.err.println(s"[bench] could not write $out: ${e.getMessage}")
@@ -273,7 +278,7 @@ object Bench {
     }
 
     val json = renderJson(stats.toSeq, failed, sfDir, partial = false,
-      scaleNotesExtra())
+      scaleNotes())
     println(json)
     // The driver's log capture truncates long stdout tails (BENCH_r05
     // preserved only 63/92 per-query times); the file is the durable,

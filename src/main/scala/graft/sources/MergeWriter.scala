@@ -2,7 +2,8 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, col, count, input_file_name, lit, max, min, regexp_replace}
+import org.apache.spark.sql.functions.{col, count, lit, max, min}
+import org.apache.spark.storage.StorageLevel
 
 /** Upsert-by-natural-key semantics over vanilla Parquet — the reference's
   * insert-or-update sink (/root/reference/wfc3_cte_monitor/
@@ -64,8 +65,8 @@ object MergeWriter {
     val tmp = new Path(path + ".__tmp__")
     val old = new Path(path + ".__old__")
     if (!fs.exists(cur)) {
-      if (fs.exists(new Path(tmp, "_SUCCESS"))) fs.rename(tmp, cur)
-      else if (fs.exists(old)) fs.rename(old, cur)
+      if (fs.exists(new Path(tmp, "_SUCCESS"))) renameOrThrow(fs, tmp, cur)
+      else if (fs.exists(old)) renameOrThrow(fs, old, cur)
     }
     if (fs.exists(tmp)) fs.delete(tmp, true)
     if (fs.exists(old) && fs.exists(cur)) fs.delete(old, true)
@@ -95,77 +96,33 @@ object MergeWriter {
     * the next `recover` (the batch is simply not yet applied — callers
     * retry or, under streaming redelivery, re-run the batch). A
     * redelivered batch COLLIDES with its own earlier append and falls
-    * back to the dedup'ing rewrite — idempotence is unchanged.
-    *
-    * `keyIndex = true` additionally maintains a per-file KEY-RANGE
-    * sidecar (`path.__keyidx__`) so the collision probe prunes to files
-    * whose key range overlaps the batch's — with naturally increasing
-    * ingest keys that is ZERO files and the probe costs one O(|batch|)
-    * aggregate instead of an O(|table|) key scan (the last per-batch
-    * O(store) term of the streaming sink). Appends index their own files
-    * from the batch aggregate; rewrites re-derive per-file ranges with
-    * one column-pruned pass folded into the already-O(store) rewrite.
-    * The index is advisory: files it doesn't cover are always probed, so
-    * a lost/stale sidecar degrades to the unpruned scan, never past
-    * correctness. Opt-in because a one-shot bulk upsert (the warehouse
-    * restatement shape) would pay the rebuild pass for probes that never
-    * come. */
+    * back to the dedup'ing rewrite — idempotence is unchanged. Persist
+    * `updates` to let the probe skip stored row groups outside the
+    * batch's key range ([[collides]]). */
   def upsertParquet(spark: SparkSession, path: String, updates: DataFrame,
                     keys: Seq[String],
-                    partitionCols: Seq[String] = Nil,
-                    keyIndex: Boolean = false): Unit = {
+                    partitionCols: Seq[String] = Nil): Unit = {
     recover(spark, path)
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new Path(path))) {
       swapIn(spark, path, updates, partitionCols)
-      if (keyIndex) rebuildKeyIndex(spark, path, keys)
       return
     }
-    if (keyIndex && !fs.exists(new Path(path + KeyIdxSuffix)))
-      rebuildKeyIndex(spark, path, keys) // first indexed batch: cover the base
     val target = spark.read.parquet(path)
     def shape(df: DataFrame) =
       df.schema.fields.map(f => (f.name, f.dataType)).toSet
-    val sameShape = shape(target) == shape(updates)
-    // the batch's key ranges are computed AT MOST ONCE and threaded
-    // through both consumers (the collision probe's overlap test and the
-    // appended files' index entry): `updates` is often a lazy pipeline —
-    // the streaming sink hands the whole probe's result in — and every
-    // extra evaluation here re-runs it end to end. Lazy so an unindexed
-    // table (the one-shot bulk-upsert shape) never pays the extra job.
-    lazy val batchAgg: Option[org.apache.spark.sql.Row] =
-      if (sameShape && indexableKeys(updates, keys)) {
-        val aggCols = keys.flatMap(k => Seq(min(col(k)).as(s"bmin_$k"),
-          max(col(k)).as(s"bmax_$k"))) :+ count(lit(1)).as("bn")
-        Some(updates.agg(aggCols.head, aggCols.tail: _*).collect()(0))
-      } else None
-    val canAppend = sameShape &&
-      !collides(spark, path, target, updates, keys, () => batchAgg)
-    if (canAppend) {
+    if (shape(target) == shape(updates) && !collides(target, updates, keys)) {
       // column order pinned to the table's so every file carries the
       // same layout (readers merge by name, but keep footers uniform)
-      val batch = updates.select(target.columns.map(col): _*)
-      val rels = appendIn(spark, path, batch, partitionCols)
-      batchAgg.filter(_ => keyIndex).foreach { agg =>
-        import spark.implicits._
-        val ranges = spark.createDataFrame(
-          spark.sparkContext.parallelize(Seq(agg), 1), agg.schema)
-          .select(keys.flatMap(k => Seq(col(s"bmin_$k").as(s"min_$k"),
-            col(s"bmax_$k").as(s"max_$k"))): _*)
-        writeIdxEntry(spark, path, keys,
-          rels.toDF("file").crossJoin(broadcast(ranges)))
-      }
-    } else {
-      swapIn(spark, path, merge(target, updates, keys), partitionCols)
-      if (keyIndex) rebuildKeyIndex(spark, path, keys)
-    }
+      appendIn(spark, path, updates.select(target.columns.map(col): _*),
+        partitionCols)
+    } else swapIn(spark, path, merge(target, updates, keys), partitionCols)
   }
 
   // ---------------------------------------------------------------- append
 
   private val AddStageSuffix = ".__add__"
   private val AddLogSuffix = ".__addlog__"
-  private val KeyIdxSuffix = ".__keyidx__"
 
   private def readLines(fs: FileSystem, p: Path): Seq[String] = {
     val in = fs.open(p)
@@ -183,9 +140,14 @@ object MergeWriter {
     try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
     finally out.close()
     fs.delete(p, false)
-    if (!fs.rename(tmp, p))
-      throw new java.io.IOException(s"could not publish marker $p")
+    renameOrThrow(fs, tmp, p)
   }
+
+  /** `fs.rename` reports most failures by returning false, not throwing:
+    * every publish step goes through here so none is silently skipped. */
+  private def renameOrThrow(fs: FileSystem, src: Path, dst: Path): Unit =
+    if (!fs.rename(src, dst))
+      throw new java.io.IOException(s"could not rename $src to $dst")
 
   /** Data files under `root`, as paths relative to it (partition subdirs
     * included). */
@@ -209,10 +171,9 @@ object MergeWriter {
     * the marker. Readers never see a partial batch: task files stay in
     * the staging dir until every one is complete (_SUCCESS), and a crash
     * anywhere in the rename window leaves the marker for [[recover]] to
-    * roll the whole batch back. Returns the published files' relative
-    * paths. */
+    * roll the whole batch back. */
   private def appendIn(spark: SparkSession, path: String, batch: DataFrame,
-                       partitionCols: Seq[String]): Seq[String] = {
+                       partitionCols: Seq[String]): Unit = {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val stage = new Path(path + AddStageSuffix)
     fs.delete(stage, true)
@@ -226,20 +187,18 @@ object MergeWriter {
       val dst = new Path(cur, rel)
       val parent = dst.getParent
       if (!fs.exists(parent)) fs.mkdirs(parent)
-      if (!fs.rename(new Path(stage, rel), dst))
-        throw new java.io.IOException(s"append publish failed at $rel")
+      renameOrThrow(fs, new Path(stage, rel), dst)
     }
     fs.delete(new Path(path + AddLogSuffix), false)
-    fs.delete(stage, true)
-    rels
+    fs.delete(stage, true): Unit
   }
 
-  // ------------------------------------------------------- key-range index
+  // --------------------------------------------------------- collision probe
 
-  /** Key types the range index can prune on: orderable atomics whose
-    * min/max are well-defined and comparable across engines. Anything
-    * else (arrays, structs, maps) simply opts the index out. */
-  private def indexableKeys(df: DataFrame, keys: Seq[String]): Boolean = {
+  /** Key types a literal range filter can bound: orderable atomics whose
+    * min/max are well-defined. Anything else (arrays, structs, maps)
+    * probes unbounded. */
+  private def orderableKeys(df: DataFrame, keys: Seq[String]): Boolean = {
     import org.apache.spark.sql.types._
     keys.forall(k => df.schema.fields.find(_.name == k).exists(_.dataType match {
       case ByteType | ShortType | IntegerType | LongType | FloatType |
@@ -250,122 +209,47 @@ object MergeWriter {
     }))
   }
 
-  private def idxMinMaxCols(keys: Seq[String]) =
-    keys.flatMap(k => Seq(min(col(k)).as(s"min_$k"), max(col(k)).as(s"max_$k")))
-
-  /** Re-derive per-file key ranges from the table itself — one
-    * column-pruned scan, paid only beside an already-O(store) rewrite.
-    * Replaces the whole sidecar (rewrites invalidate every prior entry). */
-  private def rebuildKeyIndex(spark: SparkSession, path: String,
-                              keys: Seq[String]): Unit = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val idx = new Path(path + KeyIdxSuffix)
-    fs.delete(idx, true)
-    if (!fs.exists(new Path(path))) return
-    val t = spark.read.parquet(path)
-    if (!indexableKeys(t, keys)) return
-    // normalize input_file_name (a full URI) to a table-relative path; a
-    // degenerate match (table dir name repeated inside a partition dir)
-    // yields a rel that matches no listed file and the file just stays
-    // unindexed — the index only ever prunes, never excuses, a scan
-    val dirName = java.util.regex.Pattern.quote(new Path(path).getName)
-    val rows = t.select((keys.map(col) :+
-        regexp_replace(input_file_name(), s"^.*$dirName/", "").as("file")): _*)
-      .groupBy("file")
-      .agg(idxMinMaxCols(keys).head, idxMinMaxCols(keys).tail: _*)
-    writeIdxEntry(spark, path, keys, rows)
-  }
-
-  /** Append one entry dir to the sidecar. Entries are tiny (one row per
-    * file); each write is its own parquet dir so appends never rewrite
-    * the index. A torn entry (no _SUCCESS / unreadable) is ignored by
-    * [[readKeyIndex]] and its files degrade to always-scanned. */
-  private def writeIdxEntry(spark: SparkSession, path: String,
-                            keys: Seq[String], rows: DataFrame): Unit = {
-    val entry = s"$path$KeyIdxSuffix/e_${System.currentTimeMillis()}_${
-      java.util.UUID.randomUUID.toString.take(8)}"
-    rows.coalesce(1).write.mode("overwrite").parquet(entry)
-  }
-
-  /** All readable index entries, or None when the sidecar is absent or
-    * unreadable (schema drift between entries, torn writes). Index size
-    * is file-count-bounded (one row per data file, one entry dir per
-    * append since the last rewrite), and compaction — which every
-    * appending workload needs anyway for the data files themselves —
-    * collapses the sidecar back to a single entry; the driver-side
-    * collects in [[collides]] share that bound. */
-  private def readKeyIndex(spark: SparkSession, path: String): Option[DataFrame] = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val idx = new Path(path + KeyIdxSuffix)
-    if (!fs.exists(idx)) return None
-    val entries = fs.listStatus(idx).filter(_.isDirectory)
-      .filter(e => fs.exists(new Path(e.getPath, "_SUCCESS")))
-      .map(_.getPath.toString)
-    if (entries.isEmpty) return None
-    try {
-      val df = spark.read.parquet(entries.toIndexedSeq: _*)
-      df.schema // force schema resolution now, not at probe time
-      Some(df)
-    } catch { case _: Throwable => None }
-  }
-
   /** Does any update key exist in the table? The probe behind the
-    * insert-only fast path. With a key-range sidecar the table scan
-    * prunes to files whose range overlaps the batch's (plus any file the
-    * index doesn't cover); an empty candidate set answers without
-    * touching the table OR the batch again (`batchAgg` — the batch's
-    * precomputed key ranges — is the only evaluation of `updates` the
-    * happy path needs, load-bearing when `updates` is a lazy pipeline).
-    * Null keys never equi-join-match, so range rows from all-null files
-    * prune away safely. */
-  private def collides(spark: SparkSession, path: String, target: DataFrame,
-                       updates: DataFrame, keys: Seq[String],
-                       batchAgg: () => Option[org.apache.spark.sql.Row]): Boolean = {
-    def probeKeys = updates.select(keys.map(col): _*).distinct()
-    def fullScan() =
-      !target.select(keys.map(col): _*).join(probeKeys, keys, "left_semi").isEmpty
-    (readKeyIndex(spark, path) match {
-      case Some(idx) => batchAgg().map(agg => (idx, agg))
-      case None => None
-    }) match {
-      case Some((idx, agg)) =>
-        val wanted = (Seq("file") ++ keys.flatMap(k => Seq(s"min_$k", s"max_$k")))
-        if (!wanted.forall(idx.columns.contains(_))) return fullScan()
-        if (agg.getAs[Long]("bn") == 0L) return false // empty batch
-        val fs = new Path(path)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val actual = listDataFiles(fs, new Path(path)).toSet
-        import spark.implicits._
-        val bdf = spark.createDataFrame(
-          spark.sparkContext.parallelize(Seq(agg), 1), agg.schema)
-        val overlapPred = keys.map(k =>
-          col(s"max_$k") >= col(s"bmin_$k") && col(s"min_$k") <= col(s"bmax_$k"))
-          .reduce(_ && _)
-        val overlapping = idx.crossJoin(broadcast(bdf)).filter(overlapPred)
-          .select("file").as[String].collect().toSet
-        val indexed = idx.select("file").as[String].collect().toSet
-        val candidates = (actual & overlapping) ++ (actual -- indexed)
-        if (candidates.isEmpty) false
-        else {
-          // basePath keeps hive-partition columns readable when the key
-          // includes one and only a file subset is scanned
-          val pruned = spark.read.option("basePath", path)
-            .parquet(candidates.toSeq.sorted.map(r => s"$path/$r"): _*)
-          if (!keys.forall(pruned.columns.contains(_))) fullScan()
-          else !pruned.select(keys.map(col): _*)
-            .join(probeKeys, keys, "left_semi").isEmpty
-        }
-      case _ => fullScan()
-    }
+    * insert-only fast path: a semi-join of the batch's distinct keys
+    * against the table's key columns.
+    *
+    * When the batch is PERSISTED, one min/max aggregate over it first
+    * bounds the table side with `k BETWEEN lo AND hi` for every key. The
+    * literals reach Parquet as pushed filters, so row groups whose footer
+    * min/max misses the batch's range are skipped unread, and on a hive
+    * partition key whole directories are. With naturally increasing
+    * ingest keys that is every stored row group: the probe reads the
+    * table's footers, not its rows. A lazy batch skips the aggregate: a
+    * second pass would re-run its whole lineage, which costs more than
+    * the scan it could prune. Null keys never equi-join-match, so an
+    * all-null range (null literals match nothing) prunes correctly. */
+  private def collides(target: DataFrame, updates: DataFrame,
+                       keys: Seq[String]): Boolean = {
+    val bounded =
+      if (updates.storageLevel == StorageLevel.NONE ||
+          !orderableKeys(updates, keys)) target
+      else {
+        val aggCols = keys.flatMap(k => Seq(min(col(k)), max(col(k)))) :+
+          count(lit(1))
+        val agg = updates.agg(aggCols.head, aggCols.tail: _*).head()
+        if (agg.getLong(2 * keys.size) == 0L) return false // empty batch
+        target.filter(keys.zipWithIndex.map { case (k, i) =>
+          val t = updates.schema(k).dataType
+          col(k).between(lit(agg.get(2 * i)).cast(t),
+            lit(agg.get(2 * i + 1)).cast(t))
+        }.reduce(_ && _))
+      }
+    !bounded.select(keys.map(col): _*)
+      .join(updates.select(keys.map(col): _*).distinct(), keys, "left_semi")
+      .isEmpty
   }
 
   // ---------------------------------------------------------------- swaps
 
   /** Write `next` beside `path` and promote it with the two-rename swap
     * (every crash point covered by [[recover]]). Shared tail of the
-    * upsert / delete / compact rewrites. Invalidates the key-range
-    * sidecar (every pre-rewrite entry names files that no longer exist);
-    * callers that maintain the index rebuild it afterwards. */
+    * upsert / delete / compact rewrites. A rename that reports failure
+    * throws, so no caller reports a publish that did not happen. */
   private def swapIn(spark: SparkSession, path: String, next: DataFrame,
                      partitionCols: Seq[String] = Nil): Unit = {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -374,11 +258,10 @@ object MergeWriter {
     val writer = next.write.mode("overwrite")
     (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*)
      else writer).parquet(tmp.toString)
-    fs.delete(new Path(path + KeyIdxSuffix), true)
     val old = new Path(path + ".__old__")
     if (fs.exists(old)) fs.delete(old, true)
-    if (fs.exists(cur)) fs.rename(cur, old)
-    fs.rename(tmp, cur)
+    if (fs.exists(cur)) renameOrThrow(fs, cur, old)
+    renameOrThrow(fs, tmp, cur)
     fs.delete(old, true): Unit
   }
 
@@ -393,12 +276,10 @@ object MergeWriter {
     * `partitionCols` carries the same contract as upsertParquet's — a
     * hive-partitioned table MUST pass its partition columns or the
     * rewrite flattens the directory layout (and with it the partition
-    * pruning the warehouse relies on). `keyIndex` as in upsertParquet:
-    * rebuild the range sidecar after the rewrite for appending callers. */
+    * pruning the warehouse relies on). */
   def deleteParquet(spark: SparkSession, path: String,
                     tombstones: DataFrame, keys: Seq[String],
-                    partitionCols: Seq[String] = Nil,
-                    keyIndex: Boolean = false): Unit = {
+                    partitionCols: Seq[String] = Nil): Unit = {
     recover(spark, path)
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val cur = new Path(path)
@@ -406,7 +287,6 @@ object MergeWriter {
     val kept = spark.read.parquet(path)
       .join(tombstones.select(keys.map(col): _*).distinct(), keys, "left_anti")
     swapIn(spark, path, kept, partitionCols)
-    if (keyIndex) rebuildKeyIndex(spark, path, keys)
   }
 
   /** Small-file compaction — the warehouse-maintenance pass every
@@ -419,16 +299,10 @@ object MergeWriter {
     * also what keeps the rewrite off the rest of the table. Same
     * `partitionCols` contract as upsert/delete: a hive-partitioned table
     * compacted at its ROOT must pass its partition columns or the
-    * layout flattens (per-partition compaction needs none).
-    * `indexKeys`: non-empty rebuilds the key-range sidecar after the
-    * rewrite (compaction replaces every file, so an appending caller's
-    * index must be re-derived or the next probe degrades to a full
-    * scan — the post-compaction probe recovery the streaming sink
-    * depends on). */
+    * layout flattens (per-partition compaction needs none). */
   def compactParquet(spark: SparkSession, path: String,
                      targetFileBytes: Long = 128L << 20,
-                     partitionCols: Seq[String] = Nil,
-                     indexKeys: Seq[String] = Nil): Unit = {
+                     partitionCols: Seq[String] = Nil): Unit = {
     recover(spark, path)
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val cur = new Path(path)
@@ -446,6 +320,5 @@ object MergeWriter {
     if (want >= nFiles) return // already compact enough: skip the rewrite
     swapIn(spark, path, spark.read.parquet(path).coalesce(want),
       partitionCols)
-    if (indexKeys.nonEmpty) rebuildKeyIndex(spark, path, indexKeys)
   }
 }

@@ -28,12 +28,10 @@ import graft.sources.MergeWriter
   */
 object DocStream {
 
-  /** Seed (or extend) the signature store from a batch corpus. The store
-    * is key-indexed from birth so the stream's insert-only upserts can
-    * prune their collision probes (MergeWriter's key-range sidecar). */
+  /** Seed (or extend) the signature store from a batch corpus. */
   def seedSignatureStore(docs: DataFrame, storePath: String): Unit =
     MergeWriter.upsertParquet(docs.sparkSession, storePath,
-      Dedup.signatures(docs), Seq("doc_id"), keyIndex = true)
+      Dedup.signatures(docs), Seq("doc_id"))
 
   /** Pruning hysteresis: the store probe prunes to LIVE buckets while the
     * measured live-band fraction stays below [[pruneOnBelow]], and stops
@@ -61,9 +59,10 @@ object DocStream {
     * `compactEvery`-th batch both sinks are compacted (the LSM
     * tradeoff: one amortized O(store)/`compactEvery` rewrite per batch
     * buys a bounded file count); 0 disables. Compaction is the same
-    * crash-safe two-rename swap as the upsert and REBUILDS the key-range
-    * sidecar it invalidates, so the post-compaction collision probes go
-    * straight back to pruned O(batch) cost.
+    * crash-safe two-rename swap as the upsert, into MergeWriter's
+    * default-sized files. Both sinks' batches are persisted, so their
+    * collision probes skip every stored row group outside the batch's
+    * key range (Parquet footer min/max) before and after compaction.
     *
     * Store-probe pruning is ADAPTIVE: each batch measures the live-band
     * fraction (store band rows whose bucket holds a batch member — one
@@ -74,15 +73,11 @@ object DocStream {
     * sheds the measured ~2× pruning penalty instead of silently paying
     * it. The measurement itself costs one extra column-pruned pass over
     * the store's band columns — the same cost class as the probe's own
-    * band scan; `metricEvery` amortizes it (measure every Nth batch,
-    * hold the last decision in between) when even that pass matters.
-    * `onBatchMetrics(batchId, liveFraction, pruned)` surfaces each
-    * measured decision to instruments (StreamBench) and tests. */
+    * band scan. `onBatchMetrics(batchId, liveFraction, pruned)` surfaces
+    * each measured decision to instruments (StreamBench) and tests. */
   def nearDupStream(docs: DataFrame, storePath: String, hitsPath: String,
                     threshold: String = "0.08",
                     compactEvery: Int = 64,
-                    targetFileBytes: Long = 128L << 20,
-                    metricEvery: Int = 1,
                     onBatchMetrics: (Long, Double, Boolean) => Unit =
                       (_, _, _) => ()): StreamingQuery = {
     val owner = docs.sparkSession
@@ -107,21 +102,19 @@ object DocStream {
           val pairs =
             if (fs.exists(new Path(storePath))) {
               val store = owner.read.parquet(storePath)
-              if (metricEvery > 0 && batchId % metricEvery == 0) {
-                val frac = Dedup.liveBucketFraction(sig, store)
-                pruneOn =
-                  if (frac > pruneOffAbove) false
-                  else if (frac < pruneOnBelow) true
-                  else pruneOn
-                onBatchMetrics(batchId, frac, pruneOn)
-              }
+              val frac = Dedup.liveBucketFraction(sig, store)
+              pruneOn =
+                if (frac > pruneOffAbove) false
+                else if (frac < pruneOnBelow) true
+                else pruneOn
+              onBatchMetrics(batchId, frac, pruneOn)
               intra.unionByName(Dedup.probePairs(sig, store, threshold,
                 pruneToLiveBuckets = pruneOn))
             } else intra
           // the probe result is PERSISTED before the upsert: the sink
-          // evaluates its updates more than once (key-range aggregate +
-          // the write itself), and re-running the store probe per
-          // evaluation would re-pay its store-sized band join each time
+          // evaluates its updates more than once (key-range aggregate,
+          // collision probe, the write itself), and re-running the store
+          // probe per evaluation would re-pay its store-sized band join
           val hitRows = pairs
             .select(least(col("new_doc"), col("dup_of")).as("doc_a"),
               greatest(col("new_doc"), col("dup_of")).as("doc_b"),
@@ -132,16 +125,13 @@ object DocStream {
             .dropDuplicates("doc_a", "doc_b")
             .persist()
           MergeWriter.upsertParquet(owner, hitsPath, hitRows,
-            Seq("doc_a", "doc_b"), keyIndex = true)
+            Seq("doc_a", "doc_b"))
           hitRows.unpersist()
-          MergeWriter.upsertParquet(owner, storePath, sig, Seq("doc_id"),
-            keyIndex = true)
+          MergeWriter.upsertParquet(owner, storePath, sig, Seq("doc_id"))
           sig.unpersist()
           if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0) {
-            MergeWriter.compactParquet(owner, storePath, targetFileBytes,
-              indexKeys = Seq("doc_id"))
-            MergeWriter.compactParquet(owner, hitsPath, targetFileBytes,
-              indexKeys = Seq("doc_a", "doc_b"))
+            MergeWriter.compactParquet(owner, storePath)
+            MergeWriter.compactParquet(owner, hitsPath)
           }
         }
       }

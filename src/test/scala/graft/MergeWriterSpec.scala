@@ -1,8 +1,23 @@
 package graft
 
 import graft.sources.MergeWriter
+import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicLong
+import scala.jdk.CollectionConverters._
+
+/** The local file system under the `failrename` scheme, except that a
+  * rename onto a retired `.__old__` directory returns false — the way
+  * Hadoop file systems report most rename failures. */
+class OldRenameFailsFs extends RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("failrename:///")
+  override def getScheme: String = "failrename"
+  override def rename(src: Path, dst: Path): Boolean =
+    !dst.getName.endsWith(".__old__") && super.rename(src, dst)
+}
 
 class MergeWriterSpec extends SparkSpecBase {
 
@@ -192,90 +207,90 @@ class MergeWriterSpec extends SparkSpecBase {
     assert(spark.read.parquet(dir).count() == 3)
   }
 
+  /** Input records read by every task of the jobs `body` runs. */
+  private def recordsRead(body: => Unit): Long = {
+    val read = new AtomicLong(0)
+    val drained = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        read.addAndGet(e.taskMetrics.inputMetrics.recordsRead): Unit
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(
+            _.getProperty("spark.job.description") == "drain"))
+          drained.countDown()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      body
+      // the listener bus is FIFO: once this marker job's start arrives,
+      // every task end of `body` has been counted
+      sc.setJobDescription("drain")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setJobDescription(null)
+      assert(drained.await(30, TimeUnit.SECONDS), "listener bus never drained")
+    } finally sc.removeSparkListener(listener)
+    read.get()
+  }
+
+  /** Data files under `dir`, relative to it (partition subdirs included). */
+  private def dataFiles(dir: String): Set[String] = {
+    val root = java.nio.file.Paths.get(dir)
+    val walk = Files.walk(root)
+    try walk.iterator().asScala.map(root.relativize(_).toString)
+      .filter(_.endsWith(".parquet")).toSet
+    finally walk.close()
+  }
+
   test("key-range index prunes the collision probe to zero table reads") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_idx").toString + "/t"
-    // seed 100k rows with keys [0, 100k); index maintained
+    // seed 100k rows with keys [0, 100k)
     MergeWriter.upsertParquet(spark, dir,
       spark.range(100000).selectExpr("id AS k", "CAST(id AS STRING) AS s"),
-      Seq("k"), keyIndex = true)
-    assert(new java.io.File(dir + ".__keyidx__").exists(),
-      "keyIndex=true must build the sidecar")
+      Seq("k"))
     // records read across an insert-only upsert whose key range is
-    // DISJOINT from the table's: the probe must answer from the index
-    // without scanning the 100k stored rows
-    val read = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        read.addAndGet(e.taskMetrics.inputMetrics.recordsRead): Unit
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      MergeWriter.upsertParquet(spark, dir,
-        spark.range(200000, 200100).selectExpr("id AS k", "CAST(id AS STRING) AS s"),
-        Seq("k"), keyIndex = true)
-      // listener events are async; give the bus a moment to drain
-      val deadline = System.currentTimeMillis() + 5000
-      while (read.get() < 100 && System.currentTimeMillis() < deadline)
-        Thread.sleep(50)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    // DISJOINT from the table's: the persisted batch's range must skip
+    // every stored row group on its footer min/max
+    val batch = spark.range(200000, 200100)
+      .selectExpr("id AS k", "CAST(id AS STRING) AS s").persist()
+    val read = recordsRead(MergeWriter.upsertParquet(spark, dir, batch, Seq("k")))
+    batch.unpersist()
     assert(spark.read.parquet(dir).count() == 100100)
-    assert(read.get() < 50000,
-      s"disjoint-range append read ${read.get()} records — the collision " +
-        "probe scanned the table instead of pruning on the key index")
+    assert(read < 50000,
+      s"disjoint-range append read $read records — the collision " +
+        "probe scanned the table instead of pruning on the key range")
     // an OVERLAPPING batch must still detect its collision (update wins)
-    MergeWriter.upsertParquet(spark, dir,
-      Seq((5L, "FIVE")).toDF("k", "s"), Seq("k"), keyIndex = true)
+    val overlap = Seq((5L, "FIVE")).toDF("k", "s").persist()
+    MergeWriter.upsertParquet(spark, dir, overlap, Seq("k"))
+    overlap.unpersist()
     assert(spark.read.parquet(dir).filter($"k" === 5L)
       .collect().map(_.getString(1)).toSeq == Seq("FIVE"))
     assert(spark.read.parquet(dir).count() == 100100)
   }
 
-  test("a lost key index degrades to the full probe, never past correctness") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft_idx2").toString + "/t"
-    MergeWriter.upsertParquet(spark, dir,
-      Seq((1L, "a"), (2L, "b")).toDF("k", "s"), Seq("k"), keyIndex = true)
-    MergeWriter.upsertParquet(spark, dir,
-      Seq((3L, "c")).toDF("k", "s"), Seq("k"), keyIndex = true)
-    // blow the sidecar away: appended files become unindexed
-    def rmDir(p: java.io.File): Unit = {
-      if (p.isDirectory) p.listFiles().foreach(rmDir)
-      p.delete(): Unit
-    }
-    rmDir(new java.io.File(dir + ".__keyidx__"))
-    // a redelivery of batch (3) must STILL collide (full-scan fallback)
-    MergeWriter.upsertParquet(spark, dir,
-      Seq((3L, "c")).toDF("k", "s"), Seq("k"))
-    assert(spark.read.parquet(dir).orderBy("k").collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSeq ==
-      Seq((1L, "a"), (2L, "b"), (3L, "c")))
-  }
-
-  test("compaction with indexKeys rebuilds per-file ranges (probe recovery)") {
+  test("compaction keeps appends and collision detection correct (probe recovery)") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_idx3").toString + "/t"
     MergeWriter.upsertParquet(spark, dir,
-      spark.range(0, 1000).selectExpr("id AS k", "'x' AS s"), Seq("k"),
-      keyIndex = true)
+      spark.range(0, 1000).selectExpr("id AS k", "'x' AS s"), Seq("k"))
     (1 to 5).foreach { i =>
-      MergeWriter.upsertParquet(spark, dir,
-        spark.range(i * 1000L, i * 1000L + 1000).selectExpr("id AS k", "'x' AS s"),
-        Seq("k"), keyIndex = true)
+      val batch = spark.range(i * 1000L, i * 1000L + 1000)
+        .selectExpr("id AS k", "'x' AS s").persist()
+      MergeWriter.upsertParquet(spark, dir, batch, Seq("k"))
+      batch.unpersist()
     }
-    MergeWriter.compactParquet(spark, dir, targetFileBytes = 1L << 30,
-      indexKeys = Seq("k"))
-    // the rebuilt index must cover the compacted file(s): a disjoint
-    // append right after compaction stays pruned AND correct
-    val entries = new java.io.File(dir + ".__keyidx__").listFiles()
-    assert(entries != null && entries.nonEmpty,
-      "compaction must rebuild the key index it invalidated")
-    MergeWriter.upsertParquet(spark, dir,
-      Seq((99999L, "y")).toDF("k", "s"), Seq("k"), keyIndex = true)
+    MergeWriter.compactParquet(spark, dir, targetFileBytes = 1L << 30)
+    assert(dataFiles(dir).size == 1, "appended files not compacted")
+    // a disjoint append right after compaction stays an append and
+    // correct, and overlap detection holds on the compacted file
+    val fresh = Seq((99999L, "y")).toDF("k", "s").persist()
+    MergeWriter.upsertParquet(spark, dir, fresh, Seq("k"))
+    fresh.unpersist()
     assert(spark.read.parquet(dir).count() == 6001)
-    // overlap detection survives the rebuild too
-    MergeWriter.upsertParquet(spark, dir,
-      Seq((500L, "UPD")).toDF("k", "s"), Seq("k"), keyIndex = true)
+    val update = Seq((500L, "UPD")).toDF("k", "s").persist()
+    MergeWriter.upsertParquet(spark, dir, update, Seq("k"))
+    update.unpersist()
     assert(spark.read.parquet(dir).count() == 6001)
     assert(spark.read.parquet(dir).filter($"k" === 500L)
       .head().getString(1) == "UPD")
@@ -285,39 +300,94 @@ class MergeWriterSpec extends SparkSpecBase {
     import spark.implicits._
     // the streaming HITS shape: doc_a (= least of the pair) spans the
     // whole historical id range every batch, but doc_b (= greatest, the
-    // current batch's fresh ids) is monotonic — the overlap test is a
+    // current batch's fresh ids) is monotonic — the range filter is a
     // conjunction over ALL key columns, so the disjoint doc_b range
     // alone must prune the collision probe to zero table reads
     val dir = Files.createTempDirectory("graft_idxc").toString + "/t"
     MergeWriter.upsertParquet(spark, dir,
       spark.range(50000).selectExpr("id % 100 AS a", "id + 1000 AS b", "'x' AS s"),
-      Seq("a", "b"), keyIndex = true)
-    val read = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        read.addAndGet(e.taskMetrics.inputMetrics.recordsRead): Unit
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      // a overlaps [0,100) fully; b is disjoint (above the stored max)
-      MergeWriter.upsertParquet(spark, dir,
-        spark.range(200).selectExpr("id % 100 AS a", "id + 1000000 AS b", "'y' AS s"),
-        Seq("a", "b"), keyIndex = true)
-      val deadline = System.currentTimeMillis() + 5000
-      while (read.get() < 100 && System.currentTimeMillis() < deadline)
-        Thread.sleep(50)
-    } finally spark.sparkContext.removeSparkListener(listener)
+      Seq("a", "b"))
+    // a overlaps [0,100) fully; b is disjoint (above the stored max)
+    val batch = spark.range(200)
+      .selectExpr("id % 100 AS a", "id + 1000000 AS b", "'y' AS s").persist()
+    val read = recordsRead(
+      MergeWriter.upsertParquet(spark, dir, batch, Seq("a", "b")))
+    batch.unpersist()
     assert(spark.read.parquet(dir).count() == 50200)
-    assert(read.get() < 25000,
-      s"composite-key append read ${read.get()} records — the conjunctive " +
-        "range test failed to prune on the disjoint key column")
+    assert(read < 25000,
+      s"composite-key append read $read records — the conjunctive " +
+        "range filter failed to prune on the disjoint key column")
     // and a batch overlapping on BOTH columns still detects its collision
-    MergeWriter.upsertParquet(spark, dir,
-      Seq((5L, 1005L, "UPD")).toDF("a", "b", "s"), Seq("a", "b"),
-      keyIndex = true)
+    val overlap = Seq((5L, 1005L, "UPD")).toDF("a", "b", "s").persist()
+    MergeWriter.upsertParquet(spark, dir, overlap, Seq("a", "b"))
+    overlap.unpersist()
     assert(spark.read.parquet(dir).count() == 50200)
     assert(spark.read.parquet(dir).filter($"a" === 5L && $"b" === 1005L)
       .head().getString(2) == "UPD")
+  }
+
+  test("phot-shaped upsert: a persisted new image skips the stored image's rows") {
+    import spark.implicits._
+    // the cte phot table: keyed per star × aperture within an image,
+    // hive-partitioned by target; image A is stored, image B arrives
+    // with the same target and overlapping find_id/aperture ranges, so
+    // only imagename's footer min/max can prune
+    val keys = Seq("targname", "imagename", "find_id", "aperture")
+    val part = Seq("targname")
+    val root = Files.createTempDirectory("graft_phot").toString
+    val imageA = spark.range(20000).selectExpr("'NGC104' AS targname",
+      "'iaaa01aaq' AS imagename", "CAST(id DIV 4 AS INT) AS find_id",
+      "CAST(id % 4 + 1 AS INT) AS aperture", "id * 0.5D AS flux")
+    val rowsB = for (f <- 0 until 25; a <- 1 to 2)
+      yield ("NGC104", "iaaa01abq", f, a, f * 0.25)
+    def imageB = rowsB.toDF("targname", "imagename", "find_id", "aperture",
+      "flux")
+    val persisted = s"$root/persisted"
+    val unpersisted = s"$root/unpersisted"
+    Seq(persisted, unpersisted).foreach(
+      MergeWriter.upsertParquet(spark, _, imageA, keys, part))
+    val seeded = dataFiles(persisted)
+    def table(p: String) = spark.read.parquet(p)
+      .orderBy(keys.map(col): _*).collect().toSeq
+
+    // the lazy leg runs while nothing is cached: the cache manager
+    // would hand a same-plan batch the persisted data
+    MergeWriter.upsertParquet(spark, unpersisted, imageB, keys, part)
+    val cached = imageB.persist()
+    val read = recordsRead(
+      MergeWriter.upsertParquet(spark, persisted, cached, keys, part))
+    assert(read < 1000, s"new-image upsert read $read records — the " +
+      "probe scanned the stored image instead of skipping its row groups")
+    assert(seeded.subsetOf(dataFiles(persisted)),
+      "a collision-free image rewrote the table instead of appending")
+    val once = table(persisted)
+    assert(once.size == 20050)
+    assert(once == table(unpersisted))
+    // redelivery collides in both forms and leaves the tables unchanged
+    MergeWriter.upsertParquet(spark, persisted, cached, keys, part)
+    cached.unpersist()
+    MergeWriter.upsertParquet(spark, unpersisted, imageB, keys, part)
+    assert(table(persisted) == once)
+    assert(table(unpersisted) == once)
+  }
+
+  test("a refused rename fails the upsert and recover keeps the table") {
+    import spark.implicits._
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.failrename.impl", classOf[OldRenameFailsFs].getName)
+    val dir = "failrename://" +
+      Files.createTempDirectory("graft_rename").toString + "/t"
+    MergeWriter.upsertParquet(spark, dir,
+      Seq((1, "a"), (2, "b")).toDF("k", "s"), Seq("k"))
+    def rows() = spark.read.parquet(dir).orderBy("k").collect()
+      .map(r => (r.getInt(0), r.getString(1))).toSeq
+    // a colliding batch takes the rewrite, whose retire rename is refused
+    intercept[java.io.IOException] {
+      MergeWriter.upsertParquet(spark, dir,
+        Seq((2, "B"), (3, "c")).toDF("k", "s"), Seq("k"))
+    }
+    MergeWriter.recover(spark, dir)
+    assert(rows() == Seq((1, "a"), (2, "b")))
   }
 
   test("composite natural keys merge on the full key") {

@@ -8,8 +8,7 @@ import scala.jdk.CollectionConverters._
   * registered query MUST carry a DuckDB oracle (the driver's per-round
   * compare covers exactly the intersection — an oracle-less query would
   * look green forever without ever being checked), and every oracle must
-  * point at a real query. CountQueries prints the same facts for manual
-  * bookkeeping; this spec is the failing-build version. */
+  * point at a real query. A failing run prints the offending names. */
 class RegistrySpec extends AnyFunSuite {
 
   test("every registered query has an oracle, and vice versa") {
