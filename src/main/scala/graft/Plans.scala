@@ -28,7 +28,7 @@ object Plans {
     "t6_chunking" ->
       "Sequence explode is a narrow transform — zero exchanges before the fan-out.",
     "a2_sigma_clip" ->
-      "Three clip passes over ONE exchange+sort (window stats, linear plan, no persist).",
+      "Three clip passes as per-group aggregates: each pass collects its few (flag, status) bounds and filters by them as literals; the final stats are one partial+final HashAggregate — no window, no sort of the fact rows, no persist.",
     "w5_asof_prior" ->
       "As-of join as one frame-bounded window — single shuffle on the user key, no join, no union/backfill.",
     "a6_fit_recovery" ->
@@ -54,7 +54,7 @@ object Plans {
     "k1_kmv_distinct" ->
       "KMV sketch: GroupedTopK partial→exchange→final keeps k rows per group in flight — the distributed sketch-union shape.",
     "w8_percentiles" ->
-      "Exact quantiles: ONE shuffle+sort serves rn+count for all three percentiles; the conditional pivot collapses to |groups| rows.",
+      "Exact quantiles by cumulative count: ONE map-side-combined aggregate over (event_type, v) moves only distinct values; the running-count windows and the conditional-min pivot run over that aggregate, never the fact rows.",
     "f2_funnel" ->
       "Funnel: conditional min/max per user (one shuffle), cohort rollup of |users| rows — no event-log self-join.",
     "t8_topk_ngrams" ->
@@ -142,7 +142,7 @@ object Plans {
     "d15_lsh_recall" ->
       "LSH recall audit: the exact-truth side is all-pairs over a FIXED-SIZE sample (bottom-1000 doc_ids by md5, planned as TakeOrderedAndProject - per-partition top-k, one k-row merge, no full sort), so truth cost is a CONSTANT ~k^2/2 pairs at any corpus size; the candidate side reuses the production band equi-join; one scalar row out.",
     "dq2_mad_outliers" ->
-      "Median/MAD outliers: two per-group window sorts + three narrow aggregates, all partitioned on event_type — exact selection-based medians with no global sort and no interpolation arithmetic.",
+      "Median/MAD outliers: ONE map-side-combined aggregate over (event_type, v), localCheckpointed and read three times (median, deviation table, outlier count) — cumulative-count selection over distinct values, the fact table scanned once and never sorted, no interpolation arithmetic.",
     "d16_lsh_tuned" ->
       "Banding retune: one signature scan over d15's fixed-size (bottom-1000-by-md5) sample feeds BOTH band layouts; each candidate set is a band equi-join persisted once and read twice (count + recall join) — recall ~5%→~70% priced against the candidate-volume increase in a single plan, truth cost constant at any corpus size.",
     "m5_frame_sample" ->

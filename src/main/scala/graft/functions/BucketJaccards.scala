@@ -8,41 +8,36 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.types._
 
-/** Native Catalyst expression for the bucket-local pair-verification
-  * kernels — the hottest per-row work of the whole dedup family
-  * ([[TextKernels.chunkPairJaccards]] / [[TextKernels.chunkCrossJaccards]]
-  * as a `Expression` instead of a Scala UDF).
+/** Native Catalyst expression for the two-sided bucket-local
+  * pair-verification kernel — the hottest per-row work of the streaming
+  * probe ([[TextKernels.chunkCrossJaccards]] as an `Expression` instead of
+  * a Scala UDF).
   *
   * The UDF pays an encoder round-trip per GROUPED ROW: every member's
-  * (id, shingle-array[, tag]) struct is deserialized into boxed Scala
+  * (id, shingle-array, tag) struct is deserialized into boxed Scala
   * tuples, and every surviving pair is re-encoded — on a hot bucket that
   * is thousands of boxed allocations before the arithmetic even starts.
   * This expression reads the unsafe `ArrayData` buffers in place
   * (`toLongArray` on each member's hashes is the only copy) and emits
   * `InternalRow`s directly. Arithmetic contract (oracle-critical): the
   * SAME [[TextKernels.intersectCount]] and the same IEEE divide /
-  * `>= minJac` gate as the Scala kernels, so jaccards stay bit-identical
+  * `>= minJac` gate as the Scala kernel, so jaccards stay bit-identical
   * (pinned by KernelExprSpec against the UDF on random buckets).
   *
-  * ADOPTION IS MEASURED, NOT ASSUMED (sf10 same-window ABA, r12): the
-  * TWO-SIDED probe kernel wins consistently (d7 9.84 → 9.04 s, tight
-  * spreads both arms) and ships on [[graft.operators.Dedup.probePairs]];
-  * the ONE-SIDED kernel measured cost-neutral-to-slightly-worse on d10
-  * (25.1 vs 26.5/27.0 s) — the UDF's encoder round-trip is evidently not
-  * the bottleneck where each grouped row amortizes C(n,2) arithmetic —
-  * so the one-sided paths keep the UDF and this variant stays available
-  * (and spec-pinned) for shapes where row decode dominates.
+  * ADOPTION IS MEASURED, NOT ASSUMED (sf10 same-window ABA, r12): on the
+  * two-sided probe ([[graft.operators.Dedup.probePairs]]) it wins
+  * consistently (d7 9.84 → 9.04 s, tight spreads both arms). The
+  * one-sided paths keep [[TextKernels.chunkPairJaccardsUdf]], which the
+  * one-sided form of this expression did not beat.
   *
-  * `twoSided = false`: members are `struct(doc_id, hs)`; a null/empty
-  * `bmem` row verifies all pairs WITHIN `amem` (output id-sorted), a
-  * cross row verifies only across. `twoSided = true`: members carry a
-  * third `is_new` tag; pairs are (new, store) only, orientation kept,
-  * equal ids skipped (redelivery self-match). `softCap` (> 0) logs the
+  * Members are `struct(doc_id, hs, is_new)`, read by position; pairs are
+  * (new, store) only, orientation kept, equal ids skipped (redelivery
+  * self-match). A null/empty `bmem` row verifies the pairs WITHIN
+  * `amem`, a cross row only those across. `softCap` (> 0) logs the
   * chunk-skew sentinel once per JVM, exactly like the UDF kernels.
   */
 case class BucketJaccards(amem: Expression, bmem: Expression,
-                          minJac: Expression, softCap: Expression,
-                          twoSided: Boolean)
+                          minJac: Expression, softCap: Expression)
     extends Expression with CodegenFallback {
 
   override def children: Seq[Expression] = Seq(amem, bmem, minJac, softCap)
@@ -54,8 +49,6 @@ case class BucketJaccards(amem: Expression, bmem: Expression,
     StructField("_1", LongType, nullable = false),
     StructField("_2", LongType, nullable = false),
     StructField("_3", DoubleType, nullable = false))), containsNull = false)
-
-  private val memFields = if (twoSided) 3 else 2
 
   override def eval(input: InternalRow): Any = {
     val aRaw = amem.eval(input)
@@ -70,83 +63,47 @@ case class BucketJaccards(amem: Expression, bmem: Expression,
     val bn = if (b == null) 0 else b.numElements()
     TextKernels.warnIfOversized(cap, an, bn)
 
-    // unpack once: ids + hash arrays (+ side tags), no boxing
+    // unpack once: ids + hash arrays + side tags, no boxing
     val ids = new Array[Long](an + bn)
     val hss = new Array[Array[Long]](an + bn)
-    val tag = if (twoSided) new Array[Boolean](an + bn) else null
-    var i = 0
-    while (i < an) {
-      val m = a.getStruct(i, memFields)
-      ids(i) = m.getLong(0)
-      hss(i) = m.getArray(1).toLongArray()
-      if (twoSided) tag(i) = m.getBoolean(2)
-      i += 1
-    }
-    var j = 0
-    while (j < bn) {
-      val m = b.getStruct(j, memFields)
-      ids(an + j) = m.getLong(0)
-      hss(an + j) = m.getArray(1).toLongArray()
-      if (twoSided) tag(an + j) = m.getBoolean(2)
-      j += 1
-    }
-
-    val out = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
-    @inline def emit(x: Int, y: Int, sortIds: Boolean): Unit = {
-      val inter = TextKernels.intersectCount(hss(x), hss(y))
-      val jac = inter.toDouble /
-        (hss(x).length + hss(y).length - inter).toDouble
-      if (jac >= min) {
-        if (!sortIds || ids(x) < ids(y))
-          out += InternalRow(ids(x), ids(y), jac)
-        else out += InternalRow(ids(y), ids(x), jac)
+    val tag = new Array[Boolean](an + bn)
+    @inline def unpack(mem: ArrayData, n: Int, off: Int): Unit = {
+      var i = 0
+      while (i < n) {
+        val m = mem.getStruct(i, 3)
+        ids(off + i) = m.getLong(0)
+        hss(off + i) = m.getArray(1).toLongArray()
+        tag(off + i) = m.getBoolean(2)
+        i += 1
       }
     }
+    unpack(a, an, 0)
+    if (b != null) unpack(b, bn, an)
 
-    if (!twoSided) {
-      if (bn == 0) {
-        // intra row: all pairs within amem, id-sorted
-        var x = 0
-        while (x < an) {
-          var y = x + 1
-          while (y < an) { emit(x, y, sortIds = true); y += 1 }
-          x += 1
-        }
-      } else {
-        // cross row: amem × bmem only, id-sorted; equal ids skipped to
-        // match the UDF kernel exactly (production chunks never share a
-        // doc — a doc lives in one chunk per bucket — but the contract
-        // is the kernel's, not the caller's)
-        var x = 0
-        while (x < an) {
-          var y = an
-          while (y < an + bn) {
-            if (ids(x) != ids(y)) emit(x, y, sortIds = true)
+    // (new, store) orientation, equal ids skipped. Intra row: all
+    // new×store pairs within amem. Cross row: amem.new × bmem.store
+    // plus bmem.new × amem.store — the chunk split mixes sides.
+    val out = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
+    @inline def cross(loN: Int, hiN: Int, loS: Int, hiS: Int): Unit = {
+      var x = loN
+      while (x < hiN) {
+        if (tag(x)) {
+          var y = loS
+          while (y < hiS) {
+            if (!tag(y) && ids(x) != ids(y)) {
+              val inter = TextKernels.intersectCount(hss(x), hss(y))
+              val jac = inter.toDouble /
+                (hss(x).length + hss(y).length - inter).toDouble
+              if (jac >= min) out += InternalRow(ids(x), ids(y), jac)
+            }
             y += 1
           }
-          x += 1
         }
+        x += 1
       }
-    } else {
-      // (new, store) orientation, equal ids skipped. Intra row: all
-      // new×store pairs within amem. Cross row: amem.new × bmem.store
-      // plus bmem.new × amem.store — the chunk split mixes sides.
-      @inline def cross(loN: Int, hiN: Int, loS: Int, hiS: Int): Unit = {
-        var x = loN
-        while (x < hiN) {
-          if (tag(x)) {
-            var y = loS
-            while (y < hiS) {
-              if (!tag(y) && ids(x) != ids(y)) emit(x, y, sortIds = false)
-              y += 1
-            }
-          }
-          x += 1
-        }
-      }
-      if (bn == 0) cross(0, an, 0, an)
-      else { cross(0, an, an, an + bn); cross(an, an + bn, 0, an) }
     }
+    if (bn == 0) cross(0, an, 0, an)
+    else { cross(0, an, an, an + bn); cross(an, an + bn, 0, an) }
     new GenericArrayData(out.toArray[Any])
   }
 
@@ -157,16 +114,6 @@ case class BucketJaccards(amem: Expression, bmem: Expression,
 }
 
 object BucketJaccards {
-  /** One-sided chunk kernel ([[TextKernels.chunkPairJaccards]]) as a
-    * native expression. */
-  def chunkPair(amem: Column, bmem: Column, minJac: Double,
-                softCap: Int): Column =
-    ColumnBridge.toColumn(BucketJaccards(
-      ColumnBridge.toExpression(amem), ColumnBridge.toExpression(bmem),
-      org.apache.spark.sql.catalyst.expressions.Literal(minJac),
-      org.apache.spark.sql.catalyst.expressions.Literal(softCap),
-      twoSided = false))
-
   /** Two-sided chunk kernel ([[TextKernels.chunkCrossJaccards]]) as a
     * native expression. */
   def chunkCross(amem: Column, bmem: Column, minJac: Double,
@@ -174,6 +121,5 @@ object BucketJaccards {
     ColumnBridge.toColumn(BucketJaccards(
       ColumnBridge.toExpression(amem), ColumnBridge.toExpression(bmem),
       org.apache.spark.sql.catalyst.expressions.Literal(minJac),
-      org.apache.spark.sql.catalyst.expressions.Literal(softCap),
-      twoSided = true))
+      org.apache.spark.sql.catalyst.expressions.Literal(softCap)))
 }

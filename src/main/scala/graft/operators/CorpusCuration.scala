@@ -41,7 +41,7 @@ object CorpusCuration extends QueryPack {
   case class Config(
       minQuality: Double = 0.25,
       maxRepetition: Double = 0.9,
-      jaccardThreshold: String = "0.08",
+      jaccardThreshold: String = Dedup.jacThreshold,
       sampleRates: Map[String, Int] = Map("en" -> 90), // percent kept
       defaultRate: Int = 100,
       chunkSize: Int = 50,

@@ -3,6 +3,7 @@ package graft.operators
 import graft.{QueryPack, Tables}
 import graft.functions.{TextKernels, TextPrims}
 import graft.functions.TextPrims.{DuckD, SparkD, minhashSeeds, P}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for the LLM-data-pipeline extension: exact,
@@ -92,7 +93,7 @@ object Dedup extends QueryPack {
   //    sharing any band bucket become candidates (equi-join on the band
   //    key, never a cross join); candidates get the exact Jaccard check.
   private[graft] val nBands = 6
-  private[operators] val jacThreshold = "0.08"
+  private[graft] val jacThreshold = "0.08"
 
   /** (doc_id, sig, hs) for docs with ≥1 shingle — the MinHash signature
     * table behind d4/d7 and [[CorpusCuration]]. Callers that reference it
@@ -149,8 +150,8 @@ object Dedup extends QueryPack {
     * tasks. The machinery is ADAPTIVE at bucket granularity: one cheap
     * driver-side probe (map-side-combined count over the skinny band
     * triples) collects the oversized-bucket keys, and ONLY those
-    * buckets route through chunk-pair grouping (broadcast semi/anti
-    * split); every other bucket keeps the plain one-row plan. An A/B at
+    * buckets route through chunk-pair grouping ([[bucketGroups]]);
+    * every other bucket keeps the plain one-row plan. An A/B at
     * sf0.1 measured the always-on window/explode machinery at +14–37%
     * on d4/d10/gr5, and whole-stream chunking at sf1 (2 hot buckets,
     * 916 members max) taxed d21 +45% — the cap must cost nothing where
@@ -170,7 +171,7 @@ object Dedup extends QueryPack {
     * (usually cached) signature base. Oversized buckets are the
     * anomaly the chunk cap guards against; on a healthy corpus this
     * list is empty and the caller keeps the plain plan. */
-  private def oversizedBuckets(bands: org.apache.spark.sql.DataFrame,
+  private def oversizedBuckets(bands: DataFrame,
                                chunkSize: Int): Array[(Int, Long, Int)] =
     bands.groupBy("band_id", "bh").agg(count(lit(1)).as("n"))
       .filter(col("n") > chunkSize)
@@ -179,29 +180,53 @@ object Dedup extends QueryPack {
       .limit(maxHotBuckets + 1)
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getInt(2)))
 
-  /** Chunk-pair grouping for one-sided bucket-local verification: an
-    * oversized band bucket's members are cut into `nch` chunks, and
-    * every chunk pair (c_lo ≤ c_hi) becomes ONE grouped row carrying
-    * the lower chunk's members in `amem` and (for cross rows) the
-    * higher chunk's in `bmem`. The union of per-row pair sets is
-    * exactly the bucket's C(n,2) — same candidates as the uncapped
-    * plan. Chunks are assigned by hash(doc_id) mod nch — ONE pass, no
-    * per-bucket sort, sizes expected-`chunkSize` and sharply
-    * concentrated (a row_number formulation bounds them exactly but
-    * costs a bucket-keyed window shuffle+sort of the whole band stream;
-    * measured +45% on d21 at sf1 for two hot buckets). `nchHot`:
-    * broadcastable (band_id, bh, nch) rows for JUST the oversized
-    * buckets (cold buckets left-join to nch = 1 and keep their one
-    * intra row); None derives nch for every bucket with one skinny
-    * aggregate — the >64k-hot-buckets fallback, same pipeline. */
-  private[graft] def chunkedBucketMembers(
-      bands: org.apache.spark.sql.DataFrame,
-      sig: org.apache.spark.sql.DataFrame, chunkSize: Int,
-      nchHot: Option[org.apache.spark.sql.DataFrame] = None)
-      : org.apache.spark.sql.DataFrame = {
-    val nchDf = nchHot.map(broadcast).getOrElse(
-      bands.groupBy("band_id", "bh").agg(
-        ceil(count(lit(1)) / chunkSize.toDouble).cast("int").as("nch")))
+  /** Bucket-local grouping with the adaptive chunk cap — the one grouping
+    * behind every near-dup verification ([[nearDupPairsWithBase]], both
+    * [[probePairs]] paths, the d15/d16 truth sample, d6's kernel plan and
+    * d9's edit-distance pairs). `bands` are skinny (doc_id, band_id, bh)
+    * rows, side-tagged with `is_new` on the two-sided probe; `members`
+    * joins them on the columns both frames carry, and its columns, in
+    * order, make each member's struct: (doc_id, hs), or (doc_id, hs,
+    * is_new) — the kernels read the fields by position. Emits grouped
+    * (amem, bmem) rows.
+    *
+    * When the driver probe finds no bucket over `chunkSize` (a healthy
+    * corpus), each bucket is ONE row with `bmem` NULL: the kernel verifies
+    * all pairs within `amem`. Otherwise an oversized bucket's members are
+    * cut into `nch` chunks, and every chunk pair (c_lo ≤ c_hi) becomes ONE
+    * grouped row carrying the lower chunk's members in `amem` and (for
+    * cross rows) the higher chunk's in `bmem`. The union of per-row pair
+    * sets is exactly the bucket's pair set — same candidates as the
+    * uncapped plan. Chunks are assigned by hash(doc_id) mod nch — ONE
+    * pass, no per-bucket sort, sizes expected-`chunkSize` and sharply
+    * concentrated (a row_number formulation bounds them exactly but costs
+    * a bucket-keyed window shuffle+sort of the whole band stream; measured
+    * +45% on d21 at sf1 for two hot buckets). The hot buckets' broadcast
+    * (band_id, bh, nch) rows left-join the band stream in the SAME single
+    * pipeline — cold buckets ride through with nch = 1 and keep their one
+    * intra row; a two-branch semi/anti split was measured and rejected
+    * (the union recomputes the shared band/hs lineage per branch). Past
+    * [[maxHotBuckets]] hot buckets, nch is derived for every bucket with
+    * one skinny aggregate instead — same pipeline. */
+  private[graft] def bucketGroups(bands: DataFrame, members: DataFrame,
+                                  chunkSize: Int): DataFrame = {
+    val key = members.columns.toSeq.filter(bands.columns.contains)
+    val member = struct(members.columns.toSeq.map(col): _*)
+    val hot = oversizedBuckets(bands, chunkSize)
+    if (hot.isEmpty)
+      return bands.join(members, key)
+        .groupBy("band_id", "bh")
+        .agg(collect_list(member).as("amem"))
+        .filter(size(col("amem")) > 1)
+        .withColumn("bmem", when(lit(false), col("amem")))
+        .select("amem", "bmem")
+    val nchDf =
+      if (hot.length <= maxHotBuckets) {
+        val spark = bands.sparkSession
+        import spark.implicits._
+        broadcast(hot.toSeq.toDF("band_id", "bh", "nch"))
+      } else bands.groupBy("band_id", "bh").agg(
+        ceil(count(lit(1)) / chunkSize.toDouble).cast("int").as("nch"))
     bands.join(nchDf, Seq("band_id", "bh"), "left")
       .withColumn("nch", coalesce(col("nch"), lit(1)))
       // bucket-salted chunk hash (ADVICE r11): doc_ids whose plain hash
@@ -212,19 +237,17 @@ object Dedup extends QueryPack {
       // costs a whole-stream window, measured +45% on d21 at sf1)
       .withColumn("chunk",
         pmod(hash(col("doc_id"), col("bh"), col("band_id")), col("nch")))
-      .select(col("doc_id"), col("band_id"), col("bh"), col("chunk"),
-        explode(sequence(lit(0), col("nch") - 1)).as("j"))
-      .select(col("doc_id"), col("band_id"), col("bh"),
+      .select(key.map(col) ++ Seq(col("band_id"), col("bh"), col("chunk"),
+        explode(sequence(lit(0), col("nch") - 1)).as("j")): _*)
+      .select(key.map(col) ++ Seq(col("band_id"), col("bh"),
         least(col("chunk"), col("j")).as("c_lo"),
         greatest(col("chunk"), col("j")).as("c_hi"),
-        (col("chunk") <= col("j")).as("is_a"))
-      .join(sig.select(col("doc_id"), col("hs")), "doc_id")
+        (col("chunk") <= col("j")).as("is_a")): _*)
+      .join(members, key)
       .groupBy("band_id", "bh", "c_lo", "c_hi")
       .agg(
-        collect_list(when(col("is_a"),
-          struct(col("doc_id"), col("hs")))).as("amem"),
-        collect_list(when(!col("is_a"),
-          struct(col("doc_id"), col("hs")))).as("bmem"))
+        collect_list(when(col("is_a"), member)).as("amem"),
+        collect_list(when(!col("is_a"), member)).as("bmem"))
       .filter(size(col("amem")) + size(col("bmem")) > 1)
       // a cross row whose partner chunk came up empty (hash-assigned
       // chunks can be) holds only one side; the kernel would mistake it
@@ -233,17 +256,50 @@ object Dedup extends QueryPack {
       // (ADVICE r11). Intra pairs belong to the (c, c) row alone.
       .filter(col("c_lo") === col("c_hi") ||
         (size(col("amem")) > 0 && size(col("bmem")) > 0))
+      .select("amem", "bmem")
+  }
+
+  /** The kernel-side Jaccard gate: `threshold`'s value. The verification
+    * kernels drop pairs below it before they are emitted, so it must be a
+    * plain numeric literal (every caller passes one); a non-literal
+    * expression would leave the kernel emitting every candidate pair for
+    * the outer SQL filter to drop — a quiet perf trap (ADVICE r12) — so
+    * it fails fast instead. */
+  private def kernelGate(threshold: String): Double = {
+    val v = threshold.toDoubleOption
+    require(v.isDefined, "near-dup verification accepts only a literal " +
+      s"numeric threshold (the kernel gate needs its value), got: $threshold")
+    v.get
+  }
+
+  /** One-sided verification: every pair of `sig` docs (doc_id, hs) that
+    * shares a bucket of `bands`, as (doc_a < doc_b, jac) with jac ≥
+    * `threshold`. A pair sharing several buckets is emitted once per
+    * bucket; callers that need a set add `.distinct()`. The kernel stays
+    * the Scala UDF: the native [[graft.functions.BucketJaccards]] form
+    * measured cost-neutral-to-slightly-worse here (sf10 same-window ABA,
+    * r12: d10 25.1 vs 26.5/27.0 s) — each grouped row amortizes its
+    * C(n,2) arithmetic over one encoder round-trip. */
+  private def oneSidedPairs(bands: DataFrame, sig: DataFrame,
+                            chunkSize: Int, threshold: String): DataFrame = {
+    val minJac = kernelGate(threshold)
+    bucketGroups(bands, sig.select(col("doc_id"), col("hs")), chunkSize)
+      .select(explode(TextKernels.chunkPairJaccardsUdf(col("amem"),
+        col("bmem"), lit(minJac), lit(chunkSize * 8))).as("p"))
+      .select(col("p._1").as("doc_a"), col("p._2").as("doc_b"),
+        col("p._3").as("jac"))
+      .filter(col("jac") >= expr(threshold))
   }
 
   /** [[nearDupPairs]] plus the PERSISTED signature table it builds on —
     * for callers (the graph pack) that release query-local caches once
     * their dimension-sized result is materialized and so need a handle
     * on every cached intermediate, not just their own. */
-  def nearDupPairsWithBase(docs: org.apache.spark.sql.DataFrame,
+  def nearDupPairsWithBase(docs: DataFrame,
                            threshold: String = jacThreshold,
                            withLen: Boolean = false,
                            chunkSize: Int = bucketChunkSize)
-      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+      : (DataFrame, DataFrame) = {
     // The signature table is referenced 2× (banding + the member join);
     // persisted so the text kernels run once per doc, not twice
     // (the harness clears the cache between queries).
@@ -257,63 +313,9 @@ object Dedup extends QueryPack {
     // instead of riding every candidate row (~70 GB there: hot buckets
     // make candidates quadratic in bucket population, and the r10 sf10
     // run spilled that join to disk). Buckets exceeding
-    // [[bucketChunkSize]] (driver-collected with their chunk counts)
-    // split into chunk-pair rows via a broadcast nch left-join in the
-    // SAME single pipeline — cold buckets ride through with nch = 1 —
-    // so the hottest task and fattest row stay bounded while a corpus
-    // with no hot bucket at all skips even that (fastGroup: the exact
-    // one-row-per-bucket plan). A two-branch semi/anti split was
-    // measured and rejected: the union recomputes the shared band/hs
-    // lineage per branch. `bmem` is NULL on plain rows — the kernel
-    // then verifies all pairs within `amem`.
-    val grouped = groupedOneSided(bandsOf(base), base, chunkSize)
-    // The kernel pre-filters at the same threshold when it is a plain
-    // double literal (every current caller); a non-literal expression
-    // degrades to no pre-filter and the SQL gate below does all the work.
-    val kernelMin = scala.util.Try(threshold.toDouble)
-      .getOrElse(Double.NegativeInfinity)
-    val pairs = grouped
-      .select(explode(
-        graft.functions.TextKernels.chunkPairJaccardsUdf(
-          col("amem"), col("bmem"), lit(kernelMin), lit(chunkSize * 8)))
-        .as("p"))
-      .select(col("p._1").as("doc_a"), col("p._2").as("doc_b"),
-        col("p._3").as("jac"))
-      .filter(col("jac") >= expr(threshold))
-      .distinct()
-    (pairs, base)
-  }
-
-  /** One-sided bucket grouping with the adaptive chunk cap — the shared
-    * engine of [[nearDupPairsWithBase]] and [[probePairs]]'s self-probe
-    * fast path: each bucket's members (id + shingles) become one grouped
-    * row (`bmem` null — the kernel verifies all internal pairs), unless
-    * the driver probe finds buckets over `chunkSize`, in which case ONLY
-    * those split into chunk-pair rows via the broadcast nch left-join
-    * (cold buckets ride through with nch = 1). */
-  private def groupedOneSided(bands: org.apache.spark.sql.DataFrame,
-                              sig: org.apache.spark.sql.DataFrame,
-                              chunkSize: Int)
-      : org.apache.spark.sql.DataFrame = {
-    def fastGroup(b: org.apache.spark.sql.DataFrame) = b
-      .join(sig.select(col("doc_id"), col("hs")), "doc_id")
-      .groupBy("band_id", "bh")
-      .agg(collect_list(struct(col("doc_id"), col("hs"))).as("amem"))
-      .filter(size(col("amem")) > 1)
-      .withColumn("bmem", when(lit(false), col("amem")))
-      .select("amem", "bmem")
-    val hot = oversizedBuckets(bands, chunkSize)
-    if (hot.isEmpty) fastGroup(bands)
-    else {
-      val spark = sig.sparkSession
-      import spark.implicits._
-      val nchHot =
-        if (hot.length <= maxHotBuckets)
-          Some(hot.toSeq.toDF("band_id", "bh", "nch"))
-        else None
-      chunkedBucketMembers(bands, sig, chunkSize, nchHot)
-        .select("amem", "bmem")
-    }
+    // [[bucketChunkSize]] split into chunk-pair rows ([[bucketGroups]]).
+    (oneSidedPairs(bandsOf(base), base, chunkSize, threshold).distinct(),
+      base)
   }
 
   /** Near-dup pairs between a NEW batch's signature table and an
@@ -323,29 +325,12 @@ object Dedup extends QueryPack {
     * exact Jaccard on collisions only; output (new_doc, dup_of, jac).
     * Same-id rows are excluded so a batch whose signatures were already
     * upserted into the store does not match itself on redelivery. */
-  def probePairs(newSig: org.apache.spark.sql.DataFrame,
-                 storeSig: org.apache.spark.sql.DataFrame,
+  def probePairs(newSig: DataFrame,
+                 storeSig: DataFrame,
                  threshold: String = jacThreshold,
                  chunkSize: Int = bucketChunkSize,
                  pruneToLiveBuckets: Boolean = false)
-      : org.apache.spark.sql.DataFrame = {
-    // Bucket-LOCAL verification, the [[nearDupPairsWithBase]] discipline
-    // on the two-sided probe: each bucket's COMBINED membership (both
-    // sides, side-tagged) is grouped per bucket, so the shingle arrays
-    // cross ONE grouped exchange instead of riding every candidate row
-    // through two per-candidate joins (the textbook shape this replaced
-    // went bimodal-slow at sf10's dup-dense corpus). When any bucket
-    // exceeds the chunk cap, the same chunk-pair split as the one-sided
-    // plan engages (adaptive — see [[bucketChunkSize]]) so no single
-    // task owns a hot bucket's full new×store product. The shingle join
-    // is ONE join keyed (doc_id, is_new) against the side-tagged union
-    // of both signature tables: the same doc_id can appear on both
-    // sides (a redelivered batch already upserted into the store), and
-    // a per-side join pair would compute the band pipeline twice.
-    // Duplicate (pair, jac) rows from multi-band collisions collapse in
-    // the same final distinct the old plan had.
-    val kernelMin = scala.util.Try(threshold.toDouble)
-      .getOrElse(Double.NegativeInfinity)
+      : DataFrame = {
     // SELF-probe fast path (reference equality — the intra-batch probe
     // DocStream runs per micro-batch, d21's within-batch sweep): the
     // two-sided plan would union the SAME bands twice (2× the grouping
@@ -355,26 +340,31 @@ object Dedup extends QueryPack {
     // emitted afterwards on the THRESHOLD-SURVIVING pairs only, so the
     // output contract (every qualifying (new_doc, dup_of) ordered pair,
     // same-id excluded) is unchanged.
-    if (newSig eq storeSig) {
-      val pairs = groupedOneSided(bandsOf(newSig), newSig, chunkSize)
-        .select(explode(
-          graft.functions.TextKernels.chunkPairJaccardsUdf(
-            col("amem"), col("bmem"), lit(kernelMin),
-            lit(chunkSize * 8))).as("p"))
-        .select(col("p._1").as("doc_a"), col("p._2").as("doc_b"),
-          col("p._3").as("jac"))
-        .filter(col("jac") >= expr(threshold))
+    if (newSig eq storeSig)
+      return oneSidedPairs(bandsOf(newSig), newSig, chunkSize, threshold)
         .distinct()
-      return pairs
         .select(explode(array(
           struct(col("doc_a").as("new_doc"), col("doc_b").as("dup_of"),
             col("jac")),
           struct(col("doc_b").as("new_doc"), col("doc_a").as("dup_of"),
             col("jac")))).as("q"))
         .select("q.new_doc", "q.dup_of", "q.jac")
-    }
-    val rawBands = bandsOf(newSig).withColumn("is_new", lit(true))
-      .unionByName(bandsOf(storeSig).withColumn("is_new", lit(false)))
+    // Bucket-LOCAL verification, the [[nearDupPairsWithBase]] discipline
+    // on the two-sided probe: each bucket's COMBINED membership (both
+    // sides, side-tagged) is grouped per bucket, so the shingle arrays
+    // cross ONE grouped exchange instead of riding every candidate row
+    // through two per-candidate joins (the textbook shape this replaced
+    // went bimodal-slow at sf10's dup-dense corpus), chunk-capped like
+    // the one-sided plan ([[bucketGroups]]) so no single task owns a hot
+    // bucket's full new×store product. The shingle join is ONE join
+    // keyed (doc_id, is_new) against the side-tagged union of both
+    // signature tables: the same doc_id can appear on both sides (a
+    // redelivered batch already upserted into the store), and a per-side
+    // join pair would compute the band pipeline twice. Duplicate (pair,
+    // jac) rows from multi-band collisions collapse in the final distinct.
+    val minJac = kernelGate(threshold)
+    val newBands = bandsOf(newSig).withColumn("is_new", lit(true))
+    val storeBands = bandsOf(storeSig).withColumn("is_new", lit(false))
     // OPT-IN live-bucket pruning before the shingle join: only buckets
     // holding BOTH a batch member and a store member can produce a
     // cross pair, and on a SERVING probe (small mostly-novel batch ×
@@ -393,11 +383,10 @@ object Dedup extends QueryPack {
     // has_store over the UNIONED band stream, shuffling the store's
     // whole skinny triple set per probe.
     val allBands =
-      if (!pruneToLiveBuckets) rawBands
+      if (!pruneToLiveBuckets) newBands.unionByName(storeBands)
       else {
-        val newBands = bandsOf(newSig).withColumn("is_new", lit(true))
         val newKeys = newBands.select("band_id", "bh").distinct()
-        val storeLive = bandsOf(storeSig).withColumn("is_new", lit(false))
+        val storeLive = storeBands
           .join(broadcast(newKeys), Seq("band_id", "bh"), "left_semi")
         val liveKeys = storeLive.select("band_id", "bh").distinct()
         newBands.join(broadcast(liveKeys), Seq("band_id", "bh"), "left_semi")
@@ -407,61 +396,9 @@ object Dedup extends QueryPack {
         lit(true).as("is_new"))
       .unionByName(storeSig.select(col("doc_id"), col("hs"),
         lit(false).as("is_new")))
-    // The one-sided plan's single-pipeline chunk discipline, with the
-    // member structs carrying the corpus-side tag: oversized buckets
-    // split via the broadcast nch left-join (hash-assigned chunks, no
-    // window), cold buckets ride through with nch = 1, and a corpus
-    // with no hot bucket keeps the plain one-row-per-bucket plan.
-    def chunkGroup(nchHot: Option[org.apache.spark.sql.DataFrame]) = {
-      val nchDf = nchHot.map(broadcast).getOrElse(
-        allBands.groupBy("band_id", "bh").agg(
-          ceil(count(lit(1)) / chunkSize.toDouble).cast("int").as("nch")))
-      allBands.join(nchDf, Seq("band_id", "bh"), "left")
-        .withColumn("nch", coalesce(col("nch"), lit(1)))
-        // bucket-salted chunk hash + empty-partner filter: same two
-        // fixes as [[chunkedBucketMembers]] (ADVICE r11), see there
-        .withColumn("chunk",
-          pmod(hash(col("doc_id"), col("bh"), col("band_id")), col("nch")))
-        .select(col("doc_id"), col("is_new"), col("band_id"), col("bh"),
-          col("chunk"),
-          explode(sequence(lit(0), col("nch") - 1)).as("j"))
-        .select(col("doc_id"), col("is_new"), col("band_id"), col("bh"),
-          least(col("chunk"), col("j")).as("c_lo"),
-          greatest(col("chunk"), col("j")).as("c_hi"),
-          (col("chunk") <= col("j")).as("is_a"))
-        .join(sigU, Seq("doc_id", "is_new"))
-        .groupBy("band_id", "bh", "c_lo", "c_hi")
-        .agg(
-          collect_list(when(col("is_a"),
-            struct(col("doc_id"), col("hs"), col("is_new")))).as("amem"),
-          collect_list(when(!col("is_a"),
-            struct(col("doc_id"), col("hs"), col("is_new")))).as("bmem"))
-        .filter(col("c_lo") === col("c_hi") ||
-          (size(col("amem")) > 0 && size(col("bmem")) > 0))
-        .select("amem", "bmem")
-    }
-    def fastGroup(b: org.apache.spark.sql.DataFrame) = b
-      .join(sigU, Seq("doc_id", "is_new"))
-      .groupBy("band_id", "bh")
-      .agg(collect_list(
-        struct(col("doc_id"), col("hs"), col("is_new"))).as("amem"))
-      .filter(size(col("amem")) > 1)
-      .withColumn("bmem", when(lit(false), col("amem")))
-      .select("amem", "bmem")
-    val hot = oversizedBuckets(allBands, chunkSize)
-    val grouped =
-      if (hot.isEmpty) fastGroup(allBands)
-      else {
-        val spark = newSig.sparkSession
-        import spark.implicits._
-        chunkGroup(
-          if (hot.length <= maxHotBuckets)
-            Some(hot.toSeq.toDF("band_id", "bh", "nch"))
-          else None)
-      }
-    grouped
+    bucketGroups(allBands, sigU, chunkSize)
       .select(explode(graft.functions.BucketJaccards.chunkCross(
-        col("amem"), col("bmem"), kernelMin, chunkSize * 8)).as("p"))
+        col("amem"), col("bmem"), minJac, chunkSize * 8)).as("p"))
       .select(col("p._1").as("new_doc"), col("p._2").as("dup_of"),
         col("p._3").as("jac"))
       .filter(col("jac") >= expr(threshold))
@@ -837,23 +774,10 @@ object Dedup extends QueryPack {
     // cap 128 (vs the production 512): the sample is a single synthetic
     // bucket of k = 1000 members, and a smaller chunk spreads its C(k,2)
     // checks over ~36 grouped rows instead of 3 — parallelism for a
-    // fixed-size task, not a scale knob.
-    val cap = 128
-    // ADVICE r12: fail fast on a non-literal threshold — a silent
-    // NegativeInfinity gate would disable kernel-side pruning and emit
-    // all C(k,2) pairs before the outer filter (a quiet perf trap)
-    val kernelMin = threshold.toDoubleOption
-    require(kernelMin.isDefined, "sampleTruthPairs accepts only a literal " +
-      s"numeric threshold (the kernel gate needs its value), got: $threshold")
+    // fixed-size task, not a scale knob. One bucket: no pair repeats.
     val oneBucket = base.select(col("doc_id"), lit(0).as("band_id"),
       lit(0L).as("bh"))
-    groupedOneSided(oneBucket, base, cap)
-      .select(explode(graft.functions.TextKernels.chunkPairJaccardsUdf(
-        col("amem"), col("bmem"), lit(kernelMin.get), lit(cap * 8))).as("p"))
-      .select(col("p._1").as("doc_a"), col("p._2").as("doc_b"),
-        col("p._3").as("jac"))
-      .filter(col("jac") >= expr(threshold))
-      .select("doc_a", "doc_b")
+    oneSidedPairs(oneBucket, base, 128, threshold).select("doc_a", "doc_b")
   }
 
   private val d15LshRecall: Q = (s, dir) => {
@@ -1187,7 +1111,7 @@ object Dedup extends QueryPack {
     // ~16 KB arrays (4–30× heavier), so the cap scales down to keep
     // grouped rows ~4 MB (the d15 synthetic-bucket precedent).
     val d6Cap = 128
-    val pairs = groupedOneSided(banded, members, d6Cap)
+    val pairs = bucketGroups(banded, members, d6Cap)
       .select(explode(TextKernels.chunkPairJaccardsSortedUdf(
         col("amem"), col("bmem"), lit(0.5), lit(d6Cap * 8))).as("p"))
       .select(col("p._1").as("doc_a"), col("p._2").as("doc_b"),
@@ -1356,7 +1280,7 @@ object Dedup extends QueryPack {
     // session's full parallelism (derived, not a local constant);
     // ×4 smooths residual per-row cost variance.
     val par = docs.sparkSession.sparkContext.defaultParallelism * 4
-    val scored = groupedOneSided(banded, members, bucketChunkSize)
+    val scored = bucketGroups(banded, members, bucketChunkSize)
       .repartition(par)
       .select(explode(graft.functions.TextKernels.chunkPairEditsUdf(
         col("amem"), col("bmem"), lit(d9Prefix / 2),

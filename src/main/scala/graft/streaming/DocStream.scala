@@ -76,7 +76,7 @@ object DocStream {
     * band scan. `onBatchMetrics(batchId, liveFraction, pruned)` surfaces
     * each measured decision to instruments (StreamBench) and tests. */
   def nearDupStream(docs: DataFrame, storePath: String, hitsPath: String,
-                    threshold: String = "0.08",
+                    threshold: String = Dedup.jacThreshold,
                     compactEvery: Int = 64,
                     onBatchMetrics: (Long, Double, Boolean) => Unit =
                       (_, _, _) => ()): StreamingQuery = {

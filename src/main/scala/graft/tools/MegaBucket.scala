@@ -76,8 +76,8 @@ object MegaBucket {
 
     // the fattest grouped row the chunked plan ever materializes
     val sig = graft.operators.Dedup.signatures(docs).persist()
-    val maxRow = graft.operators.Dedup.chunkedBucketMembers(
-        graft.operators.Dedup.bandsOf(sig), sig,
+    val maxRow = graft.operators.Dedup.bucketGroups(
+        graft.operators.Dedup.bandsOf(sig), sig.select("doc_id", "hs"),
         graft.operators.Dedup.bucketChunkSize)
       .select((size(col("amem")) + size(col("bmem"))).as("m"))
       .agg(max(col("m"))).head().getInt(0)

@@ -108,8 +108,8 @@ class DedupBucketLocalSpec extends SparkSpecBase {
       (i, "shared boilerplate navigation header words " * 5 + s" tail$i"))
       .toDF("doc_id", "text")
     val bigBase = graft.operators.Dedup.signatures(big).persist()
-    val maxRow = graft.operators.Dedup.chunkedBucketMembers(
-        graft.operators.Dedup.bandsOf(bigBase), bigBase, 8)
+    val maxRow = graft.operators.Dedup.bucketGroups(
+        graft.operators.Dedup.bandsOf(bigBase), bigBase.select("doc_id", "hs"), 8)
       .select((size(col("amem")) + size(col("bmem"))).as("m"))
       .agg(max(col("m"))).head().getInt(0)
     bigBase.unpersist()
@@ -200,5 +200,72 @@ class DedupBucketLocalSpec extends SparkSpecBase {
     assert(pruned.toSeq == capped.toSeq,
       "live-bucket pruning changed the probe's pair set")
     nSig.unpersist(); sSig.unpersist()
+  }
+
+  /** The chunk cap's adaptive switch at its threshold: a planted band
+    * bucket of exactly n members is NOT oversized at chunkSize = n (plain
+    * one-row-per-bucket plan) and IS at chunkSize = n − 1 (chunk-pair
+    * plan). Both runs must emit the same pairs with bit-identical
+    * jaccards, for the one-sided pairs and the two-sided probe alike. */
+  test("chunk cap at n = threshold ± 1: plain and chunk plans agree") {
+    import spark.implicits._
+    val n = 16
+    // boilerplate docs with 1–4 unique tail words: pair jaccards vary, and
+    // a doc's signature does not depend on the rest of the corpus, so
+    // keeping n members of the pool's largest bucket plants a bucket of
+    // exactly n (no other planted doc shares a bucket with them)
+    val pool = (0L until 100L).map(i => (i,
+      "shared boilerplate navigation header words " * 5 +
+        (0 to (i % 4).toInt).map(k => s"t${i}x$k").mkString(" ")))
+      .toDF("doc_id", "text")
+    val poolBands = graft.operators.Dedup.bandsOf(
+      graft.operators.Dedup.signatures(pool))
+    val top = poolBands.groupBy("band_id", "bh").count()
+      .orderBy(col("count").desc, col("band_id"), col("bh")).head()
+    assert(top.getLong(2) >= n, s"pool's largest bucket holds ${top.getLong(2)}")
+    val members = poolBands
+      .filter(col("band_id") === top.getInt(0) && col("bh") === top.getLong(1))
+      .select("doc_id").as[Long].collect().sorted.take(n).toSet
+    val docs = pool.filter(col("doc_id").isin(members.toSeq: _*))
+      .union(Seq(
+        (900L, "a modestly different document body with some edits applied here and more text to shingle"),
+        (901L, "a modestly different document body with some edits applied there and more text to shingle"))
+        .toDF("doc_id", "text"))
+    def maxBucket(bands: org.apache.spark.sql.DataFrame) =
+      bands.groupBy("band_id", "bh").count().agg(max(col("count"))).head().getLong(0)
+
+    def norm(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1),
+        java.lang.Double.doubleToLongBits(r.getDouble(2)))).sortBy(t => (t._1, t._2))
+    def chunked(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.toString.contains("c_lo")
+    def agree(run: Int => org.apache.spark.sql.DataFrame): Unit = {
+      val plain = run(n)
+      val split = run(n - 1)
+      assert(!chunked(plain), "chunkSize = n took the chunk plan")
+      assert(chunked(split), "chunkSize = n - 1 kept the plain plan")
+      val (p, c) = (norm(plain), norm(split))
+      assert(p.nonEmpty && p.toSeq == c.toSeq,
+        s"plain ${p.length} pairs vs chunked ${c.length}")
+    }
+
+    // one-sided: nearDupPairsWithBase
+    val sig = graft.operators.Dedup.signatures(docs).persist()
+    assert(maxBucket(graft.operators.Dedup.bandsOf(sig)) == n)
+    val bases = scala.collection.mutable.Buffer.empty[org.apache.spark.sql.DataFrame]
+    agree { chunk =>
+      val (pairs, base) =
+        graft.operators.Dedup.nearDupPairsWithBase(docs, chunkSize = chunk)
+      bases += base
+      pairs
+    }
+    bases.foreach(_.unpersist())
+    // two-sided: the planted bucket split across batch and store
+    val nSig = sig.filter(col("doc_id") % 2 === 0)
+    val sSig = sig.filter(col("doc_id") % 2 =!= 0)
+    assert(maxBucket(graft.operators.Dedup.bandsOf(nSig)
+      .union(graft.operators.Dedup.bandsOf(sSig))) == n)
+    agree(chunk => graft.operators.Dedup.probePairs(nSig, sSig, chunkSize = chunk))
+    sig.unpersist(): Unit
   }
 }

@@ -126,11 +126,22 @@ class DedupGuardSpec extends SparkSpecBase {
   }
 
   test("d15 truth pairs reject a non-literal threshold with a clear message") {
-    val e = intercept[IllegalArgumentException] {
-      graft.operators.Dedup.sampleTruthPairs(spark.range(1).toDF("doc_id"),
-        "jac_threshold")
+    import spark.implicits._
+    def rejects(run: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](run)
+      assert(e.getMessage.contains("accepts only a literal numeric threshold"),
+        e.getMessage)
     }
-    assert(e.getMessage.contains("accepts only a literal numeric threshold"),
-      e.getMessage)
+    rejects(graft.operators.Dedup.sampleTruthPairs(
+      spark.range(1).toDF("doc_id"), "jac_threshold"))
+    // the same kernel gate guards d4's pairs and both probe paths
+    val docs = Seq((1L, "some words to shingle in a document"),
+      (2L, "other words to shingle in a document")).toDF("doc_id", "text")
+    rejects(graft.operators.Dedup.nearDupPairs(docs, "jac_threshold"))
+    val sig = graft.operators.Dedup.signatures(docs)
+    rejects(graft.operators.Dedup.probePairs(sig, sig, "jac_threshold"))
+    rejects(graft.operators.Dedup.probePairs(sig,
+      sig.select(sig.columns.map(org.apache.spark.sql.functions.col): _*),
+      "jac_threshold"))
   }
 }
