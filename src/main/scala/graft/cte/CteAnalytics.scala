@@ -2,6 +2,7 @@ package graft.cte
 
 import graft.functions.PolyFit2D
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The reference's analytics stage (SURVEY.md §2.4, §3.1 step 4) as one
@@ -12,10 +13,14 @@ import org.apache.spark.sql.functions._
   *
   * Shuffle budget (the 100 TB view): the slope pipeline shuffles phot
   * exactly twice — once joining chip-2 to chip-1 on (pair keys,
-  * master_id), once grouping by (pair, aperture, bin); fileinfo-derived
-  * pair tables are dimension-sized and broadcast. The flux-bin fan-out is
-  * a broadcast 1→N join because bins overlap (SURVEY.md §7.4 item 5:
-  * a CASE bucket would silently drop the second bin).
+  * master_id), once hashing the binned rows on (pair, aperture, bin).
+  * That one exchange and its sort serve every sigma-clip round (each
+  * round is a window pass over the same partitioning, so the plan grows
+  * linearly in rounds, never by self-joins) and the slope-moment
+  * aggregate after them. Fileinfo-derived pair tables are
+  * dimension-sized and broadcast. The flux-bin fan-out is a broadcast
+  * 1→N join because bins overlap (SURVEY.md §7.4 item 5: a CASE bucket
+  * would silently drop the second bin).
   */
 object CteAnalytics {
 
@@ -128,23 +133,33 @@ object CteAnalytics {
 
     val groups = Seq("imagename_1", "imagename_2", "aperture", "bin_lo", "bin_hi")
 
-    // A2: bounded-iteration scipy-style sigmaclip of `ratio` per group:
-    // population mean/std, strict exclusion of values at the bounds. No
-    // zero-std escape — scipy's open interval empties a constant group,
-    // and the resulting missing bin becomes a 0-row below, exactly the
-    // reference's degenerate path. The stats table has one row per
-    // (pair, aperture, bin) — cardinality grows with ingest volume, so no
-    // broadcast hint: AQE broadcasts it only while it actually fits, and
-    // falls back to a shuffled join beyond that.
-    val clipped = (1 to clipRounds).foldLeft(binned) { (df, _) =>
-      val stats = df.groupBy(groups.map(col): _*)
-        .agg(avg(col("ratio")).as("_m"), stddev_pop(col("ratio")).as("_s"))
-      df.join(stats, groups)
-        .filter(col("ratio") > col("_m") - lit(4.0) * col("_s") &&
-                col("ratio") < col("_m") + lit(4.0) * col("_s"))
+    // A2: scipy sigmaclip(low=4, high=4) of `ratio` per group. A
+    // constant group clips to empty (std 0), and the resulting missing
+    // bin becomes a 0-row below, exactly the reference's degenerate path.
+    (pairAp, sigmaClip(binned, groups, "ratio", 4.0, clipRounds))
+  }
+
+  /** Bounded-iteration scipy-style sigmaclip of `value` per `groups`:
+    * each round keeps the rows strictly inside mean ± sigma·std of the
+    * previous round's survivors, with the population std. No zero-std
+    * escape — scipy's open interval empties a constant group.
+    *
+    * Each round is a window pass partitioned by `groups` with no
+    * ordering (the frame is the whole group), so every round runs over
+    * one hash exchange and one sort on `groups`, and a downstream
+    * aggregate on the same keys reuses that partitioning. A round that
+    * joined the frame to its own grouped stats would copy the input
+    * subplan twice per round. */
+  private def sigmaClip(df: DataFrame, groups: Seq[String], value: String,
+                        sigma: Double, rounds: Int): DataFrame = {
+    val w = Window.partitionBy(groups.map(col): _*)
+    val v = col(value)
+    (1 to rounds).foldLeft(df) { (d, _) =>
+      d.select(col("*"), avg(v).over(w).as("_m"), stddev_pop(v).over(w).as("_s"))
+        .filter(v > col("_m") - lit(sigma) * col("_s") &&
+                v < col("_m") + lit(sigma) * col("_s"))
         .drop("_m", "_s")
     }
-    (pairAp, clipped)
   }
 
   /** The survivors of bin + sigma-clip, row-per-star — the content of the
@@ -292,10 +307,11 @@ object CteAnalytics {
     * cteVStime's /n (the reference's own inconsistency, SURVEY §7.1) —
     * and NaN for zero-point bins. The reference re-queries per
     * (epoch × exptime × flashlvl × pair); here one broadcast join of the
-    * chip-1 dimension row supplies every key at once. */
+    * chip-1 dimension row supplies every key at once. `cohorts` is
+    * `epochCohorts(fileinfo, targname)`, taken by the caller so that one
+    * publish collects the epoch list once. */
   def cteVsFlashlvl(resultsLong: DataFrame, fileinfo: DataFrame,
-                    targname: String): DataFrame = {
-    val cohorts = epochCohorts(fileinfo, targname)
+                    targname: String, cohorts: DataFrame): DataFrame = {
     val keys = fileinfo
       .filter(col("targname") === targname && col("chip") === 1)
       .select(col("imagename").as("imagename_1"), col("dateobs"),
@@ -354,8 +370,8 @@ object CteAnalytics {
     * Scale shape: the pair table is fileinfo-derived (dimension-sized,
     * one window pass over (chip, exptime, visit) covers every slice the
     * reference loops over) and broadcasts into the phot-side semi-join;
-    * phot shuffles once on (imagename, bin) for the clip and once for
-    * the mean — both partial-aggregable. The results join is
+    * phot shuffles once on (imagename, bin): the clip rounds and the
+    * mean all run over that one partitioning. The results join is
     * pair-keyed, AQE-sized.
     */
   def cte180Table(resultsLong: DataFrame, photLong: DataFrame,
@@ -373,8 +389,7 @@ object CteAnalytics {
         fileinfo.filter(col("targname") === targname &&
           col("filter") === filt && col("ctecorr") === ctecorr), preds)
       .withColumn("visit", CteQueries.visitOf(col("imagename")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("chip", "exptime", "visit").orderBy("imagename")
+    val w = Window.partitionBy("chip", "exptime", "visit").orderBy("imagename")
     val v10 = base.filter(col("visit") === "10")
       .withColumn("rn", row_number().over(w))
       .select(col("rn"), col("chip"), col("exptime"),
@@ -389,8 +404,7 @@ object CteAnalytics {
       .select("chip", "exptime", "imagename_1", "imagename_2", "epoch")
 
     // Visit-10 fluxes at the aperture, binned inclusively, σ-clipped per
-    // (image, bin): population stats, strict exclusion (scipy), bounded
-    // rounds — the same clip machinery as the ratio pipeline.
+    // (image, bin) by the same `sigmaClip` as the ratio pipeline.
     val binDf = SchemaRegistry.fluxBins.toDF("bin_lo", "bin_hi")
     val fx = photLong.filter(col("targname") === targname &&
         col("aperture") === aperture)
@@ -400,15 +414,8 @@ object CteAnalytics {
     val binned = fx.join(broadcast(binDf),
       col("flux") >= col("bin_lo") && col("flux") <= col("bin_hi"))
     val groups = Seq("imagename_1", "bin_lo", "bin_hi")
-    val clipped = (1 to clipRounds).foldLeft(binned) { (df, _) =>
-      val stats = df.groupBy(groups.map(col): _*)
-        .agg(avg(col("flux")).as("_m"), stddev_pop(col("flux")).as("_s"))
-      df.join(stats, groups)
-        .filter(col("flux") > col("_m") - lit(clipSigma) * col("_s") &&
-                col("flux") < col("_m") + lit(clipSigma) * col("_s"))
-        .drop("_m", "_s")
-    }
-    val fluxMeans = clipped.groupBy(groups.map(col): _*)
+    val fluxMeans = sigmaClip(binned, groups, "flux", clipSigma, clipRounds)
+      .groupBy(groups.map(col): _*)
       .agg(avg(col("flux")).as("flux_mean"))
 
     val res = resultsLong.filter(col("targname") === targname &&
@@ -478,11 +485,15 @@ object CteAnalytics {
   }
 
   /** Epoch cohorts as a DataFrame: each distinct dateobs mapped to its
-    * combined epoch (±30-day membership, database_queries.py:177-180). */
+    * combined epoch (±30-day membership, database_queries.py:177-180).
+    * The mapping is collected to the driver and comes back as a local
+    * relation, so collecting it again runs no job. */
   def epochCohorts(fileinfo: DataFrame, targname: String): DataFrame = {
     val spark = fileinfo.sparkSession
     import spark.implicits._
-    val epochs = CteQueries.allDateobss(fileinfo, targname)
+    // unordered: combineEpochs sorts on the driver
+    val epochs = fileinfo.filter(col("targname") === targname)
+      .select("dateobs").distinct()
       .as[Double].collect().toSeq
     val combined = combineEpochs(epochs)
     val mapping = epochs.map { d =>

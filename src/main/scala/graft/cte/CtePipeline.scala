@@ -104,14 +104,15 @@ class CtePipeline(spark: SparkSession, warehouse: String) {
   }
 
   /** Slope rows joined to their combined epoch and bin-flux midpoint —
-    * the polyfit input (shared by the current fit and the history). */
-  private def slopeRows(targname: String): DataFrame = {
-    val cohorts = CteAnalytics.epochCohorts(table("fileinfo"), targname)
-    val pairEpoch = table("fileinfo")
+    * the polyfit input (shared by the current fit and the history).
+    * `cohorts` is `CteAnalytics.epochCohorts(fileinfo, targname)`. */
+  private def slopeRows(results: DataFrame, fileinfo: DataFrame,
+                        cohorts: DataFrame, targname: String): DataFrame = {
+    val pairEpoch = fileinfo
       .filter(col("targname") === targname && col("chip") === 1)
       .select(col("imagename").as("imagename_1"), col("dateobs"))
       .join(broadcast(cohorts), "dateobs")
-    table("results")
+    results
       .filter(col("targname") === targname && !isnan(col("slope")))
       .join(broadcast(pairEpoch), "imagename_1")
       .withColumn("binflux",
@@ -119,57 +120,51 @@ class CtePipeline(spark: SparkSession, warehouse: String) {
       .select("targname", "binflux", "epoch", "slope")
   }
 
-  /** Per-target polyfit over epoch cohorts: joins results back to the
-    * pair's epoch (via chip-1 dateobs → combined epoch) and bin flux
-    * midpoint, then fits the 9-coefficient surface. */
-  def computeCoefficients(targname: String): DataFrame =
-    CteAnalytics.polyfitByTarget(slopeRows(targname))
-
-  /** Epoch-keyed coefficient history (the reference's sorted
-    * *_mjd<epoch>_coeffs.txt set): one cumulative fit per combined
-    * epoch; the max-epoch row matches computeCoefficients. */
-  def coefficientHistory(targname: String): DataFrame =
-    CteAnalytics.polyfitHistory(slopeRows(targname))
-
   // ---- stage 3: publish
 
   /** Write the reference's derived text artifacts (S6): slopes, polyfit
-    * coefficients, the per-star sigma-clipped flux ratios
-    * (*fluxratios.txt), the cteVStime table (the monitor's primary
-    * product), and the model fit values on the flux grid (*fitvals.txt)
-    * evaluated at the latest combined epoch. */
+    * coefficients (the current per-target fit, and the epoch-keyed
+    * history — the reference's sorted *_mjd<epoch>_coeffs.txt set, one
+    * cumulative fit per combined epoch), the per-star sigma-clipped flux
+    * ratios (*fluxratios.txt), the cteVStime table (the monitor's primary
+    * product), the cteVSflashlvl table, and the model fit values on the
+    * flux grid (*fitvals.txt) evaluated at the latest combined epoch.
+    *
+    * Shared inputs are evaluated once: each warehouse table is read once
+    * (a read infers the Parquet schema with a job), the epoch cohorts are
+    * collected once, and the fitted coefficients — one row per target —
+    * are collected once and feed both the coeffs and fitvals artifacts. */
   def publish(targname: String, outDir: String): Unit = {
+    val results = table("results").filter(col("targname") === targname)
+    val fileinfo = table("fileinfo")
+    val cohorts = CteAnalytics.epochCohorts(fileinfo, targname)
     TsvTables.write(
-      table("results").filter(col("targname") === targname)
-        .orderBy("imagename_1", "imagename_2", "aperture", "bin_lo"),
+      results.orderBy("imagename_1", "imagename_2", "aperture", "bin_lo"),
       s"$outDir/${targname}_slopes")
-    val coeffs = computeCoefficients(targname)
+    val rows = slopeRows(results, fileinfo, cohorts, targname)
+    val fit = CteAnalytics.polyfitByTarget(rows)
+    val coeffs = spark.createDataFrame(
+      java.util.Arrays.asList(fit.collect(): _*), fit.schema)
     TsvTables.write(coeffs, s"$outDir/${targname}_coeffs")
     TsvTables.write(
-      coefficientHistory(targname).orderBy("targname", "as_of_epoch"),
+      CteAnalytics.polyfitHistory(rows).orderBy("targname", "as_of_epoch"),
       s"$outDir/${targname}_coeffs_history")
     TsvTables.write(
-      CteAnalytics.clippedRatios(table("phot"), table("fileinfo"), targname)
+      CteAnalytics.clippedRatios(table("phot"), fileinfo, targname)
         .orderBy("imagename_1", "imagename_2", "aperture", "bin_lo", "master_id"),
       s"$outDir/${targname}_fluxratios")
     TsvTables.write(
-      CteAnalytics.cteVsTime(
-          table("results").filter(col("targname") === targname),
-          table("fileinfo"))
+      CteAnalytics.cteVsTime(results, fileinfo)
         .orderBy("aperture", "mjd", "fluxbin"),
       s"$outDir/${targname}_cteVStime")
     TsvTables.write(
-      CteAnalytics.cteVsFlashlvl(
-          table("results").filter(col("targname") === targname),
-          table("fileinfo"), targname)
+      CteAnalytics.cteVsFlashlvl(results, fileinfo, targname, cohorts)
         .orderBy("aperture", "fluxbin", "epoch", "flashlvl", "imagename_1"),
       s"$outDir/${targname}_cteVSflashlvl")
     // Latest combined epoch — "Users should be using coefficients from
-    // the latest epoch" (uvis_external_cte_plots.py:612-613); the epoch
-    // list is dimension-sized.
-    val latestEpoch = CteAnalytics
-      .epochCohorts(table("fileinfo"), targname)
-      .agg(max(col("epoch"))).collect()(0).getDouble(0)
+    // the latest epoch" (uvis_external_cte_plots.py:612-613); the cohorts
+    // are a driver-side local relation, so this collect runs no job.
+    val latestEpoch = cohorts.collect().map(_.getAs[Double]("epoch")).max
     TsvTables.write(
       CteAnalytics.fitvalsTable(coeffs, latestEpoch).orderBy("logflux"),
       s"$outDir/${targname}_fitvals")

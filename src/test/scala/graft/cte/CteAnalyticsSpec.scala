@@ -2,6 +2,8 @@ package graft.cte
 
 import graft.SparkSpecBase
 import graft.functions.PolyFit2D
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 
 class CteAnalyticsSpec extends SparkSpecBase {
@@ -91,6 +93,77 @@ class CteAnalyticsSpec extends SparkSpecBase {
     val one = fit(clipRounds = 0).filter(_._3 == 1)
     assert(one.map(r => (r._1, r._2)) == Seq((250, 500)))
     assert(one.head._4.isNaN && one.head._5.isNaN, s"1-star fit ${one.head}")
+  }
+
+  test("clip rounds are window passes: the plan stays linear in rounds") {
+    val root = java.nio.file.Files.createTempDirectory("cte_plan").toString
+    CteFixtures.photLong(spark).write.parquet(s"$root/phot")
+    CteFixtures.fileinfo(spark).write.parquet(s"$root/fileinfo")
+    val phot = spark.read.parquet(s"$root/phot")
+    val fileinfo = spark.read.parquet(s"$root/fileinfo")
+    def photScans(df: DataFrame): Int =
+      df.queryExecution.optimizedPlan.collect { case l: LogicalRelation => l }
+        .count(_.relation match {
+          case h: HadoopFsRelation => h.location.rootPaths.exists(_.getName == "phot")
+          case _ => false
+        })
+    // one scan per matched chip, whatever the round count; a clip round
+    // that joined the frame to its own stats would double it per round
+    Seq(1, 3).foreach { k =>
+      assert(photScans(CteAnalytics.clippedRatios(phot, fileinfo,
+        CteFixtures.T, clipRounds = k)) == 2, s"clipRounds $k")
+    }
+    // + the per-chip presence gate of the result domain
+    assert(photScans(CteAnalytics.fluxRatioSlopes(phot, fileinfo,
+      CteFixtures.T)) <= 4)
+  }
+
+  test("multi-round clip: each round sees only the previous survivors") {
+    import spark.implicits._
+    // pair A, aperture 3, every star in bin 250-500 on both chips: 30
+    // ratios within 1 ± 0.01, star 31 at 1.5 and star 32 at 1.99. Round 1
+    // clips only star 32; star 31 survives it and falls to round 2.
+    val d0 = java.sql.Date.valueOf("2026-01-01")
+    val clean = (1 to 30).map(i =>
+        (i, 400.0 * (1.0 + 0.002 * ((i * 7) % 11 - 5)), 400.0)) ++
+      Seq((31, 450.0, 300.0), (32, 251.0 * 1.99, 251.0))
+    val phot = clean.flatMap { case (i, c1, c2) =>
+      val ypos = 50.0 * i
+      Seq(
+        (i, "iaaa01a1q", d0, i, 50.0, ypos, 0.1, 0.1, 3, 10.0 + c1, 1.0, 10.0, CteFixtures.T),
+        (i, "iaaa01a2q", d0, i, 50.0, ypos, 0.1, 0.1, 3, 10.0 + c2, 1.0, 10.0, CteFixtures.T))
+    }.toDF("find_id", "imagename", "ingest_date", "master_id", "xpix",
+      "ypix", "ra", "dec", "aperture", "flux", "mnbkgrd", "totbkgrd",
+      "targname")
+    // driver-side scipy sigmaclip: population std, strict bounds; the
+    // ratio is formed from the stored fluxes exactly as the pipeline does
+    val points = clean.map { case (i, c1, c2) =>
+      (i, ((10.0 + c1) - 10.0) / ((10.0 + c2) - 10.0), 50.0 * i) }
+    def scipyClip(rounds: Int) =
+      (1 to rounds).foldLeft(points) { (ps, _) =>
+        val m = ps.map(_._2).sum / ps.size
+        val s = math.sqrt(ps.map(p => (p._2 - m) * (p._2 - m)).sum / ps.size)
+        ps.filter(p => p._2 > m - 4.0 * s && p._2 < m + 4.0 * s)
+      }
+    val kept = Seq(1, 2, 3).map { k =>
+      val want = scipyClip(k)
+      val got = CteAnalytics.clippedRatios(phot, fi, CteFixtures.T, k)
+        .filter(col("aperture") === 3).select("master_id").as[Int]
+        .collect().sorted.toSeq
+      assert(got == want.map(_._1).sorted, s"clipRounds $k")
+      val fit = CteAnalytics.fluxRatioSlopes(phot, fi, CteFixtures.T, k)
+        .filter(col("aperture") === 3 && col("bin_lo") === 250).collect().head
+      assert(fit.getAs[Int]("numpoints") == want.size, s"clipRounds $k")
+      val xm = want.map(_._3).sum / want.size
+      val ym = want.map(_._2).sum / want.size
+      val ols = want.map(p => (p._3 - xm) * (p._2 - ym)).sum /
+        want.map(p => (p._3 - xm) * (p._3 - xm)).sum
+      assert(math.abs(fit.getAs[Double]("slope") - ols) < 1e-12,
+        s"clipRounds $k: slope ${fit.getAs[Double]("slope")} vs $ols")
+      got
+    }
+    assert(kept(0).contains(31) && !kept(0).contains(32))
+    assert(!kept(1).contains(31) && kept(1).size == 30)
   }
 
   test("wide results view pivots to the reference 24-column layout") {

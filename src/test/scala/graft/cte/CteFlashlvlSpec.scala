@@ -7,10 +7,12 @@ import org.apache.spark.sql.functions._
   * (uvis_external_cte_plots.py:1746-1890). */
 class CteFlashlvlSpec extends SparkSpecBase {
 
-  private lazy val rows = CteAnalytics.cteVsFlashlvl(
-      CteFixtures.resultsFlash(spark), CteFixtures.fileinfoFlash(spark),
-      CteFixtures.T)
-    .orderBy("flashlvl", "fluxbin").collect()
+  private lazy val rows = {
+    val fi = CteFixtures.fileinfoFlash(spark)
+    CteAnalytics.cteVsFlashlvl(CteFixtures.resultsFlash(spark), fi,
+        CteFixtures.T, CteAnalytics.epochCohorts(fi, CteFixtures.T))
+      .orderBy("flashlvl", "fluxbin").collect()
+  }
 
   test("one row per Results row, keyed by combined epoch and flashlvl") {
     assert(rows.length == 3)
