@@ -139,7 +139,8 @@ class CtePipeline(spark: SparkSession, warehouse: String) {
     val fileinfo = table("fileinfo")
     val cohorts = CteAnalytics.epochCohorts(fileinfo, targname)
     TsvTables.write(
-      results.orderBy("imagename_1", "imagename_2", "aperture", "bin_lo"),
+      results.orderBy("imagename_1", "imagename_2", "aperture", "bin_lo",
+        "bin_hi"),
       s"$outDir/${targname}_slopes")
     val rows = slopeRows(results, fileinfo, cohorts, targname)
     val fit = CteAnalytics.polyfitByTarget(rows)
@@ -151,7 +152,8 @@ class CtePipeline(spark: SparkSession, warehouse: String) {
       s"$outDir/${targname}_coeffs_history")
     TsvTables.write(
       CteAnalytics.clippedRatios(table("phot"), fileinfo, targname)
-        .orderBy("imagename_1", "imagename_2", "aperture", "bin_lo", "master_id"),
+        .orderBy("imagename_1", "imagename_2", "aperture", "bin_lo", "bin_hi",
+          "master_id"),
       s"$outDir/${targname}_fluxratios")
     TsvTables.write(
       CteAnalytics.cteVsTime(results, fileinfo)

@@ -19,7 +19,8 @@ import org.apache.spark.sql.functions._
 object KMeans {
 
   /** Vector-count bound under which Lloyd runs in ONE executor task (the
-    * Graph-hybrid discipline): each distributed iteration costs a fixed
+    * Graph-hybrid discipline; for [[fitGrouped]], rows over all subspaces
+    * together): each distributed iteration costs a fixed
     * assign + update + persist-count stage chain that dwarfs the actual
     * flops on a dimension-sized training set (IVF trains on k ∝ √n
     * seeds over a bounded sample — the common case is thousands of
@@ -84,106 +85,117 @@ object KMeans {
     centroids
   }
 
-  /** The single-task Lloyd kernel behind [[fit]]'s local branch.
-    * Replicates the distributed arithmetic exactly: seeds = k lowest
-    * vec_ids renumbered 0..k-1 by ascending int(vec_id); per iteration,
-    * centroid floats from the means, cnorm2 and scores as left-to-right
-    * double folds over min-length prefixes (DotProduct's contract),
-    * argmin ties to the lowest cell, per-(cell, pos) means over members
-    * whose vectors reach pos; cells that lose all members vanish. */
+  /** [[fit]]'s local branch: the whole training set through ONE task. */
   private def fitLocal(corpus: DataFrame, k: Int, iters: Int): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val out = corpus
+    corpus
       .select(col("vec_id").cast("long"), col("embedding"))
       .as[(Long, Array[Float])]
       .coalesce(1)
       .mapPartitions { it =>
-        val rows = it.toArray
-        def dot(a: Array[Float], b: Array[Float]): Double = {
-          val n = math.min(a.length, b.length)
-          var s = 0.0; var i = 0
-          while (i < n) { s += a(i).toDouble * b(i).toDouble; i += 1 }
-          s
-        }
-        // seed: k lowest vec_ids, cells 0..k-1 by ascending int(vec_id)
-        val seeds = rows.sortBy(_._1).take(k).sortBy(_._1.toInt)
-        // (cellId, centroid means) — ids stay stable across iterations
-        var cents: Array[(Int, Array[Double])] =
-          seeds.zipWithIndex.map { case ((_, e), i) =>
-            (i, e.map(_.toDouble))
-          }
-        var iter = 0
-        while (iter < iters && rows.nonEmpty) {
-          iter += 1
-          val fc = cents.map { case (id, m) => (id, m.map(_.toFloat)) }
-          val cn2 = fc.map { case (_, c) => dot(c, c) }
-          // accumulate per-cell per-pos sums/counts as we assign
-          val sums = new java.util.HashMap[Int, Array[Double]]()
-          val cnts = new java.util.HashMap[Int, Array[Long]]()
-          var r = 0
-          while (r < rows.length) {
-            val e = rows(r)._2
-            var best = 0; var bestScore = Double.MaxValue
-            var j = 0
-            while (j < fc.length) {
-              val sc = cn2(j) - 2.0 * dot(e, fc(j)._2)
-              // ties break to the lowest cell id; fc is id-ascending
-              if (sc < bestScore) { bestScore = sc; best = j }
-              j += 1
-            }
-            val cid = fc(best)._1
-            var s = sums.get(cid)
-            if (s == null) {
-              s = new Array[Double](e.length)
-              sums.put(cid, s); cnts.put(cid, new Array[Long](e.length))
-            } else if (s.length < e.length) {
-              s = java.util.Arrays.copyOf(s, e.length)
-              sums.put(cid, s)
-              cnts.put(cid,
-                java.util.Arrays.copyOf(cnts.get(cid), e.length))
-            }
-            val c = cnts.get(cid)
-            var p = 0
-            while (p < e.length) { s(p) += e(p).toDouble; c(p) += 1L; p += 1 }
-            r += 1
-          }
-          cents = sums.keySet().toArray(Array.empty[Integer])
-            .map(_.intValue()).sorted
-            .map { cid =>
-              val s = sums.get(cid); val c = cnts.get(cid)
-              (cid, Array.tabulate(s.length)(p =>
-                if (c(p) > 0) s(p) / c(p) else Double.NaN))
-            }
-          // a pos no member reaches has count 0 — the distributed
-          // posexplode never emits it, so drop the slot entirely
-          cents = cents.map { case (id, m) =>
-            (id, m.zipWithIndex.filter { case (_, p) =>
-              cnts.get(id)(p) > 0 }.map(_._1))
-          }
-        }
-        cents.iterator.flatMap { case (cid, m) =>
+        lloyd(it.toArray, k, iters).iterator.flatMap { case (cid, m) =>
           m.iterator.zipWithIndex.map { case (v, p) => (cid, p, v) }
         }
       }
       .toDF("cell", "pos", "mean_v")
       .localCheckpoint()
-    out
   }
 
-  /** [[fit]] generalized to MANY independent trainings in one plan:
-    * `sub` carries a `subspace` column and every subspace trains its own
-    * k centroids simultaneously — each Lloyd iteration is ONE update
-    * shuffle keyed (subspace, cell, pos) instead of a sequential fit per
-    * subspace (v12/IvfPqIndex build: 4 PQ codebooks, one plan, one
-    * shuffle per round — the difference between 4 serialized stage
-    * chains and 1 at cluster scale). Per-subspace arithmetic — seeds,
-    * argmin, means — is IDENTICAL to running fit() on that subspace
-    * alone, so results are bit-equal to the sequential loop and the
-    * unrolled oracle replay. */
-  def fitGrouped(sub: DataFrame, k: Int, iters: Int): DataFrame = {
+  /** The single-task Lloyd kernel behind both local branches, over one
+    * training set's (vec_id, embedding) rows; returns (cell, means) in
+    * ascending cell order. Replicates the distributed arithmetic
+    * exactly: seeds = k lowest vec_ids renumbered 0..k-1 by ascending
+    * int(vec_id); per iteration, centroid floats from the means, cnorm2
+    * and scores as left-to-right double folds over min-length prefixes
+    * (DotProduct's contract), argmin ties to the lowest cell, per-(cell,
+    * pos) means over members whose vectors reach pos; cells that lose
+    * all members vanish. */
+  private def lloyd(rows: Array[(Long, Array[Float])], k: Int,
+                    iters: Int): Array[(Int, Array[Double])] = {
+    def dot(a: Array[Float], b: Array[Float]): Double = {
+      val n = math.min(a.length, b.length)
+      var s = 0.0; var i = 0
+      while (i < n) { s += a(i).toDouble * b(i).toDouble; i += 1 }
+      s
+    }
+    // seed: k lowest vec_ids, cells 0..k-1 by ascending int(vec_id)
+    val seeds = rows.sortBy(_._1).take(k).sortBy(_._1.toInt)
+    // (cellId, centroid means) — ids stay stable across iterations
+    var cents: Array[(Int, Array[Double])] =
+      seeds.zipWithIndex.map { case ((_, e), i) =>
+        (i, e.map(_.toDouble))
+      }
+    var iter = 0
+    while (iter < iters && rows.nonEmpty) {
+      iter += 1
+      val fc = cents.map { case (id, m) => (id, m.map(_.toFloat)) }
+      val cn2 = fc.map { case (_, c) => dot(c, c) }
+      // accumulate per-cell per-pos sums/counts as we assign
+      val sums = new java.util.HashMap[Int, Array[Double]]()
+      val cnts = new java.util.HashMap[Int, Array[Long]]()
+      var r = 0
+      while (r < rows.length) {
+        val e = rows(r)._2
+        var best = 0; var bestScore = Double.MaxValue
+        var j = 0
+        while (j < fc.length) {
+          val sc = cn2(j) - 2.0 * dot(e, fc(j)._2)
+          // ties break to the lowest cell id; fc is id-ascending
+          if (sc < bestScore) { bestScore = sc; best = j }
+          j += 1
+        }
+        val cid = fc(best)._1
+        var s = sums.get(cid)
+        if (s == null) {
+          s = new Array[Double](e.length)
+          sums.put(cid, s); cnts.put(cid, new Array[Long](e.length))
+        } else if (s.length < e.length) {
+          s = java.util.Arrays.copyOf(s, e.length)
+          sums.put(cid, s)
+          cnts.put(cid,
+            java.util.Arrays.copyOf(cnts.get(cid), e.length))
+        }
+        val c = cnts.get(cid)
+        var p = 0
+        while (p < e.length) { s(p) += e(p).toDouble; c(p) += 1L; p += 1 }
+        r += 1
+      }
+      cents = sums.keySet().toArray(Array.empty[Integer])
+        .map(_.intValue()).sorted
+        .map { cid =>
+          val s = sums.get(cid); val c = cnts.get(cid)
+          (cid, Array.tabulate(s.length)(p =>
+            if (c(p) > 0) s(p) / c(p) else Double.NaN))
+        }
+      // a pos no member reaches has count 0 — the distributed
+      // posexplode never emits it, so drop the slot entirely
+      cents = cents.map { case (id, m) =>
+        (id, m.zipWithIndex.filter { case (_, p) =>
+          cnts.get(id)(p) > 0 }.map(_._1))
+      }
+    }
+    cents
+  }
+
+  /** [[fit]] generalized to MANY independent trainings: `sub` carries a
+    * `subspace` column and every subspace trains its own k centroids
+    * (v12/IvfPqIndex build: 4 PQ codebooks). The data picks the path,
+    * as in fit: a training frame of at most `localThreshold` rows (all
+    * subspaces together) trains every subspace in ONE task, one Lloyd
+    * kernel call per subspace; a larger one runs the distributed loop,
+    * where each Lloyd round is ONE update shuffle keyed (subspace, cell,
+    * pos) for all subspaces. Per-subspace arithmetic — seeds, argmin,
+    * means — is IDENTICAL to running fit() on that subspace alone, so
+    * both paths are bit-equal to the sequential loop and the unrolled
+    * oracle replay. */
+  def fitGrouped(sub: DataFrame, k: Int, iters: Int,
+                 localThreshold: Long = localFitVectors): DataFrame = {
     val spark = sub.sparkSession
     val corpus = sub.select("subspace", "vec_id", "embedding")
+
+    if (corpus.count() <= localThreshold)
+      return fitGroupedLocal(corpus, k, iters)
 
     // deterministic seed: the k lowest vec_ids of each subspace
     var centroids = graft.plans.GroupedTopK
@@ -219,6 +231,30 @@ object KMeans {
       prev = Some(centroids)
     }
     centroids
+  }
+
+  /** [[fitGrouped]]'s local branch: every subspace in ONE task, one
+    * [[lloyd]] call per subspace. */
+  private def fitGroupedLocal(corpus: DataFrame, k: Int,
+                              iters: Int): DataFrame = {
+    val spark = corpus.sparkSession
+    import spark.implicits._
+    corpus
+      .select(col("subspace").cast("int"), col("vec_id").cast("long"),
+        col("embedding"))
+      .as[(Int, Long, Array[Float])]
+      .coalesce(1)
+      .mapPartitions { it =>
+        it.toArray.groupBy(_._1).toArray.sortBy(_._1).iterator.flatMap {
+          case (ss, rows) =>
+            lloyd(rows.map(r => (r._2, r._3)), k, iters).iterator.flatMap {
+              case (cid, m) =>
+                m.iterator.zipWithIndex.map { case (v, p) => (ss, cid, p, v) }
+            }
+        }
+      }
+      .toDF("subspace", "cell", "pos", "mean_v")
+      .localCheckpoint()
   }
 
   /** Per-subspace nearest-centroid assignment against [[fitGrouped]]'s

@@ -198,9 +198,11 @@ object IvfPqIndex {
     coarse.unpersist()
 
     // Product quantizer: v12's shape — an independent k=pqK codebook per
-    // subspace, all 4 trained in ONE grouped plan (each Lloyd round is a
-    // single (subspace, cell, pos) shuffle, not 4 sequential fits; per-
-    // subspace arithmetic is bit-identical to the unrolled oracle).
+    // subspace, all 4 trained by ONE grouped fit, not 4 sequential fits.
+    // The data picks the path: a dimension-sized frame trains in one
+    // task, a larger one runs one (subspace, cell, pos) shuffle per
+    // Lloyd round; per-subspace arithmetic is bit-identical to the
+    // unrolled oracle either way.
     val sub = subspaceSlices(e)
     val cb = KMeans.fitGrouped(sub, pqK, iters = 2)
     MergeWriter.upsertParquet(spark, s"$path/pq_codebooks",

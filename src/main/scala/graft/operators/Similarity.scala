@@ -574,9 +574,10 @@ object Similarity extends QueryPack {
   private val v12PqCodes: Q = (s, dir) => {
     val e = Tables.embeddings(s, dir)
     val sub = pqSubspaces(e)
-    // All 4 codebooks in ONE grouped training: each Lloyd round is a
-    // single (subspace, cell, pos) shuffle instead of 4 sequential fits
-    // — bit-identical per subspace to the unrolled oracle replay.
+    // All 4 codebooks in ONE grouped training; the data picks the path:
+    // a dimension-sized frame trains every subspace in one task, a
+    // larger one runs one (subspace, cell, pos) shuffle per Lloyd round.
+    // Either is bit-identical per subspace to the unrolled oracle replay.
     val cents = graft.functions.KMeans.fitGrouped(sub, pqK, iters = 2)
     // Inline the argmin instead of KMeans.assignGrouped: scoring err
     // BEFORE the top-k means the reduce exchange carries (vec_id, cell,

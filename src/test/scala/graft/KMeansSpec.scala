@@ -17,20 +17,75 @@ class KMeansSpec extends SparkSpecBase {
     }.toDF("vec_id", "embedding")
   }
 
-  test("local-finish Lloyd == distributed Lloyd, bit-exact") {
+  /** The local path returns a localCheckpoint (a `LogicalRDD` leaf); the
+    * distributed path returns its last persisted round. */
+  private def ranLocal(df: org.apache.spark.sql.DataFrame): Boolean = {
+    val local = df.queryExecution.analyzed
+      .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
+    assert(local == (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE))
+    local
+  }
+
+  /** 300 random 6-dim vectors; no planted structure. */
+  private def messy() = {
     import spark.implicits._
-    // messy random data (no planted structure): cluster churn, ties on
-    // symmetric points, and a cell that loses all members are all in play
     val rnd = new scala.util.Random(20260819L)
-    val df = (0 until 300).map { i =>
+    (0 until 300).map { i =>
       (i.toLong, Array.fill(6)(rnd.nextFloat() * 4f - 2f))
     }.toDF("vec_id", "embedding")
+  }
+
+  test("local-finish Lloyd == distributed Lloyd, bit-exact") {
+    // messy random data (no planted structure): cluster churn, ties on
+    // symmetric points, and a cell that loses all members are all in play
+    val df = messy()
     for (k <- Seq(3, 16); iters <- Seq(1, 3)) {
       val local = KMeans.fit(df, k, iters) // 300 rows → local branch
         .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2))).toSet
       val dist = KMeans.fit(df, k, iters, localThreshold = 0L)
         .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2))).toSet
       assert(local == dist, s"k=$k iters=$iters: local != distributed")
+    }
+  }
+
+  test("fit at n = localThreshold ± 1: the data picks the path, bit-exact") {
+    val df = messy()
+    for (k <- Seq(3, 16); iters <- Seq(1, 3)) {
+      val at = KMeans.fit(df, k, iters, localThreshold = 300L)
+      val below = KMeans.fit(df, k, iters, localThreshold = 299L)
+      assert(ranLocal(at), s"k=$k iters=$iters: n = threshold must run local")
+      assert(!ranLocal(below),
+        s"k=$k iters=$iters: n = threshold + 1 must run distributed")
+      val a = at.collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2))).toSet
+      val b = below.collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2))).toSet
+      assert(a == b, s"k=$k iters=$iters: local != distributed")
+      below.unpersist()
+    }
+  }
+
+  test("fitGrouped local == distributed == per-subspace fit, bit-exact") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(20261018L)
+    val sub = (for (ss <- 0 until 3; i <- 0 until 200)
+      yield (ss, i.toLong, Array.fill(6)(rnd.nextFloat() * 4f - 2f)))
+      .toDF("subspace", "vec_id", "embedding").repartition(4)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getDouble(3))).toSet
+    for (k <- Seq(3, 16); iters <- Seq(1, 3)) {
+      val at = KMeans.fitGrouped(sub, k, iters, localThreshold = 600L)
+      val below = KMeans.fitGrouped(sub, k, iters, localThreshold = 599L)
+      assert(ranLocal(at), s"k=$k iters=$iters: 600 rows at 600 must run local")
+      assert(!ranLocal(below),
+        s"k=$k iters=$iters: 600 rows at 599 must run distributed")
+      val local = rows(at.select("subspace", "cell", "pos", "mean_v"))
+      val dist = rows(below.select("subspace", "cell", "pos", "mean_v"))
+      below.unpersist()
+      assert(local == dist, s"k=$k iters=$iters: local != distributed")
+      val alone = (0 until 3).flatMap { ss =>
+        KMeans.fit(sub.filter(col("subspace") === ss), k, iters)
+          .collect().map(r => (ss, r.getInt(0), r.getInt(1), r.getDouble(2)))
+      }.toSet
+      assert(local == alone, s"k=$k iters=$iters: grouped != per-subspace fit")
     }
   }
 

@@ -49,6 +49,20 @@ class CtePipelineSpec extends SparkSpecBase {
     val slopesTsv = spark.read.option("sep", "\t").option("header", "true")
       .csv(s"$root/out/${CteFixtures.T}_slopes")
     assert(slopesTsv.count() == pipe.table("results").count())
+    // the file's rows come in full-key order: the overlapping bins that
+    // share a lower edge (500-1000/500-2000) are ordered by bin_hi too
+    val part = new java.io.File(s"$root/out/${CteFixtures.T}_slopes")
+      .listFiles().filter(_.getName.startsWith("part-")).head
+    val lines = Files.readAllLines(part.toPath).toArray(Array.empty[String])
+    val hdr = lines.head.split("\t")
+    def at(c: String) = hdr.indexOf(c)
+    val keys = lines.tail.map(_.split("\t", -1)).map { f =>
+      (f(at("imagename_1")), f(at("imagename_2")), f(at("aperture")).toDouble,
+        f(at("bin_lo")).toDouble, f(at("bin_hi")).toDouble)
+    }.toSeq
+    assert(keys.nonEmpty && keys == keys.sorted)
+    val first500 = keys.filter(_._4 == 500.0).take(2).map(_._5)
+    assert(first500 == Seq(1000.0, 2000.0))
     val coeffs = spark.read.option("sep", "\t").option("header", "true")
       .csv(s"$root/out/${CteFixtures.T}_coeffs")
     assert(coeffs.columns.count(_.startsWith("c")) == 9)
