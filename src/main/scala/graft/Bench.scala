@@ -280,9 +280,10 @@ object Bench {
     val json = renderJson(stats.toSeq, failed, sfDir, partial = false,
       scaleNotes())
     println(json)
-    // The driver's log capture truncates long stdout tails (BENCH_r05
-    // preserved only 63/92 per-query times); the file is the durable,
-    // always-whole record of the same JSON object.
+    // A log capture can truncate long stdout tails (the round-5 record,
+    // `BENCH_r05.json` at commit f155544, kept only 63/92 per-query
+    // times); the file is the durable, always-whole record of the same
+    // JSON object.
     writeRecord(stats.toSeq, partial = false)
     spark.stop()
     if (failed.nonEmpty) sys.exit(1)

@@ -135,7 +135,7 @@ object IvfPqIndex {
     * session that fingerprints the regenerated corpus can no longer
     * resolve the old dir); a deployment with long-running concurrent
     * readers over a corpus being regenerated needs a catalog/lakehouse
-    * layer's snapshot isolation, same caveat as MergeWriter's swap. */
+    * layer's snapshot isolation, same caveat as MergeWriter's commit. */
   private def gcSuperseded(current: String): Unit = {
     val cur = new java.io.File(current)
     val src = try java.nio.file.Files.readString(sourceTag(current).toPath)

@@ -1,8 +1,11 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import java.io.IOException
+import java.net.URI
+
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, count, lit, max, min}
+import org.apache.spark.sql.functions.{col, count, lit, max, min, struct, sum}
 import org.apache.spark.storage.StorageLevel
 
 /** Upsert-by-natural-key semantics over vanilla Parquet — the reference's
@@ -19,6 +22,18 @@ import org.apache.spark.storage.StorageLevel
   *
   * Idempotence (re-running a visit "is not bad", README.md:519-521) holds:
   * merging the same updates twice is a no-op.
+  *
+  * Every write is file-granular copy-on-write with one commit protocol
+  * (the shape of Delta Lake's, VLDB 2020): a write names the table files
+  * it replaces, stages their replacement beside the table, then
+  * atomically writes one commit record listing the files to add and the
+  * files to remove. Publishing renames the added files in, deletes the
+  * removed ones and drops the record; [[recover]] rolls a recorded write
+  * forward and discards an unrecorded one, so a crash at any point
+  * leaves the table before or after the write, never between. Single
+  * writer is assumed throughout (the reference is single-writer too —
+  * SQLite, README.md:850-866); concurrent readers during a publish need
+  * a catalog/lakehouse layer instead.
   */
 object MergeWriter {
 
@@ -33,96 +48,168 @@ object MergeWriter {
     target.join(updates, keys, "left_anti")
       .unionByName(updates, allowMissingColumns = true)
 
-  /** If a previous upsert crashed mid-publish, put the table back.
-    * Covers BOTH publish mechanisms:
-    *  - the two-rename swap (rewrites): a complete tmp (its _SUCCESS
-    *    marker exists) wins — it holds the merged new version — else the
-    *    retired old version is restored;
-    *  - the staged append: `path.__addlog__` lists the batch's files; if
-    *    the marker is still present the publish died mid-rename and the
-    *    listed files are ROLLED BACK out of the live directory (all of
-    *    the batch or none of it — the caller retries/redelivers).
-    * Called automatically by every write entry point; call directly
-    * before reads if a crash is suspected. Single-writer is assumed
-    * throughout (the reference is single-writer too — SQLite, README.md:
-    * 850-866); concurrent readers during a publish window need a
-    * catalog/lakehouse layer instead. */
+  private val StageSuffix = ".__stage__"
+  private val RecordSuffix = ".__commit__"
+
+  /** Settle a write that crashed mid-commit. A commit record means the
+    * staged files were complete and the write was decided: roll it
+    * forward. Without one nothing reached the table: drop the stage. A
+    * half-written record (its temp file) is dropped either way. Called
+    * by every write entry point; call directly before reads if a crash
+    * is suspected. */
   def recover(spark: SparkSession, path: String): Unit = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cur = new Path(path)
-    // staged-append rollback FIRST: a marker means some (possibly zero,
-    // possibly all) of the listed files were renamed in before the crash
-    val addlog = new Path(path + AddLogSuffix)
-    if (fs.exists(addlog)) {
-      readLines(fs, addlog).foreach { rel =>
-        val f = new Path(cur, rel)
-        if (fs.exists(f)) fs.delete(f, false)
-      }
-      fs.delete(addlog, false)
-    }
-    val stage = new Path(path + AddStageSuffix)
-    if (fs.exists(stage)) fs.delete(stage, true)
-    val tmp = new Path(path + ".__tmp__")
-    val old = new Path(path + ".__old__")
-    if (!fs.exists(cur)) {
-      if (fs.exists(new Path(tmp, "_SUCCESS"))) renameOrThrow(fs, tmp, cur)
-      else if (fs.exists(old)) renameOrThrow(fs, old, cur)
-    }
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    if (fs.exists(old) && fs.exists(cur)) fs.delete(old, true)
+    val fs = fileSystem(spark, path)
+    val record = new Path(path + RecordSuffix)
+    if (fs.exists(record)) publish(fs, path, readLines(fs, record))
+    else fs.delete(new Path(path + StageSuffix), true)
+    fs.delete(new Path(record + ".tmp"), false): Unit
   }
 
-  /** Parquet-backed upsert: read current table state (absent → empty),
-    * merge, write fresh, swap directories with crash recovery. The swap
-    * itself is two renames (no distributed FS offers an atomic directory
-    * exchange); every crash point is covered by `recover`: before the
-    * first rename the current version is intact, between them the
-    * complete tmp is promoted, after them only the retired copy is left
-    * to sweep. Partition-scoped overwrite at scale: pass the partition
-    * subdir as `path` so only the touched partition rewrites.
+  /** Parquet-backed upsert: merge `updates` into the table at `path`
+    * (absent → created), rewriting only the files whose rows it changes.
     *
-    * INSERT-ONLY FAST PATH: when no update key collides with the table
-    * (and the schemas agree), the merge is mathematically an append —
-    * target ⟕̸ updates = target — so the batch's rows are APPENDED as new
-    * files instead of rewriting the whole table. That turns the
-    * insert-dominant workload (streaming ingest: every batch is new
-    * doc_ids except redeliveries) from O(|table|) per batch into
-    * O(|batch|) plus the key-collision probe; a sustained 10×50k-batch
-    * run against a 500k-signature store measured the whole-table rewrite
-    * growing per batch exactly as O(store) predicts. The append
-    * publishes through a staging dir + rename batch protected by an
-    * on-disk marker, so the all-or-nothing crash contract is the SAME as
-    * the rewrite's: a crash mid-publish rolls the whole batch back on
-    * the next `recover` (the batch is simply not yet applied — callers
-    * retry or, under streaming redelivery, re-run the batch). A
-    * redelivered batch COLLIDES with its own earlier append and falls
-    * back to the dedup'ing rewrite — idempotence is unchanged. Persist
-    * `updates` to let the probe skip stored row groups outside the
-    * batch's key range ([[collides]]). */
+    * The collision probe ([[touchedFiles]]) finds the files holding a
+    * stored row whose key the batch carries. The write stages
+    * `merge(rows of those files, updates)` and removes exactly those
+    * files; every other file keeps its name and bytes. With no touched
+    * file this is an append, the common case of streaming and per-visit
+    * ingest: O(|batch|) plus the probe, not O(|table|). A schema change
+    * touches every file. When the merge leaves the touched rows
+    * unchanged as a multiset — a redelivery — nothing is committed; no
+    * column is special-cased, so a later-day redelivery that refreshes
+    * an `ingest_date` rewrites just its touched files. Persist `updates`
+    * to let the probe skip stored row groups outside the batch's key
+    * range. At scale, pass a partition subdir as `path` to scope the
+    * probe; a hive-partitioned table written at its root must pass its
+    * partition columns or new files flatten the layout. */
   def upsertParquet(spark: SparkSession, path: String, updates: DataFrame,
                     keys: Seq[String],
                     partitionCols: Seq[String] = Nil): Unit = {
     recover(spark, path)
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fileSystem(spark, path)
     if (!fs.exists(new Path(path))) {
-      swapIn(spark, path, updates, partitionCols)
+      commit(fs, path, updates, Nil, partitionCols)
       return
     }
     val target = spark.read.parquet(path)
     def shape(df: DataFrame) =
       df.schema.fields.map(f => (f.name, f.dataType)).toSet
-    if (shape(target) == shape(updates) && !collides(target, updates, keys)) {
+    val sameShape = shape(target) == shape(updates)
+    val touched =
+      if (sameShape) touchedFiles(fs, path, target, updates, keys)
+      else dataFiles(fs, new Path(path)).map(_._1)
+    if (touched.isEmpty) {
       // column order pinned to the table's so every file carries the
       // same layout (readers merge by name, but keep footers uniform)
-      appendIn(spark, path, updates.select(target.columns.map(col): _*),
+      commit(fs, path, updates.select(target.columns.map(col): _*), Nil,
         partitionCols)
-    } else swapIn(spark, path, merge(target, updates, keys), partitionCols)
+    } else {
+      val stored = rowsOf(spark, path, target, touched)
+      val next = merge(stored, updates, keys)
+      if (!(sameShape && sameRows(stored, next)))
+        commit(fs, path, next, touched, partitionCols)
+    }
   }
 
-  // ---------------------------------------------------------------- append
+  /** Key-level delete: drop the rows whose `keys` columns match any row of
+    * `tombstones` — the retraction half of the upsert sink (GDPR erasure,
+    * index removals). Only the files holding a tombstoned key are
+    * rewritten, through the same commit as the upsert; deleting absent
+    * keys touches no file, so a replayed tombstone batch writes nothing.
+    * A missing table is a no-op too (nothing to erase). Same
+    * `partitionCols` contract as upsertParquet. */
+  def deleteParquet(spark: SparkSession, path: String,
+                    tombstones: DataFrame, keys: Seq[String],
+                    partitionCols: Seq[String] = Nil): Unit = {
+    recover(spark, path)
+    val fs = fileSystem(spark, path)
+    if (!fs.exists(new Path(path))) return
+    val target = spark.read.parquet(path)
+    val touched = touchedFiles(fs, path, target, tombstones, keys)
+    if (touched.nonEmpty) {
+      val kept = rowsOf(spark, path, target, touched)
+        .join(tombstones.select(keys.map(col): _*).distinct(), keys, "left_anti")
+      commit(fs, path, kept, touched, partitionCols)
+    }
+  }
 
-  private val AddStageSuffix = ".__add__"
-  private val AddLogSuffix = ".__addlog__"
+  /** Small-file compaction — the warehouse-maintenance pass every
+    * incrementally-written table needs: a steady drip of upsert/append
+    * batches leaves a table as thousands of KB-files whose per-file open
+    * and footer cost eventually dominates scans. Rewrite into
+    * ~`targetFileBytes` files (same rows; the commit removes every old
+    * file). Run it on a schedule or when fileCount ≫ bytes/target; at
+    * scale, compact per-partition by passing the partition subdir as
+    * `path`, which is also what keeps the rewrite off the rest of the
+    * table. Same `partitionCols` contract as upsert/delete: a
+    * hive-partitioned table compacted at its ROOT must pass its
+    * partition columns or the layout flattens (per-partition compaction
+    * needs none). */
+  def compactParquet(spark: SparkSession, path: String,
+                     targetFileBytes: Long = 128L << 20,
+                     partitionCols: Seq[String] = Nil): Unit = {
+    recover(spark, path)
+    val fs = fileSystem(spark, path)
+    if (!fs.exists(new Path(path))) return
+    val files = dataFiles(fs, new Path(path))
+    val bytes = files.map(_._2).sum
+    val want = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
+    if (want >= files.size) return // already compact enough: skip the rewrite
+    commit(fs, path, spark.read.parquet(path).coalesce(want),
+      files.map(_._1), partitionCols)
+  }
+
+  // ---------------------------------------------------------------- commit
+
+  /** The one write path: stage `rows` beside the table, atomically write
+    * the commit record (every staged file to add, every table file in
+    * `removed` to drop — both relative to their root), then publish. */
+  private def commit(fs: FileSystem, path: String, rows: DataFrame,
+                     removed: Seq[String], partitionCols: Seq[String]): Unit = {
+    val stage = new Path(path + StageSuffix)
+    val writer = rows.write.mode("overwrite")
+    (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*)
+     else writer).parquet(stage.toString)
+    val lines = dataFiles(fs, stage).map("+" + _._1) ++ removed.map("-" + _)
+    // a single-file rename is atomic on HDFS/local/object-store
+    // emulations alike: the record is either absent or whole
+    val record = new Path(path + RecordSuffix)
+    val tmp = new Path(record + ".tmp")
+    val out = fs.create(tmp, true)
+    try out.write(lines.map(_ + "\n").mkString.getBytes("UTF-8"))
+    finally out.close()
+    renameOrThrow(fs, tmp, record)
+    publish(fs, path, lines)
+  }
+
+  /** Apply a commit record: rename each added file from the stage into
+    * the table, delete each removed file, drop the record and the stage.
+    * Every step is idempotent, so a crash inside it is finished by
+    * re-running it from the top ([[recover]]). */
+  private def publish(fs: FileSystem, path: String, lines: Seq[String]): Unit = {
+    val root = new Path(path)
+    val stage = new Path(path + StageSuffix)
+    lines.foreach { line =>
+      val rel = line.tail
+      if (line.head == '+') {
+        val src = new Path(stage, rel)
+        if (fs.exists(src)) {
+          val dst = new Path(root, rel)
+          fs.mkdirs(dst.getParent)
+          renameOrThrow(fs, src, dst)
+        }
+      } else {
+        val f = new Path(root, rel)
+        if (!fs.delete(f, false) && fs.exists(f))
+          throw new IOException(s"could not delete $f")
+      }
+    }
+    fs.delete(new Path(path + RecordSuffix), false)
+    fs.delete(stage, true): Unit
+  }
+
+  private def fileSystem(spark: SparkSession, path: String): FileSystem =
+    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private def readLines(fs: FileSystem, p: Path): Seq[String] = {
     val in = fs.open(p)
@@ -131,66 +218,43 @@ object MergeWriter {
     finally in.close()
   }
 
-  /** Write `lines` to `p` atomically: create under a temp name, then
-    * rename (single-file rename is atomic on HDFS/local/object-store
-    * emulations alike — the directory swap is what isn't). */
-  private def writeLinesAtomic(fs: FileSystem, p: Path, lines: Seq[String]): Unit = {
-    val tmp = new Path(p.toString + ".tmp")
-    val out = fs.create(tmp, true)
-    try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
-    fs.delete(p, false)
-    renameOrThrow(fs, tmp, p)
-  }
-
   /** `fs.rename` reports most failures by returning false, not throwing:
     * every publish step goes through here so none is silently skipped. */
   private def renameOrThrow(fs: FileSystem, src: Path, dst: Path): Unit =
     if (!fs.rename(src, dst))
-      throw new java.io.IOException(s"could not rename $src to $dst")
+      throw new IOException(s"could not rename $src to $dst")
 
-  /** Data files under `root`, as paths relative to it (partition subdirs
-    * included). */
-  private def listDataFiles(fs: FileSystem, root: Path): Seq[String] = {
-    if (!fs.exists(root)) return Nil
-    val rootUri = fs.makeQualified(root).toString
-    val it = fs.listFiles(root, true)
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.getPath.getName.endsWith(".parquet")) {
-        val full = f.getPath.toString
-        out += full.stripPrefix(rootUri).stripPrefix("/")
-      }
-    }
-    out.toSeq
+  /** `file` relative to `root`, partition subdirs included. Compares
+    * decoded URI paths, so escaped partition values line up. */
+  private def relative(fs: FileSystem, root: Path, file: Path): String =
+    file.toUri.getPath.stripPrefix(fs.makeQualified(root).toUri.getPath)
+      .stripPrefix("/")
+
+  /** Data files under `root`, relative to it, with their sizes. Hidden
+    * entries (`_SUCCESS`, `.crc`, a committer's `_temporary`) are not
+    * data, as for Spark's readers. */
+  private def dataFiles(fs: FileSystem, root: Path): Seq[(String, Long)] = {
+    def walk(dir: Path): Seq[FileStatus] = fs.listStatus(dir).toSeq
+      .filterNot(s => "_.".contains(s.getPath.getName.head))
+      .flatMap(s => if (s.isDirectory) walk(s.getPath) else Seq(s))
+    walk(root).filter(_.getPath.getName.endsWith(".parquet"))
+      .map(s => relative(fs, root, s.getPath) -> s.getLen)
   }
 
-  /** Stage-then-publish append: write the batch BESIDE the table, record
-    * the staged file names in an on-disk marker, rename them in, clear
-    * the marker. Readers never see a partial batch: task files stay in
-    * the staging dir until every one is complete (_SUCCESS), and a crash
-    * anywhere in the rename window leaves the marker for [[recover]] to
-    * roll the whole batch back. */
-  private def appendIn(spark: SparkSession, path: String, batch: DataFrame,
-                       partitionCols: Seq[String]): Unit = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stage = new Path(path + AddStageSuffix)
-    fs.delete(stage, true)
-    val writer = batch.write.mode("overwrite")
-    (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*)
-     else writer).parquet(stage.toString)
-    val rels = listDataFiles(fs, stage)
-    writeLinesAtomic(fs, new Path(path + AddLogSuffix), rels)
-    val cur = new Path(path)
-    rels.foreach { rel =>
-      val dst = new Path(cur, rel)
-      val parent = dst.getParent
-      if (!fs.exists(parent)) fs.mkdirs(parent)
-      renameOrThrow(fs, new Path(stage, rel), dst)
-    }
-    fs.delete(new Path(path + AddLogSuffix), false)
-    fs.delete(stage, true): Unit
+  /** The rows of the table files `files`, in the table's schema. The
+    * `basePath` keeps their partition columns. */
+  private def rowsOf(spark: SparkSession, path: String, target: DataFrame,
+                     files: Seq[String]): DataFrame =
+    spark.read.schema(target.schema).option("basePath", path)
+      .parquet(files.map(f => new Path(new Path(path), f).toString): _*)
+
+  /** Do `a` and `b` (same columns) hold the same rows as multisets? One
+    * grouped pass: each whole row counts +1 from `a`, −1 from `b`. */
+  private def sameRows(a: DataFrame, b: DataFrame): Boolean = {
+    def tagged(df: DataFrame, n: Long) =
+      df.select(struct(a.columns.map(col): _*).as("row"), lit(n).as("n"))
+    tagged(a, 1L).union(tagged(b, -1L)).groupBy("row")
+      .agg(sum("n").as("n")).filter(col("n") =!= 0).isEmpty
   }
 
   // --------------------------------------------------------- collision probe
@@ -209,9 +273,10 @@ object MergeWriter {
     }))
   }
 
-  /** Does any update key exist in the table? The probe behind the
-    * insert-only fast path: a semi-join of the batch's distinct keys
-    * against the table's key columns.
+  /** The table files, relative to `path`, that hold a row whose `keys`
+    * match a row of `batch`: the files a write of `batch` replaces. A
+    * semi-join of the batch's distinct keys against the table's key
+    * columns, reporting each hit's `_metadata.file_path`.
     *
     * When the batch is PERSISTED, one min/max aggregate over it first
     * bounds the table side with `k BETWEEN lo AND hi` for every key. The
@@ -222,103 +287,30 @@ object MergeWriter {
     * table's footers, not its rows. A lazy batch skips the aggregate: a
     * second pass would re-run its whole lineage, which costs more than
     * the scan it could prune. Null keys never equi-join-match, so an
-    * all-null range (null literals match nothing) prunes correctly. */
-  private def collides(target: DataFrame, updates: DataFrame,
-                       keys: Seq[String]): Boolean = {
+    * all-null range (null literals match nothing) prunes correctly.
+    *
+    * `_metadata.file_path` is a URI (a partition value `a b%c` reads
+    * back as `a%20b%2525c`), so each one is decoded through `URI`, never
+    * compared as a string. */
+  private def touchedFiles(fs: FileSystem, path: String, target: DataFrame,
+                           batch: DataFrame, keys: Seq[String]): Seq[String] = {
     val bounded =
-      if (updates.storageLevel == StorageLevel.NONE ||
-          !orderableKeys(updates, keys)) target
+      if (batch.storageLevel == StorageLevel.NONE ||
+          !orderableKeys(batch, keys)) target
       else {
         val aggCols = keys.flatMap(k => Seq(min(col(k)), max(col(k)))) :+
           count(lit(1))
-        val agg = updates.agg(aggCols.head, aggCols.tail: _*).head()
-        if (agg.getLong(2 * keys.size) == 0L) return false // empty batch
+        val agg = batch.agg(aggCols.head, aggCols.tail: _*).head()
+        if (agg.getLong(2 * keys.size) == 0L) return Nil // empty batch
         target.filter(keys.zipWithIndex.map { case (k, i) =>
-          val t = updates.schema(k).dataType
+          val t = batch.schema(k).dataType
           col(k).between(lit(agg.get(2 * i)).cast(t),
             lit(agg.get(2 * i + 1)).cast(t))
         }.reduce(_ && _))
       }
-    !bounded.select(keys.map(col): _*)
-      .join(updates.select(keys.map(col): _*).distinct(), keys, "left_semi")
-      .isEmpty
-  }
-
-  // ---------------------------------------------------------------- swaps
-
-  /** Write `next` beside `path` and promote it with the two-rename swap
-    * (every crash point covered by [[recover]]). Shared tail of the
-    * upsert / delete / compact rewrites. A rename that reports failure
-    * throws, so no caller reports a publish that did not happen. */
-  private def swapIn(spark: SparkSession, path: String, next: DataFrame,
-                     partitionCols: Seq[String] = Nil): Unit = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cur = new Path(path)
-    val tmp = new Path(path + ".__tmp__")
-    val writer = next.write.mode("overwrite")
-    (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*)
-     else writer).parquet(tmp.toString)
-    val old = new Path(path + ".__old__")
-    if (fs.exists(old)) fs.delete(old, true)
-    if (fs.exists(cur)) renameOrThrow(fs, cur, old)
-    renameOrThrow(fs, tmp, cur)
-    fs.delete(old, true): Unit
-  }
-
-  /** Key-level delete: rewrite the table without rows whose `keys`
-    * columns match any row of `tombstones` — the retraction half of the
-    * upsert sink (GDPR erasure, index removals). Same anti-join shape
-    * and same two-rename swap with crash recovery as upsertParquet;
-    * deleting absent keys is a no-op, so redelivered tombstone batches
-    * are idempotent. A missing table is a no-op too (nothing to erase).
-    * Partition-scoped at scale exactly like the upsert: pass the
-    * partition subdir as `path` to rewrite only the touched partition.
-    * `partitionCols` carries the same contract as upsertParquet's — a
-    * hive-partitioned table MUST pass its partition columns or the
-    * rewrite flattens the directory layout (and with it the partition
-    * pruning the warehouse relies on). */
-  def deleteParquet(spark: SparkSession, path: String,
-                    tombstones: DataFrame, keys: Seq[String],
-                    partitionCols: Seq[String] = Nil): Unit = {
-    recover(spark, path)
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cur = new Path(path)
-    if (!fs.exists(cur)) return
-    val kept = spark.read.parquet(path)
-      .join(tombstones.select(keys.map(col): _*).distinct(), keys, "left_anti")
-    swapIn(spark, path, kept, partitionCols)
-  }
-
-  /** Small-file compaction — the warehouse-maintenance pass every
-    * incrementally-written table needs: a steady drip of upsert/append
-    * batches leaves a table as thousands of KB-files whose per-file open
-    * and footer cost eventually dominates scans. Rewrite into
-    * ~`targetFileBytes` files (same rows, same swap safety). Run it on a
-    * schedule or when fileCount ≫ bytes/target; at scale, compact
-    * per-partition by passing the partition subdir as `path`, which is
-    * also what keeps the rewrite off the rest of the table. Same
-    * `partitionCols` contract as upsert/delete: a hive-partitioned table
-    * compacted at its ROOT must pass its partition columns or the
-    * layout flattens (per-partition compaction needs none). */
-  def compactParquet(spark: SparkSession, path: String,
-                     targetFileBytes: Long = 128L << 20,
-                     partitionCols: Seq[String] = Nil): Unit = {
-    recover(spark, path)
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cur = new Path(path)
-    if (!fs.exists(cur)) return
-    val it = fs.listFiles(cur, true)
-    var bytes = 0L
-    var nFiles = 0
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.getPath.getName.endsWith(".parquet")) {
-        bytes += f.getLen; nFiles += 1
-      }
-    }
-    val want = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-    if (want >= nFiles) return // already compact enough: skip the rewrite
-    swapIn(spark, path, spark.read.parquet(path).coalesce(want),
-      partitionCols)
+    bounded.select(col("_metadata.file_path") +: keys.map(col): _*)
+      .join(batch.select(keys.map(col): _*).distinct(), keys, "left_semi")
+      .select("file_path").distinct().collect().toSeq
+      .map(r => relative(fs, new Path(path), new Path(new URI(r.getString(0)))))
   }
 }

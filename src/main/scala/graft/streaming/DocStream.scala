@@ -52,15 +52,15 @@ object DocStream {
     * signatures fold into the store afterwards (a doc never races its
     * own probe).
     *
-    * `compactEvery`: the insert-only upsert fast path APPENDS each
-    * batch's rows as new files — O(batch) per batch instead of an
-    * O(store) rewrite — so a long-lived stream accumulates files until
-    * per-file open/footer cost taxes every probe's store scan. Every
-    * `compactEvery`-th batch both sinks are compacted (the LSM
+    * `compactEvery`: an upsert whose keys collide with no stored row
+    * APPENDS the batch's rows as new files — O(batch) per batch instead
+    * of an O(store) rewrite — so a long-lived stream accumulates files
+    * until per-file open/footer cost taxes every probe's store scan.
+    * Every `compactEvery`-th batch both sinks are compacted (the LSM
     * tradeoff: one amortized O(store)/`compactEvery` rewrite per batch
-    * buys a bounded file count); 0 disables. Compaction is the same
-    * crash-safe two-rename swap as the upsert, into MergeWriter's
-    * default-sized files. Both sinks' batches are persisted, so their
+    * buys a bounded file count); 0 disables. Compaction publishes
+    * through the same crash-safe commit record as the upsert, into
+    * MergeWriter's default-sized files. Both sinks' batches are persisted, so their
     * collision probes skip every stored row group outside the batch's
     * key range (Parquet footer min/max) before and after compaction.
     *

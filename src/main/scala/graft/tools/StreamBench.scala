@@ -15,7 +15,7 @@ import graft.streaming.DocStream
   * decision, and the store's file count. What flat batch times
   * demonstrate: the per-batch probe cost is |batch| signing + banded
   * collisions — independent of corpus TEXT volume — and the per-batch
-  * sink cost is O(batch) (staged append + key-range-pruned collision
+  * sink cost is O(batch) (append commit + key-range-pruned collision
   * probe), with compaction's amortized O(store)/compactEvery rewrite
   * the only store-sized term. Run with compactEvery small enough that
   * the measured window CROSSES ≥2 compaction boundaries — the r11 run

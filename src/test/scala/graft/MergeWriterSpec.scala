@@ -1,22 +1,77 @@
 package graft
 
 import graft.sources.MergeWriter
-import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{CreateFlag, FSDataOutputStream, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicLong
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 import scala.jdk.CollectionConverters._
 
-/** The local file system under the `failrename` scheme, except that a
-  * rename onto a retired `.__old__` directory returns false — the way
-  * Hadoop file systems report most rename failures. */
+/** The local file system under the `failrename` scheme, except that the
+  * rename publishing a commit record onto an existing table returns
+  * false — the way Hadoop file systems report most rename failures. */
 class OldRenameFailsFs extends RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("failrename:///")
   override def getScheme: String = "failrename"
-  override def rename(src: Path, dst: Path): Boolean =
-    !dst.getName.endsWith(".__old__") && super.rename(src, dst)
+  override def rename(src: Path, dst: Path): Boolean = {
+    val table = new Path(dst.getParent, dst.getName.stripSuffix(".__commit__"))
+    !(dst.getName.endsWith(".__commit__") && exists(table)) &&
+      super.rename(src, dst)
+  }
+}
+
+/** The local file system under the `crashfs` scheme with a crash switch:
+  * once armed with k, the k-th create, rename or delete and every one
+  * after it throw, until disarmed — what a process that died at that
+  * call leaves on disk. */
+class CrashingFs extends RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("crashfs:///")
+  override def getScheme: String = "crashfs"
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int,
+                      replication: Short, blockSize: Long,
+                      progress: Progressable): FSDataOutputStream = {
+    CrashingFs.step()
+    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+  }
+  override def create(f: Path, permission: FsPermission, overwrite: Boolean,
+                      bufferSize: Int, replication: Short, blockSize: Long,
+                      progress: Progressable): FSDataOutputStream = {
+    CrashingFs.step()
+    super.create(f, permission, overwrite, bufferSize, replication,
+      blockSize, progress)
+  }
+  override def createNonRecursive(f: Path, permission: FsPermission,
+                                  flags: java.util.EnumSet[CreateFlag],
+                                  bufferSize: Int, replication: Short,
+                                  blockSize: Long,
+                                  progress: Progressable): FSDataOutputStream = {
+    CrashingFs.step()
+    super.createNonRecursive(f, permission, flags, bufferSize, replication,
+      blockSize, progress)
+  }
+  override def rename(src: Path, dst: Path): Boolean = {
+    CrashingFs.step(); super.rename(src, dst)
+  }
+  override def delete(p: Path, recursive: Boolean): Boolean = {
+    CrashingFs.step(); super.delete(p, recursive)
+  }
+}
+
+object CrashingFs {
+  private val left = new AtomicInteger(Int.MaxValue)
+  @volatile private var armed = false
+  @volatile var crashed = false
+  def arm(k: Int): Unit = { left.set(k); crashed = false; armed = true }
+  def disarm(): Unit = armed = false
+  def step(): Unit =
+    if (armed && left.decrementAndGet() <= 0) {
+      crashed = true
+      throw new java.io.IOException("injected crash")
+    }
 }
 
 class MergeWriterSpec extends SparkSpecBase {
@@ -113,34 +168,6 @@ class MergeWriterSpec extends SparkSpecBase {
     assert(after == Seq((1, "x", None), (2, "Y", Some(9.0)), (3, "Z", None)))
   }
 
-  test("recover promotes a complete tmp after a mid-swap crash") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft_rec1").toString + "/t"
-    // simulate: old = v1 (retired), tmp = v2 (complete, _SUCCESS), cur gone
-    Seq((1, "v1")).toDF("k", "s").write.parquet(dir + ".__old__")
-    Seq((1, "v2"), (2, "v2")).toDF("k", "s").write.parquet(dir + ".__tmp__")
-    MergeWriter.recover(spark, dir)
-    val got = spark.read.parquet(dir).orderBy("k")
-      .collect().map(_.getString(1)).toSeq
-    assert(got == Seq("v2", "v2"))
-    // leftovers swept
-    assert(!Files.exists(java.nio.file.Paths.get(dir + ".__old__")))
-    assert(!Files.exists(java.nio.file.Paths.get(dir + ".__tmp__")))
-  }
-
-  test("recover restores the old version when tmp is incomplete") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft_rec2").toString + "/t"
-    Seq((1, "v1")).toDF("k", "s").write.parquet(dir + ".__old__")
-    // incomplete tmp: parquet dir without its _SUCCESS marker
-    Seq((1, "v2")).toDF("k", "s").write.parquet(dir + ".__tmp__")
-    Files.delete(java.nio.file.Paths.get(dir + ".__tmp__", "_SUCCESS"))
-    MergeWriter.recover(spark, dir)
-    val got = spark.read.parquet(dir).collect().map(_.getString(1)).toSeq
-    assert(got == Seq("v1"))
-    assert(!Files.exists(java.nio.file.Paths.get(dir + ".__tmp__")))
-  }
-
   test("deleteParquet erases matched keys, replays safely, skips absent tables") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_del").toString + "/t"
@@ -178,33 +205,6 @@ class MergeWriterSpec extends SparkSpecBase {
     val mtime2 = new java.io.File(dir).listFiles()
       .filter(_.getName.endsWith(".parquet")).map(_.lastModified).max
     assert(mtime2 == mtime, "no-op compaction rewrote the table")
-  }
-
-  test("recover rolls back a staged append that died mid-publish") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft_rec3").toString + "/t"
-    MergeWriter.upsertParquet(spark, dir,
-      Seq((1, "a"), (2, "b")).toDF("k", "s"), Seq("k"))
-    val before = spark.read.parquet(dir).orderBy("k").collect().toSeq
-    // simulate a crash in the rename window: one batch file is already
-    // live, the marker still lists it (publish never completed)
-    Seq((3, "c")).toDF("k", "s").coalesce(1)
-      .write.mode("overwrite").parquet(dir + ".__add__")
-    val part = new java.io.File(dir + ".__add__").listFiles()
-      .filter(_.getName.endsWith(".parquet")).head
-    Files.writeString(java.nio.file.Paths.get(dir + ".__addlog__"),
-      part.getName + "\n")
-    Files.move(part.toPath,
-      java.nio.file.Paths.get(dir, part.getName))
-    MergeWriter.recover(spark, dir)
-    // all-or-nothing: the half-published batch is gone, the table is
-    // exactly its pre-append state, all staging artifacts swept
-    assert(spark.read.parquet(dir).orderBy("k").collect().toSeq == before)
-    assert(!Files.exists(java.nio.file.Paths.get(dir + ".__addlog__")))
-    assert(!Files.exists(java.nio.file.Paths.get(dir + ".__add__")))
-    // and the sink still works after the rollback (caller retries)
-    MergeWriter.upsertParquet(spark, dir, Seq((3, "c")).toDF("k", "s"), Seq("k"))
-    assert(spark.read.parquet(dir).count() == 3)
   }
 
   /** Input records read by every task of the jobs `body` runs. */
@@ -397,5 +397,151 @@ class MergeWriterSpec extends SparkSpecBase {
     val got = MergeWriter.merge(target, updates, Seq("img", "ap"))
       .orderBy("img", "ap").collect().map(_.getDouble(2)).toSeq
     assert(got == Seq(1.0, 9.0))
+  }
+
+  /** Data files under `dir`, relative to it, with their mtimes and the
+    * SHA-256 of their bytes. */
+  private def fileStates(dir: String): Map[String, (Long, String)] =
+    dataFiles(dir).map { f =>
+      val p = java.nio.file.Paths.get(dir, f)
+      val sha = java.security.MessageDigest.getInstance("SHA-256")
+        .digest(Files.readAllBytes(p)).map("%02x".format(_)).mkString
+      f -> (Files.getLastModifiedTime(p).toMillis, sha)
+    }.toMap
+
+  test("a redelivered batch, persisted or lazy, commits nothing") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_redeliver").toString + "/t"
+    val keys = Seq("targname", "k")
+    def batch = (1 to 50).map(i => ("ngc104", i, i * 0.5))
+      .toDF("targname", "k", "v").withColumn("ingest_date", current_date())
+    MergeWriter.upsertParquet(spark, dir, batch, keys, Seq("targname"))
+    val seeded = fileStates(dir)
+    def rows() = spark.read.parquet(dir).orderBy("k").collect().toSeq
+    val once = rows()
+    MergeWriter.upsertParquet(spark, dir, batch, keys, Seq("targname"))
+    val cached = batch.persist()
+    MergeWriter.upsertParquet(spark, dir, cached, keys, Seq("targname"))
+    cached.unpersist()
+    assert(fileStates(dir) == seeded, "a redelivery added or removed files")
+    assert(rows() == once)
+  }
+
+  test("a collision confined to 1 of N files rewrites only that file") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_cow").toString + "/t"
+    MergeWriter.upsertParquet(spark, dir,
+      spark.range(400).selectExpr("id AS k", "CAST(id AS STRING) AS s")
+        .repartitionByRange(4, col("k")), Seq("k"))
+    val seeded = fileStates(dir)
+    assert(seeded.size == 4)
+    val updates = Seq((150L, "X"), (1000L, "new")).toDF("k", "s")
+    val expected = MergeWriter.merge(spark.read.parquet(dir), updates, Seq("k"))
+      .orderBy("k").collect().toSeq
+    MergeWriter.upsertParquet(spark, dir, updates, Seq("k"))
+    val after = fileStates(dir)
+    assert((seeded.keySet -- after.keySet).size == 1,
+      "the upsert removed other files than the one holding the collision")
+    assert(seeded.count { case (f, st) => after.get(f).contains(st) } == 3,
+      "an untouched file changed")
+    assert(spark.read.parquet(dir).orderBy("k").collect().toSeq == expected)
+  }
+
+  test("escaped partition values: a collision rewrites exactly its file") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_escape").toString + "/t"
+    val keys = Seq("targname", "k")
+    MergeWriter.upsertParquet(spark, dir,
+      Seq(("47 Tuc%x", 1, "a"), ("47 Tuc%x", 2, "b"), ("ngc104", 1, "c"))
+        .toDF("targname", "k", "s").coalesce(1), keys, Seq("targname"))
+    val seeded = fileStates(dir)
+    val tuc = seeded.keySet.filter(_.startsWith("targname=47 Tuc%25x/"))
+    assert(tuc.size == 1 && seeded.size == 2, seeded.keySet)
+    val updates = Seq(("47 Tuc%x", 2, "B"), ("47 Tuc%x", 3, "d"))
+      .toDF("targname", "k", "s")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("targname", "k").collect()
+        .map(r => (r.getAs[String]("targname"), r.getAs[Int]("k"),
+          r.getAs[String]("s"))).toSeq
+    val expected = rows(MergeWriter.merge(spark.read.parquet(dir), updates, keys))
+    MergeWriter.upsertParquet(spark, dir, updates, keys, Seq("targname"))
+    val after = fileStates(dir)
+    assert(seeded.keySet -- after.keySet == tuc)
+    assert((seeded -- tuc).forall { case (f, st) => after.get(f).contains(st) })
+    assert(rows(spark.read.parquet(dir)) == expected)
+    assert(expected.contains(("47 Tuc%x", 2, "B")))
+  }
+
+  test("a replayed tombstone batch writes nothing") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_tomb").toString + "/t"
+    MergeWriter.upsertParquet(spark,
+      dir, Seq((1, 10.0), (2, 20.0), (3, 30.0)).toDF("k", "v"), Seq("k"))
+    val ts = Seq(2, 99).toDF("k")
+    MergeWriter.deleteParquet(spark, dir, ts, Seq("k"))
+    val settled = fileStates(dir)
+    MergeWriter.deleteParquet(spark, dir, ts, Seq("k"))
+    MergeWriter.deleteParquet(spark, dir, Seq(7).toDF("k"), Seq("k"))
+    assert(fileStates(dir) == settled,
+      "deleting keys the table does not hold added or removed files")
+    assert(spark.read.parquet(dir).count() == 2)
+  }
+
+  test("a crash at any file-system call leaves the write all-or-nothing") {
+    import spark.implicits._
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.crashfs.impl", classOf[CrashingFs].getName)
+    val keys = Seq("targname", "k")
+    val part = Seq("targname")
+    val seed = Files.createTempDirectory("graft_crash_seed").resolve("t")
+    MergeWriter.upsertParquet(spark, s"crashfs://$seed",
+      Seq(("a", 1, "x"), ("a", 2, "y"), ("b", 3, "z"), ("b", 4, "w"))
+        .toDF("targname", "k", "s").coalesce(1), keys, part)
+    assert(dataFiles(seed.toString).size == 2)
+    def rows(dir: String) = spark.read.parquet(dir)
+      .orderBy("targname", "k").collect()
+      .map(r => (r.getAs[String]("targname"), r.getAs[Int]("k"),
+        r.getAs[String]("s"))).toSeq
+    val pre = rows(s"crashfs://$seed")
+    val writes = Seq[(String, String => Unit, Seq[(String, Int, String)])](
+      ("colliding upsert", MergeWriter.upsertParquet(spark, _,
+        Seq(("a", 2, "Y"), ("a", 5, "v")).toDF("targname", "k", "s")
+          .coalesce(1), keys, part),
+        Seq(("a", 1, "x"), ("a", 2, "Y"), ("a", 5, "v"), ("b", 3, "z"),
+          ("b", 4, "w"))),
+      ("delete", MergeWriter.deleteParquet(spark, _,
+        Seq(("b", 3)).toDF("targname", "k"), keys, part),
+        pre.filterNot(_._2 == 3)),
+      ("compaction", MergeWriter.compactParquet(spark, _, 1L << 30, part), pre))
+    for ((name, write, post) <- writes) {
+      var k = 0
+      var crashed = true
+      while (crashed) {
+        k += 1
+        val root = Files.createTempDirectory("graft_crash")
+        val walk = Files.walk(seed)
+        try walk.iterator().asScala.foreach(p =>
+          Files.copy(p, root.resolve("t").resolve(seed.relativize(p).toString)))
+        finally walk.close()
+        val dir = s"crashfs://${root.resolve("t")}"
+        CrashingFs.arm(k)
+        val returned =
+          try { write(dir); true }
+          catch { case _: Exception => false }
+          finally CrashingFs.disarm()
+        crashed = CrashingFs.crashed
+        val recorded = Files.exists(root.resolve("t.__commit__"))
+        MergeWriter.recover(spark, dir)
+        val at = s"$name, crash at call $k"
+        val got = rows(dir)
+        assert(got == pre || got == post, s"$at: torn table $got")
+        if (returned || recorded)
+          assert(got == post, s"$at: a committed write was lost: $got")
+        assert(root.toFile.list().toSeq == Seq("t"),
+          s"$at: left ${root.toFile.list().toSeq} beside the table")
+        assert(crashed || returned, s"$at: failed without a crash")
+      }
+      assert(k > 3, s"$name reached only ${k - 1} crash points")
+    }
   }
 }

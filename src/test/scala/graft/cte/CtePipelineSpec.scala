@@ -25,7 +25,7 @@ class CtePipelineSpec extends SparkSpecBase {
     pipe.ingestPhot(CteFixtures.photLong(spark))
 
     // analytics (counts captured eagerly — table() plans are snapshots of
-    // the warehouse dir and go stale across upsert swaps)
+    // the warehouse dir and go stale across upsert commits)
     val slopes = pipe.computeSlopes(CteFixtures.T)
     // all 8 bins emitted per populated (pair, aperture); pair B has no
     // photometry ⇒ no rows (pre-match gate); 3 bins carry data
