@@ -134,7 +134,7 @@ object Plans {
     "x6_zorder_box" ->
       "Z-order clustered scan: both box filters are literals pushed to the graft_z_lineitem FileScan (PushedFilters on l_partkey AND l_suppkey); the Morton layout makes the row-group min/max stats tight in BOTH dimensions, so the pushed filters skip most of the table before a page is decoded — pruning via row order, no index structure.",
     "gr2_triangles" ->
-      "Triangle counting: degree-ordered orientation bounds every node's wedge fan-out by arboricity (the celebrity-node guard); the wedge join and the closing-edge join are both hash equi-joins over the O(n) LSH pair graph.",
+      "Triangle counting, the at-scale path of Graph.triangleCounts (below its edge bound the same arithmetic runs in one task): degree-ordered orientation bounds every node's wedge fan-out by arboricity (the celebrity-node guard); the wedge join and the closing-edge join are both hash equi-joins over the O(n) LSH pair graph.",
     "x9_interval_bucket_join" ->
       "Bucketized range join: windows explode to ≤2 bucket keys, points to exactly 1 — the pure-inequality join becomes a hash equi-join + exact range filter; the plan must show SortMergeJoin/ShuffledHashJoin on `bucket`, never BroadcastNestedLoopJoin.",
     "t15_tfidf_topterms" ->
@@ -166,7 +166,7 @@ object Plans {
     "v18_rand_proj" ->
       "JL projection: the ±1 sign matrix is an 8-row BROADCAST side (BroadcastNestedLoopJoin over the tiny side), the integer dot product folds inside the scan stage — zero data-sized exchanges before the output sort.",
     "gr5_kcore" ->
-      "k-core peel (hybrid, the CC discipline): the count() that materializes the symmetrized pair graph picks the path — one executor task peels a small graph (distributed rounds are pure stage overhead there), big graphs run degree-aggregate + two semi-joins per round, localCheckpoint-truncated; integer counts make both paths bit-identical.",
+      "k-core peel through Graph's one hybrid driver: the count() that materializes the symmetrized pair graph picks the path — one executor task peels a small graph (distributed rounds are pure stage overhead there), big graphs run degree-aggregate + two semi-joins per round, localCheckpoint-truncated; integer counts make both paths bit-identical.",
     "c2_cte_funnel" ->
       "CTE flagship composed end-to-end: the pair table broadcasts (suppliers are dimension-sized); the two fact shuffles are the per-(supplier,part) observation aggregate and the o1⋈o2 match join; everything after the bin join runs on matched rows only, and the stage counts + Gram moments meet in broadcast cross-joins of 1-row aggregates.")
 

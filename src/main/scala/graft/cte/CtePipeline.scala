@@ -3,6 +3,7 @@ package graft.cte
 import graft.sources.{MergeWriter, TsvTables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** End-to-end pipeline — the reference's `run_uvis_external_cte.py`
   * lifecycle (SURVEY.md §3.1) as three composable stages over a parquet
@@ -28,7 +29,34 @@ class CtePipeline(spark: SparkSession, warehouse: String) {
 
   private def path(t: String) = s"$warehouse/$t"
 
-  def table(t: String): DataFrame = spark.read.parquet(path(t))
+  /** The tables whose schema the registry fixes: they are written in it
+    * and read with it, so no read runs a schema-inference job. */
+  private val registered = Map("fileinfo" -> SchemaRegistry.fileinfo,
+    "phot" -> SchemaRegistry.photLong, "results" -> SchemaRegistry.resultsLong)
+
+  def table(t: String): DataFrame =
+    registered.get(t).fold(spark.read)(spark.read.schema(_)).parquet(path(t))
+
+  /** Upsert `rows` into table `t` by its natural `keys`. A table the
+    * registry fixes takes exactly its columns and types, in any order, and
+    * stores them in the registry's order; a missing, extra or differently
+    * typed column is a writer bug and fails the write before any file is
+    * touched (a cast or a drop here would hide it). Rows already in
+    * registry order pass as they are, so a persisted batch keeps its cache
+    * for the collision probe. */
+  private def upsert(t: String, rows: DataFrame, keys: String*): Unit = {
+    val conformed = registered.get(t).fold(rows) { schema =>
+      def shape(s: StructType) = s.fields.map(f => f.name -> f.dataType).toSet
+      val (want, got) = (shape(schema), shape(rows.schema))
+      require(want == got, s"rows for $t are not in its registry schema: " +
+        s"missing ${(want -- got).mkString(", ")}; " +
+        s"unexpected ${(got -- want).mkString(", ")}")
+      if (rows.columns.sameElements(schema.fieldNames)) rows
+      else rows.select(schema.fieldNames.map(col).toSeq: _*)
+    }
+    MergeWriter.upsertParquet(spark, path(t), conformed, keys,
+      partitionCols = Seq("targname"))
+  }
 
   // ---- stage 1: ingest
 
@@ -37,25 +65,20 @@ class CtePipeline(spark: SparkSession, warehouse: String) {
     * col5=dec). */
   def ingestMasterCat(catPath: String, targname: String): Unit = {
     val raw = TsvTables.readPositional(spark, catPath,
-      org.apache.spark.sql.types.StructType(
-        SchemaRegistry.master.fields.filter(_.name != "targname")))
+      StructType(SchemaRegistry.master.fields.filter(_.name != "targname")))
       .withColumn("targname", lit(targname))
-    MergeWriter.upsertParquet(spark, path("master"), raw,
-      Seq("targname", "master_id"), partitionCols = Seq("targname"))
+    upsert("master", raw, "targname", "master_id")
   }
 
   /** Ingest fileinfo rows (already header-parsed upstream; S2). */
   def ingestFileinfo(rows: DataFrame): Unit =
-    MergeWriter.upsertParquet(spark, path("fileinfo"), rows,
-      Seq("targname", "imagename"), partitionCols = Seq("targname"))
+    upsert("fileinfo", rows, "targname", "imagename")
 
   /** Ingest long-format photometry (one row per source × aperture; the
     * reference's mag-file pivot state machine is unnecessary in long
     * form — A10 runs only in the wide compatibility view). */
   def ingestPhot(rows: DataFrame): Unit =
-    MergeWriter.upsertParquet(spark, path("phot"), rows,
-      Seq("targname", "imagename", "find_id", "aperture"),
-      partitionCols = Seq("targname"))
+    upsert("phot", rows, "targname", "imagename", "find_id", "aperture")
 
   /** Ingest one image's IRAF-photometry pair: a DAOphot `.mag` file (long
     * star×aperture rows with A11's totbkgrd = AREA×MSKY) plus its `.coo`
@@ -78,8 +101,11 @@ class CtePipeline(spark: SparkSession, warehouse: String) {
         .coalesce(1).rdd.zipWithIndex.map { case (r, i) =>
           Row(r.getInt(0), r.getDouble(1), r.getDouble(2), i + 1L) },
       StructType(cooSchema.fields :+ StructField("rn", LongType)))
+    // the join pins find_id to a coo row number, so the registry's int
+    // holds it exactly
     val rows = mag.join(cooIdx, mag("find_id") === cooIdx("rn"))
-      .select(col("find_id"), lit(imagename).as("imagename"),
+      .select(col("find_id").cast("int").as("find_id"),
+        lit(imagename).as("imagename"),
         current_date().as("ingest_date"), col("master_id"),
         col("xpix"), col("ypix"),
         col("extr_ra").as("ra"), col("extr_dec").as("dec"),
@@ -97,9 +123,8 @@ class CtePipeline(spark: SparkSession, warehouse: String) {
         table("phot"), table("fileinfo"), targname, preds = preds)
       .withColumn("slopefile", lit(s"${targname}_slopes.txt"))
       .withColumn("slopefile_path", lit(s"$warehouse/artifacts"))
-    MergeWriter.upsertParquet(spark, path("results"), slopes,
-      Seq("targname", "imagename_1", "imagename_2", "aperture",
-          "bin_lo", "bin_hi"), partitionCols = Seq("targname"))
+    upsert("results", slopes, "targname", "imagename_1", "imagename_2",
+      "aperture", "bin_lo", "bin_hi")
     slopes
   }
 
@@ -130,17 +155,20 @@ class CtePipeline(spark: SparkSession, warehouse: String) {
     * product), the cteVSflashlvl table, and the model fit values on the
     * flux grid (*fitvals.txt) evaluated at the latest combined epoch.
     *
-    * Shared inputs are evaluated once: each warehouse table is read once
-    * (a read infers the Parquet schema with a job), the epoch cohorts are
-    * collected once, and the fitted coefficients — one row per target —
-    * are collected once and feed both the coeffs and fitvals artifacts. */
+    * Shared inputs are evaluated once: each warehouse table is read once,
+    * the epoch cohorts are collected once, and the fitted coefficients —
+    * one row per target — are collected once and feed both the coeffs
+    * and fitvals artifacts. */
   def publish(targname: String, outDir: String): Unit = {
     val results = table("results").filter(col("targname") === targname)
     val fileinfo = table("fileinfo")
     val cohorts = CteAnalytics.epochCohorts(fileinfo, targname)
+    // the slopes file keeps computeSlopes' column order, not the table's
     TsvTables.write(
-      results.orderBy("imagename_1", "imagename_2", "aperture", "bin_lo",
-        "bin_hi"),
+      results.select("imagename_1", "imagename_2", "aperture", "bin_lo",
+          "bin_hi", "slope", "slopestdev", "numpoints", "slopefile",
+          "slopefile_path", "targname")
+        .orderBy("imagename_1", "imagename_2", "aperture", "bin_lo", "bin_hi"),
       s"$outDir/${targname}_slopes")
     val rows = slopeRows(results, fileinfo, cohorts, targname)
     val fit = CteAnalytics.polyfitByTarget(rows)

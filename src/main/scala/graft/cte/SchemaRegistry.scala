@@ -71,7 +71,11 @@ object SchemaRegistry {
   val fileinfo: StructType = {
     val strings = Seq("imagename", "imagepath", "coofile", "magfile",
       "photpath", "parsed_name", "proposid", "filter", "chinject",
-      "flashcur", "shutrpos")
+      "flashcur", "shutrpos",
+      // the exposure class 's'/'l' the ingest derives from the RAW float
+      // exptime (run_image_extraction.py:384-387); `exptime` is stored
+      // int-truncated, so the class cannot be recomputed from it
+      "length")
     val doubles = Seq("ra_lowerleft", "dec_lowerleft", "ra_lowerright",
       "dec_lowerright", "ra_upperright", "dec_upperright", "ra_upperleft",
       "dec_upperleft", "mnclip_bkgrd", "dateobs", "exptime", "flashlvl",

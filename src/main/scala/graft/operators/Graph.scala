@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -10,35 +10,26 @@ import org.apache.spark.storage.StorageLevel
   * LSH-candidate pair graph (d4's output), so that transitive duplicate
   * chains A~B~C collapse into ONE cluster even when A≁C directly —
   * the case the greedy drop-the-greater-id rule gets wrong
-  * ([[CorpusCuration]]'s documented approximation).
+  * ([[CorpusCuration]]'s documented approximation). The gr query pack
+  * adds k-core peeling, SSSP/BFS, integer PageRank and triangle counts.
   *
-  * Scale shape: label propagation as a loop of (join + min-aggregate),
-  * i.e. the CC-MR / large-star family of MapReduce CC algorithms — no
-  * driver-side union-find, no adjacency collected anywhere. Each round
-  * shuffles the edge table once (hash on vertex id); a path-halving
-  * pointer jump (labels joined to themselves) compresses chains so
-  * convergence takes O(log diameter) rounds, not O(diameter). Near-dup
-  * clusters are shallow (a handful of hops even at corpus scale), so
-  * rounds stay single-digit at any data size; the per-round cost is the
-  * edge-table join, which partitions by vertex id and never fans out
-  * beyond degree. The only driver-side values are the per-round changed
-  * counts (one Long each) that decide convergence.
+  * Every kernel runs through ONE hybrid driver ([[hybrid]]): the count()
+  * that materializes the kernel's persisted edge table also picks the
+  * path. A graph that fits one task runs there, as flat-array code over
+  * one dense-id/CSR packing ([[Packed]]); a bigger one runs the kernel's
+  * distributed loop, where each round shuffles the edge table once (hash
+  * on vertex id) — no driver-side adjacency anywhere. The only
+  * driver-side values are per-round scalars (changed counts, removal
+  * counts, a max delta) that decide convergence.
+  *
+  * CC's loop is label propagation as (join + min-aggregate), the CC-MR /
+  * large-star family of MapReduce CC algorithms; a path-halving pointer
+  * jump (labels joined to themselves) compresses chains so convergence
+  * takes O(log diameter) rounds, not O(diameter). Near-dup clusters are
+  * shallow, so rounds stay single-digit at any data size.
   */
 object Graph {
 
-  /** Connected components of the undirected graph given by `edges`:
-    * one row per distinct vertex, labeled with the SMALLEST vertex id in
-    * its component (deterministic, so oracle-comparable).
-    *
-    * @param edges    two-column edge list (undirected; direction ignored)
-    * @param src      source-id column name
-    * @param dst      dest-id column name
-    * @param maxIters safety bound; convergence is typically ≤ 5 rounds
-    *                 for near-dup graphs (diameter-shallow). Throws if
-    *                 hit — a truncated labeling is a WRONG answer, never
-    *                 a fallback.
-    * @return DataFrame(id, component)
-    */
   /** Edge-count bound under which the whole component structure is
     * resolved in ONE executor task instead of the iterative loop. This is
     * the standard two-phase shape of production CC (GraphFrames, CC-MR):
@@ -66,6 +57,17 @@ object Graph {
     * the single-task finish pays off at higher edge counts. */
   private val ssspLocalEdges = 2000000L
 
+  /** Edge-count bound under which per-node triangle counting runs in ONE
+    * executor task. The distributed plan is 5 shuffle stages (degree
+    * agg, two orientation joins, the wedge self-join, the closing join,
+    * the corner rollup) — ~4 s of pure stage overhead on a 5k-edge pair
+    * graph at sf0.1, where the CSR kernel does the same arithmetic in
+    * milliseconds. 2M edges ≈ 50 MB through coalesce(1); intersection
+    * work is output-bound (Σ wedge-closures — clique-shaped near-dup
+    * graphs keep it ~linear in edges). Past the bound the wedge join runs
+    * distributed — the sf10 pair graph (13.8M edges) stays on that path. */
+  private val triangleLocalEdges = 2000000L
+
   /** Node-count bound under which the per-round node-sized table
     * (frontier / rank vector) is BROADCAST instead of co-partitioning
     * the edge table up front. 2M (node, long) rows ≈ 32 MB serialized —
@@ -73,70 +75,200 @@ object Graph {
     * one full edge-table exchange avoided per driver invocation (the
     * dominant fixed cost when the graph's node set is dimension-derived:
     * suppliers, documents — which stays bounded while edges grow with
-    * the corpus). Estimated with one HLL pass (±5%), so the bound is a
-    * soft ceiling, deliberately far under broadcast's hard limits. */
+    * the corpus). */
   private val broadcastNodeLimit = 2000000L
 
-  def connectedComponents(edges: DataFrame, src: String, dst: String,
-                          maxIters: Int = 25,
-                          localThreshold: Long = localFinishEdges): DataFrame = {
-    // Symmetrize once; the loop re-reads this table every round.
-    val sym = edges.select(col(src).as("a"), col(dst).as("b"))
-      .union(edges.select(col(dst).as("a"), col(src).as("b")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+  // ---------------------------------------------------------------------
+  // The hybrid driver and its shared pieces.
+  // ---------------------------------------------------------------------
 
-    // Hybrid finish: count() both materializes the persisted edge table
-    // (a cost the first loop round would pay anyway) and picks the path.
-    // NOT a driver collect — the union-find below runs inside one
-    // executor task via mapPartitions on a single coalesced partition.
-    if (sym.count() <= localThreshold) {
-      val spark = edges.sparkSession
-      import spark.implicits._
-      val comp = sym
-        .select(col("a").cast("long"), col("b").cast("long"))
-        .as[(Long, Long)]
-        .coalesce(1)
-        .mapPartitions { it =>
-          val parent = scala.collection.mutable.LongMap.empty[Long]
-          def find(x: Long): Long = {
-            var r = x
-            while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-            var c = x // path compression
-            while (parent.getOrElse(c, c) != c) {
-              val nxt = parent.getOrElse(c, c); parent(c) = r; c = nxt
-            }
-            r
-          }
-          it.foreach { case (a, b) =>
-            parent.getOrElseUpdate(a, a)
-            parent.getOrElseUpdate(b, b)
-            val (ra, rb) = (find(a), find(b))
-            // min-id root keeps the final labels deterministic
-            if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
-          }
-          // materialize the key set first: find()'s path compression
-          // mutates the map, which must not race the iteration
-          val ids = parent.keys.toArray
-          ids.iterator.map(id => (id, find(id)))
-        }
-        .toDF("id", "component")
-        // Materialize NOW, while sym is still cached: the single-task
-        // plan runs under coalesce(1), so a lazy return would recompute
-        // the whole (possibly expensive) edge derivation single-threaded
-        // at first use — measured 20× on the sf1 near-dup pair graph.
-        .localCheckpoint()
-      sym.unpersist()
-      return comp
+  /** The one execution shape of every kernel. `edges` is the kernel's
+    * prepared edge table (columns `a`, `b`[, `w`]). It is persisted and
+    * counted; that count both materializes it (a cost the first
+    * distributed round would pay anyway) and picks the path:
+    *   - at or below `localThreshold` edges, `local` (built on the driver
+    *     after the count, so it may run driver-side jobs such as SSSP's
+    *     default source) maps the long-cast edge rows of ONE coalesced
+    *     partition to the (Long, Long) result rows, named `out`. NOT a
+    *     driver collect: the kernel runs inside one executor task. The
+    *     result is materialized NOW, while `edges` is still cached: the
+    *     single-task plan runs under coalesce(1), so a lazy return would
+    *     recompute the whole edge derivation single-threaded at first use
+    *     (measured 20× on the sf1 near-dup pair graph);
+    *   - above it, `distributed` runs the kernel's loop over the cached
+    *     table and returns a result that no longer reads it (checkpointed
+    *     or driver-side state), its intermediates already released.
+    * Either way the edge table is unpersisted before returning. An empty
+    * graph always takes the local path. */
+  private def hybrid[E: Encoder](edges: DataFrame, localThreshold: Long,
+                                 out: (String, String))(
+      local: DataFrame => Iterator[E] => Iterator[(Long, Long)])(
+      distributed: DataFrame => DataFrame): DataFrame = {
+    val e = edges.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      if (e.count() <= localThreshold) {
+        val kernel = local(e)
+        e.select(e.columns.map(c => col(c).cast("long")): _*).as[E]
+          .coalesce(1)
+          .mapPartitions(kernel)
+          .toDF(out._1, out._2)
+          .localCheckpoint()
+      } else distributed(e)
+    } finally e.unpersist()
+  }
+
+  private implicit val edgeRows: Encoder[(Long, Long)] =
+    Encoders.product[(Long, Long)]
+  private implicit val weightedEdgeRows: Encoder[(Long, Long, Long)] =
+    Encoders.product[(Long, Long, Long)]
+
+  /** The undirected edge set of `edges` as both directions (a, b). */
+  private def symmetrize(edges: DataFrame, src: String, dst: String)
+      : DataFrame =
+    edges.select(col(src).as("a"), col(dst).as("b"))
+      .union(edges.select(col(dst).as("a"), col(src).as("b")))
+
+  /** Edge placement for the loops that join node-sized state to the edge
+    * table every round (SSSP's frontier, PageRank's contributions). When
+    * the state is broadcastable — the node set is dimension-derived
+    * (co-supplier, co-purchase) and stays so at ANY corpus scale — the
+    * per-round join broadcasts it and streams the cached edges where they
+    * sit, so pre-shuffling the EDGE table would be a full wasted
+    * exchange. Only a genuinely large node set (web-scale graphs)
+    * justifies co-partitioning the edges on `a` once, so the per-round
+    * shuffle falls on the state alone. Runs `loop` over the placed edges
+    * and frees a repartitioned copy after it. */
+  private def placed(e: DataFrame, broadcastState: Boolean)
+                    (loop: DataFrame => DataFrame): DataFrame =
+    if (broadcastState) loop(e)
+    else {
+      val p = e.repartition(col("a")).persist(StorageLevel.MEMORY_AND_DISK)
+      p.count()
+      e.unpersist()
+      try loop(p) finally p.unpersist()
     }
 
-    // Each round's labels are localCheckpoint'ed, not just persisted: the
-    // loop builds plans on top of the previous round's result, and without
-    // lineage truncation the logical plan grows by one join-aggregate per
-    // round until analysis itself overflows. Checkpointing keeps every
-    // round's plan a constant two joins over materialized inputs. (Local
-    // checkpoints live in executor storage; a production job that must
-    // survive executor loss sets a checkpoint dir and uses reliable
-    // checkpoints — same loop, different sink.)
+  /** The dense-id/CSR packing behind the single-task kernels, over the
+    * edges (a(i), b(i)). Node ids are numbered 0..n-1 in first-seen order
+    * (edge by edge, source before destination, then `extra`), so every
+    * later pass is flat Int-array arithmetic: a hash-map adjacency pays
+    * ~3 probes per edge per ROUND (measured 17 s vs ~0.5 s for PageRank
+    * on a 1.1M-edge graph), and the boxed-set peel it replaced went
+    * quadratic in GC at ~14M edges (29 s vs ~3 s). */
+  private final class Packed(a: Array[Long], b: Array[Long],
+                             extra: Option[Long] = None) {
+    val m: Int = a.length
+    private val n2i = scala.collection.mutable.LongMap.empty[Int]
+    private var seen = new Array[Long](16)
+    private var seenN = 0
+    private def idOf(x: Long): Int = n2i.getOrElseUpdate(x, {
+      if (seenN == seen.length) seen = java.util.Arrays.copyOf(seen, 2 * seenN)
+      seen(seenN) = x; seenN += 1; seenN - 1
+    })
+    val src = new Array[Int](m)
+    val dst = new Array[Int](m)
+    locally {
+      var i = 0
+      while (i < m) { src(i) = idOf(a(i)); dst(i) = idOf(b(i)); i += 1 }
+    }
+    val extraId: Int = extra.fold(-1)(idOf)
+    val ids: Array[Long] = java.util.Arrays.copyOf(seen, seenN)
+    val n: Int = ids.length
+
+    /** CSR out-adjacency of the edges directed from(i) → to(i) (default:
+      * as given): node u's slots are off(u) until off(u + 1), slot j
+      * leads to tgt(j) along input edge edge(j); slots keep input order.
+      * @return (off, tgt, edge) */
+    def csr(from: Array[Int] = src, to: Array[Int] = dst)
+        : (Array[Int], Array[Int], Array[Int]) = {
+      val off = new Array[Int](n + 1)
+      var i = 0
+      while (i < m) { off(from(i) + 1) += 1; i += 1 }
+      i = 0
+      while (i < n) { off(i + 1) += off(i); i += 1 }
+      val tgt = new Array[Int](m)
+      val edge = new Array[Int](m)
+      val pos = java.util.Arrays.copyOf(off, n)
+      i = 0
+      while (i < m) {
+        val s = from(i); tgt(pos(s)) = to(i); edge(pos(s)) = i; pos(s) += 1
+        i += 1
+      }
+      (off, tgt, edge)
+    }
+  }
+
+  private object Packed {
+    /** Packs the edge rows `it`, drained into flat arrays: no row array
+      * of boxed tuples is kept. */
+    def apply(it: Iterator[(Long, Long)]): Packed = {
+      val (a, b) = (Array.newBuilder[Long], Array.newBuilder[Long])
+      it.foreach { e => a += e._1; b += e._2 }
+      new Packed(a.result(), b.result())
+    }
+  }
+
+  private def notConverged(kernel: String, maxIters: Int) =
+    new IllegalStateException(s"$kernel did not converge in $maxIters rounds")
+
+  // ---------------------------------------------------------------------
+  // Connected components.
+  // ---------------------------------------------------------------------
+
+  /** Connected components of the undirected graph given by `edges`:
+    * one row per distinct vertex, labeled with the SMALLEST vertex id in
+    * its component (deterministic, so oracle-comparable).
+    *
+    * @param edges    two-column edge list (undirected; direction ignored)
+    * @param src      source-id column name
+    * @param dst      dest-id column name
+    * @param maxIters safety bound; convergence is typically ≤ 5 rounds
+    *                 for near-dup graphs (diameter-shallow). Throws if
+    *                 hit — a truncated labeling is a WRONG answer, never
+    *                 a fallback.
+    * @return DataFrame(id, component)
+    */
+  def connectedComponents(edges: DataFrame, src: String, dst: String,
+                          maxIters: Int = 25,
+                          localThreshold: Long = localFinishEdges): DataFrame =
+    hybrid[(Long, Long)](symmetrize(edges, src, dst), localThreshold,
+      ("id", "component"))(_ => unionFind)(ccRounds(_, maxIters))
+
+  /** Single-task CC: union-find with path compression, min-id roots. */
+  private def unionFind(it: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    val parent = scala.collection.mutable.LongMap.empty[Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
+      var c = x // path compression
+      while (parent.getOrElse(c, c) != c) {
+        val nxt = parent.getOrElse(c, c); parent(c) = r; c = nxt
+      }
+      r
+    }
+    it.foreach { case (a, b) =>
+      parent.getOrElseUpdate(a, a)
+      parent.getOrElseUpdate(b, b)
+      val (ra, rb) = (find(a), find(b))
+      // min-id root keeps the final labels deterministic
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    // materialize the key set first: find()'s path compression
+    // mutates the map, which must not race the iteration
+    val ids = parent.keys.toArray
+    ids.iterator.map(id => (id, find(id)))
+  }
+
+  /** Distributed CC over the cached symmetrized table. Each round's labels
+    * are localCheckpoint'ed, not just persisted: the loop builds plans on
+    * top of the previous round's result, and without lineage truncation
+    * the logical plan grows by one join-aggregate per round until
+    * analysis itself overflows. Checkpointing keeps every round's plan a
+    * constant two joins over materialized inputs. (Local checkpoints live
+    * in executor storage; a production job that must survive executor
+    * loss sets a checkpoint dir and uses reliable checkpoints — same
+    * loop, different sink.) */
+  private def ccRounds(sym: DataFrame, maxIters: Int): DataFrame = {
     var labels = sym.select(col("a").as("id")).distinct()
       .withColumn("component", col("id"))
       .localCheckpoint()
@@ -145,9 +277,7 @@ object Graph {
     var changed = 1L
     while (changed > 0) {
       iter += 1
-      if (iter > maxIters)
-        throw new IllegalStateException(
-          s"connectedComponents did not converge in $maxIters rounds")
+      if (iter > maxIters) throw notConverged("connectedComponents", maxIters)
 
       // Hop: candidate label = min over {self} ∪ neighbor labels. The
       // previous label rides along as `old` so convergence is read off
@@ -187,222 +317,248 @@ object Graph {
       release(labels)
       labels = next.select("id", "component")
     }
-    sym.unpersist()
     labels
   }
 
-  /** Edge-count bound under which per-node triangle counting runs in ONE
-    * executor task (the CC/peel hybrid discipline). The distributed plan
-    * is 5 shuffle stages (degree agg, two orientation joins, the wedge
-    * self-join, the closing join, the corner rollup) — ~4 s of pure
-    * stage overhead on a 5k-edge pair graph at sf0.1, where the CSR
-    * kernel below does the same arithmetic in milliseconds. 2M oriented
-    * edges ≈ 50 MB through coalesce(1); intersection work is output-
-    * bound (Σ wedge-closures — clique-shaped near-dup graphs keep it
-    * ~linear in edges). Past the bound the wedge join runs distributed
-    * regardless — the sf10 pair graph (13.8M edges) stays on that path. */
-  private val triangleLocalEdges = 2000000L
+  // ---------------------------------------------------------------------
+  // Triangle counts.
+  // ---------------------------------------------------------------------
 
   /** Per-node triangle counts over an undirected simple edge list (each
     * edge once, u ≠ v, no parallel edges — d4's pair contract): one row
-    * (node, triangles) per node in ≥ 1 triangle. Semantics — and the
-    * degree-ordered orientation — match GraphQueries' distributed wedge
-    * plan exactly (GraphTriangleSpec pins both paths bit-identical):
-    * orient each edge toward the (degree, id)-larger endpoint, count
-    * each triangle once at its order-minimal wedge, credit all three
-    * corners. Hybrid: below `localThreshold` edges the whole count runs
-    * as a CSR merge-intersection in ONE task; above it callers should
-    * use the distributed plan (gr2Build branches on the same count()
-    * that materializes the persisted pair table). */
-  def triangleCountsLocal(pairs: DataFrame, src: String, dst: String)
-      : DataFrame = {
-    val spark = pairs.sparkSession
-    import spark.implicits._
-    val out = pairs
-      .select(col(src).cast("long"), col(dst).cast("long"))
-      .as[(Long, Long)]
-      .coalesce(1)
-      .mapPartitions { it =>
-        val es = it.toArray
-        val m = es.length
-        // dense node ids (sort + unique; index via binary search)
-        val all = new Array[Long](2 * m)
-        var i = 0
-        while (i < m) {
-          all(2 * i) = es(i)._1; all(2 * i + 1) = es(i)._2; i += 1
-        }
-        java.util.Arrays.sort(all)
-        var n = 0
-        i = 0
-        while (i < 2 * m) { // unique in place
-          if (n == 0 || all(n - 1) != all(i)) { all(n) = all(i); n += 1 }
-          i += 1
-        }
-        val ids = java.util.Arrays.copyOf(all, n)
-        def idx(x: Long) = java.util.Arrays.binarySearch(ids, x)
-        val ea = new Array[Int](m)
-        val eb = new Array[Int](m)
-        val deg = new Array[Int](n)
-        i = 0
-        while (i < m) {
-          val a = idx(es(i)._1); val b = idx(es(i)._2)
-          ea(i) = a; eb(i) = b; deg(a) += 1; deg(b) += 1
-          i += 1
-        }
-        // orientation under the total order (degree, id) — the same
-        // tie-break as the distributed plan's (du, u) < (dv, v)
-        def less(a: Int, b: Int): Boolean =
-          deg(a) < deg(b) || (deg(a) == deg(b) && ids(a) < ids(b))
-        // CSR of out-neighbors
-        val odeg = new Array[Int](n)
-        i = 0
-        while (i < m) {
-          if (less(ea(i), eb(i))) odeg(ea(i)) += 1 else odeg(eb(i)) += 1
-          i += 1
-        }
-        val off = new Array[Int](n + 1)
-        i = 0
-        while (i < n) { off(i + 1) = off(i) + odeg(i); i += 1 }
-        val cur = java.util.Arrays.copyOf(off, n)
-        val adj = new Array[Int](m)
-        i = 0
-        while (i < m) {
-          if (less(ea(i), eb(i))) { adj(cur(ea(i))) = eb(i); cur(ea(i)) += 1 }
-          else { adj(cur(eb(i))) = ea(i); cur(eb(i)) += 1 }
-          i += 1
-        }
-        i = 0
-        while (i < n) {
-          java.util.Arrays.sort(adj, off(i), off(i + 1)); i += 1
-        }
-        // every triangle {a,b,c} with a→b, a→c, b→c appears exactly once:
-        // as the sorted-merge intersection hit c of the oriented edge
-        // (a, b); each corner gets the credit (the rollup the distributed
-        // plan does over its tris table)
-        val cnt = new Array[Long](n)
-        var u = 0
-        while (u < n) {
-          var p = off(u)
-          while (p < off(u + 1)) {
-            val v = adj(p)
-            var x = off(u); var y = off(v)
-            while (x < off(u + 1) && y < off(v + 1)) {
-              val a = adj(x); val b = adj(y)
-              if (a == b) {
-                cnt(u) += 1; cnt(v) += 1; cnt(a) += 1; x += 1; y += 1
-              } else if (a < b) x += 1
-              else y += 1
-            }
-            p += 1
-          }
-          u += 1
-        }
-        val fc = cnt
-        (0 until n).iterator.collect {
-          case v if fc(v) > 0 => (ids(v), fc(v))
-        }
-      }
-      .toDF("node", "triangles")
-      // materialize while upstream caches are warm — the coalesce(1)
-      // plan would otherwise recompute the whole pair derivation
-      // single-threaded at first use (the CC local-path lesson)
-      .localCheckpoint()
-    out
-  }
-
-  /** The local-path bound, exposed for the caller's branch decision. */
-  def triangleLocalBound: Long = triangleLocalEdges
-
-  /** Bounded k-core peel: `rounds` iterations of "drop every node whose
-    * current degree is < k" over the undirected graph, reporting the
-    * per-round removal counts plus the surviving core size (round = -1).
-    * Same hybrid shape as [[connectedComponents]]: the count() that
-    * materializes the symmetrized edge table also picks the path —
-    * below the threshold the whole peel runs in ONE executor task
-    * (every distributed round costs a fixed number of stages that dwarf
-    * the actual work on a small graph); above it, each round is one
-    * degree aggregate + two semi-joins, localCheckpoint-truncated so the
-    * plan stays flat. Counts are exact integers on both paths.
-    * @return DataFrame(round: long, n_nodes: long), rounds 1..R then -1 */
-  def kCorePeel(edges: DataFrame, src: String, dst: String, k: Int,
-                rounds: Int,
-                localThreshold: Long = localFinishEdges): DataFrame = {
-    // rounds = 0 would return an empty union on the local path but NPE on
-    // the distributed one — reject it uniformly instead of diverging.
-    require(rounds >= 1, s"kCorePeel needs rounds >= 1, got $rounds")
-    val sym = edges.select(col(src).as("a"), col(dst).as("b"))
-      .union(edges.select(col(dst).as("a"), col(src).as("b")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    if (sym.count() <= localThreshold) {
-      val spark = edges.sparkSession
-      import spark.implicits._
-      val out = sym
-        .select(col("a").cast("long"), col("b").cast("long"))
-        .as[(Long, Long)]
-        .coalesce(1)
-        .mapPartitions(it => peelLocal(it, k, Some(rounds), 0, ""))
-        .toDF("round", "n_nodes")
-        // materialize before unpersisting sym (see connectedComponents)
-        .localCheckpoint()
-      sym.unpersist()
-      return out
+    * (node, triangles) per node in ≥ 1 triangle. Both paths orient each
+    * edge toward the (degree, id)-larger endpoint, count each triangle
+    * once at its order-minimal wedge and credit all three corners, so
+    * they agree bit-for-bit: at or below `localThreshold` edges a CSR
+    * merge-intersection in ONE task, above it [[triangleWedges]]. */
+  def triangleCounts(pairs: DataFrame, src: String, dst: String,
+                     localThreshold: Long = triangleLocalEdges): DataFrame =
+    hybrid[(Long, Long)](pairs.select(col(src).as("a"), col(dst).as("b")),
+      localThreshold, ("node", "triangles"))(_ => triangleLocal) { p =>
+      val (perNode, cached) = triangleWedges(p, "a", "b")
+      val out = perNode.localCheckpoint()
+      cached.foreach(_.unpersist())
+      out
     }
 
+  /** The distributed degree-ordered wedge plan, lazy: (node, triangles)
+    * plus the intermediates it persists (`oriented`, `tris`), for the
+    * caller to release once the result is materialized. The naive wedge
+    * join (adjacency ⋈ adjacency on the shared endpoint) explodes
+    * quadratically on hub nodes; under the total order (degree, id)
+    * every node's OUT-degree is bounded by O(sqrt(edges)) regardless of
+    * its real degree, so the wedge join fans out by arboricity, not by
+    * hub size. Each triangle {a,b,c} is counted exactly once, as the
+    * wedge at its order-minimal vertex closed by the oriented edge b→c.
+    * Also read unmaterialized by the gr2 plan dumps and plan-shape spec. */
+  private[graft] def triangleWedges(pairs: DataFrame, src: String,
+                                    dst: String): (DataFrame, Seq[DataFrame]) = {
+    val uv = pairs.select(col(src).as("u"), col(dst).as("v"))
+    val deg = uv.select(col("u").as("n"))
+      .unionByName(uv.select(col("v").as("n")))
+      .groupBy("n").agg(count(lit(1)).as("d"))
+    // Orient u—v toward the (degree, id)-larger endpoint; carry the
+    // destination's order key so the wedge join can canonicalize the
+    // closing edge without re-joining degrees.
+    val du = deg.select(col("n").as("u"), col("d").as("du"))
+    val dv = deg.select(col("n").as("v"), col("d").as("dv"))
+    val oriented = uv.join(du, "u").join(dv, "v")
+      .select(
+        when(col("du") < col("dv") ||
+             (col("du") === col("dv") && col("u") < col("v")),
+          struct(col("u").as("src"), col("v").as("dst"),
+                 col("dv").as("ddeg")))
+          .otherwise(
+            struct(col("v").as("src"), col("u").as("dst"),
+                   col("du").as("ddeg"))).as("e"))
+      .select(col("e.src"), col("e.dst"), col("e.ddeg"))
+      .persist()
+    val e1 = oriented.select(col("src").as("wsrc"), col("dst").as("b"),
+      col("ddeg").as("bd"))
+    val e2 = oriented.select(col("src").as("wsrc"), col("dst").as("c"),
+      col("ddeg").as("cd"))
+    val wedges = e1.join(e2, Seq("wsrc"))
+      .where(col("bd") < col("cd") ||
+        (col("bd") === col("cd") && col("b") < col("c")))
+      .select(col("wsrc").as("a"), col("b"), col("c"))
+    val close = oriented.select(col("src").as("b"), col("dst").as("c"))
+    val tris = wedges.join(close, Seq("b", "c")).persist()
+    val perNode = tris.select(col("a").as("node"))
+      .unionByName(tris.select(col("b").as("node")))
+      .unionByName(tris.select(col("c").as("node")))
+      .groupBy("node").agg(count(lit(1)).as("triangles"))
+    (perNode, Seq(oriented, tris))
+  }
+
+  /** Single-task triangle counts: the wedge plan's arithmetic over a CSR
+    * of the degree-oriented edges. */
+  private def triangleLocal(it: Iterator[(Long, Long)])
+      : Iterator[(Long, Long)] = {
+    val g = Packed(it)
+    import g.{m, n, ids, src, dst}
+    val deg = new Array[Int](n)
+    var i = 0
+    while (i < m) { deg(src(i)) += 1; deg(dst(i)) += 1; i += 1 }
+    // orientation under the total order (degree, id) — the same
+    // tie-break as the wedge plan's (du, u) < (dv, v)
+    def less(a: Int, b: Int): Boolean =
+      deg(a) < deg(b) || (deg(a) == deg(b) && ids(a) < ids(b))
+    val lo = new Array[Int](m)
+    val hi = new Array[Int](m)
+    i = 0
+    while (i < m) {
+      if (less(src(i), dst(i))) { lo(i) = src(i); hi(i) = dst(i) }
+      else { lo(i) = dst(i); hi(i) = src(i) }
+      i += 1
+    }
+    val (off, adj, _) = g.csr(lo, hi)
+    i = 0
+    while (i < n) { java.util.Arrays.sort(adj, off(i), off(i + 1)); i += 1 }
+    // every triangle {a,b,c} with a→b, a→c, b→c appears exactly once:
+    // as the sorted-merge intersection hit c of the oriented edge
+    // (a, b); each corner gets the credit (the rollup the wedge plan
+    // does over its tris table)
+    val cnt = new Array[Long](n)
+    var u = 0
+    while (u < n) {
+      var p = off(u)
+      while (p < off(u + 1)) {
+        val v = adj(p)
+        var x = off(u); var y = off(v)
+        while (x < off(u + 1) && y < off(v + 1)) {
+          val a = adj(x); val b = adj(y)
+          if (a == b) {
+            cnt(u) += 1; cnt(v) += 1; cnt(a) += 1; x += 1; y += 1
+          } else if (a < b) x += 1
+          else y += 1
+        }
+        p += 1
+      }
+      u += 1
+    }
+    (0 until n).iterator.collect { case v if cnt(v) > 0 => (ids(v), cnt(v)) }
+  }
+
+  // ---------------------------------------------------------------------
+  // Round-bounded and run-to-FIXPOINT kernels. The bounded forms (the gr
+  // query pack's 3-round unrolls) exist for exact SQL oracles; a
+  // production caller asks for "the" k-core/BFS/SSSP/PageRank, i.e. the
+  // converged answer. Each runs through [[hybrid]]; the distributed loop
+  // is one hash join + one associative min/sum aggregate per round,
+  // localCheckpoint-truncated lineage, superseded state released as soon
+  // as its successor materializes. Termination is DETECTED (changed-count
+  // = 0 / nobody removed / max-delta ≤ tol), with a maxIters throw — a
+  // truncated answer is a WRONG answer, never a fallback. All arithmetic
+  // is integer (counts, min-plus, integer-unit ranks), so both paths —
+  // and any cluster layout — produce bit-identical results.
+  // ---------------------------------------------------------------------
+
+  /** k-core peel: rounds of "drop every node whose current degree is
+    * < k" over the undirected graph, reporting (round, n_nodes removed)
+    * rows and then the surviving core size under round = -1.
+    *
+    * With `rounds = Some(r)` it runs exactly r rounds and reports every
+    * one, trailing zero-removal rounds included (the gr5 oracle's
+    * unroll). With `rounds = None` it runs until a round removes NOBODY —
+    * the true k-core — and reports rounds 1..T, T the LAST round that
+    * removed anyone (no round rows if the graph already is a k-core).
+    * @return DataFrame(round: long, n_nodes: long) */
+  def kCore(edges: DataFrame, src: String, dst: String, k: Int,
+            rounds: Option[Int] = None,
+            maxIters: Int = 200,
+            localThreshold: Long = localFinishEdges): DataFrame = {
+    // rounds = 0 would report no round at all — reject it instead
+    rounds.foreach(r => require(r >= 1, s"kCore needs rounds >= 1, got $r"))
+    hybrid[(Long, Long)](symmetrize(edges, src, dst), localThreshold,
+      ("round", "n_nodes"))(_ => peelLocal(_, k, rounds, maxIters))(
+      peelRounds(_, k, rounds, maxIters))
+  }
+
+  /** Single-task peel: each round is two array sweeps (degree count over
+    * alive edges, then the removal scan) — the batch semantics of the
+    * distributed rounds. */
+  private def peelLocal(it: Iterator[(Long, Long)], k: Int,
+                        rounds: Option[Int], maxIters: Int)
+      : Iterator[(Long, Long)] = {
+    val g = Packed(it)
+    val (off, tgt, _) = g.csr()
+    val n = g.n
+    val alive = Array.fill(n)(true)
+    val deg = new Array[Long](n)
+    var nAlive = n.toLong
+    val res = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+    var r = 0
+    var removed = -1L
+    while (rounds.fold(removed != 0L)(r < _)) {
+      r += 1
+      if (rounds.isEmpty && r > maxIters) throw notConverged("kCore", maxIters)
+      java.util.Arrays.fill(deg, 0L)
+      var u = 0
+      while (u < n) {
+        if (alive(u)) {
+          var j = off(u)
+          while (j < off(u + 1)) { if (alive(tgt(j))) deg(u) += 1L; j += 1 }
+        }
+        u += 1
+      }
+      removed = 0L
+      u = 0
+      while (u < n) {
+        if (alive(u) && deg(u) < k) { alive(u) = false; removed += 1L }
+        u += 1
+      }
+      nAlive -= removed
+      if (rounds.isDefined || removed > 0L) res += ((r.toLong, removed))
+    }
+    res += ((-1L, nAlive))
+    res.iterator
+  }
+
+  /** Distributed peel: per round one degree aggregate + two semi-joins on
+    * the shrinking edge set, localCheckpoint-truncated, with the removal
+    * count taken eagerly (two counts of checkpointed node sets). */
+  private def peelRounds(sym: DataFrame, k: Int, rounds: Option[Int],
+                         maxIters: Int): DataFrame = {
     var cur = sym.select(col("a").as("src"), col("b").as("dst"))
       .localCheckpoint()
     var nodes = cur.select(col("src").as("node")).distinct()
       .localCheckpoint()
-    var out: DataFrame = null
-    for (i <- 1 to rounds) {
+    var nNodes = nodes.count()
+    val res = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+    var r = 0
+    var removed = -1L
+    while (rounds.fold(removed != 0L)(r < _)) {
+      r += 1
+      if (rounds.isEmpty && r > maxIters) throw notConverged("kCore", maxIters)
       val deg = cur.groupBy("src").agg(count(lit(1)).as("d"))
       val kept = nodes
         .join(deg.where(col("d") >= k),
           nodes("node") === deg("src"), "left_semi")
         .localCheckpoint()
-      val removed = nodes.join(kept, Seq("node"), "left_anti")
-        .agg(count(lit(1)).as("n_nodes"))
-        .select(lit(i.toLong).as("round"), col("n_nodes"))
-      out = if (out == null) removed else out.unionByName(removed)
-      val nextCur = cur
-        .join(kept, cur("src") === kept("node"), "left_semi")
-        .join(kept.select(col("node").as("kn")),
-          col("dst") === col("kn"), "left_semi")
-        .localCheckpoint()
-      // The superseded edge table is reachable from nothing the caller
-      // ever sees (`out` references only nodes/kept), so its checkpoint
-      // blocks would leak ~rounds full edge tables per invocation — the
-      // connectedComponents discipline, applied here: free it the moment
-      // its successor is materialized (localCheckpoint() above is eager).
-      release(cur)
-      cur = nextCur
+      val nKept = kept.count()
+      removed = nNodes - nKept
+      if (rounds.isDefined || removed > 0L) res += ((r.toLong, removed))
+      if (removed > 0L) {
+        val nextCur = cur
+          .join(kept, cur("src") === kept("node"), "left_semi")
+          .join(kept.select(col("node").as("kn")),
+            col("dst") === col("kn"), "left_semi")
+          .localCheckpoint()
+        // the superseded edge table is reachable from nothing the caller
+        // sees: free it the moment its successor is materialized, or
+        // every invocation leaks ~rounds full edge tables
+        release(cur)
+        cur = nextCur
+      }
+      release(nodes)
       nodes = kept
+      nNodes = nKept
     }
-    sym.unpersist()
-    release(cur) // final edge table: also unreachable from the result
-    out.unionByName(
-      nodes.agg(count(lit(1)).as("n_nodes"))
-        .select(lit(-1L).as("round"), col("n_nodes")))
+    release(cur)
+    release(nodes)
+    sym.sparkSession.createDataset((res :+ ((-1L, nNodes))).toSeq)
+      .toDF("round", "n_nodes")
   }
-
-  // ---------------------------------------------------------------------
-  // Run-to-FIXPOINT variants. The bounded-round forms above (and the gr
-  // query pack's 3-round unrolls) exist for exact SQL oracles; a
-  // production caller asks for "the" BFS/SSSP/k-core/PageRank, i.e. the
-  // converged answer. Each fixpoint driver below is the
-  // connectedComponents loop discipline applied to its algorithm:
-  //   - hybrid: below `localThreshold` edges the whole iteration runs in
-  //     ONE executor task (each distributed round costs a fixed number of
-  //     shuffle stages that dwarf the real work on a small graph);
-  //   - distributed: one hash join + one associative min/sum aggregate
-  //     per round, localCheckpoint-truncated lineage, superseded state
-  //     released as soon as its successor materializes;
-  //   - termination DETECTED (changed-count = 0 / max-delta ≤ tol), with
-  //     a maxIters throw — a truncated answer is a WRONG answer, never a
-  //     fallback.
-  // All arithmetic is integer (min-plus / integer-unit ranks), so both
-  // paths — and any cluster layout — produce bit-identical results.
-  // ---------------------------------------------------------------------
 
   /** Single-source shortest distances — min-plus frontier relaxation
     * (Bellman–Ford with a frontier: each round relaxes only edges out
@@ -422,7 +578,8 @@ object Graph {
     *                 undirected graph, as the gr3/gr4 queries do)
     * @param weight   optional positive integer weight column; None → 1
     * @param source   source node id; default = smallest src id
-    * @return (node, dist) for every node REACHED within the round bound
+    * @return (node, dist) for every node REACHED within the round bound;
+    *         nothing for an empty graph
     */
   def ssspFixpoint(edges: DataFrame, src: String, dst: String,
                    weight: Option[String] = None,
@@ -431,147 +588,101 @@ object Graph {
                    localThreshold: Long = ssspLocalEdges,
                    rounds: Option[Int] = None,
                    broadcastLimit: Long = broadcastNodeLimit): DataFrame = {
-    val e = weight match {
-      case Some(w) => edges.select(col(src).cast("long").as("a"),
-        col(dst).cast("long").as("b"), col(w).cast("long").as("w"))
-      case None => edges.select(col(src).cast("long").as("a"),
-        col(dst).cast("long").as("b"), lit(1L).as("w"))
+    val e = edges.select(col(src).cast("long").as("a"),
+      col(dst).cast("long").as("b"),
+      weight.fold(lit(1L))(w => col(w).cast("long")).as("w"))
+    // min over an empty table is NULL: its 0 stands in, and the empty
+    // graph reaches nothing from it
+    def source0(p: DataFrame): Long = source.getOrElse(
+      p.agg(coalesce(min(col("a")), lit(0L))).head().getLong(0))
+    hybrid[(Long, Long, Long)](e, localThreshold, ("node", "dist")) { p =>
+      val s0 = source0(p)
+      ssspLocal(_, s0, rounds, maxIters)
+    } { p =>
+      // One HLL pass sizes the node set. Its ±~2-5% error could put a
+      // node set slightly OVER the ceiling under it, so only estimates
+      // the error band cannot push past the limit broadcast.
+      val s0 = source0(p)
+      val nNodesApprox =
+        p.agg(approx_count_distinct(col("a")).as("n")).head().getLong(0)
+      val bcastFrontier = nNodesApprox <= (0.9 * broadcastLimit).toLong
+      placed(p, bcastFrontier)(
+        ssspRounds(_, s0, rounds, maxIters, bcastFrontier))
     }
-    val eRaw = e.persist(StorageLevel.MEMORY_AND_DISK)
-    val nEdges = eRaw.count()
-    val spark = edges.sparkSession
-    // min over an empty table is NULL → getLong would NPE; an empty graph
-    // has a well-defined answer (nothing reachable), so return it instead
-    // of requiring the caller to special-case it.
-    if (nEdges == 0L) {
-      eRaw.unpersist()
-      return spark.emptyDataFrame
-        .select(lit(0L).as("node"), lit(0L).as("dist")).limit(0)
-    }
-    val s0: Long = source.getOrElse(eRaw.agg(min(col("a"))).head().getLong(0))
+  }
 
-    if (nEdges <= localThreshold) {
-      import spark.implicits._
-      val out = eRaw.as[(Long, Long, Long)]
-        .coalesce(1)
-        .mapPartitions { it =>
-          // CSR-packed frontier relaxation (the pageRankFixpoint kernel
-          // discipline): one boxing pass to pack ids dense, then rounds
-          // are pure array arithmetic. Batch-per-round updates (`nd`
-          // staging array) preserve the bounded-round semantics exactly:
-          // after k rounds dist = min over ≤ k-edge paths, no in-round
-          // cascading.
-          val es = it.toArray
-          val n2i = scala.collection.mutable.LongMap.empty[Int]
-          val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
-          def idOf(x: Long): Int =
-            n2i.getOrElseUpdate(x, { ids += x; ids.size - 1 })
-          val m = es.length
-          val srcId = new Array[Int](m)
-          val dstId = new Array[Int](m)
-          val ws = new Array[Long](m)
-          var i = 0
-          while (i < m) {
-            srcId(i) = idOf(es(i)._1); dstId(i) = idOf(es(i)._2)
-            ws(i) = es(i)._3; i += 1
+  /** Single-task SSSP over the CSR. Batch-per-round updates (`nd` staging
+    * array) preserve the bounded-round semantics exactly: after k rounds
+    * dist = min over ≤ k-edge paths, no in-round cascading. */
+  private def ssspLocal(it: Iterator[(Long, Long, Long)], s0: Long,
+                        rounds: Option[Int], maxIters: Int)
+      : Iterator[(Long, Long)] = {
+    val (a, b, w) =
+      (Array.newBuilder[Long], Array.newBuilder[Long], Array.newBuilder[Long])
+    it.foreach { e => a += e._1; b += e._2; w += e._3 }
+    val ws = w.result()
+    if (ws.isEmpty) return Iterator.empty
+    // s0 packed AFTER the edges: a caller-supplied source absent from the
+    // edge set still gets a node slot, so (s0, 0) is emitted — the
+    // distributed path's seed row behaves the same
+    val g = new Packed(a.result(), b.result(), Some(s0))
+    val (off, tgt, edge) = g.csr()
+    val tw = edge.map(ws)
+    val n = g.n
+    val INF = Long.MaxValue
+    val dist = Array.fill(n)(INF)
+    val nd = Array.fill(n)(INF)
+    var frontier = new Array[Int](n)
+    var nextFrontier = new Array[Int](n)
+    dist(g.extraId) = 0L; frontier(0) = g.extraId
+    var fLen = 1
+    val touched = new Array[Int](n)
+    var iter = 0
+    while (fLen > 0 && !rounds.contains(iter)) {
+      iter += 1
+      if (rounds.isEmpty && iter > maxIters)
+        throw notConverged("ssspFixpoint", maxIters)
+      var nTouched = 0
+      var fi = 0
+      while (fi < fLen) {
+        val u = frontier(fi)
+        val du = dist(u)
+        var j = off(u)
+        val end = off(u + 1)
+        while (j < end) {
+          val t = tgt(j)
+          val cand = du + tw(j)
+          if (cand < dist(t) && cand < nd(t)) {
+            if (nd(t) == INF) { touched(nTouched) = t; nTouched += 1 }
+            nd(t) = cand
           }
-          // idOf(s0) AFTER the edge pass: a caller-supplied source absent
-          // from the edge set still gets a node slot, so (s0, 0) is
-          // emitted — the distributed path's seed row behaves the same.
-          val sI = idOf(s0)
-          val n = ids.size
-          val off = new Array[Int](n + 1)
-          i = 0; while (i < m) { off(srcId(i) + 1) += 1; i += 1 }
-          i = 0; while (i < n) { off(i + 1) += off(i); i += 1 }
-          val tgt = new Array[Int](m)
-          val tw = new Array[Long](m)
-          val pos = java.util.Arrays.copyOf(off, n)
-          i = 0
-          while (i < m) {
-            val s = srcId(i); tgt(pos(s)) = dstId(i); tw(pos(s)) = ws(i)
-            pos(s) += 1; i += 1
-          }
-          val INF = Long.MaxValue
-          val dist = Array.fill(n)(INF)
-          val nd = Array.fill(n)(INF)
-          var frontier = new Array[Int](math.max(n, 1))
-          var nextFrontier = new Array[Int](math.max(n, 1))
-          var fLen = 0
-          if (sI >= 0) { dist(sI) = 0L; frontier(0) = sI; fLen = 1 }
-          val touched = new Array[Int](n)
-          var iter = 0
-          while (fLen > 0 && !rounds.contains(iter)) {
-            iter += 1
-            if (rounds.isEmpty && iter > maxIters)
-              throw new IllegalStateException(
-                s"ssspFixpoint did not converge in $maxIters rounds")
-            var nTouched = 0
-            var fi = 0
-            while (fi < fLen) {
-              val u = frontier(fi)
-              val du = dist(u)
-              var j = off(u)
-              val end = off(u + 1)
-              while (j < end) {
-                val t = tgt(j)
-                val cand = du + tw(j)
-                if (cand < dist(t) && cand < nd(t)) {
-                  if (nd(t) == INF) { touched(nTouched) = t; nTouched += 1 }
-                  nd(t) = cand
-                }
-                j += 1
-              }
-              fi += 1
-            }
-            var nf = 0
-            var ti = 0
-            while (ti < nTouched) {
-              val t = touched(ti)
-              if (nd(t) < dist(t)) {
-                dist(t) = nd(t); nextFrontier(nf) = t; nf += 1
-              }
-              nd(t) = INF
-              ti += 1
-            }
-            val tmp = frontier; frontier = nextFrontier; nextFrontier = tmp
-            fLen = nf
-          }
-          val fd = dist
-          (0 until n).iterator.collect {
-            case v if fd(v) != INF => (ids(v), fd(v))
-          }
+          j += 1
         }
-        .toDF("node", "dist")
-      val outDone = out.localCheckpoint()
-      eRaw.unpersist()
-      return outDone
-    }
-
-    // The frontier is node-sized, and for graphs whose node set is
-    // dimension-derived (co-supplier, co-purchase) it stays broadcastable
-    // at ANY corpus scale — then pre-shuffling the EDGE table by key is a
-    // full wasted exchange (the per-round join broadcasts the frontier and
-    // streams the cached edges in place). Only a genuinely large node set
-    // (web-scale graphs) justifies co-partitioning the edges once so the
-    // per-round shuffle falls on the frontier alone. One HLL pass decides.
-    val nNodesApprox =
-      eRaw.agg(approx_count_distinct(col("a")).as("n")).head().getLong(0)
-    // HLL estimates carry ±~2-5% error: a node set slightly OVER the
-    // intended ceiling can be estimated under it, and then a node-sized
-    // frontier gets broadcast every round. Apply the soft-ceiling margin
-    // in code, not just in the comment: accept only estimates that the
-    // HLL error band cannot push past the limit.
-    val bcastFrontier = nNodesApprox <= (0.9 * broadcastLimit).toLong
-    val eP =
-      if (bcastFrontier) eRaw
-      else {
-        val p = e.repartition(col("a")).persist(StorageLevel.MEMORY_AND_DISK)
-        p.count()
-        eRaw.unpersist()
-        p
+        fi += 1
       }
+      var nf = 0
+      var ti = 0
+      while (ti < nTouched) {
+        val t = touched(ti)
+        if (nd(t) < dist(t)) {
+          dist(t) = nd(t); nextFrontier(nf) = t; nf += 1
+        }
+        nd(t) = INF
+        ti += 1
+      }
+      val tmp = frontier; frontier = nextFrontier; nextFrontier = tmp
+      fLen = nf
+    }
+    (0 until n).iterator.collect { case v if dist(v) != INF => (g.ids(v), dist(v)) }
+  }
 
-    var dist = spark.range(1).select(lit(s0).as("node"), lit(0L).as("dist"))
+  /** Distributed SSSP: per round the frontier joins the placed edges, a
+    * min aggregate relaxes, and a full-outer merge with the distance
+    * table flags the improved nodes — the next frontier. */
+  private def ssspRounds(eP: DataFrame, s0: Long, rounds: Option[Int],
+                         maxIters: Int, bcastFrontier: Boolean): DataFrame = {
+    var dist = eP.sparkSession.range(1)
+      .select(lit(s0).as("node"), lit(0L).as("dist"))
       .localCheckpoint()
     var frontier = dist
     var iter = 0
@@ -579,8 +690,7 @@ object Graph {
     while (changed > 0 && !rounds.contains(iter)) {
       iter += 1
       if (rounds.isEmpty && iter > maxIters)
-        throw new IllegalStateException(
-          s"ssspFixpoint did not converge in $maxIters rounds")
+        throw notConverged("ssspFixpoint", maxIters)
       val fSide = if (bcastFrontier) broadcast(frontier) else frontier
       val relax = fSide.join(eP, fSide("node") === eP("a"))
         .select(col("b").as("node"), (col("dist") + col("w")).as("nd"))
@@ -598,85 +708,7 @@ object Graph {
       dist = merged.select("node", "dist")
       frontier = merged.filter(col("_chg")).select("node", "dist")
     }
-    eP.unpersist()
     dist
-  }
-
-  /** BFS hop distances to fixpoint — [[ssspFixpoint]] with unit weights. */
-  def bfsFixpoint(edges: DataFrame, src: String, dst: String,
-                  source: Option[Long] = None,
-                  maxIters: Int = 200,
-                  localThreshold: Long = ssspLocalEdges): DataFrame =
-    ssspFixpoint(edges, src, dst, None, source, maxIters, localThreshold)
-
-  /** [[kCorePeel]] iterated until a round removes NOBODY — the true
-    * k-core. Output matches kCorePeel's convention ((round, n_removed)
-    * rows 1..T, then the surviving core size under round = -1), where T
-    * is the LAST round that removed anyone (0 rows of rounds if the
-    * whole graph is already a k-core). */
-  def kCoreFixpoint(edges: DataFrame, src: String, dst: String, k: Int,
-                    maxIters: Int = 200,
-                    localThreshold: Long = localFinishEdges): DataFrame = {
-    val sym = edges.select(col(src).as("a"), col(dst).as("b"))
-      .union(edges.select(col(dst).as("a"), col(src).as("b")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    if (sym.count() <= localThreshold) {
-      val spark = edges.sparkSession
-      import spark.implicits._
-      val out = sym
-        .select(col("a").cast("long"), col("b").cast("long"))
-        .as[(Long, Long)]
-        .coalesce(1)
-        .mapPartitions(it => peelLocal(it, k, None, maxIters,
-          s"kCoreFixpoint did not converge in $maxIters rounds"))
-        .toDF("round", "n_nodes")
-        .localCheckpoint()
-      sym.unpersist()
-      return out
-    }
-
-    var cur = sym.select(col("a").as("src"), col("b").as("dst"))
-      .localCheckpoint()
-    var nodes = cur.select(col("src").as("node")).distinct()
-      .localCheckpoint()
-    var out: DataFrame = null
-    var iter = 0
-    var removed = -1L
-    while (removed != 0L) {
-      iter += 1
-      if (iter > maxIters) throw new IllegalStateException(
-        s"kCoreFixpoint did not converge in $maxIters rounds")
-      val deg = cur.groupBy("src").agg(count(lit(1)).as("d"))
-      val kept = nodes
-        .join(deg.where(col("d") >= k),
-          nodes("node") === deg("src"), "left_semi")
-        .localCheckpoint()
-      removed = nodes.count() - kept.count()
-      if (removed > 0L) {
-        val row = nodes.sparkSession.range(1)
-          .select(lit(iter.toLong).as("round"), lit(removed).as("n_nodes"))
-        out = if (out == null) row else out.unionByName(row)
-        val nextCur = cur
-          .join(kept, cur("src") === kept("node"), "left_semi")
-          .join(kept.select(col("node").as("kn")),
-            col("dst") === col("kn"), "left_semi")
-          .localCheckpoint()
-        release(cur)   // superseded edge table (kCorePeel's discipline)
-        release(nodes) // counts are already driver-side scalars here
-        cur = nextCur
-        nodes = kept
-      } else {
-        release(kept)
-      }
-    }
-    val core = nodes.count()
-    sym.unpersist()
-    release(cur)
-    release(nodes)
-    val finalRow = edges.sparkSession.range(1)
-      .select(lit(-1L).as("round"), lit(core).as("n_nodes"))
-    if (out == null) finalRow else out.unionByName(finalRow)
   }
 
   /** Integer-unit PageRank (the gr1 semantics: ranks in 1e-12 units,
@@ -701,131 +733,94 @@ object Graph {
                        localThreshold: Long = localFinishEdges,
                        broadcastLimit: Long = broadcastNodeLimit,
                        rounds: Option[Int] = None): DataFrame = {
-    val unit = 1000000000000L
-    val dampBase = 150000000000L
     // bounded mode runs exactly k rounds: disable the tolerance stop
     // (maxDelta ≥ 0 can never be ≤ -1) so an early near-convergence on a
     // small corpus cannot change the k-round result
     val tol = if (rounds.isDefined) -1L else tolE12
-    val e = edges.select(col(src).cast("long").as("a"),
-      col(dst).cast("long").as("b"))
-    val eRaw = e.persist(StorageLevel.MEMORY_AND_DISK)
-    val nEdges = eRaw.count()
-    val spark = edges.sparkSession
-
-    if (nEdges <= localThreshold) {
-      import spark.implicits._
-      val out = eRaw.as[(Long, Long)]
-        .coalesce(1)
-        .mapPartitions { it =>
-          // CSR-packed kernel. PageRank runs ~40-80 damped rounds to a
-          // 1e-3 tolerance — far more than BFS/peel — so a hash-map
-          // adjacency pays ~3 hash probes per edge per ROUND (measured
-          // 17 s on a 1.1M-edge graph). Packing ids to dense ints once
-          // turns each round into pure array arithmetic (~0.5 s there).
-          // The arithmetic is unchanged: Long floor-div contributions,
-          // integer damping — bit-identical to the distributed path.
-          val es = it.toArray
-          val n2i = scala.collection.mutable.LongMap.empty[Int]
-          val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
-          def idOf(x: Long): Int =
-            n2i.getOrElseUpdate(x, { ids += x; ids.size - 1 })
-          val m = es.length
-          val srcId = new Array[Int](m)
-          val dstId = new Array[Int](m)
-          var i = 0
-          while (i < m) {
-            srcId(i) = idOf(es(i)._1); dstId(i) = idOf(es(i)._2); i += 1
-          }
-          val n = ids.size
-          val outdeg = new Array[Long](n)
-          val off = new Array[Int](n + 1)
-          i = 0
-          while (i < m) {
-            outdeg(srcId(i)) += 1L; off(srcId(i) + 1) += 1; i += 1
-          }
-          i = 0
-          while (i < n) { off(i + 1) += off(i); i += 1 }
-          val tgt = new Array[Int](m)
-          val pos = java.util.Arrays.copyOf(off, n)
-          i = 0
-          while (i < m) {
-            val s = srcId(i); tgt(pos(s)) = dstId(i); pos(s) += 1; i += 1
-          }
-          // ranks exist only for outdeg>0 nodes (the distributed path's
-          // deg-derived node set); outdeg-0 slots are never read or emitted
-          var ranks = Array.fill(n)(unit)
-          var next = new Array[Long](n)
-          val sums = new Array[Long](n)
-          var iter = 0
-          var maxDelta = Long.MaxValue
-          while (maxDelta > tol && !rounds.contains(iter)) {
-            iter += 1
-            if (rounds.isEmpty && iter > maxIters)
-              throw new IllegalStateException(
-                s"pageRankFixpoint did not converge in $maxIters rounds")
-            java.util.Arrays.fill(sums, 0L)
-            var u = 0
-            while (u < n) {
-              val d = outdeg(u)
-              if (d > 0L) {
-                val cpe = ranks(u) / d // all values positive
-                var j = off(u)
-                val end = off(u + 1)
-                while (j < end) { sums(tgt(j)) += cpe; j += 1 }
-              }
-              u += 1
-            }
-            maxDelta = 0L
-            var v = 0
-            while (v < n) {
-              if (outdeg(v) > 0L) {
-                val nr = dampBase + (85L * sums(v)) / 100L
-                val d = math.abs(nr - ranks(v))
-                if (d > maxDelta) maxDelta = d
-                next(v) = nr
-              }
-              v += 1
-            }
-            val t = ranks; ranks = next; next = t
-          }
-          val fr = ranks
-          (0 until n).iterator.collect {
-            case v if outdeg(v) > 0L => (ids(v), fr(v))
-          }
-        }
-        .toDF("node", "rank_e12")
+    hybrid[(Long, Long)](edges.select(col(src).cast("long").as("a"),
+      col(dst).cast("long").as("b")), localThreshold, ("node", "rank_e12"))(
+      _ => pageRankLocal(_, tol, rounds, maxIters)) { e =>
+      // `deg` doubles as the exact node count for the placement
+      val deg = e.groupBy("a").agg(count(lit(1)).as("outdeg"))
+        .select(col("a").as("node"), col("outdeg"))
         .localCheckpoint()
-      eRaw.unpersist()
-      return out
+      val bcastRanks = deg.count() <= broadcastLimit
+      val out = placed(e, bcastRanks)(
+        pageRankRounds(_, deg, tol, rounds, maxIters, bcastRanks))
+      // `out` scans only the final ranks checkpoint, so the caller's
+      // release(out) can never reach `deg`'s checkpoint blocks — free
+      // them here or every invocation leaks one node-sized RDD
+      release(deg)
+      out
     }
+  }
 
-    // Same adaptive shape as [[ssspFixpoint]]: the rank vector is
-    // node-sized, so when the node set is broadcastable the up-front
-    // edge-table repartition is a wasted full exchange — the per-round
-    // contribution join broadcasts `contrib` and streams the cached
-    // edges where they sit. `deg` doubles as the exact node count.
-    val deg = eRaw.groupBy("a").agg(count(lit(1)).as("outdeg"))
-      .select(col("a").as("node"), col("outdeg"))
-      .localCheckpoint()
-    val bcastRanks = deg.count() <= broadcastLimit
-    val eP =
-      if (bcastRanks) eRaw
-      else {
-        val p = e.repartition(col("a")).persist(StorageLevel.MEMORY_AND_DISK)
-        p.count()
-        eRaw.unpersist()
-        p
+  private val unitE12 = 1000000000000L
+  private val dampBaseE12 = 150000000000L
+
+  /** Single-task PageRank over the CSR: Long floor-div contributions,
+    * integer damping — the distributed rounds' arithmetic exactly. */
+  private def pageRankLocal(it: Iterator[(Long, Long)], tol: Long,
+                            rounds: Option[Int], maxIters: Int)
+      : Iterator[(Long, Long)] = {
+    val g = Packed(it)
+    val (off, tgt, _) = g.csr()
+    val n = g.n
+    // ranks exist only for outdeg>0 nodes (the distributed path's
+    // deg-derived node set); outdeg-0 slots are never read or emitted
+    def outdeg(u: Int): Long = (off(u + 1) - off(u)).toLong
+    var ranks = Array.fill(n)(unitE12)
+    var next = new Array[Long](n)
+    val sums = new Array[Long](n)
+    var iter = 0
+    var maxDelta = Long.MaxValue
+    while (maxDelta > tol && !rounds.contains(iter)) {
+      iter += 1
+      if (rounds.isEmpty && iter > maxIters)
+        throw notConverged("pageRankFixpoint", maxIters)
+      java.util.Arrays.fill(sums, 0L)
+      var u = 0
+      while (u < n) {
+        val d = outdeg(u)
+        if (d > 0L) {
+          val cpe = ranks(u) / d // all values positive
+          var j = off(u)
+          val end = off(u + 1)
+          while (j < end) { sums(tgt(j)) += cpe; j += 1 }
+        }
+        u += 1
       }
-    var ranks = deg.select(col("node"), lit(unit).as("r"))
+      maxDelta = 0L
+      var v = 0
+      while (v < n) {
+        if (outdeg(v) > 0L) {
+          val nr = dampBaseE12 + (85L * sums(v)) / 100L
+          val d = math.abs(nr - ranks(v))
+          if (d > maxDelta) maxDelta = d
+          next(v) = nr
+        }
+        v += 1
+      }
+      val t = ranks; ranks = next; next = t
+    }
+    val fr = ranks
+    (0 until n).iterator.collect { case v if outdeg(v) > 0L => (g.ids(v), fr(v)) }
+  }
+
+  /** Distributed PageRank: per round the contributions join the placed
+    * edges, an integer sum aggregates them per destination, and a
+    * left-outer merge from the node set applies the damping. */
+  private def pageRankRounds(eP: DataFrame, deg: DataFrame, tol: Long,
+                             rounds: Option[Int], maxIters: Int,
+                             bcastRanks: Boolean): DataFrame = {
+    var ranks = deg.select(col("node"), lit(unitE12).as("r"))
       .localCheckpoint()
     var iter = 0
     var maxDelta = Long.MaxValue
     while (maxDelta > tol && !rounds.contains(iter)) {
       iter += 1
       if (rounds.isEmpty && iter > maxIters)
-        throw new IllegalStateException(
-          s"pageRankFixpoint did not converge in $maxIters rounds")
+        throw notConverged("pageRankFixpoint", maxIters)
       val contrib = ranks.join(deg, "node")
         .select(col("node"), expr("r div outdeg").as("cpe"))
       val cSide = if (bcastRanks) broadcast(contrib) else contrib
@@ -835,11 +830,11 @@ object Graph {
         .agg(sum(col("cpe")).as("sc"))
         .select(col("b").as("node"), col("sc"))
       // left-outer from the node set: a node with no in-edges keeps the
-      // damping base (the local path's getOrElse(0) — paths must agree)
+      // damping base (the local path's zero sum — paths must agree)
       val next = ranks.select(col("node"), col("r").as("old"))
         .join(sums, Seq("node"), "left_outer")
         .select(col("node"), col("old"),
-          (lit(dampBase) +
+          (lit(dampBaseE12) +
             expr("(85 * coalesce(sc, CAST(0 AS BIGINT))) div 100"))
             .as("nr"))
         .withColumn("_delta", abs(col("nr") - col("old")))
@@ -848,82 +843,15 @@ object Graph {
       release(ranks)
       ranks = next.select(col("node"), col("nr").as("r"))
     }
-    eP.unpersist()
-    val out = ranks.select(col("node"), col("r").as("rank_e12"))
-    // `out` scans only the final ranks checkpoint, so the caller's
-    // release(out) can never reach `deg`'s checkpoint blocks — free them
-    // here or every invocation leaks one node-sized RDD (the same
-    // discipline the loop applies to superseded rank tables).
-    release(deg)
-    out
-  }
-
-  /** Single-task k-core peel over a symmetrized boxed edge iterator —
-    * the shared local kernel behind [[kCorePeel]] (`roundLimit` set) and
-    * [[kCoreFixpoint]] (`roundLimit` = None, run until a round removes
-    * nobody, `maxIters` throw). Dense-int packing + flat arrays: the
-    * Set[Long]/boxed-tuple formulation it replaced went quadratic in GC
-    * at ~14M edges (29 s vs ~3 s here); each round is two array sweeps
-    * (degree count over alive edges, then the removal scan) — identical
-    * batch semantics to the distributed rounds. */
-  private def peelLocal(it: Iterator[(Long, Long)], k: Int,
-                        roundLimit: Option[Int], maxIters: Int,
-                        divergeMsg: String): Iterator[(Long, Long)] = {
-    val es = it.toArray
-    val n2i = scala.collection.mutable.LongMap.empty[Int]
-    val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
-    def idOf(x: Long): Int =
-      n2i.getOrElseUpdate(x, { ids += x; ids.size - 1 })
-    val m = es.length
-    val srcId = new Array[Int](m)
-    val dstId = new Array[Int](m)
-    var i = 0
-    while (i < m) { srcId(i) = idOf(es(i)._1); dstId(i) = idOf(es(i)._2); i += 1 }
-    val n = ids.size
-    val alive = Array.fill(n)(true)
-    val deg = new Array[Long](n)
-    var nAlive = n.toLong
-    def peelOneRound(): Long = {
-      java.util.Arrays.fill(deg, 0L)
-      var e = 0
-      while (e < m) {
-        if (alive(srcId(e)) && alive(dstId(e))) deg(srcId(e)) += 1L
-        e += 1
-      }
-      var removed = 0L
-      var v = 0
-      while (v < n) {
-        if (alive(v) && deg(v) < k) { alive(v) = false; removed += 1L }
-        v += 1
-      }
-      nAlive -= removed
-      removed
-    }
-    val res = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    roundLimit match {
-      case Some(rs) =>
-        var r = 1
-        while (r <= rs) { res += ((r.toLong, peelOneRound())); r += 1 }
-      case None =>
-        var r = 0
-        var removed = -1L
-        while (removed != 0L) {
-          r += 1
-          if (r > maxIters) throw new IllegalStateException(divergeMsg)
-          removed = peelOneRound()
-          if (removed > 0L) res += ((r.toLong, removed))
-        }
-    }
-    res += ((-1L, nAlive))
-    res.iterator
+    ranks.select(col("node"), col("r").as("rank_e12"))
   }
 
   /** Free the executor storage behind any localCheckpoint leaves in `df`'s
-    * plan. The labels returned by [[connectedComponents]] are backed by a
-    * checkpointed RDD whose blocks survive both `Dataset.unpersist()` and
-    * `spark.catalog.clearCache()` (those only see CacheManager entries) —
-    * callers should invoke this once the result has been consumed.
-    * Safe on any DataFrame: non-checkpoint leaves are ignored. */
+    * plan. Kernel results are backed by a checkpointed RDD whose blocks
+    * survive both `Dataset.unpersist()` and `spark.catalog.clearCache()`
+    * (those only see CacheManager entries) — callers should invoke this
+    * once the result has been consumed. Safe on any DataFrame:
+    * non-checkpoint leaves are ignored. */
   def release(df: DataFrame): Unit =
     df.queryExecution.analyzed.foreach {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>

@@ -46,7 +46,7 @@ object GraphQueries extends QueryPack {
     val rows = result.collect()
     val out = result.sparkSession.createDataFrame(
       java.util.Arrays.asList(rows: _*), result.schema)
-    Graph.release(result)              // kCorePeel/CC checkpoint leaves
+    Graph.release(result)              // the kernels' checkpoint leaves
     cached.foreach(_.unpersist(blocking = false))
     out
   }
@@ -149,85 +149,25 @@ object GraphQueries extends QueryPack {
   //    edges, where the corpus's dense co-occurrence projections (e.g.
   //    supplier⋈supplier via shared orders — 91% complete at sf0.1)
   //    would make triangle output itself quadratic.
-  //    The naive wedge join (adjacency ⋈ adjacency on the shared
-  //    endpoint) explodes quadratically on hub nodes; the standard
-  //    scale-safe fix is DEGREE-ORDERED ORIENTATION: direct every edge
-  //    from its lower endpoint to its higher endpoint under the total
-  //    order (degree, id). Every node's OUT-degree is then bounded by
-  //    O(sqrt(edges)) regardless of its real degree, so the wedge join
-  //    fans out by arboricity, not by hub size — the difference between
-  //    a 100 TB run finishing and one executor owning a celebrity node
-  //    (a boilerplate page with a million near-copies). Each triangle
-  //    {a,b,c} is counted exactly once, as the wedge at its
-  //    order-minimal vertex closed by the oriented edge b→c.
+  //    [[Graph.triangleCounts]] orients every edge by (degree, id), so
+  //    the wedge join fans out by arboricity, not by hub size — the
+  //    difference between a 100 TB run finishing and one executor owning
+  //    a celebrity node (a boilerplate page with a million near-copies).
   //    All counts are integers — exact on any engine, any shuffle order.
+  //    It also picks the path: the 5-stage wedge plan costs ~4 s of pure
+  //    stage overhead on the 5k-edge sf0.1 pair graph, so below its bound
+  //    the same arithmetic runs as ONE CSR task; the sf10 pair graph
+  //    (13.8M edges) stays distributed.
   private def gr2Build(s: org.apache.spark.sql.SparkSession, dir: String) = {
-    val (rawPairs, sigBase) =
+    val (pairs, sigBase) =
       Dedup.nearDupPairsWithBase(Tables.documents(s, dir))
-    val pairs = rawPairs
-      .select(col("doc_a").as("u"), col("doc_b").as("v"))
-      .persist()
-    // Hybrid finish (the CC/peel discipline, r10-verdict gr2 task): the
-    // count() materializes the persisted pair table either way; below
-    // the bound the whole orientation+wedge+rollup runs as ONE CSR task
-    // (the 5-stage distributed plan costs ~4 s of pure stage overhead
-    // on the 5k-edge sf0.1 pair graph — measured round 11 — vs ~ms of
-    // actual intersection work). GraphTriangleSpec pins both paths
-    // bit-identical; the sf10 pair graph (13.8M edges) stays distributed.
-    if (pairs.count() <= Graph.triangleLocalBound) {
-      val result = Graph.triangleCountsLocal(pairs, "u", "v")
-        .select(col("node").as("doc_id"), col("triangles"))
-        .orderBy(col("triangles").desc, col("doc_id"))
-        .limit(20)
-      (result, Seq(pairs, sigBase))
-    } else gr2Distributed(pairs, sigBase)
+    (gr2Top(Graph.triangleCounts(pairs, "doc_a", "doc_b")), Seq(sigBase))
   }
 
-  /** The distributed degree-ordered wedge plan (see the header comment);
-    * also driven directly by GraphTriangleSpec's equivalence pin. */
-  private[graft] def gr2Distributed(
-      pairs: org.apache.spark.sql.DataFrame,
-      sigBase: org.apache.spark.sql.DataFrame*) = {
-    val deg = pairs.select(col("u").as("n"))
-      .unionByName(pairs.select(col("v").as("n")))
-      .groupBy("n").agg(count(lit(1)).as("d"))
-    // Orient u—v toward the (degree, id)-larger endpoint; carry the
-    // destination's order key so the wedge join can canonicalize the
-    // closing edge without re-joining degrees.
-    val du = deg.select(col("n").as("u"), col("d").as("du"))
-    val dv = deg.select(col("n").as("v"), col("d").as("dv"))
-    val oriented = pairs.join(du, "u").join(dv, "v")
-      .select(
-        when(col("du") < col("dv") ||
-             (col("du") === col("dv") && col("u") < col("v")),
-          struct(col("u").as("src"), col("v").as("dst"),
-                 col("dv").as("ddeg")))
-          .otherwise(
-            struct(col("v").as("src"), col("u").as("dst"),
-                   col("du").as("ddeg"))).as("e"))
-      .select(col("e.src"), col("e.dst"), col("e.ddeg"))
-      .persist()
-    val e1 = oriented.select(col("src").as("wsrc"), col("dst").as("b"),
-      col("ddeg").as("bd"))
-    val e2 = oriented.select(col("src").as("wsrc"), col("dst").as("c"),
-      col("ddeg").as("cd"))
-    val wedges = e1.join(e2,
-        Seq("wsrc")).where(
-        col("bd") < col("cd") ||
-        (col("bd") === col("cd") && col("b") < col("c")))
-      .select(col("wsrc").as("a"), col("b"), col("c"))
-    val close = oriented.select(col("src").as("b"), col("dst").as("c"))
-    val tris = wedges.join(close, Seq("b", "c")).persist()
-    val perNode = tris.select(col("a").as("d"))
-      .unionByName(tris.select(col("b").as("d")))
-      .unionByName(tris.select(col("c").as("d")))
-      .groupBy("d").agg(count(lit(1)).as("triangles"))
-    val result = perNode
-      .select(col("d").as("doc_id"), col("triangles"))
+  private def gr2Top(perNode: org.apache.spark.sql.DataFrame) =
+    perNode.select(col("node").as("doc_id"), col("triangles"))
       .orderBy(col("triangles").desc, col("doc_id"))
       .limit(20)
-    (result, Seq(pairs, oriented, tris) ++ sigBase)
-  }
 
   private val gr2Triangles: Q = (s, dir) => {
     val (r, cached) = gr2Build(s, dir); finish(r, cached: _*)
@@ -456,7 +396,7 @@ object GraphQueries extends QueryPack {
   private val peelRounds = 3
   private val coreK = 2
   // -- gr6: BFS run to FIXPOINT — gr3's frontier loop with NO round
-  //    bound ([[Graph.bfsFixpoint]]'s converged-count termination, the
+  //    bound ([[Graph.ssspFixpoint]]'s converged-count termination, the
   //    production contract: "the" hop histogram, not 3 rounds of it).
   //    The oracle expresses the same fixpoint as a recursive CTE whose
   //    (node, hop) tuples are bounded by the node count (hop ≤ |V| covers
@@ -471,7 +411,7 @@ object GraphQueries extends QueryPack {
       .unionByName(pairs.select(col("v").as("src"), col("u").as("dst")))
     val nodes = pairs.select(col("u").as("node"))
       .unionByName(pairs.select(col("v").as("node"))).distinct().persist()
-    val reached = Graph.bfsFixpoint(edges, "src", "dst")
+    val reached = Graph.ssspFixpoint(edges, "src", "dst")
       .select(col("node"), col("dist").as("hop"))
     val result = nodes.join(reached, Seq("node"), "left_outer")
       .select(coalesce(col("hop"), lit(-1L)).as("hop"))
@@ -601,10 +541,10 @@ object GraphQueries extends QueryPack {
        |ORDER BY dist""".stripMargin
 
   // -- gr8: k-core run to FIXPOINT — gr5's peel with no round bound
-  //    ([[Graph.kCoreFixpoint]]: iterate until a round removes nobody),
-  //    same substrate (the d4 near-dup pair graph) and k. The oracle
-  //    carries BOTH node and edge rows in the recursion state ('n'/'e'
-  //    tagged): tracking nodes as distinct-src-of-edges would diverge
+  //    ([[Graph.kCore]] with `rounds = None`: iterate until a round
+  //    removes nobody), same substrate (the d4 near-dup pair graph) and
+  //    k. The oracle carries BOTH node and edge rows in the recursion
+  //    state ('n'/'e' tagged): tracking nodes as distinct-src-of-edges would diverge
   //    from the engine on kept-but-isolated nodes (a node that passes the
   //    degree test while all its neighbors die keeps membership for one
   //    more round). The recursive term's early-stop gate (continue only
@@ -620,7 +560,7 @@ object GraphQueries extends QueryPack {
     val (rawPairs, sigBase) =
       Dedup.nearDupPairsWithBase(Tables.documents(s, dir))
     val pairs = rawPairs.select(col("doc_a").as("u"), col("doc_b").as("v"))
-    (Graph.kCoreFixpoint(pairs, "u", "v", coreK).orderBy("round"),
+    (Graph.kCore(pairs, "u", "v", coreK).orderBy("round"),
       Seq(sigBase))
   }
 
@@ -767,7 +707,7 @@ object GraphQueries extends QueryPack {
     val (rawPairs, sigBase) =
       Dedup.nearDupPairsWithBase(Tables.documents(s, dir))
     val pairs = rawPairs.select(col("doc_a").as("u"), col("doc_b").as("v"))
-    (Graph.kCorePeel(pairs, "u", "v", coreK, peelRounds).orderBy("round"),
+    (Graph.kCore(pairs, "u", "v", coreK, Some(peelRounds)).orderBy("round"),
       Seq(sigBase))
   }
 
@@ -785,11 +725,8 @@ object GraphQueries extends QueryPack {
     // gr2 pins the DISTRIBUTED wedge plan explicitly: at spec SFs the
     // registered query takes the local CSR path, whose checkpoint scan
     // would pin nothing about the at-scale join shape.
-    "gr2_triangles" -> ((s, d) => {
-      val pairs = Dedup.nearDupPairs(Tables.documents(s, d))
-        .select(col("doc_a").as("u"), col("doc_b").as("v"))
-      gr2Distributed(pairs)._1
-    }),
+    "gr2_triangles" -> ((s, d) => gr2Top(Graph.triangleWedges(
+      Dedup.nearDupPairs(Tables.documents(s, d)), "doc_a", "doc_b")._1)),
     "gr3_bfs_hops"  -> ((s, d) => gr3Build(s, d)._1),
     "gr4_sssp"      -> ((s, d) => gr4Build(s, d)._1),
     "gr5_kcore"     -> ((s, d) => gr5Build(s, d)._1))

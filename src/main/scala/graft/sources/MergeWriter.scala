@@ -137,14 +137,17 @@ object MergeWriter {
     * incrementally-written table needs: a steady drip of upsert/append
     * batches leaves a table as thousands of KB-files whose per-file open
     * and footer cost eventually dominates scans. Rewrite into
-    * ~`targetFileBytes` files (same rows; the commit removes every old
-    * file). Run it on a schedule or when fileCount ≫ bytes/target; at
+    * ~`targetFileBytes` files (same rows; the commit removes the old
+    * files). Run it on a schedule or when fileCount ≫ bytes/target; at
     * scale, compact per-partition by passing the partition subdir as
     * `path`, which is also what keeps the rewrite off the rest of the
     * table. Same `partitionCols` contract as upsert/delete: a
     * hive-partitioned table compacted at its ROOT must pass its
     * partition columns or the layout flattens (per-partition compaction
-    * needs none). */
+    * needs none). The file target is per directory, since a partitioned
+    * write emits at least one file per partition: the call skips when
+    * no directory holds more files than its bytes need, and at the root
+    * of a partitioned table it rewrites only the directories that do. */
   def compactParquet(spark: SparkSession, path: String,
                      targetFileBytes: Long = 128L << 20,
                      partitionCols: Seq[String] = Nil): Unit = {
@@ -152,11 +155,18 @@ object MergeWriter {
     val fs = fileSystem(spark, path)
     if (!fs.exists(new Path(path))) return
     val files = dataFiles(fs, new Path(path))
-    val bytes = files.map(_._2).sum
-    val want = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-    if (want >= files.size) return // already compact enough: skip the rewrite
-    commit(fs, path, spark.read.parquet(path).coalesce(want),
-      files.map(_._1), partitionCols)
+    def want(dir: Seq[(String, Long)]) =
+      math.max(1, math.ceil(dir.map(_._2).sum.toDouble / targetFileBytes).toInt)
+    val crowded = files.groupBy(f => f._1.take(f._1.lastIndexOf('/') + 1))
+      .values.filter(d => d.size > want(d)).toSeq
+    if (crowded.isEmpty) return // already compact enough: skip the rewrite
+    // each directory's rows coalesce on their own, so every task holds
+    // one partition value and writes one of that partition's files
+    val target = spark.read.parquet(path)
+    val rows = crowded.map(d =>
+      rowsOf(spark, path, target, d.map(_._1)).coalesce(want(d)))
+    commit(fs, path, rows.reduce(_ union _), crowded.flatten.map(_._1),
+      partitionCols)
   }
 
   // ---------------------------------------------------------------- commit

@@ -4,7 +4,8 @@ import graft.operators.Graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Run-to-fixpoint graph drivers (Graph.{bfs,sssp,kCore,pageRank}Fixpoint)
+/** Run-to-fixpoint graph kernels (Graph.ssspFixpoint, whose unit-weight
+  * case is BFS; Graph.kCore without a round bound; Graph.pageRankFixpoint)
   * against graphs that NEED more rounds than the gr query pack's bounded
   * 3-round unrolls — proving (a) the fixpoint equals the bounded unroll
   * once converged / a brute-force model, (b) termination is DETECTED
@@ -30,9 +31,9 @@ class GraphFixpointSpec extends SparkSpecBase {
   test("BFS fixpoint covers a diameter-6 path the 3-round unroll cannot") {
     val edges = sym((0L until 6L).map(i => (i, i + 1)))
     val expected = (0L to 6L).map(i => i -> i).toMap // hop = node id
-    val local = toMap(Graph.bfsFixpoint(edges, "src", "dst"))
+    val local = toMap(Graph.ssspFixpoint(edges, "src", "dst"))
     val looped = toMap(
-      Graph.bfsFixpoint(edges, "src", "dst", localThreshold = 0L))
+      Graph.ssspFixpoint(edges, "src", "dst", localThreshold = 0L))
     assert(local == expected, s"local path: $local")
     assert(looped == expected, "local and distributed paths disagree")
     // the graph genuinely needs more than 3 rounds: a 3-round unroll
@@ -40,7 +41,7 @@ class GraphFixpointSpec extends SparkSpecBase {
     assert(expected.values.count(_ > 3) == 3)
     // truncation is an ERROR, never a silently wrong answer
     intercept[IllegalStateException] {
-      Graph.bfsFixpoint(edges, "src", "dst", maxIters = 3,
+      Graph.ssspFixpoint(edges, "src", "dst", maxIters = 3,
         localThreshold = 0L)
     }
   }
@@ -87,32 +88,32 @@ class GraphFixpointSpec extends SparkSpecBase {
 
   test("k-core fixpoint peels a 10-path in 5 rounds and matches the " +
        "bounded peel's converged prefix") {
-    // kCore{Peel,Fixpoint} symmetrize internally — pass raw pairs
+    // kCore symmetrizes internally — pass raw pairs
     val edges = (0L until 9L).map(i => (i, i + 1)).toDF("src", "dst")
     // a path has no 2-core: endpoints (degree 1) die round after round —
     // 5 rounds of 2 removals each, then an empty core
     val expected = (1L to 5L).map(r => r -> 2L).toMap + (-1L -> 0L)
-    val local = toMap(Graph.kCoreFixpoint(edges, "src", "dst", k = 2))
-    val looped = toMap(Graph.kCoreFixpoint(edges, "src", "dst", k = 2,
+    val local = toMap(Graph.kCore(edges, "src", "dst", k = 2))
+    val looped = toMap(Graph.kCore(edges, "src", "dst", k = 2,
       localThreshold = 0L))
     assert(local == expected, s"local path: $local")
     assert(looped == expected, "local and distributed paths disagree")
     // the fixpoint equals the bounded unroll once converged: a 7-round
-    // kCorePeel reports the same removals plus trailing zero-rounds
+    // kCore reports the same removals plus trailing zero-rounds
     val peel = toMap(
-      Graph.kCorePeel(edges, "src", "dst", k = 2, rounds = 7))
+      Graph.kCore(edges, "src", "dst", k = 2, rounds = Some(7)))
     assert(peel.filter { case (r, n) => r == -1L || n != 0L } == expected)
     // and 3 bounded rounds were NOT enough (6 of 10 nodes still alive)
-    val p3 = toMap(Graph.kCorePeel(edges, "src", "dst", k = 2, rounds = 3))
+    val p3 = toMap(Graph.kCore(edges, "src", "dst", k = 2, rounds = Some(3)))
     assert(p3(-1L) == 4L)
   }
 
   test("k-core fixpoint detects an already-converged graph in one look") {
     val triangle = Seq((1L, 2L), (2L, 3L), (1L, 3L)).toDF("src", "dst")
     val expected = Map(-1L -> 3L) // no removal rounds at all
-    assert(toMap(Graph.kCoreFixpoint(triangle, "src", "dst", k = 2))
+    assert(toMap(Graph.kCore(triangle, "src", "dst", k = 2))
       == expected)
-    assert(toMap(Graph.kCoreFixpoint(triangle, "src", "dst", k = 2,
+    assert(toMap(Graph.kCore(triangle, "src", "dst", k = 2,
       localThreshold = 0L)) == expected)
   }
 

@@ -75,29 +75,35 @@ class GraphSpec extends SparkSpecBase {
     // not grow by one edge table per invocation.
     // Suites share one SparkSession and run CONCURRENTLY, so another
     // suite's persists can land between the snapshots — the assertion is
-    // therefore rate-based: a real leak adds ≥1 entry per run (6 runs →
-    // ≥6), concurrent noise is a bounded handful.
+    // therefore rate-based and per query: a real leak adds ≥1 entry per
+    // run (6 runs → ≥6), concurrent noise is a bounded handful.
     def run(name: String): Unit = {
       val df = SparkEntry.queries(name)(spark, sfDir)
       df.collect()
       operators.Graph.release(df)
     }
-    run("gr1_pagerank") // steady state (JIT, shared codegen caches)
-    val before = spark.sparkContext.getPersistentRDDs
-    val runs = Seq("gr1_pagerank", "gr5_kcore", "gr1_pagerank",
-      "gr5_kcore", "gr1_pagerank", "gr5_kcore")
-    runs.foreach(run)
-    // releases run with blocking = false — wait out in-flight removals
-    // before declaring a leak
-    val deadline = System.currentTimeMillis + 10000
-    var after = spark.sparkContext.getPersistentRDDs
-    while (after.size > before.size && System.currentTimeMillis < deadline) {
-      Thread.sleep(200); after = spark.sparkContext.getPersistentRDDs
+    // Every kernel persists and releases through Graph's one hybrid
+    // driver; each graph query is measured on its own, so a leak in one
+    // kernel's branch is not diluted by the others' runs.
+    val runs = 6
+    for (q <- Seq("gr1_pagerank", "gr5_kcore", "gr2_triangles",
+        "gr3_bfs_hops", "gr6_bfs_fixpoint", "gr7_sssp_fixpoint",
+        "gr8_kcore_fixpoint")) {
+      run(q) // steady state (JIT, shared codegen caches)
+      val before = spark.sparkContext.getPersistentRDDs
+      (1 to runs).foreach(_ => run(q))
+      // releases run with blocking = false — wait out in-flight removals
+      // before declaring a leak
+      val deadline = System.currentTimeMillis + 10000
+      var after = spark.sparkContext.getPersistentRDDs
+      while (after.size > before.size && System.currentTimeMillis < deadline) {
+        Thread.sleep(200); after = spark.sparkContext.getPersistentRDDs
+      }
+      val leaked = (after.keySet -- before.keySet)
+        .map(id => s"$id:${after(id).toString.take(120)}")
+      assert(after.size - before.size < runs,
+        s"$q leaked ${after.size - before.size} persistent RDDs over " +
+          s"$runs runs: ${leaked.mkString("; ")}")
     }
-    val leaked = (after.keySet -- before.keySet)
-      .map(id => s"$id:${after(id).toString.take(120)}")
-    assert(after.size - before.size < runs.size,
-      s"graph queries leaked ${after.size - before.size} persistent " +
-        s"RDDs over ${runs.size} runs: ${leaked.mkString("; ")}")
   }
 }

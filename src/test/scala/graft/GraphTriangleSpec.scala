@@ -2,12 +2,13 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Pins Graph.triangleCountsLocal (the single-task CSR kernel the gr2
-  * hybrid takes below 2M edges) to the distributed degree-ordered wedge
-  * plan: identical per-node triangle counts on a fixture that exercises
-  * every orientation case — a clique (ties broken by id), a chain (no
-  * triangles), an isolated edge, a hub node whose degree exceeds its
-  * neighbors', and two triangles sharing an edge. */
+/** Pins Graph.triangleCounts' two paths to each other: the single-task
+  * CSR kernel (at or below the edge threshold) and the distributed
+  * degree-ordered wedge plan (threshold 0) give identical per-node
+  * triangle counts on a fixture that exercises every orientation case —
+  * a clique (ties broken by id), a chain (no triangles), an isolated
+  * edge, a hub node whose degree exceeds its neighbors', and two
+  * triangles sharing an edge. */
 class GraphTriangleSpec extends SparkSpecBase {
 
   test("local CSR triangle kernel == distributed wedge plan, exact") {
@@ -25,15 +26,11 @@ class GraphTriangleSpec extends SparkSpecBase {
       (40L, 41L))
       .toDF("u", "v")
 
-    val localRes = graft.operators.Graph.triangleCountsLocal(edges, "u", "v")
+    def counts(localThreshold: Long) = graft.operators.Graph
+      .triangleCounts(edges, "u", "v", localThreshold)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-
-    val pairs = edges.persist()
-    val (dist, cached) = graft.operators.GraphQueries.gr2Distributed(pairs)
-    // gr2Distributed tops at 20 rows; the fixture has ≤ 7 triangle nodes
-    val distRes = dist.collect().map(r => (r.getLong(0), r.getLong(1)))
-      .sortBy(_._1)
-    cached.foreach(_.unpersist())
+    val localRes = counts(Long.MaxValue)
+    val distRes = counts(0L)
 
     assert(localRes.toSeq == distRes.toSeq,
       s"local ${localRes.toSeq} != distributed ${distRes.toSeq}")

@@ -188,23 +188,29 @@ class MergeWriterSpec extends SparkSpecBase {
 
   test("compactParquet folds many small files into few, keeps rows, skips when compact") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_compact").toString + "/t"
-    (1 to 1000).map(i => (i.toLong, s"v$i")).toDF("k", "v")
-      .repartition(20).write.parquet(dir)
-    def files() = new java.io.File(dir).listFiles()
-      .count(_.getName.endsWith(".parquet"))
-    assert(files() == 20)
-    val before = spark.read.parquet(dir).orderBy("k").collect().toSeq
-    MergeWriter.compactParquet(spark, dir, targetFileBytes = 1L << 30)
-    assert(files() == 1, "small files not folded")
-    assert(spark.read.parquet(dir).orderBy("k").collect().toSeq == before)
-    // a second pass finds nothing to do and must not rewrite
-    val mtime = new java.io.File(dir).listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.lastModified).max
-    MergeWriter.compactParquet(spark, dir, targetFileBytes = 1L << 30)
-    val mtime2 = new java.io.File(dir).listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.lastModified).max
-    assert(mtime2 == mtime, "no-op compaction rewrote the table")
+    // an unpartitioned table, and a hive-partitioned one compacted at its
+    // root: 3 partitions of several files each
+    for (partitionCols <- Seq(Nil, Seq("p"))) {
+      val dir = Files.createTempDirectory("graft_compact").toString + "/t"
+      val rows = (1 to 1000).map(i => (i.toLong, s"v$i", i % 3)).toDF("k", "v", "p")
+      if (partitionCols.isEmpty) rows.drop("p").repartition(20).write.parquet(dir)
+      else rows.repartition(20).write.partitionBy("p").parquet(dir)
+      val dirs = if (partitionCols.isEmpty) 1 else 3
+      def files() = dataFiles(dir)
+      assert(files().size == 20 * dirs)
+      val before = spark.read.parquet(dir).orderBy("k").collect().toSeq
+      MergeWriter.compactParquet(spark, dir, targetFileBytes = 1L << 30,
+        partitionCols = partitionCols)
+      assert(files().size == dirs, s"small files not folded: ${files()}")
+      if (partitionCols.nonEmpty)
+        assert(files().map(_.takeWhile(_ != '/')) == Set("p=0", "p=1", "p=2"))
+      assert(spark.read.parquet(dir).orderBy("k").collect().toSeq == before)
+      // a second pass finds nothing to do and must not rewrite
+      val state = fileStates(dir)
+      MergeWriter.compactParquet(spark, dir, targetFileBytes = 1L << 30,
+        partitionCols = partitionCols)
+      assert(fileStates(dir) == state, "no-op compaction rewrote the table")
+    }
   }
 
   /** Input records read by every task of the jobs `body` runs. */
@@ -493,11 +499,15 @@ class MergeWriterSpec extends SparkSpecBase {
       .set("fs.crashfs.impl", classOf[CrashingFs].getName)
     val keys = Seq("targname", "k")
     val part = Seq("targname")
+    // two files in partition a, one in b: compaction has one partition
+    // to fold, and each other write touches one file
     val seed = Files.createTempDirectory("graft_crash_seed").resolve("t")
     MergeWriter.upsertParquet(spark, s"crashfs://$seed",
-      Seq(("a", 1, "x"), ("a", 2, "y"), ("b", 3, "z"), ("b", 4, "w"))
+      Seq(("a", 1, "x"), ("b", 3, "z"), ("b", 4, "w"))
         .toDF("targname", "k", "s").coalesce(1), keys, part)
-    assert(dataFiles(seed.toString).size == 2)
+    MergeWriter.upsertParquet(spark, s"crashfs://$seed",
+      Seq(("a", 2, "y")).toDF("targname", "k", "s"), keys, part)
+    assert(dataFiles(seed.toString).size == 3)
     def rows(dir: String) = spark.read.parquet(dir)
       .orderBy("targname", "k").collect()
       .map(r => (r.getAs[String]("targname"), r.getAs[Int]("k"),

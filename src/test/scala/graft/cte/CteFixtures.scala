@@ -21,7 +21,7 @@ object CteFixtures {
                  corners: (Double, Double, Double, Double) = (0.0, 1.0, 0.0, 1.0),
                  flashlvl: Double = 0.0) =
     Row(img, s"/data/$img", s"$img.coo", s"$img.mag", "/phot", img,
-      "11924", "F502N", "NONE", "ZERO", "A",
+      "11924", "F502N", "NONE", "ZERO", "A", "s",
       java.sql.Date.valueOf("2026-01-01"),
       corners._1, corners._3, corners._2, corners._3,
       corners._2, corners._4, corners._1, corners._4,
@@ -39,14 +39,14 @@ object CteFixtures {
       fi("iaaa11p1q", 1, 55600.0), fi("iaaa11p2q", 1, 55600.0),
       // unmatched chip-1 image (different exptime key).
       Row("iaaa03c1q", "/data/iaaa03c1q", "c.coo", "c.mag", "/phot",
-        "iaaa03c1q", "11924", "F502N", "NONE", "ZERO", "A",
+        "iaaa03c1q", "11924", "F502N", "NONE", "ZERO", "A", "l",
         java.sql.Date.valueOf("2026-01-01"),
         0.0, 0.0, 1.0, 0.0, 1.0, 1.0, 0.0, 1.0,
         3.5, 55000.0, 350.0, 0.0, 0.0, 0.0, 0.0, 0, 1, T))
     val schema = org.apache.spark.sql.types.StructType(Seq(
       "imagename", "imagepath", "coofile", "magfile", "photpath",
       "parsed_name", "proposid", "filter", "chinject", "flashcur",
-      "shutrpos").map(n =>
+      "shutrpos", "length").map(n =>
         org.apache.spark.sql.types.StructField(n,
           org.apache.spark.sql.types.StringType)) ++
       Seq(org.apache.spark.sql.types.StructField("ingest_date",
@@ -66,9 +66,10 @@ object CteFixtures {
       spark.sparkContext.parallelize(rows, 2), schema)
   }
 
-  // NB fixture fileinfo row order: strings, ingest_date, corner doubles in
-  // (ll, lr, ur, ul) ra/dec interleave, mnclip, dateobs, exptime,
-  // flashlvl, flashdur, postarg1, postarg2, ctecorr, chip, targname.
+  // NB fixture fileinfo row order: strings (the exptime class `length`
+  // last), ingest_date, corner doubles in (ll, lr, ur, ul) ra/dec
+  // interleave, mnclip, dateobs, exptime, flashlvl, flashdur, postarg1,
+  // postarg2, ctecorr, chip, targname.
 
   def master(spark: SparkSession): DataFrame = {
     import spark.implicits._

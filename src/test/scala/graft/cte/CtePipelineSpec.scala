@@ -68,4 +68,29 @@ class CtePipelineSpec extends SparkSpecBase {
     assert(coeffs.columns.count(_.startsWith("c")) == 9)
     assert(coeffs.count() == 1)
   }
+
+  test("warehouse tables are stored in their registry schemas") {
+    // CtePipeline.table reads fileinfo/phot/results with the registry
+    // schema instead of inferring it, so what the writers store must be
+    // exactly that schema: a mismatch here is a writer bug
+    val root = Files.createTempDirectory("graft_pipe_schema").toString
+    val pipe = new CtePipeline(spark, s"$root/warehouse")
+    // no silent cast or drop: a widened, extra or missing column is
+    // refused before the table is written
+    val phot = CteFixtures.photLong(spark)
+    for (bad <- Seq(phot.withColumn("find_id", col("find_id").cast("long")),
+        phot.withColumn("extra", lit(1)), phot.drop("totbkgrd")))
+      intercept[IllegalArgumentException](pipe.ingestPhot(bad))
+    assert(!new java.io.File(s"$root/warehouse/phot").exists())
+    pipe.ingestFileinfo(CteFixtures.fileinfo(spark))
+    pipe.ingestPhot(phot)
+    pipe.computeSlopes(CteFixtures.T)
+    def fields(s: org.apache.spark.sql.types.StructType) =
+      s.fields.map(f => f.name -> f.dataType).toSeq
+    for ((t, schema) <- Seq("fileinfo" -> SchemaRegistry.fileinfo,
+        "phot" -> SchemaRegistry.photLong,
+        "results" -> SchemaRegistry.resultsLong))
+      assert(fields(spark.read.parquet(s"$root/warehouse/$t").schema) ==
+        fields(schema), s"$t is not stored in its registry schema")
+  }
 }

@@ -19,7 +19,8 @@ class CteQueriesSpec extends SparkSpecBase {
   }
 
   test("generated schemas have the reference's arity") {
-    assert(SchemaRegistry.fileinfo.fields.length == 29 + 1) // + targname
+    // + length (the ingest's stored exptime class) + targname
+    assert(SchemaRegistry.fileinfo.fields.length == 29 + 1 + 1)
     assert(SchemaRegistry.photWide.fields.length == 7 + 42 + 2)
     assert(SchemaRegistry.resultsWide.fields.length == 5 + 24 + 1)
     assert(SchemaRegistry.fluxBins.length == 8)
