@@ -1,7 +1,10 @@
 package graft.cte
 
+import java.util.concurrent.{CompletionException, Executors, TimeUnit}
+
 import graft.sources.{MergeWriter, TsvTables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{classic, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -131,8 +134,9 @@ class CtePipeline(spark: SparkSession, warehouse: String) {
   /** Slope rows joined to their combined epoch and bin-flux midpoint —
     * the polyfit input (shared by the current fit and the history).
     * `cohorts` is `CteAnalytics.epochCohorts(fileinfo, targname)`. */
-  private def slopeRows(results: DataFrame, fileinfo: DataFrame,
-                        cohorts: DataFrame, targname: String): DataFrame = {
+  private[cte] def slopeRows(results: DataFrame, fileinfo: DataFrame,
+                             cohorts: DataFrame, targname: String)
+      : DataFrame = {
     val pairEpoch = fileinfo
       .filter(col("targname") === targname && col("chip") === 1)
       .select(col("imagename").as("imagename_1"), col("dateobs"))
@@ -158,46 +162,49 @@ class CtePipeline(spark: SparkSession, warehouse: String) {
     * Shared inputs are evaluated once: each warehouse table is read once,
     * the epoch cohorts are collected once, and the fitted coefficients —
     * one row per target — are collected once and feed both the coeffs
-    * and fitvals artifacts. */
+    * and fitvals artifacts. The artifacts do not depend on each other
+    * (fitvals only on the collected coefficients), so their six job
+    * chains run at the same time ([[CtePipeline.concurrently]]). Each
+    * artifact is one file written by one task, which also puts its rows
+    * in key order ([[TsvTables.write]]). */
   def publish(targname: String, outDir: String): Unit = {
     val results = table("results").filter(col("targname") === targname)
     val fileinfo = table("fileinfo")
     val cohorts = CteAnalytics.epochCohorts(fileinfo, targname)
-    // the slopes file keeps computeSlopes' column order, not the table's
-    TsvTables.write(
-      results.select("imagename_1", "imagename_2", "aperture", "bin_lo",
-          "bin_hi", "slope", "slopestdev", "numpoints", "slopefile",
-          "slopefile_path", "targname")
-        .orderBy("imagename_1", "imagename_2", "aperture", "bin_lo", "bin_hi"),
-      s"$outDir/${targname}_slopes")
     val rows = slopeRows(results, fileinfo, cohorts, targname)
-    val fit = CteAnalytics.polyfitByTarget(rows)
-    val coeffs = spark.createDataFrame(
-      java.util.Arrays.asList(fit.collect(): _*), fit.schema)
-    TsvTables.write(coeffs, s"$outDir/${targname}_coeffs")
-    TsvTables.write(
-      CteAnalytics.polyfitHistory(rows).orderBy("targname", "as_of_epoch"),
-      s"$outDir/${targname}_coeffs_history")
-    TsvTables.write(
-      CteAnalytics.clippedRatios(table("phot"), fileinfo, targname)
-        .orderBy("imagename_1", "imagename_2", "aperture", "bin_lo", "bin_hi",
-          "master_id"),
-      s"$outDir/${targname}_fluxratios")
-    TsvTables.write(
-      CteAnalytics.cteVsTime(results, fileinfo)
-        .orderBy("aperture", "mjd", "fluxbin"),
-      s"$outDir/${targname}_cteVStime")
-    TsvTables.write(
-      CteAnalytics.cteVsFlashlvl(results, fileinfo, targname, cohorts)
-        .orderBy("aperture", "fluxbin", "epoch", "flashlvl", "imagename_1"),
-      s"$outDir/${targname}_cteVSflashlvl")
-    // Latest combined epoch — "Users should be using coefficients from
-    // the latest epoch" (uvis_external_cte_plots.py:612-613); the cohorts
-    // are a driver-side local relation, so this collect runs no job.
-    val latestEpoch = cohorts.collect().map(_.getAs[Double]("epoch")).max
-    TsvTables.write(
-      CteAnalytics.fitvalsTable(coeffs, latestEpoch).orderBy("logflux"),
-      s"$outDir/${targname}_fitvals")
+    def write(artifact: String, df: DataFrame, orderBy: String*): Unit =
+      TsvTables.write(df, s"$outDir/${targname}_$artifact", orderBy: _*)
+    CtePipeline.concurrently(spark, Seq(
+      // the slopes file keeps computeSlopes' column order, not the table's
+      () => write("slopes",
+        results.select("imagename_1", "imagename_2", "aperture", "bin_lo",
+          "bin_hi", "slope", "slopestdev", "numpoints", "slopefile",
+          "slopefile_path", "targname"),
+        "imagename_1", "imagename_2", "aperture", "bin_lo", "bin_hi"),
+      () => {
+        val fit = CteAnalytics.polyfitByTarget(rows)
+        val coeffs = spark.createDataFrame(
+          java.util.Arrays.asList(fit.collect(): _*), fit.schema)
+        write("coeffs", coeffs)
+        // Latest combined epoch — "Users should be using coefficients
+        // from the latest epoch" (uvis_external_cte_plots.py:612-613);
+        // the cohorts are a driver-side local relation, so this collect
+        // runs no job.
+        val latestEpoch = cohorts.collect().map(_.getAs[Double]("epoch")).max
+        write("fitvals", CteAnalytics.fitvalsTable(coeffs, latestEpoch),
+          "logflux")
+      },
+      () => write("coeffs_history", CteAnalytics.polyfitHistory(rows),
+        "targname", "as_of_epoch"),
+      () => write("fluxratios",
+        CteAnalytics.clippedRatios(table("phot"), fileinfo, targname),
+        "imagename_1", "imagename_2", "aperture", "bin_lo", "bin_hi",
+        "master_id"),
+      () => write("cteVStime", CteAnalytics.cteVsTime(results, fileinfo),
+        "aperture", "mjd", "fluxbin"),
+      () => write("cteVSflashlvl",
+        CteAnalytics.cteVsFlashlvl(results, fileinfo, targname, cohorts),
+        "aperture", "fluxbin", "epoch", "flashlvl", "imagename_1")))
   }
 
   /** Render the reference's flux-ratio-vs-ypos slope figures (S7): one
@@ -275,5 +282,42 @@ class CtePipeline(spark: SparkSession, warehouse: String) {
     publish(targname, outDir)
     publishPlots(targname, outDir)
     publishCteVsTimePlot(targname, outDir)
+  }
+}
+
+object CtePipeline {
+
+  /** Run `steps` at the same time, one daemon thread each, and return
+    * when all of them have finished. Every step runs under the caller's
+    * Spark context: its local properties (job group, scheduler pool,
+    * job description), its active session and so its SQL conf
+    * (`SQLExecution.withThreadLocalCaptured`). A Spark action in a step
+    * is an ordinary job, so the steps' jobs share the executors as the
+    * scheduler allows. Once every step has ended, the error of the first
+    * failed step (in `steps` order) is rethrown with the other steps'
+    * errors attached as suppressed; no pool thread outlives the call. */
+  private[cte] def concurrently(spark: SparkSession,
+                                steps: Seq[() => Unit]): Unit = {
+    val pool = Executors.newFixedThreadPool(steps.size, { (r: Runnable) =>
+      val t = new Thread(r, "cte-publish")
+      t.setDaemon(true)
+      t
+    })
+    try {
+      val session = spark.asInstanceOf[classic.SparkSession]
+      val running = steps.map(step =>
+        SQLExecution.withThreadLocalCaptured(session, pool)(step()))
+      val errors = running.flatMap { f =>
+        try { f.join(); None }
+        catch { case e: CompletionException => Some(e.getCause) }
+      }
+      errors.headOption.foreach { first =>
+        errors.tail.foreach(first.addSuppressed)
+        throw first
+      }
+    } finally {
+      pool.shutdown()
+      pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+    }
   }
 }

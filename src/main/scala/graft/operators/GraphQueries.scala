@@ -731,32 +731,35 @@ object GraphQueries extends QueryPack {
     "gr4_sssp"      -> ((s, d) => gr4Build(s, d)._1),
     "gr5_kcore"     -> ((s, d) => gr5Build(s, d)._1))
 
+  // Each round's CTEs are referenced several times by the next round, so
+  // they carry the MATERIALIZED hints of the fixpoint oracles (gr7Sql).
   private val gr5Sql = {
     val rounds = (1 to peelRounds).map { i =>
-      s"""dg$i AS (SELECT src, count(*) AS c FROM e${i - 1} GROUP BY src),
-         |k$i AS (
+      s"""dg$i AS MATERIALIZED (
+         |  SELECT src, count(*) AS c FROM e${i - 1} GROUP BY src),
+         |k$i AS MATERIALIZED (
          |  SELECT n.node FROM n${i - 1} n
          |  JOIN dg$i d ON d.src = n.node AND d.c >= $coreK),
          |r$i AS (
          |  SELECT CAST($i AS BIGINT) AS round,
          |         (SELECT count(*) FROM n${i - 1})
          |           - (SELECT count(*) FROM k$i) AS n_nodes),
-         |e$i AS (
+         |e$i AS MATERIALIZED (
          |  SELECT e.src, e.dst FROM e${i - 1} e
          |  JOIN k$i a ON e.src = a.node
          |  JOIN k$i b ON e.dst = b.node),
-         |n$i AS (SELECT node FROM k$i)""".stripMargin
+         |n$i AS MATERIALIZED (SELECT node FROM k$i)""".stripMargin
     }.mkString(",\n")
     s"""WITH ${Dedup.d4Ctes},
        |pairs AS (
        |  SELECT doc_a AS u, doc_b AS v FROM j
        |  WHERE CAST(inter AS DOUBLE)/CAST(na + nb - inter AS DOUBLE)
        |    >= ${Dedup.jacThreshold}),
-       |e0 AS (
+       |e0 AS MATERIALIZED (
        |  SELECT u AS src, v AS dst FROM pairs
        |  UNION ALL
        |  SELECT v AS src, u AS dst FROM pairs),
-       |n0 AS (SELECT DISTINCT src AS node FROM e0),
+       |n0 AS MATERIALIZED (SELECT DISTINCT src AS node FROM e0),
        |$rounds
        |SELECT round, n_nodes FROM (
        |  ${(1 to peelRounds).map(i => s"SELECT * FROM r$i").mkString("\n  UNION ALL ")}

@@ -46,16 +46,17 @@ object TsvTables {
       .schema(schema)
       .csv(path)
 
-  /** Write a headered TSV. `single = true` coalesces to one file for the
-    * reference's one-file-per-artifact layout (fine for small derived
-    * tables; large tables keep their parallelism). */
-  def write(df: DataFrame, path: String, single: Boolean = true): Unit = {
-    val out = if (single) df.coalesce(1) else df
-    out.write.mode("overwrite")
+  /** Write a headered TSV as one `part-` file — the reference's
+    * one-file-per-artifact layout, for dimension-sized derived tables —
+    * with its rows in `orderBy` order. One task writes the file either
+    * way, so the rows are sorted inside that task: a global sort would
+    * only add a range-sampling job and a range exchange. */
+  def write(df: DataFrame, path: String, orderBy: String*): Unit =
+    df.coalesce(1).sortWithinPartitions(orderBy.map(col): _*)
+      .write.mode("overwrite")
       .option("sep", "\t")
       .option("header", "true")
       .csv(path)
-  }
 
   // ---- IRAF DAOphot dialect (database_update.py:481-509, A11) ----
 

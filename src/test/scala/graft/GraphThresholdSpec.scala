@@ -1,10 +1,13 @@
 package graft
 
 import java.util.UUID
-import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicBoolean
 
+import scala.jdk.CollectionConverters._
+
 import graft.operators.Graph
+import org.apache.spark.rdd.RDD
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -30,11 +33,18 @@ class GraphThresholdSpec extends SparkSpecBase {
       .unionByName(e.select(col("v").as("src"), col("u").as("dst")))
   }
 
-  /** The sorted rows of `run` and whether it ran a single-task kernel. */
-  private def observe(run: => DataFrame): (Seq[(Long, Long)], Boolean) = {
+  /** The sorted rows of `run`, whether it ran a single-task kernel, and
+    * how many persisted RDDs its jobs read or built that are still
+    * persisted once the caller has released the result. The listener
+    * keeps a strong reference to every persisted RDD of the call's jobs:
+    * an RDD the kernel dropped without unpersisting is then still
+    * counted, instead of being garbage collected (and freed by the
+    * ContextCleaner) at a time no test controls. */
+  private def observe(run: => DataFrame): (Seq[(Long, Long)], Boolean, Int) = {
     val sc = spark.sparkContext
     val group = s"graph-threshold-${UUID.randomUUID()}"
     val single = new AtomicBoolean(false)
+    val touched = new ConcurrentHashMap[Int, RDD[_]]()
     val drained = new CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
@@ -42,9 +52,14 @@ class GraphThresholdSpec extends SparkSpecBase {
             .exists(_.getProperty("spark.jobGroup.id") == group)) {
           if (e.properties.getProperty("spark.job.description") == "drain")
             drained.countDown()
-          else if (e.stageInfos.exists(s => s.numTasks == 1 &&
-              s.rddInfos.exists(_.name == "CoalescedRDD")))
-            single.set(true)
+          else {
+            if (e.stageInfos.exists(s => s.numTasks == 1 &&
+                s.rddInfos.exists(_.name == "CoalescedRDD")))
+              single.set(true)
+            val persisted = sc.getPersistentRDDs
+            e.stageInfos.flatMap(_.rddInfos).foreach(i =>
+              persisted.get(i.id).foreach(touched.put(i.id, _)))
+          }
         }
     }
     sc.addSparkListener(listener)
@@ -63,7 +78,7 @@ class GraphThresholdSpec extends SparkSpecBase {
     }
     val rows = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
     Graph.release(df)
-    (rows, single.get)
+    (rows, single.get, touched.values.asScala.count(_.getStorageLevel.isValid))
   }
 
   private val path6 = (0L until 6L).map(i => (i, i + 1))
@@ -109,11 +124,23 @@ class GraphThresholdSpec extends SparkSpecBase {
 
   for ((name, n, run) <- kernels)
     test(s"$name: threshold n runs one task, n - 1 the loop, same rows") {
-      val (atN, localAtN) = observe(run(n))
-      val (below, localBelow) = observe(run(n - 1))
+      val (atN, localAtN, _) = observe(run(n))
+      val (below, localBelow, _) = observe(run(n - 1))
       assert(localAtN, s"$name at threshold $n did not run the single task")
       assert(!localBelow, s"$name at threshold ${n - 1} ran the single task")
       assert(atN.nonEmpty)
       assert(atN == below, s"single task $atN != distributed $below")
+    }
+
+  // The distributed loops persist and localCheckpoint their state; once
+  // the caller releases the result, none of it may stay persisted. The
+  // bound is GraphSpec's rate bound: a leak of one RDD per run reaches
+  // `runs`.
+  for ((name, n, run) <- kernels)
+    test(s"$name: the distributed loop releases its storage") {
+      val runs = 4
+      val retained = (1 to runs).map(_ => observe(run(n - 1))._3).sum
+      assert(retained < runs,
+        s"$name left $retained persisted RDDs over $runs runs")
     }
 }

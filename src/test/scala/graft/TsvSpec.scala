@@ -39,6 +39,24 @@ class TsvSpec extends SparkSpecBase {
     assert(back(1).getInt(2) == 43)
   }
 
+  test("write sorts a multi-partition input into one part file in key order") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_tsv_sorted").toString + "/t"
+    // 60 rows in reverse key order, spread over 4 partitions
+    val df = spark.sparkContext
+      .parallelize((0 until 60).reverse.map(i => (i / 10, i % 10, s"r$i")), 4)
+      .toDF("a", "b", "name")
+    assert(df.rdd.getNumPartitions == 4)
+    TsvTables.write(df, dir, "a", "b")
+    val parts = new java.io.File(dir).listFiles()
+      .filter(_.getName.startsWith("part-"))
+    assert(parts.length == 1)
+    val lines = Files.readAllLines(parts.head.toPath)
+    assert(lines.get(0) == "a\tb\tname")
+    assert(lines.subList(1, lines.size).toArray.toSeq ==
+      (0 until 60).map(i => s"${i / 10}\t${i % 10}\tr$i"))
+  }
+
   /** A 2-star, 2-aperture IRAF DAOphot .mag fixture in the public phot
     * output layout: #K/#N/#U/#F header blocks, records spanning
     * continuation lines, the RAPERT block repeated per aperture, INDEF
