@@ -1,4 +1,5 @@
 package graft
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -25,25 +26,16 @@ object Verify {
       }
       spark.catalog.clearCache() // drop query-local persisted tables
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // Restrict the oracle dump to the queries actually run: with `only`
     // set, writing ALL oracles would make tools/check.py report spurious
     // missing-parquet FAILs for every unrun query.
-    val json = SparkEntry.oracleSql
+    val mapper = new ObjectMapper()
+    val json = mapper.createObjectNode()
+    SparkEntry.oracleSql
       .filter { case (name, _) => only.isEmpty || only(name) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+      .foreach { case (k, v) => json.put(k, v) }
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      mapper.writeValueAsString(json))
     spark.stop()
   }
 }

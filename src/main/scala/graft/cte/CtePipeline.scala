@@ -1,6 +1,6 @@
 package graft.cte
 
-import java.util.concurrent.{CompletionException, Executors, TimeUnit}
+import java.util.concurrent.{CompletionException, ConcurrentLinkedQueue, Executors}
 
 import graft.sources.{MergeWriter, TsvTables}
 import org.apache.spark.sql.{classic, DataFrame, SparkSession}
@@ -298,9 +298,11 @@ object CtePipeline {
     * errors attached as suppressed; no pool thread outlives the call. */
   private[cte] def concurrently(spark: SparkSession,
                                 steps: Seq[() => Unit]): Unit = {
+    val threads = new ConcurrentLinkedQueue[Thread]()
     val pool = Executors.newFixedThreadPool(steps.size, { (r: Runnable) =>
       val t = new Thread(r, "cte-publish")
       t.setDaemon(true)
+      threads.add(t)
       t
     })
     try {
@@ -316,8 +318,10 @@ object CtePipeline {
         throw first
       }
     } finally {
+      // awaitTermination can return while a worker is still exiting;
+      // joining every worker is what ends them all before the return
       pool.shutdown()
-      pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+      threads.forEach(_.join())
     }
   }
 }

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.functions.{DotProduct, KMeans}
-import graft.sources.MergeWriter
+import graft.sources.{MergeWriter, Warehouse}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -61,21 +61,15 @@ object IvfPqIndex {
   private val layoutTag = "L2"
 
   /** Deterministic per-corpus index location under java.io.tmpdir,
-    * keyed by [[layoutTag]] + [[fingerprint]] so the directory name IS
+    * keyed by [[layoutTag]] + the source's content fingerprint
+    * ([[graft.sources.Warehouse.contentTag]]) so the directory name IS
     * the cache key. */
   def indexDir(dir: String): String =
     s"${sys.props("java.io.tmpdir")}/graft_ivfpq_${layoutTag}_" +
-      fingerprint(sourceFile(dir))
+      Warehouse.contentTag(sourceFile(dir))
 
   private def sourceFile(dir: String) =
     new java.io.File(dir, "embeddings.parquet")
-
-  /** md5 over every data file's (name, length, footer tail) — the shared
-    * [[graft.sources.Warehouse.contentTag]] content key: O(#files) at
-    * any corpus size, and the parquet footer's row-group statistics
-    * change whenever the data does. */
-  private def fingerprint(src: java.io.File): String =
-    graft.sources.Warehouse.contentTag(src)
 
   private def marker(path: String) = new java.io.File(path, "_INDEX_SUCCESS")
   /** Records which corpus a fingerprint dir serves, so promote can GC
@@ -110,12 +104,12 @@ object IvfPqIndex {
         try {
           if (!marker(path).exists()) { // the other process may have built
             val scratch = path + ".build"
-            rmTree(new java.io.File(scratch)) // leftover of a crashed build
+            Warehouse.rmTree(new java.io.File(scratch)) // leftover of a crashed build
             build(spark, dir, scratch)
             java.nio.file.Files.writeString(
               new java.io.File(scratch, "_SOURCE").toPath,
               sourceFile(dir).getAbsolutePath)
-            rmTree(new java.io.File(path)) // stale partial (pre-lock crash)
+            Warehouse.rmTree(new java.io.File(path)) // stale partial (pre-lock crash)
             // single atomic rename = the promote: readers see nothing or
             // a complete, marker-bearing index
             if (!new java.io.File(scratch).renameTo(new java.io.File(path)))
@@ -148,17 +142,12 @@ object IvfPqIndex {
         catch { case _: java.io.IOException => false }
       }
       .foreach { f =>
-        rmTree(f)
+        Warehouse.rmTree(f)
         // the .lock file is deliberately NOT deleted: FileChannel locks
         // are bound to the inode, and recreating the file would let two
         // late builders hold "the" lock on different inodes — an
         // inode-sized leak buys keeping mutual exclusion sound
       }
-  }
-
-  private def rmTree(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(rmTree)
-    f.delete(): Unit
   }
 
   /** (vec_id, embedding) → one long frame of the pqM subspace slices —
@@ -174,7 +163,7 @@ object IvfPqIndex {
                            path: String): Unit = {
     val root = new java.io.File(path)
     // no marker = unknown partial state from a crashed build: start clean
-    if (root.exists()) rmTree(root)
+    Warehouse.rmTree(root)
     val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")
 
     // Coarse quantizer: v8's shape — train on the deterministic sample

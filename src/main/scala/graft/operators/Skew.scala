@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Exact, QueryPack, Tables}
+import graft.sources.Warehouse
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -244,36 +245,19 @@ object Skew extends QueryPack {
   private[operators] val bucketCount = 16
 
   /** Bucketed warehouse copies of orders+lineitem for `dir`, built once
-    * per session per corpus (re-built per JVM: bucket metadata lives in
-    * the session catalog, and the write is a one-time scan, the same
-    * amortization as IvfPqIndex). Returns (ordersTable, lineitemTable). */
+    * per corpus through [[Warehouse.derived]] (and once per JVM: bucket
+    * metadata lives in the session catalog; the write is a one-time
+    * scan, the same amortization as IvfPqIndex). Returns (ordersTable,
+    * lineitemTable). */
   def ensureBucketedTables(s: SparkSession, dir: String): (String, String) = {
-    val names = Seq("orders" -> "o_orderkey", "lineitem" -> "l_orderkey")
-      .map { case (t, k) =>
-        val name = s"graft_bkt_${t}_${graft.sources.Warehouse.dirTag(dir)}"
-        val srcFile = new java.io.File(dir, s"$t.parquet")
-        // a bucketed copy left by THIS JVM over a regenerated corpus
-        // would serve stale rows — the content tag catches it (a fresh
-        // JVM rebuilds anyway: bucket metadata lives in the catalog)
-        if (s.catalog.tableExists(name) &&
-            !graft.sources.Warehouse.sourceTagCurrent(s, name, srcFile))
-          s.sql(s"DROP TABLE IF EXISTS $name")
-        if (!s.catalog.tableExists(name)) {
-          // A fresh session catalog can't adopt a previous JVM's managed
-          // location (bucket metadata lives in the catalog, not the
-          // files), and saveAsTable refuses to reuse it — drop the stale
-          // derived cache and rebuild from the source parquet.
-          graft.sources.Warehouse.dropStaleLocation(s, name)
-          val src = if (t == "orders") Tables.orders(s, dir)
-                    else Tables.lineitem(s, dir)
-          src.write.format("parquet")
-            .bucketBy(bucketCount, k).sortBy(k)
-            .mode("overwrite").saveAsTable(name)
-          graft.sources.Warehouse.recordSourceTag(s, name, srcFile)
-        }
-        name
+    def bucketed(t: String, key: String): String =
+      Warehouse.derived(s, s"graft_bkt_${t}_${Warehouse.dirTag(dir)}",
+          new java.io.File(dir, s"$t.parquet")) { name =>
+        Tables.load(s, dir, t).write.format("parquet")
+          .bucketBy(bucketCount, key).sortBy(key)
+          .mode("overwrite").saveAsTable(name)
       }
-    (names(0), names(1))
+    (bucketed("orders", "o_orderkey"), bucketed("lineitem", "l_orderkey"))
   }
 
   private val x4BucketedJoin: Q = (s, dir) => {

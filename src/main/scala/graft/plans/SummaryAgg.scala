@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Cast, Coalesce, Divide, EvalMode, Expression, Literal, NamedExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, Count, Max, Min, Sum}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Project}
@@ -45,154 +45,143 @@ import graft.sources.Warehouse
   */
 object SummaryAgg {
 
-  /** A registered summary: resolved relation + column mappings. */
-  private[plans] case class Mv(rel: LogicalRelation, basePath: String,
-                               grain: Set[String],
-                               sums: Map[String, String], cnt: String,
-                               mins: Map[String, String] = Map.empty,
-                               maxs: Map[String, String] = Map.empty)
+  /** One summary table over the corpus fact `base`: grouped by `grain`,
+    * it holds the row count `cnt`, the exact-decimal `sum_<m>` of every
+    * measure m, then `min_<m>`, `max_<m>` per measure, in that column
+    * order. The build, the IVM delta and merge, and the rewrite rule's
+    * column lookups all derive from this one declaration. */
+  private[plans] case class Summary(base: String, grain: Seq[String],
+                                    measures: Seq[String]) {
+    import org.apache.spark.sql.functions.{col, count, lit, max, min, sum}
+
+    // v2: schema grew min/max columns. Versioning the name (instead of
+    // migrating in place) means a summary built by an older JVM in the
+    // shared warehouse dir can never be half-served with missing columns.
+    def table(dir: String): String =
+      s"graft_mv2_${base}_${Warehouse.dirTag(dir)}"
+
+    def source(dir: String): java.io.File =
+      new java.io.File(dir, s"$base.parquet")
+
+    /** The summary column holding `kind` ("sum", "min" or "max") of base
+      * column `m`, when `m` is a measure. */
+    def column(kind: String, m: String): Option[String] =
+      Option.when(measures.contains(m))(named(kind, m))
+
+    private def named(kind: String, m: String): String = s"${kind}_$m"
+
+    /** Base rows aggregated to the grain: the build and the IVM delta. */
+    def aggregate(rows: DataFrame): DataFrame =
+      atGrain(rows, count(lit(1)).as(cnt),
+        m => sum(graft.Exact.dec2(col(m))), (_, m) => m)
+
+    /** Summary rows re-aggregated to the grain: the IVM merge. Count and
+      * decimal sum are self-merging (cast back to the build's types);
+      * min/max fold as min-of-mins / max-of-maxs, which is sound for
+      * APPEND deltas only (none of this sink's callers delete). */
+    def merge(rows: DataFrame): DataFrame =
+      atGrain(rows, sum(col(cnt)).cast(LongType).as(cnt),
+        m => sum(col(named("sum", m))).cast(DecimalType(28, 2)), named)
+
+    private def atGrain(rows: DataFrame, rowCount: Column,
+                        sumOf: String => Column,
+                        extremeOf: (String, String) => String): DataFrame = {
+      val sums = measures.map(m => sumOf(m).as(named("sum", m)))
+      val extremes = measures.flatMap(m => Seq(
+        min(extremeOf("min", m)).as(named("min", m)),
+        max(extremeOf("max", m)).as(named("max", m))))
+      rows.groupBy(grain.map(col): _*).agg(rowCount, sums ++ extremes: _*)
+    }
+  }
+
+  private[plans] val cnt = "cnt"
+
+  /** The lineitem daily-ops summary, the one [[appendLineitemDelta]]
+    * maintains incrementally. */
+  private val lineitem = Summary("lineitem",
+    Seq("l_returnflag", "l_linestatus"),
+    Seq("l_quantity", "l_extendedprice", "l_discount"))
+
+  /** A second summary over a DIFFERENT base table: the rule's registry
+    * is keyed by base path, so grain tables for any number of facts
+    * coexist and each covered Aggregate is served from its own.
+    * Serve-only: no IVM path. */
+  private val orders = Summary("orders",
+    Seq("o_orderpriority", "o_orderstatus"), Seq("o_totalprice"))
+
+  /** A registered summary: its resolved relation and declaration. */
+  private[plans] case class Mv(rel: LogicalRelation, sm: Summary)
 
   private val registry =
     new java.util.concurrent.ConcurrentHashMap[String, Mv]()
 
-  /** Register `mvTable` (already built) as the summary of the base
-    * parquet at `basePath` with the given grain, `sums` mapping base
-    * measure column → summary sum column, and `cnt` the row-count
-    * column. The relation is resolved eagerly so the optimizer rule
-    * never triggers nested analysis. */
-  def register(spark: SparkSession, basePath: String, mvTable: String,
-               grain: Seq[String], sums: Map[String, String],
-               cnt: String, mins: Map[String, String] = Map.empty,
-               maxs: Map[String, String] = Map.empty): Unit = {
-    val rel = spark.table(mvTable).queryExecution.analyzed
+  /** Register the built table `name` as the summary `sm` of `dir`'s
+    * base. The relation is resolved eagerly so the optimizer rule never
+    * triggers nested analysis. */
+  private def register(s: SparkSession, dir: String, sm: Summary,
+                       name: String): Unit = {
+    val rel = s.table(name).queryExecution.analyzed
       .collectFirst { case r: LogicalRelation => r }
-      .getOrElse(sys.error(s"$mvTable did not resolve to a file relation"))
-    registry.put(new java.io.File(basePath).getAbsolutePath,
-      Mv(rel, basePath, grain.toSet, sums, cnt, mins, maxs)): Unit
+      .getOrElse(sys.error(s"$name did not resolve to a file relation"))
+    registry.put(sm.source(dir).getAbsolutePath, Mv(rel, sm)): Unit
   }
 
   private[plans] def find(path: String): Option[Mv] =
     Option(registry.get(path))
 
-  /** The lineitem daily-ops summary: grain (l_returnflag, l_linestatus),
-    * exact-decimal sums of the three measure columns plus the row count.
-    * Built once per corpus into the warehouse, then registered so the
-    * rewrite rule can serve matching aggregates from it.
+  /** The lineitem summary of `dir`, built once per corpus into the
+    * warehouse and registered so the rewrite rule serves matching
+    * aggregates from it.
     *
-    * Staleness: the FIRST ensure in a JVM compares the base fact's
-    * content tag (parquet footer digest, [[graft.sources.Warehouse]])
-    * against the tag recorded at build time — a summary left by an older
-    * JVM over a REGENERATED corpus is dropped and rebuilt rather than
-    * silently served through the rewrite. Within a live session the tag
-    * is not re-checked: incremental appends legitimately move the
-    * summary ahead of the base files, and the base is still the source
-    * of truth for any later rebuild. A rebuild sweeps the applied-batch
-    * marker history (the deltas are either in the rebuilt base or gone
-    * with the regeneration); maintenance streams must restart from a
-    * fresh checkpoint after a base regeneration, the standard contract
-    * for rebuilding a downstream sink. */
-  def ensureLineitemSummary(s: SparkSession, dir: String): String = {
-    import org.apache.spark.sql.functions._
-    // v2: schema grew min/max columns. Versioning the name (instead of
-    // migrating in place) means a summary built by an older JVM in the
-    // shared warehouse dir can never be half-served with missing columns.
-    val name = s"graft_mv2_lineitem_${Warehouse.dirTag(dir)}"
-    val mon = appendMonitors.computeIfAbsent(name, _ => new Object)
-    mon.synchronized {
-      val src = new java.io.File(dir, "lineitem.parquet")
-      val stale = !checkedFresh.contains(name) &&
-        s.catalog.tableExists(name) &&
-        !Warehouse.sourceTagCurrent(s, name, src)
-      if (stale) {
-        s.sql(s"DROP TABLE IF EXISTS $name")
-        sweepMarkers(s, name)
-      }
-      if (!s.catalog.tableExists(name)) {
-        Warehouse.dropStaleLocation(s, name)
-        sweepMarkers(s, name)
-        graft.Tables.lineitem(s, dir)
-          .groupBy("l_returnflag", "l_linestatus")
-          .agg(
-            count(lit(1)).as("cnt"),
-            sum(graft.Exact.dec2(col("l_quantity"))).as("sum_l_quantity"),
-            sum(graft.Exact.dec2(col("l_extendedprice")))
-              .as("sum_l_extendedprice"),
-            sum(graft.Exact.dec2(col("l_discount"))).as("sum_l_discount"),
-            min(col("l_quantity")).as("min_l_quantity"),
-            max(col("l_quantity")).as("max_l_quantity"),
-            min(col("l_extendedprice")).as("min_l_extendedprice"),
-            max(col("l_extendedprice")).as("max_l_extendedprice"),
-            min(col("l_discount")).as("min_l_discount"),
-            max(col("l_discount")).as("max_l_discount"))
-          .write.format("parquet").mode("overwrite").saveAsTable(name)
-        Warehouse.recordSourceTag(s, name, src)
-      }
-      checkedFresh.add(name)
-      registerLineitem(s, dir, name)
-    }
-    name
-  }
+    * Staleness: the content tag is checked on the FIRST ensure in this
+    * JVM only; after that the summary is trusted. The reason is the IVM
+    * path: [[appendLineitemDelta]] folds a delta into the summary that
+    * its caller also appends to the base fact, before or after the fold.
+    * A re-check would see the grown base, rebuild the summary from it,
+    * and the fold would then count the delta a second time. A summary
+    * left by an older JVM is not in this JVM's session catalog, so
+    * [[Warehouse.derived]] sweeps its location and rebuilds it. A
+    * rebuild sweeps the applied-batch marker history; maintenance
+    * streams must restart from a fresh checkpoint after a base
+    * regeneration, the standard contract for rebuilding a downstream
+    * sink. */
+  def ensureLineitemSummary(s: SparkSession, dir: String): String =
+    ensure(s, dir, lineitem, trust = true)
 
-  private val checkedFresh =
+  /** The orders summary of `dir`. Nothing folds deltas into it, so every
+    * ensure checks its content tag, as for the other derived tables. */
+  def ensureOrdersSummary(s: SparkSession, dir: String): String =
+    ensure(s, dir, orders, trust = false)
+
+  /** Summaries whose tag was checked once in this JVM and which are
+    * trusted from then on (see [[ensureLineitemSummary]]). */
+  private val trusted =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  private def sweepMarkers(s: SparkSession, name: String): Unit = {
-    val wh = new java.io.File(
-      new java.net.URI(s.conf.get("spark.sql.warehouse.dir")).getPath)
-    Option(wh.listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.startsWith(s"${name}_applied_"))
-      .foreach(_.delete())
-  }
-
-  /** A second registered summary over a DIFFERENT base table: the rule's
-    * registry is keyed by base path, so grain tables for any number of
-    * facts coexist and each covered Aggregate is served from its own.
-    * Serve-only (no IVM path — the lineitem summary demonstrates that);
-    * the same content-tag staleness rule governs rebuilds. */
-  def ensureOrdersSummary(s: SparkSession, dir: String): String = {
-    import org.apache.spark.sql.functions._
-    val name = s"graft_mv2_orders_${Warehouse.dirTag(dir)}"
-    val mon = appendMonitors.computeIfAbsent(name, _ => new Object)
-    mon.synchronized {
-      val src = new java.io.File(dir, "orders.parquet")
-      val stale = !checkedFresh.contains(name) &&
-        s.catalog.tableExists(name) &&
-        !Warehouse.sourceTagCurrent(s, name, src)
-      if (stale) s.sql(s"DROP TABLE IF EXISTS $name")
-      if (!s.catalog.tableExists(name)) {
-        Warehouse.dropStaleLocation(s, name)
-        graft.Tables.orders(s, dir)
-          .groupBy("o_orderpriority", "o_orderstatus")
-          .agg(
-            count(lit(1)).as("cnt"),
-            sum(graft.Exact.dec2(col("o_totalprice"))).as("sum_o_totalprice"),
-            min(col("o_totalprice")).as("min_o_totalprice"),
-            max(col("o_totalprice")).as("max_o_totalprice"))
-          .write.format("parquet").mode("overwrite").saveAsTable(name)
-        Warehouse.recordSourceTag(s, name, src)
+  private def ensure(s: SparkSession, dir: String, sm: Summary,
+                     trust: Boolean): String = {
+    val name = sm.table(dir)
+    Warehouse.monitor(name).synchronized {
+      Warehouse.derived(s, name, sm.source(dir),
+          checkTag = !trusted.contains(name)) { n =>
+        // a rebuild must read the base: while the dropped summary is
+        // still registered, the rule would rewrite this very aggregate
+        // onto it
+        registry.remove(sm.source(dir).getAbsolutePath)
+        sweepMarkers(s, n)
+        sm.aggregate(graft.Tables.load(s, dir, sm.base))
+          .write.format("parquet").mode("overwrite").saveAsTable(n)
       }
-      checkedFresh.add(name)
-      register(s, s"$dir/orders.parquet", name,
-        grain = Seq("o_orderpriority", "o_orderstatus"),
-        sums = Map("o_totalprice" -> "sum_o_totalprice"),
-        cnt = "cnt",
-        mins = Map("o_totalprice" -> "min_o_totalprice"),
-        maxs = Map("o_totalprice" -> "max_o_totalprice"))
+      if (trust) trusted.add(name)
+      register(s, dir, sm, name)
     }
     name
   }
 
-  private val measureCols =
-    Seq("l_quantity", "l_extendedprice", "l_discount")
-
-  private def registerLineitem(s: SparkSession, dir: String,
-                               name: String): Unit =
-    register(s, s"$dir/lineitem.parquet", name,
-      grain = Seq("l_returnflag", "l_linestatus"),
-      sums = measureCols.map(c => c -> s"sum_$c").toMap,
-      cnt = "cnt",
-      mins = measureCols.map(c => c -> s"min_$c").toMap,
-      maxs = measureCols.map(c => c -> s"max_$c").toMap)
+  private def sweepMarkers(s: SparkSession, name: String): Unit =
+    Option(Warehouse.dir(s).listFiles()).getOrElse(Array.empty)
+      .filter(_.getName.startsWith(s"${name}_applied_"))
+      .foreach(_.delete())
 
   /** Incremental view maintenance: fold a delta batch of fact rows into
     * the summary WITHOUT rescanning the fact. The delta aggregates at
@@ -211,80 +200,44 @@ object SummaryAgg {
     * (the maintenance sink id, or "adhoc"): batch ids are only unique
     * within ONE streaming checkpoint, and an unscoped marker would let a
     * second stream's batch 0 silently skip behind the first's. */
-  private val appendMonitors =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
   def appendLineitemDelta(s: SparkSession, dir: String,
-                          delta: org.apache.spark.sql.DataFrame,
+                          delta: DataFrame,
                           batchId: Option[Long] = None,
                           scope: String = "adhoc"): Unit = {
-    val name = s"graft_mv2_lineitem_${Warehouse.dirTag(dir)}"
+    val name = lineitem.table(dir)
     // read–merge–overwrite is lost-update-prone: two concurrent appends
     // (a maintain() stream plus an ad-hoc batch, or two streams) could
     // both read the same base state and the second overwrite would drop
-    // the first delta. A per-table monitor serializes writers in this
-    // JVM — ensure runs INSIDE it so two first-ever appends cannot race
-    // the build either; across processes the single-writer assumption is
-    // MergeWriter's documented contract (SQLite-equivalent in the
-    // reference), which this sink inherits.
-    val mon = appendMonitors.computeIfAbsent(name, _ => new Object)
-    mon.synchronized {
+    // the first delta. The table's Warehouse monitor serializes writers
+    // in this JVM — ensure runs INSIDE it so two first-ever appends
+    // cannot race the build either; across processes the single-writer
+    // assumption is MergeWriter's documented contract (SQLite-equivalent
+    // in the reference), which this sink inherits.
+    Warehouse.monitor(name).synchronized {
       ensureLineitemSummary(s, dir) // reentrant: same monitor
       appendLocked(s, dir, name, delta, batchId, scope)
     }
   }
 
   private def appendLocked(s: SparkSession, dir: String, name: String,
-                           delta: org.apache.spark.sql.DataFrame,
+                           delta: DataFrame,
                            batchId: Option[Long], scope: String): Unit = {
-    import org.apache.spark.sql.functions._
     val safeScope = scope.replaceAll("[^A-Za-z0-9_-]", "_")
-    val mark = batchId.map(id => new java.io.File(
-      new java.net.URI(s.conf.get("spark.sql.warehouse.dir")).getPath,
+    val mark = batchId.map(id => new java.io.File(Warehouse.dir(s),
       s"${name}_applied_${safeScope}_$id"))
     if (mark.exists(_.exists())) return
-    val deltaAgg = delta
-      .groupBy("l_returnflag", "l_linestatus")
-      .agg(
-        count(lit(1)).as("cnt"),
-        sum(graft.Exact.dec2(col("l_quantity"))).as("sum_l_quantity"),
-        sum(graft.Exact.dec2(col("l_extendedprice")))
-          .as("sum_l_extendedprice"),
-        sum(graft.Exact.dec2(col("l_discount"))).as("sum_l_discount"),
-        min(col("l_quantity")).as("min_l_quantity"),
-        max(col("l_quantity")).as("max_l_quantity"),
-        min(col("l_extendedprice")).as("min_l_extendedprice"),
-        max(col("l_extendedprice")).as("max_l_extendedprice"),
-        min(col("l_discount")).as("min_l_discount"),
-        max(col("l_discount")).as("max_l_discount"))
-    val dec28 = DecimalType(28, 2)
-    // min/max fold with min-of-mins / max-of-maxs — sound for APPEND
-    // deltas only (count/sum/min/max are all insert-monotone; none of
-    // this sink's callers delete).
-    val merged = s.table(name).unionByName(deltaAgg)
-      .groupBy("l_returnflag", "l_linestatus")
-      .agg(
-        sum(col("cnt")).cast(LongType).as("cnt"),
-        sum(col("sum_l_quantity")).cast(dec28).as("sum_l_quantity"),
-        sum(col("sum_l_extendedprice")).cast(dec28)
-          .as("sum_l_extendedprice"),
-        sum(col("sum_l_discount")).cast(dec28).as("sum_l_discount"),
-        min(col("min_l_quantity")).as("min_l_quantity"),
-        max(col("max_l_quantity")).as("max_l_quantity"),
-        min(col("min_l_extendedprice")).as("min_l_extendedprice"),
-        max(col("max_l_extendedprice")).as("max_l_extendedprice"),
-        min(col("min_l_discount")).as("min_l_discount"),
-        max(col("max_l_discount")).as("max_l_discount"))
-      // the merge reads the table it is about to overwrite: truncate
-      // lineage so the write never re-scans the replaced files
-      .localCheckpoint(true)
+    val merged =
+      lineitem.merge(s.table(name).unionByName(lineitem.aggregate(delta)))
+        // the merge reads the table it is about to overwrite: truncate
+        // lineage so the write never re-scans the replaced files
+        .localCheckpoint(true)
     merged.write.format("parquet").mode("overwrite").saveAsTable(name)
     merged.unpersist(): Unit
     mark.foreach(_.createNewFile())
     // both the catalog's relation cache and the registered relation hold
     // the PRE-overwrite file listing — refresh, then re-resolve
     s.catalog.refreshTable(name)
-    registerLineitem(s, dir, name)
+    register(s, dir, lineitem, name)
   }
 
   /** Streaming maintenance: every micro-batch of fact rows folds into
@@ -293,7 +246,7 @@ object SummaryAgg {
     * across restarts of the SAME checkpoint (batch ids continue there)
     * and distinct between different maintenance streams (each restarts
     * its ids from 0 — an unscoped id would collide). */
-  def maintainLineitemSummary(deltas: org.apache.spark.sql.DataFrame,
+  def maintainLineitemSummary(deltas: DataFrame,
                               dir: String, sinkId: String)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     // fold using the stream-OWNING session, not the micro-batch clone:
@@ -301,7 +254,7 @@ object SummaryAgg {
     // would leave the owner still holding the pre-overwrite file listing
     val owner = deltas.sparkSession
     deltas.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+      .foreachBatch { (b: DataFrame, id: Long) =>
         if (!b.isEmpty)
           appendLineitemDelta(owner, dir, b, Some(id), scope = sinkId)
       }
@@ -345,7 +298,7 @@ object SummaryAggRewrite extends Rule[LogicalPlan] {
           case Seq(Literal(v, _)) if v != null =>
             // count over the base = sum of per-group counts; an empty
             // global aggregate must still yield 0, not sum's null
-            attr(mv.cnt).map(a => Coalesce(Seq(
+            attr(SummaryAgg.cnt).map(a => Coalesce(Seq(
               Sum(a).toAggregateExpression(), Literal(0L, LongType))))
           case _ => None
         }
@@ -354,7 +307,7 @@ object SummaryAggRewrite extends Rule[LogicalPlan] {
           case Cast(base: AttributeReference, dt: DecimalType, _, _)
               if dt == DecimalType(18, 2) =>
             for {
-              mvCol <- mv.sums.get(base.name)
+              mvCol <- mv.sm.column("sum", base.name)
               a <- attr(mvCol)
             } yield Cast(Sum(a).toAggregateExpression(), ae.dataType)
           case _ => None
@@ -365,14 +318,14 @@ object SummaryAggRewrite extends Rule[LogicalPlan] {
       case m: Min =>
         m.child match {
           case base: AttributeReference =>
-            for { mvCol <- mv.mins.get(base.name); a <- attr(mvCol) }
+            for { mvCol <- mv.sm.column("min", base.name); a <- attr(mvCol) }
               yield Min(a).toAggregateExpression()
           case _ => None
         }
       case m: Max =>
         m.child match {
           case base: AttributeReference =>
-            for { mvCol <- mv.maxs.get(base.name); a <- attr(mvCol) }
+            for { mvCol <- mv.sm.column("max", base.name); a <- attr(mvCol) }
               yield Max(a).toAggregateExpression()
           case _ => None
         }
@@ -391,9 +344,9 @@ object SummaryAggRewrite extends Rule[LogicalPlan] {
           case Cast(base: AttributeReference, dt: DecimalType, _, _)
               if dt == DecimalType(18, 2) =>
             for {
-              mvCol <- mv.sums.get(base.name)
+              mvCol <- mv.sm.column("sum", base.name)
               sumA <- attr(mvCol)
-              cntA <- attr(mv.cnt)
+              cntA <- attr(SummaryAgg.cnt)
             } yield {
               val sumAgg = Cast(Sum(sumA).toAggregateExpression(),
                 DecimalType(28, 2))
@@ -415,7 +368,7 @@ object SummaryAggRewrite extends Rule[LogicalPlan] {
       : Option[Expression] = e match {
     case ae: AggregateExpression => rewriteAgg(ae, mv, attr)
     case a: AttributeReference =>
-      if (mv.grain.contains(a.name)) attr(a.name) else None
+      if (mv.sm.grain.contains(a.name)) attr(a.name) else None
     case _ if e.deterministic =>
       val kids = e.children.map(rewriteExpr(_, mv, attr))
       if (kids.forall(_.isDefined)) Some(e.withNewChildren(kids.map(_.get)))
@@ -430,17 +383,17 @@ object SummaryAggRewrite extends Rule[LogicalPlan] {
       mv <- SummaryAgg.find(path)
       // every group key is a grain column; the filter touches grain only
       if agg.groupingExpressions.forall {
-        case a: AttributeReference => mv.grain.contains(a.name)
+        case a: AttributeReference => mv.sm.grain.contains(a.name)
         case _ => false
       }
       if cond.forall(c => c.deterministic && c.references.forall(a =>
-        mv.grain.contains(a.name)))
+        mv.sm.grain.contains(a.name)))
       mvRel = mv.rel.newInstance()
       mvAttr = (n: String) => mvRel.output.find(_.name == n)
       outs <- {
         val rewritten = agg.aggregateExpressions.map {
           case a: AttributeReference =>
-            mvAttr(a.name).filter(_ => mv.grain.contains(a.name))
+            mvAttr(a.name).filter(_ => mv.sm.grain.contains(a.name))
               .map(m => Alias(m, a.name)(exprId = a.exprId))
           case al @ Alias(child, name) =>
             rewriteExpr(child, mv, mvAttr)

@@ -2,10 +2,11 @@ package graft.sources
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared helpers for warehouse-managed derived tables (the bucketed
-  * join copies, the aggregate summaries): naming, stale-location
-  * cleanup, and a cheap content tag of the source parquet so a derived
-  * table can detect that its base was regenerated underneath it.
+/** The one build path for warehouse-managed tables derived from the
+  * corpus (the bucketed join copies, the Z-ordered lineitem, the
+  * aggregate summaries): naming, the per-table monitor, a cheap content
+  * tag of the source parquet so a derived table detects a base that was
+  * regenerated underneath it, and the stale-location sweep.
   */
 object Warehouse {
 
@@ -13,23 +14,56 @@ object Warehouse {
   def dirTag(dir: String): String =
     dir.replaceAll("[^A-Za-z0-9]", "_").toLowerCase
 
-  /** The managed location of table `name` under the session warehouse. */
-  def location(s: SparkSession, name: String): java.io.File =
-    new java.io.File(
-      new java.net.URI(s.conf.get("spark.sql.warehouse.dir")).getPath, name)
+  private val monitors =
+    new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
-  /** Recursively delete a stale managed location: a fresh session
-    * catalog cannot adopt a previous JVM's managed directory (metadata
-    * lives in the catalog, not the files) and saveAsTable refuses to
-    * reuse it — derived tables drop the orphan and rebuild. */
-  def dropStaleLocation(s: SparkSession, name: String): Unit = {
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete(): Unit
+  /** The JVM monitor that serializes every build and rewrite of the
+    * derived table `name`; reentrant, so a writer holding it may call
+    * [[derived]] for the same table. */
+  private[graft] def monitor(name: String): Object =
+    monitors.computeIfAbsent(name, _ => new Object)
+
+  /** Ensure the derived table `name` over the source parquet `src`
+    * exists and returns `name`. Under the table's [[monitor]]: when
+    * `checkTag` holds, a table whose recorded source tag no longer
+    * matches `src` is dropped; a missing table has its managed location
+    * swept, is built by `write(name)` (which must create it with
+    * `saveAsTable`), and gets the tag of `src` recorded. A table that
+    * exists and is current is left untouched. */
+  def derived(s: SparkSession, name: String, src: java.io.File,
+              checkTag: Boolean = true)(write: String => Unit): String =
+    monitor(name).synchronized {
+      if (checkTag && s.catalog.tableExists(name) &&
+          !sourceTagCurrent(s, name, src))
+        s.sql(s"DROP TABLE IF EXISTS $name")
+      if (!s.catalog.tableExists(name)) {
+        dropStaleLocation(s, name)
+        write(name)
+        java.nio.file.Files.writeString(tagFile(s, name).toPath,
+          contentTag(src))
+      }
+      name
     }
-    val loc = location(s, name)
-    if (loc.exists()) rm(loc)
+
+  /** The session warehouse directory. */
+  private[graft] def dir(s: SparkSession): java.io.File =
+    new java.io.File(
+      new java.net.URI(s.conf.get("spark.sql.warehouse.dir")).getPath)
+
+  private def location(s: SparkSession, name: String): java.io.File =
+    new java.io.File(dir(s), name)
+
+  /** Delete `f` and, for a directory, everything under it. */
+  private[graft] def rmTree(f: java.io.File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(rmTree))
+    f.delete(): Unit
   }
+
+  /** A fresh session catalog cannot adopt a previous JVM's managed
+    * directory (metadata lives in the catalog, not the files) and
+    * saveAsTable refuses to reuse it: drop the orphan before a build. */
+  private def dropStaleLocation(s: SparkSession, name: String): Unit =
+    rmTree(location(s, name))
 
   /** md5 over every data file's (name, length, footer tail) — the same
     * content key IvfPqIndex uses: reading the last 64 KiB keeps this
@@ -58,22 +92,16 @@ object Warehouse {
     md.digest.map("%02x".format(_)).mkString
   }
 
-  /** True when the recorded source tag for `name` matches the current
-    * content of `src`; records the current tag when asked. The tag file
-    * lives BESIDE the managed location (not inside it) so a table
-    * rebuild can't orphan it. */
-  def sourceTagCurrent(s: SparkSession, name: String,
-                      src: java.io.File): Boolean = {
+  /** True when the tag recorded for `name` matches the current content
+    * of `src`. The tag file lives BESIDE the managed location (not
+    * inside it) so a table rebuild can't orphan it. */
+  private def sourceTagCurrent(s: SparkSession, name: String,
+                               src: java.io.File): Boolean = {
     val f = tagFile(s, name)
     f.exists() &&
       (try java.nio.file.Files.readString(f.toPath) == contentTag(src)
        catch { case _: java.io.IOException => false })
   }
-
-  def recordSourceTag(s: SparkSession, name: String,
-                      src: java.io.File): Unit =
-    java.nio.file.Files.writeString(tagFile(s, name).toPath,
-      contentTag(src)): Unit
 
   private def tagFile(s: SparkSession, name: String): java.io.File =
     new java.io.File(location(s, name).getPath + ".__src__")

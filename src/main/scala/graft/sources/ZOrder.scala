@@ -75,23 +75,14 @@ object ZOrder {
   }
 
   /** The z-clustered warehouse copy of lineitem over (l_partkey,
-    * l_suppkey) — built once per corpus, content-tagged against the base
-    * fact exactly like the bucketed join copies, rebuilt when the corpus
-    * regenerates. */
-  def ensureZLineitem(s: SparkSession, dir: String): String = {
-    val name = s"graft_z_lineitem_${Warehouse.dirTag(dir)}"
-    val srcFile = new java.io.File(dir, "lineitem.parquet")
-    if (s.catalog.tableExists(name) &&
-        !Warehouse.sourceTagCurrent(s, name, srcFile))
-      s.sql(s"DROP TABLE IF EXISTS $name")
-    if (!s.catalog.tableExists(name)) {
-      Warehouse.dropStaleLocation(s, name)
+    * l_suppkey) — built once per corpus through [[Warehouse.derived]],
+    * rebuilt when the base fact's content tag moves. */
+  def ensureZLineitem(s: SparkSession, dir: String): String =
+    Warehouse.derived(s, s"graft_z_lineitem_${Warehouse.dirTag(dir)}",
+        new java.io.File(dir, "lineitem.parquet")) { name =>
       cluster(graft.Tables.lineitem(s, dir), "l_partkey", "l_suppkey", 16)
         .write.format("parquet").mode("overwrite").saveAsTable(name)
-      Warehouse.recordSourceTag(s, name, srcFile)
     }
-    name
-  }
 
   /** Skipping audit: of the parquet files under `path`, how many could a
     * stats-pruning reader NOT skip for the box [aLo,aHi]×[bLo,bHi]?

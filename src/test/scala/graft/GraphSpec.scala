@@ -70,40 +70,24 @@ class GraphSpec extends SparkSpecBase {
   test("repeated graph queries release their storage (no accumulation)") {
     // The gr pack materializes its dimension-sized result eagerly, then
     // unpersists every query-local cache and checkpoint; after the caller
-    // releases the returned frame, executor storage must be back where it
-    // started — in a long-lived session, re-running graph analytics must
-    // not grow by one edge table per invocation.
-    // Suites share one SparkSession and run CONCURRENTLY, so another
-    // suite's persists can land between the snapshots — the assertion is
-    // therefore rate-based and per query: a real leak adds ≥1 entry per
-    // run (6 runs → ≥6), concurrent noise is a bounded handful.
-    def run(name: String): Unit = {
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      df.collect()
-      operators.Graph.release(df)
-    }
-    // Every kernel persists and releases through Graph's one hybrid
-    // driver; each graph query is measured on its own, so a leak in one
-    // kernel's branch is not diluted by the others' runs.
+    // releases the returned frame, none of the RDDs its jobs persisted
+    // may still be persisted — in a long-lived session, re-running graph
+    // analytics must not grow by one edge table per invocation. The probe
+    // holds every such RDD strongly, so a dropped-but-unreleased one is
+    // counted rather than collected by GC, and counts only the query's
+    // own jobs, so the suites running concurrently add no noise.
+    // Each graph query is measured on its own, so a leak in one kernel's
+    // branch is not diluted by the others' runs; a leak of one RDD per
+    // run reaches `runs`.
     val runs = 6
     for (q <- Seq("gr1_pagerank", "gr5_kcore", "gr2_triangles",
         "gr3_bfs_hops", "gr6_bfs_fixpoint", "gr7_sssp_fixpoint",
         "gr8_kcore_fixpoint")) {
-      run(q) // steady state (JIT, shared codegen caches)
-      val before = spark.sparkContext.getPersistentRDDs
-      (1 to runs).foreach(_ => run(q))
-      // releases run with blocking = false — wait out in-flight removals
-      // before declaring a leak
-      val deadline = System.currentTimeMillis + 10000
-      var after = spark.sparkContext.getPersistentRDDs
-      while (after.size > before.size && System.currentTimeMillis < deadline) {
-        Thread.sleep(200); after = spark.sparkContext.getPersistentRDDs
-      }
-      val leaked = (after.keySet -- before.keySet)
-        .map(id => s"$id:${after(id).toString.take(120)}")
-      assert(after.size - before.size < runs,
-        s"$q leaked ${after.size - before.size} persistent RDDs over " +
-          s"$runs runs: ${leaked.mkString("; ")}")
+      val retained = (1 to runs).map(_ =>
+        GraphStorageProbe.observe(spark)(SparkEntry.queries(q)(spark, sfDir))
+          .retained).sum
+      assert(retained < runs,
+        s"$q left $retained persisted RDDs over $runs runs")
     }
   }
 }

@@ -1,14 +1,6 @@
 package graft
 
-import java.util.UUID
-import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicBoolean
-
-import scala.jdk.CollectionConverters._
-
 import graft.operators.Graph
-import org.apache.spark.rdd.RDD
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -18,11 +10,8 @@ import org.apache.spark.sql.functions._
   * `localThreshold = n` the single-task kernel must run, at n − 1 the
   * distributed loop, and both must return the same rows bit-for-bit.
   *
-  * Which path ran is read off the jobs the call starts: the single-task
-  * kernel is a one-task stage over a coalesce(1) partition (a
-  * `CoalescedRDD`), and no distributed loop coalesces. Suites share one
-  * session concurrently, so the listener only counts jobs of the call's
-  * own job group. */
+  * Which path ran is read off the jobs the call starts
+  * ([[GraphStorageProbe]]). */
 class GraphThresholdSpec extends SparkSpecBase {
 
   import spark.implicits._
@@ -33,52 +22,12 @@ class GraphThresholdSpec extends SparkSpecBase {
       .unionByName(e.select(col("v").as("src"), col("u").as("dst")))
   }
 
-  /** The sorted rows of `run`, whether it ran a single-task kernel, and
-    * how many persisted RDDs its jobs read or built that are still
-    * persisted once the caller has released the result. The listener
-    * keeps a strong reference to every persisted RDD of the call's jobs:
-    * an RDD the kernel dropped without unpersisting is then still
-    * counted, instead of being garbage collected (and freed by the
-    * ContextCleaner) at a time no test controls. */
+  /** The sorted rows of `run`, whether it ran the single-task kernel,
+    * and how many persisted RDDs it left behind ([[GraphStorageProbe]]). */
   private def observe(run: => DataFrame): (Seq[(Long, Long)], Boolean, Int) = {
-    val sc = spark.sparkContext
-    val group = s"graph-threshold-${UUID.randomUUID()}"
-    val single = new AtomicBoolean(false)
-    val touched = new ConcurrentHashMap[Int, RDD[_]]()
-    val drained = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties)
-            .exists(_.getProperty("spark.jobGroup.id") == group)) {
-          if (e.properties.getProperty("spark.job.description") == "drain")
-            drained.countDown()
-          else {
-            if (e.stageInfos.exists(s => s.numTasks == 1 &&
-                s.rddInfos.exists(_.name == "CoalescedRDD")))
-              single.set(true)
-            val persisted = sc.getPersistentRDDs
-            e.stageInfos.flatMap(_.rddInfos).foreach(i =>
-              persisted.get(i.id).foreach(touched.put(i.id, _)))
-          }
-        }
-    }
-    sc.addSparkListener(listener)
-    val df = try {
-      sc.setJobGroup(group, "graph kernel")
-      val df = run
-      // the listener bus is FIFO: once this marker job's start arrives,
-      // every job of `run` has been seen
-      sc.setJobDescription("drain")
-      sc.parallelize(Seq(1), 1).count()
-      assert(drained.await(30, TimeUnit.SECONDS), "listener bus never drained")
-      df
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-    val rows = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
-    Graph.release(df)
-    (rows, single.get, touched.values.asScala.count(_.getStorageLevel.isValid))
+    val o = GraphStorageProbe.observe(spark)(run)
+    (o.rows.map(r => (r.getLong(0), r.getLong(1))).sorted, o.singleTask,
+      o.retained)
   }
 
   private val path6 = (0L until 6L).map(i => (i, i + 1))
