@@ -44,9 +44,10 @@ class CtePipeline(spark: SparkSession, warehouse: String) {
     * registry fixes takes exactly its columns and types, in any order, and
     * stores them in the registry's order; a missing, extra or differently
     * typed column is a writer bug and fails the write before any file is
-    * touched (a cast or a drop here would hide it). Rows already in
-    * registry order pass as they are, so a persisted batch keeps its cache
-    * for the collision probe. */
+    * touched (a cast or a drop here would hide it). The upsert evaluates
+    * its batch once, persisting a lazy one for the call; rows already in
+    * registry order pass as they are, so a batch the caller persisted is
+    * not cached a second time. */
   private def upsert(t: String, rows: DataFrame, keys: String*): Unit = {
     val conformed = registered.get(t).fold(rows) { schema =>
       def shape(s: StructType) = s.fields.map(f => f.name -> f.dataType).toSet

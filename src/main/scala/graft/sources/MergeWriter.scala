@@ -3,10 +3,21 @@ package graft.sources
 import java.io.IOException
 import java.net.URI
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, count, lit, max, min, struct, sum}
+import org.apache.parquet.column.statistics.Statistics
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.api.Binary
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions.{array_distinct, col, collect_list,
+  collect_set, count, flatten, lit, size, sort_array, struct, when}
+import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Upsert-by-natural-key semantics over vanilla Parquet — the reference's
   * insert-or-update sink (/root/reference/wfc3_cte_monitor/
@@ -68,68 +79,102 @@ object MergeWriter {
   /** Parquet-backed upsert: merge `updates` into the table at `path`
     * (absent → created), rewriting only the files whose rows it changes.
     *
-    * The collision probe ([[touchedFiles]]) finds the files holding a
-    * stored row whose key the batch carries. The write stages
-    * `merge(rows of those files, updates)` and removes exactly those
-    * files; every other file keeps its name and bytes. With no touched
-    * file this is an append, the common case of streaming and per-visit
-    * ingest: O(|batch|) plus the probe, not O(|table|). A schema change
-    * touches every file. When the merge leaves the touched rows
-    * unchanged as a multiset — a redelivery — nothing is committed; no
-    * column is special-cased, so a later-day redelivery that refreshes
-    * an `ingest_date` rewrites just its touched files. Persist `updates`
-    * to let the probe skip stored row groups outside the batch's key
-    * range. At scale, pass a partition subdir as `path` to scope the
-    * probe; a hive-partitioned table written at its root must pass its
-    * partition columns or new files flatten the layout. */
+    * The cost is O(batch) bytes and a fixed number of jobs. The batch is
+    * evaluated once: a lazy `updates` is pinned for the call. One
+    * parallel pass gives its row count and each key's [min, max]; every
+    * table file whose footer row-group statistics miss that range on some
+    * key is skipped unread (a file whose statistics cannot be compared
+    * stays in). With no file left the batch is appended: the common case
+    * of streaming and per-visit ingest. Otherwise one probe groups the
+    * remaining files' rows and the batch by key: a key whose stored rows
+    * differ from its batch rows as a multiset is changed, and so is a key
+    * with no stored row. Nothing changed — a redelivery — commits nothing;
+    * no column is special-cased, so a later-day redelivery that refreshes
+    * an `ingest_date` rewrites just its files. Else one commit stages
+    * `merge(rows of the files holding a changed key, batch rows of changed
+    * keys)` and removes those files; every other file keeps its name and
+    * bytes. The table schema comes from a data file's footer, so no step
+    * runs a schema-inference job; a shape change (columns or types,
+    * nullability aside) rewrites every file. A hive-partitioned table
+    * written at its root must pass its partition columns or new files
+    * flatten the layout. */
   def upsertParquet(spark: SparkSession, path: String, updates: DataFrame,
                     keys: Seq[String],
                     partitionCols: Seq[String] = Nil): Unit = {
     recover(spark, path)
     val fs = fileSystem(spark, path)
-    if (!fs.exists(new Path(path))) {
+    val files = tableFiles(fs, path)
+    if (files.isEmpty) {
       commit(fs, path, updates, Nil, partitionCols)
       return
     }
-    val target = spark.read.parquet(path)
-    def shape(df: DataFrame) =
-      df.schema.fields.map(f => (f.name, f.dataType)).toSet
-    val sameShape = shape(target) == shape(updates)
-    val touched =
-      if (sameShape) touchedFiles(fs, path, target, updates, keys)
-      else dataFiles(fs, new Path(path)).map(_._1)
-    if (touched.isEmpty) {
-      // column order pinned to the table's so every file carries the
-      // same layout (readers merge by name, but keep footers uniform)
-      commit(fs, path, updates.select(target.columns.map(col): _*), Nil,
+    val table = tableSchema(spark, fs, path, files.head, updates.schema,
+      partitionCols)
+    once(updates) { batch =>
+      if (shape(table) != shape(batch.schema))
+        commit(fs, path, merge(rowsOf(spark, path, table, files), batch, keys),
+          files, partitionCols)
+      else upsertRows(spark, fs, path, table, files,
+        // column order pinned to the table's so every file carries the
+        // same layout (readers merge by name, but keep footers uniform)
+        batch.select(table.fieldNames.toIndexedSeq.map(col): _*), keys,
         partitionCols)
-    } else {
-      val stored = rowsOf(spark, path, target, touched)
-      val next = merge(stored, updates, keys)
-      if (!(sameShape && sameRows(stored, next)))
-        commit(fs, path, next, touched, partitionCols)
+    }
+  }
+
+  /** The same-shape upsert of `rows` (in the table's column order): skip
+    * files by footer key ranges, then append, probe or do nothing. */
+  private def upsertRows(spark: SparkSession, fs: FileSystem, path: String,
+                         table: StructType, files: Seq[String],
+                         rows: DataFrame, keys: Seq[String],
+                         partitionCols: Seq[String]): Unit = {
+    val range = keyRange(rows, keys)
+    val maybe = candidates(fs, path, files, range)
+    if (range.rows == 0) () // an empty batch changes nothing
+    else if (maybe.isEmpty) commit(fs, path, rows, Nil, partitionCols)
+    else {
+      val (written, hit, changed) =
+        probe(spark, fs, path, table, maybe, rows, keys, range)
+      if (changed > 0)
+        commit(fs, path,
+          if (hit.isEmpty) written
+          else merge(rowsOf(spark, path, table, hit), written, keys),
+          hit, partitionCols)
     }
   }
 
   /** Key-level delete: drop the rows whose `keys` columns match any row of
     * `tombstones` — the retraction half of the upsert sink (GDPR erasure,
-    * index removals). Only the files holding a tombstoned key are
-    * rewritten, through the same commit as the upsert; deleting absent
-    * keys touches no file, so a replayed tombstone batch writes nothing.
-    * A missing table is a no-op too (nothing to erase). Same
-    * `partitionCols` contract as upsertParquet. */
+    * index removals). The files are narrowed by footer key ranges as for
+    * the upsert, then only the files holding a tombstoned key are
+    * rewritten, through the same commit; deleting absent keys touches no
+    * file, so a replayed tombstone batch writes nothing. A missing table
+    * is a no-op too (nothing to erase). Same `partitionCols` contract as
+    * upsertParquet. */
   def deleteParquet(spark: SparkSession, path: String,
                     tombstones: DataFrame, keys: Seq[String],
                     partitionCols: Seq[String] = Nil): Unit = {
     recover(spark, path)
     val fs = fileSystem(spark, path)
-    if (!fs.exists(new Path(path))) return
-    val target = spark.read.parquet(path)
-    val touched = touchedFiles(fs, path, target, tombstones, keys)
-    if (touched.nonEmpty) {
-      val kept = rowsOf(spark, path, target, touched)
-        .join(tombstones.select(keys.map(col): _*).distinct(), keys, "left_anti")
-      commit(fs, path, kept, touched, partitionCols)
+    val files = tableFiles(fs, path)
+    if (files.isEmpty) return
+    val table = tableSchema(spark, fs, path, files.head, tombstones.schema,
+      partitionCols)
+    once(tombstones) { t =>
+      val ts = t.select(keys.map(col): _*)
+      val range = keyRange(ts, keys)
+      val maybe = candidates(fs, path, files, range)
+      if (maybe.nonEmpty) {
+        val touched = rowsOf(spark, path, table, maybe)
+          .filter(inRange(table, keys, range))
+          .select(col("_metadata.file_path") +: keys.map(col): _*)
+          .join(ts.distinct(), keys, "left_semi")
+          .select("file_path").distinct().collect().toSeq
+          .map(r => relative(fs, new Path(path), new Path(new URI(r.getString(0)))))
+        if (touched.nonEmpty)
+          commit(fs, path, rowsOf(spark, path, table, touched)
+            .join(ts.distinct(), keys, "left_anti"), touched, partitionCols)
+      }
     }
   }
 
@@ -162,9 +207,10 @@ object MergeWriter {
     if (crowded.isEmpty) return // already compact enough: skip the rewrite
     // each directory's rows coalesce on their own, so every task holds
     // one partition value and writes one of that partition's files
-    val target = spark.read.parquet(path)
+    val table = tableSchema(spark, fs, path, files.head._1, new StructType(),
+      partitionCols)
     val rows = crowded.map(d =>
-      rowsOf(spark, path, target, d.map(_._1)).coalesce(want(d)))
+      rowsOf(spark, path, table, d.map(_._1)).coalesce(want(d)))
     commit(fs, path, rows.reduce(_ union _), crowded.flatten.map(_._1),
       partitionCols)
   }
@@ -251,76 +297,215 @@ object MergeWriter {
       .map(s => relative(fs, root, s.getPath) -> s.getLen)
   }
 
+  /** The table's data files, relative to `path`; none when it is absent. */
+  private def tableFiles(fs: FileSystem, path: String): Seq[String] =
+    if (fs.exists(new Path(path))) dataFiles(fs, new Path(path)).map(_._1)
+    else Nil
+
+  /** The footer of table file `file`, read on the driver. */
+  private def footer(fs: FileSystem, path: String,
+                     file: String): ParquetMetadata = {
+    val in = ParquetFileReader.open(
+      HadoopInputFile.fromPath(new Path(new Path(path), file), fs.getConf))
+    try in.getFooter
+    finally in.close()
+  }
+
+  /** The table's schema, with no Spark job: the Spark schema that every
+    * Spark-written data file keeps in its footer, read from `file`, then
+    * `partitionCols` typed as in `batch`. Every file shares it, since a
+    * shape change rewrites every file; a partition column `batch` lacks
+    * is left to Spark's partition discovery. A footer without the
+    * schema (a file from another writer) falls back to inference. */
+  private def tableSchema(spark: SparkSession, fs: FileSystem, path: String,
+                          file: String, batch: StructType,
+                          partitionCols: Seq[String]): StructType = {
+    val data = Option(footer(fs, path, file).getFileMetaData
+        .getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
+      .map(DataType.fromJson(_).asInstanceOf[StructType])
+      .getOrElse(spark.read.parquet(path).schema)
+      .filterNot(f => partitionCols.contains(f.name))
+    nullable(StructType(data ++ batch.filter(f => partitionCols.contains(f.name))))
+      .asInstanceOf[StructType]
+  }
+
+  /** `t` with every nullability flag set, at every nesting level. Parquet
+    * reads every column back nullable, so a batch's non-null
+    * `array<bigint>` and the same column read from its table differ only
+    * there; shapes compare, and tables are read, in this form. */
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType =>
+      StructType(s.fields.map(f => StructField(f.name, nullable(f.dataType))))
+    case ArrayType(e, _) => ArrayType(nullable(e), containsNull = true)
+    case MapType(k, v, _) => MapType(nullable(k), nullable(v),
+      valueContainsNull = true)
+    case other => other
+  }
+
+  /** A schema's columns and their types, order and nullability aside. */
+  private def shape(s: StructType): Set[StructField] =
+    nullable(s).asInstanceOf[StructType].fields.toSet
+
+  /** `body(df)` with `df` evaluated at most once. A frame the caller has
+    * not persisted is pinned for the call by a lazy local checkpoint and
+    * released, blocking, when it returns. Its first action stores its
+    * partitions as a direct write would see them: a cached plan runs
+    * without adaptive execution's final-stage shuffle rewrites, so a
+    * persisted batch can append one file per shuffle partition. Nor is a
+    * plan-equal frame of the caller's cached or uncached under it. */
+  private def once[T](df: DataFrame)(body: DataFrame => T): T =
+    if (df.storageLevel != StorageLevel.NONE) body(df)
+    else {
+      val pinned = df.localCheckpoint(eager = false)
+      try body(pinned)
+      finally pinned.queryExecution.analyzed.foreach {
+        case r: LogicalRDD => r.rdd.unpersist(blocking = true): Unit
+        case _ => ()
+      }
+    }
+
   /** The rows of the table files `files`, in the table's schema. The
     * `basePath` keeps their partition columns. */
-  private def rowsOf(spark: SparkSession, path: String, target: DataFrame,
+  private def rowsOf(spark: SparkSession, path: String, table: StructType,
                      files: Seq[String]): DataFrame =
-    spark.read.schema(target.schema).option("basePath", path)
+    spark.read.schema(table).option("basePath", path)
       .parquet(files.map(f => new Path(new Path(path), f).toString): _*)
 
-  /** Do `a` and `b` (same columns) hold the same rows as multisets? One
-    * grouped pass: each whole row counts +1 from `a`, −1 from `b`. */
-  private def sameRows(a: DataFrame, b: DataFrame): Boolean = {
-    def tagged(df: DataFrame, n: Long) =
-      df.select(struct(a.columns.map(col): _*).as("row"), lit(n).as("n"))
-    tagged(a, 1L).union(tagged(b, -1L)).groupBy("row")
-      .agg(sum("n").as("n")).filter(col("n") =!= 0).isEmpty
+  // ------------------------------------------------------ key-range skipping
+
+  /** A batch's row count and, for each key of a [[ranged]] type, the
+    * [lo, hi] of its non-null values in [[ordinal]] form (both null when
+    * it has none). */
+  private case class KeyRange(rows: Long, bounds: Seq[(String, Any, Any)])
+
+  /** Key types whose footer statistics compare with a batch's values:
+    * integers (Parquet INT32/INT64, signed) and strings (UTF8 binary,
+    * by unsigned bytes — Spark's own string order). Other keys get no
+    * range, so they skip no file. */
+  private def ranged(t: DataType): Boolean = t match {
+    case ByteType | ShortType | IntegerType | LongType | StringType => true
+    case _ => false
   }
 
-  // --------------------------------------------------------- collision probe
-
-  /** Key types a literal range filter can bound: orderable atomics whose
-    * min/max are well-defined. Anything else (arrays, structs, maps)
-    * probes unbounded. */
-  private def orderableKeys(df: DataFrame, keys: Seq[String]): Boolean = {
-    import org.apache.spark.sql.types._
-    keys.forall(k => df.schema.fields.find(_.name == k).exists(_.dataType match {
-      case ByteType | ShortType | IntegerType | LongType | FloatType |
-           DoubleType | StringType | DateType | TimestampType |
-           TimestampNTZType | BooleanType => true
-      case _: DecimalType => true
-      case _ => false
-    }))
+  /** A batch value or a footer statistic of a [[ranged]] key in one
+    * comparable form: integers as `Long`, strings as `UTF8String`. */
+  private def ordinal(v: Any): Any = v match {
+    case s: String => UTF8String.fromString(s)
+    case b: Binary => UTF8String.fromBytes(b.getBytes)
+    case n: java.lang.Number => n.longValue
   }
 
-  /** The table files, relative to `path`, that hold a row whose `keys`
-    * match a row of `batch`: the files a write of `batch` replaces. A
-    * semi-join of the batch's distinct keys against the table's key
-    * columns, reporting each hit's `_metadata.file_path`.
-    *
-    * When the batch is PERSISTED, one min/max aggregate over it first
-    * bounds the table side with `k BETWEEN lo AND hi` for every key. The
-    * literals reach Parquet as pushed filters, so row groups whose footer
-    * min/max misses the batch's range are skipped unread, and on a hive
-    * partition key whole directories are. With naturally increasing
-    * ingest keys that is every stored row group: the probe reads the
-    * table's footers, not its rows. A lazy batch skips the aggregate: a
-    * second pass would re-run its whole lineage, which costs more than
-    * the scan it could prune. Null keys never equi-join-match, so an
-    * all-null range (null literals match nothing) prunes correctly.
+  private def cmp(a: Any, b: Any): Int =
+    a.asInstanceOf[Comparable[Any]].compareTo(b)
+
+  /** Widen `[lo(i), hi(i)]` to hold `v` (a null `v` leaves it). */
+  private def widen(lo: Array[Any], hi: Array[Any], i: Int, v: Any): Unit =
+    if (v != null) {
+      if (lo(i) == null || cmp(v, lo(i)) < 0) lo(i) = v
+      if (hi(i) == null || cmp(v, hi(i)) > 0) hi(i) = v
+    }
+
+  /** The [[KeyRange]] of `batch`: one job, in parallel over its
+    * partitions, which also stores a pinned batch ([[once]]). */
+  private def keyRange(batch: DataFrame, keys: Seq[String]): KeyRange = {
+    val ks = keys.filter(k => ranged(batch.schema(k).dataType))
+    val n = ks.size
+    val parts = batch.select(ks.map(col): _*).rdd.mapPartitions { rows =>
+      var count = 0L
+      val lo, hi = new Array[Any](n)
+      rows.foreach { r =>
+        count += 1
+        for (i <- 0 until n)
+          widen(lo, hi, i, if (r.isNullAt(i)) null else ordinal(r.get(i)))
+      }
+      Iterator((count, lo, hi))
+    }.collect()
+    val lo, hi = new Array[Any](n)
+    for ((_, plo, phi) <- parts; i <- 0 until n) {
+      widen(lo, hi, i, plo(i))
+      widen(lo, hi, i, phi(i))
+    }
+    KeyRange(parts.map(_._1).sum, ks.indices.map(i => (ks(i), lo(i), hi(i))))
+  }
+
+  /** The table files that can hold a row whose keys match a batch row:
+    * those with a row group overlapping the batch's range on every ranged
+    * key, judged from their footers. A row group whose statistics for a
+    * key are missing or dropped overlaps; one whose key is all null does
+    * not (null keys never match), nor does any when the batch's key is
+    * all null or the batch is empty. */
+  private def candidates(fs: FileSystem, path: String, files: Seq[String],
+                         range: KeyRange): Seq[String] =
+    if (range.rows == 0) Nil
+    else files.filter(f => footer(fs, path, f).getBlocks.asScala.exists {
+      block => block.getRowCount > 0 && range.bounds.forall {
+        case (k, lo, hi) => lo != null && block.getColumns.asScala
+          .find(_.getPath.toDotString == k).forall { c =>
+            val s: Statistics[_] = c.getStatistics
+            if (s == null || s.isEmpty) true
+            else if (s.hasNonNullValue)
+              cmp(ordinal(s.genericGetMin), hi) <= 0 &&
+                cmp(ordinal(s.genericGetMax), lo) >= 0
+            else s.getNumNulls != block.getRowCount
+          }
+      }
+    })
+
+  /** Stored rows that can match a batch row: every key non-null and each
+    * ranged key inside the batch's range. The literals reach Parquet as
+    * pushed filters (row groups outside are skipped) and, on a hive
+    * partition key, prune whole directories. */
+  private def inRange(table: StructType, keys: Seq[String],
+                      range: KeyRange): Column = {
+    def literal(v: Any, t: DataType) =
+      lit(v match { case s: UTF8String => s.toString; case o => o }).cast(t)
+    (keys.map(col(_).isNotNull) ++ range.bounds.map { case (k, lo, hi) =>
+      col(k).between(literal(lo, table(k).dataType),
+        literal(hi, table(k).dataType))
+    }).reduce(_ && _)
+  }
+
+  // ----------------------------------------------------------------- probe
+
+  /** The one collision probe of an upsert. The rows of `files` that can
+    * match (with `_metadata.file_path`) and the batch `rows` are grouped
+    * by key; a batch key is changed when its stored rows and its batch
+    * rows differ as multisets (compared sorted, so every column must be
+    * orderable, as grouping by a row already needed). That includes a
+    * key with no stored row and one holding a null (null keys never
+    * match, as in [[merge]]). One action returns the table files,
+    * relative to `path`, that hold a changed key, and the number of
+    * changed keys; the batch rows of changed keys come back lazily, for
+    * the commit that runs only when some key changed.
     *
     * `_metadata.file_path` is a URI (a partition value `a b%c` reads
     * back as `a%20b%2525c`), so each one is decoded through `URI`, never
     * compared as a string. */
-  private def touchedFiles(fs: FileSystem, path: String, target: DataFrame,
-                           batch: DataFrame, keys: Seq[String]): Seq[String] = {
-    val bounded =
-      if (batch.storageLevel == StorageLevel.NONE ||
-          !orderableKeys(batch, keys)) target
-      else {
-        val aggCols = keys.flatMap(k => Seq(min(col(k)), max(col(k)))) :+
-          count(lit(1))
-        val agg = batch.agg(aggCols.head, aggCols.tail: _*).head()
-        if (agg.getLong(2 * keys.size) == 0L) return Nil // empty batch
-        target.filter(keys.zipWithIndex.map { case (k, i) =>
-          val t = batch.schema(k).dataType
-          col(k).between(lit(agg.get(2 * i)).cast(t),
-            lit(agg.get(2 * i + 1)).cast(t))
-        }.reduce(_ && _))
-      }
-    bounded.select(col("_metadata.file_path") +: keys.map(col): _*)
-      .join(batch.select(keys.map(col): _*).distinct(), keys, "left_semi")
-      .select("file_path").distinct().collect().toSeq
-      .map(r => relative(fs, new Path(path), new Path(new URI(r.getString(0)))))
+  private def probe(spark: SparkSession, fs: FileSystem, path: String,
+                    table: StructType, files: Seq[String], rows: DataFrame,
+                    keys: Seq[String], range: KeyRange)
+      : (DataFrame, Seq[String], Long) = {
+    val row = struct(table.fieldNames.toIndexedSeq.map(col): _*).as("row")
+    val stored = rowsOf(spark, path, table, files)
+      .filter(inRange(table, keys, range))
+      .select(keys.map(col) :+ row :+ col("_metadata.file_path").as("file"): _*)
+    val incoming = rows
+      .select(keys.map(col) :+ row :+ lit(null).cast(StringType).as("file"): _*)
+    def side(fromTable: Column) =
+      sort_array(collect_list(when(fromTable, col("row"))))
+    val changed = stored.union(incoming).groupBy(keys.map(col): _*)
+      .agg(side(col("file").isNotNull).as("had"),
+        side(col("file").isNull).as("got"),
+        collect_set(col("file")).as("files"))
+      .filter(size(col("got")) > 0 && col("had") =!= col("got"))
+    val summary = changed
+      .agg(array_distinct(flatten(collect_list(col("files")))), count(lit(1)))
+      .head()
+    val hit = summary.getSeq[String](0)
+      .map(f => relative(fs, new Path(path), new Path(new URI(f))))
+    // null-safe, so a null-keyed batch row finds its own changed group
+    val written = rows.as("b").join(changed.as("c"),
+      keys.map(k => col(s"b.$k") <=> col(s"c.$k")).reduce(_ && _), "left_semi")
+    (written, hit, summary.getLong(1))
   }
 }

@@ -52,17 +52,18 @@ object DocStream {
     * signatures fold into the store afterwards (a doc never races its
     * own probe).
     *
-    * `compactEvery`: an upsert whose keys collide with no stored row
-    * APPENDS the batch's rows as new files — O(batch) per batch instead
-    * of an O(store) rewrite — so a long-lived stream accumulates files
-    * until per-file open/footer cost taxes every probe's store scan.
-    * Every `compactEvery`-th batch both sinks are compacted (the LSM
+    * `compactEvery`: both sinks' upserts skip every stored file whose
+    * Parquet footer key range misses the batch's (fresh doc ids, and a
+    * hit's `doc_b`, lie above everything stored), so a batch APPENDS its
+    * rows as new files — O(batch) per batch, not an O(store) rewrite —
+    * and a long-lived stream accumulates files until per-file
+    * open/footer cost taxes every probe's store scan. Every
+    * `compactEvery`-th batch both sinks are compacted (the LSM
     * tradeoff: one amortized O(store)/`compactEvery` rewrite per batch
     * buys a bounded file count); 0 disables. Compaction publishes
     * through the same crash-safe commit record as the upsert, into
-    * MergeWriter's default-sized files. Both sinks' batches are persisted, so their
-    * collision probes skip every stored row group outside the batch's
-    * key range (Parquet footer min/max) before and after compaction.
+    * MergeWriter's default-sized files. The store is read in the
+    * batch signatures' schema, so no batch runs a schema-inference job.
     *
     * Store-probe pruning is ADAPTIVE: each batch measures the live-band
     * fraction (store band rows whose bucket holds a batch member — one
@@ -101,7 +102,7 @@ object DocStream {
           val intra = Dedup.probePairs(sig, sig, threshold)
           val pairs =
             if (fs.exists(new Path(storePath))) {
-              val store = owner.read.parquet(storePath)
+              val store = owner.read.schema(sig.schema).parquet(storePath)
               val frac = Dedup.liveBucketFraction(sig, store)
               pruneOn =
                 if (frac > pruneOffAbove) false
@@ -111,10 +112,6 @@ object DocStream {
               intra.unionByName(Dedup.probePairs(sig, store, threshold,
                 pruneToLiveBuckets = pruneOn))
             } else intra
-          // the probe result is PERSISTED before the upsert: the sink
-          // evaluates its updates more than once (key-range aggregate,
-          // collision probe, the write itself), and re-running the store
-          // probe per evaluation would re-pay its store-sized band join
           val hitRows = pairs
             .select(least(col("new_doc"), col("dup_of")).as("doc_a"),
               greatest(col("new_doc"), col("dup_of")).as("doc_b"),
@@ -123,10 +120,8 @@ object DocStream {
             // canonical order folds them onto one key, dedupe before
             // the upsert (merge keeps every update row, even same-key)
             .dropDuplicates("doc_a", "doc_b")
-            .persist()
           MergeWriter.upsertParquet(owner, hitsPath, hitRows,
             Seq("doc_a", "doc_b"))
-          hitRows.unpersist()
           MergeWriter.upsertParquet(owner, storePath, sig, Seq("doc_id"))
           sig.unpersist()
           if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0) {

@@ -149,11 +149,19 @@ class DocStreamSpec extends SparkSpecBase {
       store, s"$root/hits", compactEvery = 2)
     // 4 insert-only batches (disjoint vocabularies): each APPENDS files;
     // batches 2 and 4 then compact the store back down
-    (0 until 4).foreach { b =>
+    def drop(b: Int): Unit =
       Seq((100L + b, (1 to 40).map(i => s"v${b}w$i").mkString(" ")))
         .toDF("doc_id", "text").coalesce(1)
         .write.mode("overwrite").parquet(s"$landing/c$b")
+    val seeded = TableFiles.fileStates(store)
+    (0 until 2).foreach { b =>
+      drop(b)
+      q.processAllAvailable()
+      val now = TableFiles.fileStates(store)
+      assert(seeded.forall { case (f, st) => now.get(f).contains(st) },
+        s"batch ${b + 1} rewrote the seed file instead of appending")
     }
+    (2 until 4).foreach(drop)
     q.processAllAvailable()
     q.stop()
     assert(files() <= 2,

@@ -1,10 +1,12 @@
 package graft
 
+import graft.TableFiles.{dataFiles, fileStates}
 import graft.sources.MergeWriter
 import org.apache.hadoop.fs.{CreateFlag, FSDataOutputStream, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 import java.util.concurrent.{CountDownLatch, TimeUnit}
@@ -213,17 +215,30 @@ class MergeWriterSpec extends SparkSpecBase {
     }
   }
 
-  /** Input records read by every task of the jobs `body` runs. */
-  private def recordsRead(body: => Unit): Long = {
-    val read = new AtomicLong(0)
+  /** What the jobs `body` runs did: how many there were, the input
+    * records their tasks read, and the part of those read by stages that
+    * scan files (cache reads aside). */
+  private case class Metered(jobs: Int, records: Long, fileRecords: Long)
+
+  private def metered(body: => Unit): Metered = {
+    val jobs = new AtomicInteger(0)
+    val read, fileRead = new AtomicLong(0)
+    val scanning = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val drained = new CountDownLatch(1)
     val listener = new SparkListener {
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        read.addAndGet(e.taskMetrics.inputMetrics.recordsRead): Unit
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (e.stageInfo.rddInfos.exists(_.name == "FileScanRDD"))
+          scanning.add(e.stageInfo.stageId): Unit
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
+        val n = e.taskMetrics.inputMetrics.recordsRead
+        read.addAndGet(n)
+        if (scanning.contains(e.stageId)) fileRead.addAndGet(n): Unit
+      }
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (Option(e.properties).exists(
             _.getProperty("spark.job.description") == "drain"))
           drained.countDown()
+        else jobs.incrementAndGet(): Unit
     }
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
@@ -236,17 +251,11 @@ class MergeWriterSpec extends SparkSpecBase {
       finally sc.setJobDescription(null)
       assert(drained.await(30, TimeUnit.SECONDS), "listener bus never drained")
     } finally sc.removeSparkListener(listener)
-    read.get()
+    Metered(jobs.get, read.get, fileRead.get)
   }
 
-  /** Data files under `dir`, relative to it (partition subdirs included). */
-  private def dataFiles(dir: String): Set[String] = {
-    val root = java.nio.file.Paths.get(dir)
-    val walk = Files.walk(root)
-    try walk.iterator().asScala.map(root.relativize(_).toString)
-      .filter(_.endsWith(".parquet")).toSet
-    finally walk.close()
-  }
+  /** Input records read by every task of the jobs `body` runs. */
+  private def recordsRead(body: => Unit): Long = metered(body).records
 
   test("key-range index prunes the collision probe to zero table reads") {
     import spark.implicits._
@@ -405,16 +414,6 @@ class MergeWriterSpec extends SparkSpecBase {
     assert(got == Seq(1.0, 9.0))
   }
 
-  /** Data files under `dir`, relative to it, with their mtimes and the
-    * SHA-256 of their bytes. */
-  private def fileStates(dir: String): Map[String, (Long, String)] =
-    dataFiles(dir).map { f =>
-      val p = java.nio.file.Paths.get(dir, f)
-      val sha = java.security.MessageDigest.getInstance("SHA-256")
-        .digest(Files.readAllBytes(p)).map("%02x".format(_)).mkString
-      f -> (Files.getLastModifiedTime(p).toMillis, sha)
-    }.toMap
-
   test("a redelivered batch, persisted or lazy, commits nothing") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_redeliver").toString + "/t"
@@ -553,5 +552,58 @@ class MergeWriterSpec extends SparkSpecBase {
       }
       assert(k > 3, s"$name reached only ${k - 1} crash points")
     }
+  }
+
+  test("an insert-only upsert of non-null array rows leaves every stored file as it was") {
+    import spark.implicits._
+    // the signature-store shape: `array<bigint>` without nulls, which a
+    // Parquet read gives back nullable — the upsert must still see one
+    // shape and append
+    val dir = Files.createTempDirectory("graft_nonnull").toString + "/t"
+    MergeWriter.upsertParquet(spark, dir,
+      Seq((1L, Seq(1L, 2L)), (2L, Seq(3L))).toDF("doc_id", "sig"), Seq("doc_id"))
+    val seeded = fileStates(dir)
+    MergeWriter.upsertParquet(spark, dir,
+      Seq((3L, Seq(4L)), (4L, Seq(5L, 6L))).toDF("doc_id", "sig"), Seq("doc_id"))
+    val after = fileStates(dir)
+    assert(seeded.forall { case (f, st) => after.get(f).contains(st) },
+      "an insert-only upsert rewrote a stored file")
+    assert(after.size > seeded.size)
+    assert(spark.read.parquet(dir).orderBy("doc_id").collect()
+      .map(r => (r.getLong(0), r.getSeq[Long](1))).toSeq ==
+      Seq((1L, Seq(1L, 2L)), (2L, Seq(3L)), (3L, Seq(4L)), (4L, Seq(5L, 6L))))
+  }
+
+  test("job budget: a persisted disjoint-range append runs at most 2 jobs and reads no table row") {
+    val dir = Files.createTempDirectory("graft_budget_a").toString + "/t"
+    MergeWriter.upsertParquet(spark, dir,
+      spark.range(10000).selectExpr("id AS k", "CAST(id AS STRING) AS s"),
+      Seq("k"))
+    val batch = spark.range(20000, 20100)
+      .selectExpr("id AS k", "CAST(id AS STRING) AS s").persist()
+    val m = metered(MergeWriter.upsertParquet(spark, dir, batch, Seq("k")))
+    batch.unpersist()
+    assert(m.jobs <= 2, s"a disjoint append ran ${m.jobs} jobs")
+    assert(m.fileRecords == 0, s"a disjoint append read ${m.fileRecords} " +
+      "table records")
+    assert(spark.read.parquet(dir).count() == 10100)
+  }
+
+  test("job budget: a no-op redelivery of a lazy batch runs at most 4 jobs and changes no file") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_budget_r").toString + "/t"
+    val keys = Seq("targname", "k")
+    def batch = (1 to 50).map(i => ("ngc104", i, i * 0.5))
+      .toDF("targname", "k", "v")
+    MergeWriter.upsertParquet(spark, dir, batch, keys, Seq("targname"))
+    val seeded = fileStates(dir)
+    val sc = spark.sparkContext
+    def stored() = sc.getRDDStorageInfo.filter(_.isCached).map(_.id).toSet
+    val held = stored()
+    val m = metered(MergeWriter.upsertParquet(spark, dir, batch, keys,
+      Seq("targname")))
+    assert(m.jobs <= 4, s"a no-op redelivery ran ${m.jobs} jobs")
+    assert(fileStates(dir) == seeded, "a redelivery added or removed files")
+    assert((stored() -- held).isEmpty, "the upsert left its batch stored")
   }
 }

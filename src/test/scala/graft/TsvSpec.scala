@@ -154,4 +154,22 @@ class TsvSpec extends SparkSpecBase {
     assert(phot(2).getAs[Double]("dec") == -30.4)
     assert(phot(0).getAs[String]("targname") == "ngc104")
   }
+
+  test("a second image's IRAF ingest appends one file, as a direct write would") {
+    val root = Files.createTempDirectory("graft_iraf2").toString
+    Files.writeString(java.nio.file.Paths.get(s"$root/fake_flt.mag"),
+      daophotFixture)
+    Files.writeString(java.nio.file.Paths.get(s"$root/fake.coo"),
+      "master_id\textr_ra\textr_dec\n7\t150.1\t-30.2\n9\t150.3\t-30.4\n")
+    val pipe = new graft.cte.CtePipeline(spark, s"$root/wh")
+    // the first image creates the table, the second one appends. The
+    // upsert pins the second image's rows; a cached plan would keep the
+    // join's shuffle partitions that adaptive execution folds for a
+    // direct write, and append one file per partition
+    for (image <- Seq("fake_flt", "fake2_flt"))
+      pipe.ingestIrafPhot(s"$root/fake_flt.mag", s"$root/fake.coo", "ngc104",
+        image)
+    assert(TableFiles.dataFiles(s"$root/wh/phot").size == 2)
+    assert(pipe.table("phot").count() == 8)
+  }
 }
