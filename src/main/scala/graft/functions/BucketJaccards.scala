@@ -30,14 +30,20 @@ import org.apache.spark.sql.types._
   * one-sided paths keep [[TextKernels.chunkPairJaccardsUdf]], which the
   * one-sided form of this expression did not beat.
   *
-  * Members are `struct(doc_id, hs, is_new)`, read by position; pairs are
-  * (new, store) only, orientation kept, equal ids skipped (redelivery
-  * self-match). A null/empty `bmem` row verifies the pairs WITHIN
-  * `amem`, a cross row only those across. `softCap` (> 0) logs the
-  * chunk-skew sentinel once per JVM, exactly like the UDF kernels.
+  * Members are `struct(doc_id, hs, is_new)`, read by position; equal ids
+  * are skipped (redelivery self-match). By default pairs are (new,
+  * store) only, orientation kept. With `withinBatch` they are every pair
+  * holding at least one new member — new×new and new×store, never
+  * store×store — as (smaller id, larger id): the streaming probe's one
+  * pass over the batch's bands and the store's
+  * ([[graft.operators.Dedup.batchPairs]]). A null/empty `bmem` row
+  * verifies the pairs WITHIN `amem`, a cross row only those across.
+  * `softCap` (> 0) logs the chunk-skew sentinel once per JVM, exactly
+  * like the UDF kernels.
   */
 case class BucketJaccards(amem: Expression, bmem: Expression,
-                          minJac: Expression, softCap: Expression)
+                          minJac: Expression, softCap: Expression,
+                          withinBatch: Boolean = false)
     extends Expression with CodegenFallback {
 
   override def children: Seq[Expression] = Seq(amem, bmem, minJac, softCap)
@@ -80,30 +86,50 @@ case class BucketJaccards(amem: Expression, bmem: Expression,
     unpack(a, an, 0)
     if (b != null) unpack(b, bn, an)
 
-    // (new, store) orientation, equal ids skipped. Intra row: all
-    // new×store pairs within amem. Cross row: amem.new × bmem.store
-    // plus bmem.new × amem.store — the chunk split mixes sides.
     val out = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
-    @inline def cross(loN: Int, hiN: Int, loS: Int, hiS: Int): Unit = {
-      var x = loN
-      while (x < hiN) {
-        if (tag(x)) {
-          var y = loS
-          while (y < hiS) {
-            if (!tag(y) && ids(x) != ids(y)) {
-              val inter = TextKernels.intersectCount(hss(x), hss(y))
-              val jac = inter.toDouble /
-                (hss(x).length + hss(y).length - inter).toDouble
-              if (jac >= min) out += InternalRow(ids(x), ids(y), jac)
-            }
-            y += 1
-          }
-        }
+    // the jaccard is symmetric in (x, y), so either orientation of a
+    // pair computes the same bits
+    @inline def verify(x: Int, y: Int, a: Long, b: Long): Unit = {
+      val inter = TextKernels.intersectCount(hss(x), hss(y))
+      val jac = inter.toDouble /
+        (hss(x).length + hss(y).length - inter).toDouble
+      if (jac >= min) out += InternalRow(a, b, jac)
+    }
+    if (withinBatch) {
+      // any pair with a new member, equal ids skipped, canonical order.
+      // Intra row: each unordered pair within amem once. Cross row:
+      // amem × bmem.
+      @inline def pair(x: Int, y: Int): Unit =
+        if ((tag(x) || tag(y)) && ids(x) != ids(y))
+          if (ids(x) < ids(y)) verify(x, y, ids(x), ids(y))
+          else verify(x, y, ids(y), ids(x))
+      val hi = if (bn == 0) an else an + bn
+      var x = 0
+      while (x < an) {
+        var y = if (bn == 0) x + 1 else an
+        while (y < hi) { pair(x, y); y += 1 }
         x += 1
       }
+    } else {
+      // (new, store) orientation, equal ids skipped. Intra row: all
+      // new×store pairs within amem. Cross row: amem.new × bmem.store
+      // plus bmem.new × amem.store — the chunk split mixes sides.
+      @inline def cross(loN: Int, hiN: Int, loS: Int, hiS: Int): Unit = {
+        var x = loN
+        while (x < hiN) {
+          if (tag(x)) {
+            var y = loS
+            while (y < hiS) {
+              if (!tag(y) && ids(x) != ids(y)) verify(x, y, ids(x), ids(y))
+              y += 1
+            }
+          }
+          x += 1
+        }
+      }
+      if (bn == 0) cross(0, an, 0, an)
+      else { cross(0, an, an, an + bn); cross(an, an + bn, 0, an) }
     }
-    if (bn == 0) cross(0, an, 0, an)
-    else { cross(0, an, an, an + bn); cross(an, an + bn, 0, an) }
     new GenericArrayData(out.toArray[Any])
   }
 
@@ -117,9 +143,17 @@ object BucketJaccards {
   /** Two-sided chunk kernel ([[TextKernels.chunkCrossJaccards]]) as a
     * native expression. */
   def chunkCross(amem: Column, bmem: Column, minJac: Double,
-                 softCap: Int): Column =
+                 softCap: Int): Column = of(amem, bmem, minJac, softCap, false)
+
+  /** The same kernel in its `withinBatch` mode: every pair with a new
+    * member, as (smaller id, larger id). */
+  def withinBatch(amem: Column, bmem: Column, minJac: Double,
+                  softCap: Int): Column = of(amem, bmem, minJac, softCap, true)
+
+  private def of(amem: Column, bmem: Column, minJac: Double, softCap: Int,
+                 withinBatch: Boolean): Column =
     ColumnBridge.toColumn(BucketJaccards(
       ColumnBridge.toExpression(amem), ColumnBridge.toExpression(bmem),
       org.apache.spark.sql.catalyst.expressions.Literal(minJac),
-      org.apache.spark.sql.catalyst.expressions.Literal(softCap)))
+      org.apache.spark.sql.catalyst.expressions.Literal(softCap), withinBatch))
 }

@@ -182,13 +182,13 @@ object Dedup extends QueryPack {
 
   /** Bucket-local grouping with the adaptive chunk cap — the one grouping
     * behind every near-dup verification ([[nearDupPairsWithBase]], both
-    * [[probePairs]] paths, the d15/d16 truth sample, d6's kernel plan and
-    * d9's edit-distance pairs). `bands` are skinny (doc_id, band_id, bh)
-    * rows, side-tagged with `is_new` on the two-sided probe; `members`
-    * joins them on the columns both frames carry, and its columns, in
-    * order, make each member's struct: (doc_id, hs), or (doc_id, hs,
-    * is_new) — the kernels read the fields by position. Emits grouped
-    * (amem, bmem) rows.
+    * [[probePairs]] paths, [[batchPairs]], the d15/d16 truth sample, d6's
+    * kernel plan and d9's edit-distance pairs). `bands` are skinny
+    * (doc_id, band_id, bh) rows, side-tagged with `is_new` on the
+    * two-sided probes; `members` joins them on the columns both frames
+    * carry, and its columns, in order, make each member's struct:
+    * (doc_id, hs), or (doc_id, hs, is_new) — the kernels read the fields
+    * by position. Emits grouped (amem, bmem) rows.
     *
     * When the driver probe finds no bucket over `chunkSize` (a healthy
     * corpus), each bucket is ONE row with `bmem` NULL: the kernel verifies
@@ -319,27 +319,27 @@ object Dedup extends QueryPack {
   }
 
   /** Near-dup pairs between a NEW batch's signature table and an
-    * EXISTING signature store — the asymmetric probe the streaming
-    * ingest path runs per micro-batch ([[graft.streaming.DocStream]]).
-    * Band-key equi-join (batch bands × store bands, never store×store),
-    * exact Jaccard on collisions only; output (new_doc, dup_of, jac).
+    * EXISTING signature store — the asymmetric probe of d7's
+    * [[decontaminate]] and d21 (the streaming ingest path runs
+    * [[batchPairs]], which verifies the batch's own pairs in the same
+    * pass). Band-key equi-join (batch bands × store bands, never
+    * store×store), exact Jaccard on collisions only; output (new_doc,
+    * dup_of, jac).
     * Same-id rows are excluded so a batch whose signatures were already
     * upserted into the store does not match itself on redelivery. */
   def probePairs(newSig: DataFrame,
                  storeSig: DataFrame,
                  threshold: String = jacThreshold,
-                 chunkSize: Int = bucketChunkSize,
-                 pruneToLiveBuckets: Boolean = false)
+                 chunkSize: Int = bucketChunkSize)
       : DataFrame = {
-    // SELF-probe fast path (reference equality — the intra-batch probe
-    // DocStream runs per micro-batch, d21's within-batch sweep): the
-    // two-sided plan would union the SAME bands twice (2× the grouping
-    // exchange, doubled bucket rows) and the cross kernel would compute
-    // every jaccard twice (a×b and b×a of identical member sets). The
-    // one-sided machinery does C(n,2) once; both orientations are
-    // emitted afterwards on the THRESHOLD-SURVIVING pairs only, so the
-    // output contract (every qualifying (new_doc, dup_of) ordered pair,
-    // same-id excluded) is unchanged.
+    // SELF-probe fast path (reference equality — d21's within-batch
+    // sweep): the two-sided plan would union the SAME bands twice (2×
+    // the grouping exchange, doubled bucket rows) and the cross kernel
+    // would compute every jaccard twice (a×b and b×a of identical member
+    // sets). The one-sided machinery does C(n,2) once; both orientations
+    // are emitted afterwards on the THRESHOLD-SURVIVING pairs only, so
+    // the output contract (every qualifying (new_doc, dup_of) ordered
+    // pair, same-id excluded) is unchanged.
     if (newSig eq storeSig)
       return oneSidedPairs(bandsOf(newSig), newSig, chunkSize, threshold)
         .distinct()
@@ -349,54 +349,8 @@ object Dedup extends QueryPack {
           struct(col("doc_b").as("new_doc"), col("doc_a").as("dup_of"),
             col("jac")))).as("q"))
         .select("q.new_doc", "q.dup_of", "q.jac")
-    // Bucket-LOCAL verification, the [[nearDupPairsWithBase]] discipline
-    // on the two-sided probe: each bucket's COMBINED membership (both
-    // sides, side-tagged) is grouped per bucket, so the shingle arrays
-    // cross ONE grouped exchange instead of riding every candidate row
-    // through two per-candidate joins (the textbook shape this replaced
-    // went bimodal-slow at sf10's dup-dense corpus), chunk-capped like
-    // the one-sided plan ([[bucketGroups]]) so no single task owns a hot
-    // bucket's full new×store product. The shingle join is ONE join
-    // keyed (doc_id, is_new) against the side-tagged union of both
-    // signature tables: the same doc_id can appear on both sides (a
-    // redelivered batch already upserted into the store), and a per-side
-    // join pair would compute the band pipeline twice. Duplicate (pair,
-    // jac) rows from multi-band collisions collapse in the final distinct.
     val minJac = kernelGate(threshold)
-    val newBands = bandsOf(newSig).withColumn("is_new", lit(true))
-    val storeBands = bandsOf(storeSig).withColumn("is_new", lit(false))
-    // OPT-IN live-bucket pruning before the shingle join: only buckets
-    // holding BOTH a batch member and a store member can produce a
-    // cross pair, and on a SERVING probe (small mostly-novel batch ×
-    // huge store — DocStream's shape) almost every store bucket holds
-    // none, so without pruning every store doc's shingle array rides
-    // the grouping exchange 6× to be aggregated into rows the kernel
-    // immediately discards. Liveness computes SHUFFLE-FREE on the
-    // store side: the batch's distinct bucket keys (batch-sized by the
-    // serving contract — why this is opt-in; a corpus-sized "batch"
-    // should leave pruning off, as should a dup-dense sweep where
-    // nearly every bucket is live and pruning buys nothing: measured
-    // at sf10, d21 15.5 → 29.9 s and d7 9.8 → 18.7 s forced on)
-    // BROADCAST against one pass over the store bands; the surviving
-    // store rows' keys — at most the batch's key count — broadcast
-    // back over the batch bands. An earlier cut aggregated has_new/
-    // has_store over the UNIONED band stream, shuffling the store's
-    // whole skinny triple set per probe.
-    val allBands =
-      if (!pruneToLiveBuckets) newBands.unionByName(storeBands)
-      else {
-        val newKeys = newBands.select("band_id", "bh").distinct()
-        val storeLive = storeBands
-          .join(broadcast(newKeys), Seq("band_id", "bh"), "left_semi")
-        val liveKeys = storeLive.select("band_id", "bh").distinct()
-        newBands.join(broadcast(liveKeys), Seq("band_id", "bh"), "left_semi")
-          .unionByName(storeLive)
-      }
-    val sigU = newSig.select(col("doc_id"), col("hs"),
-        lit(true).as("is_new"))
-      .unionByName(storeSig.select(col("doc_id"), col("hs"),
-        lit(false).as("is_new")))
-    bucketGroups(allBands, sigU, chunkSize)
+    sidedGroups(newSig, storeSig, bandsOf(storeSig), chunkSize)
       .select(explode(graft.functions.BucketJaccards.chunkCross(
         col("amem"), col("bmem"), minJac, chunkSize * 8)).as("p"))
       .select(col("p._1").as("new_doc"), col("p._2").as("dup_of"),
@@ -405,32 +359,76 @@ object Dedup extends QueryPack {
       .distinct()
   }
 
-  /** Fraction of the STORE's band rows whose bucket holds a batch
-    * member — the signal behind DocStream's adaptive probe pruning
-    * (pruning wins when this is small: a serving probe of a mostly-novel
-    * batch leaves almost every store bucket dead, and pruning keeps its
-    * shingle arrays out of the grouping exchange; a dup-dense store
-    * makes most buckets live and pruning just pays two extra passes).
-    * One aggregate job over the SKINNY band triples: the batch's
-    * distinct bucket keys (batch-sized — AQE broadcasts them) left-join
-    * the store bands, counting matches map-side. O(|store| skinny scan +
-    * |batch| keys), no shingle arrays move. */
-  def liveBucketFraction(newSig: org.apache.spark.sql.DataFrame,
-                         storeSig: org.apache.spark.sql.DataFrame): Double = {
-    // total = rows × bands (bandsOf emits exactly nBands rows per sig) —
-    // a parquet metadata count, no band computation; live = one
-    // BROADCAST semi-join pass over the store bands, so the store stream
-    // never shuffles (the first cut left-joined it unbroadcast and the
-    // per-batch shuffle grew with the store — the very O(store) slope
-    // this metric exists to police). The batch's distinct bucket keys
-    // are batch-sized by the serving contract, hence broadcastable.
-    val total = storeSig.count() * nBands
-    if (total == 0L) return 0.0
-    val nk = bandsOf(newSig).select("band_id", "bh").distinct()
-    val live = bandsOf(storeSig).select("band_id", "bh")
-      .join(broadcast(nk), Seq("band_id", "bh"), "left_semi")
-      .count()
-    live.toDouble / total
+  /** The grouped bucket rows of a two-sided probe: the batch's bands
+    * (`is_new` true) ∪ `storeBands` (`is_new` false, `storeSig`'s band
+    * rows or a subset of them), members `struct(doc_id, hs, is_new)`.
+    *
+    * Bucket-LOCAL verification, the [[nearDupPairsWithBase]] discipline
+    * on the two-sided probe: each bucket's COMBINED membership (both
+    * sides, side-tagged) is grouped per bucket, so the shingle arrays
+    * cross ONE grouped exchange instead of riding every candidate row
+    * through two per-candidate joins (the textbook shape this replaced
+    * went bimodal-slow at sf10's dup-dense corpus), chunk-capped like
+    * the one-sided plan ([[bucketGroups]]) so no single task owns a hot
+    * bucket's full new×store product. The shingle join is ONE join
+    * keyed (doc_id, is_new) against the side-tagged union of both
+    * signature tables: the same doc_id can appear on both sides (a
+    * redelivered batch already upserted into the store), and a per-side
+    * join pair would compute the band pipeline twice. */
+  private def sidedGroups(newSig: DataFrame, storeSig: DataFrame,
+                          storeBands: DataFrame, chunkSize: Int): DataFrame =
+    bucketGroups(
+      bandsOf(newSig).withColumn("is_new", lit(true))
+        .unionByName(storeBands.withColumn("is_new", lit(false))),
+      newSig.select(col("doc_id"), col("hs"), lit(true).as("is_new"))
+        .unionByName(storeSig.select(col("doc_id"), col("hs"),
+          lit(false).as("is_new"))),
+      chunkSize)
+
+  /** The STORE's band rows whose bucket holds a batch member — the only
+    * store bands that can pair with the batch. On a serving probe (small
+    * mostly-novel batch × huge store — DocStream's shape) almost every
+    * store bucket holds none, and without this cut every store doc's
+    * shingle array rides the grouping exchange 6× to be aggregated into
+    * rows the kernel immediately discards. Shuffle-free on the store
+    * side: the batch's distinct bucket keys (batch-sized by the serving
+    * contract) BROADCAST against one pass over the store bands, so the
+    * store stream never shuffles (a first cut aggregated liveness over
+    * the unioned band stream and shuffled the store's whole skinny
+    * triple set per probe). Their count over the store's rows × [[nBands]]
+    * is the live-bucket fraction behind DocStream's adaptive pruning. */
+  def liveStoreBands(newSig: DataFrame, storeSig: DataFrame): DataFrame =
+    bandsOf(storeSig).join(
+      broadcast(bandsOf(newSig).select("band_id", "bh").distinct()),
+      Seq("band_id", "bh"), "left_semi")
+
+  /** A micro-batch's near-dup hits in ONE probe: every pair with at
+    * least one batch member — batch × batch and batch × store, never
+    * store × store — as (doc_a < doc_b, jac), one row per pair.
+    * `storeBands` are `storeSig`'s band rows: all of them
+    * ([[bandsOf]]) or only the live ones ([[liveStoreBands]]) — the pair
+    * set is the same, since a store band whose bucket holds no batch
+    * member pairs with nothing. Both sides' bands are grouped by ONE
+    * [[bucketGroups]] call (one hot-bucket probe, one grouping exchange)
+    * and verified by the `withinBatch` mode of
+    * [[graft.functions.BucketJaccards]], which emits each pair in
+    * canonical order — so the same pair found in several buckets, or
+    * from both copies of a redelivered doc, folds in one
+    * `dropDuplicates`. Equal ids are skipped, so a redelivered batch
+    * does not match its own stored signatures. Same pair set as the
+    * self-probe ∪ two-sided probe ([[probePairs]] twice), folded the
+    * same way, at one exchange and one hot-bucket probe instead of two. */
+  def batchPairs(newSig: DataFrame, storeSig: DataFrame,
+                 storeBands: DataFrame,
+                 threshold: String = jacThreshold,
+                 chunkSize: Int = bucketChunkSize): DataFrame = {
+    val minJac = kernelGate(threshold)
+    sidedGroups(newSig, storeSig, storeBands, chunkSize)
+      .select(explode(graft.functions.BucketJaccards.withinBatch(
+        col("amem"), col("bmem"), minJac, chunkSize * 8)).as("p"))
+      .select(col("p._1").as("doc_a"), col("p._2").as("doc_b"),
+        col("p._3").as("jac"))
+      .dropDuplicates("doc_a", "doc_b")
   }
 
   /** Training docs near-duplicating any held-out doc: one row per flagged

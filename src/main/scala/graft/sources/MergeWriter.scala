@@ -76,6 +76,15 @@ object MergeWriter {
     fs.delete(new Path(record + ".tmp"), false): Unit
   }
 
+  /** The table's row count, summed from its data files' footers on the
+    * driver: no Spark job. 0 when the table is absent. */
+  def rowCount(spark: SparkSession, path: String): Long = {
+    val fs = fileSystem(spark, path)
+    tableFiles(fs, path)
+      .map(f => footer(fs, path, f).getBlocks.asScala.map(_.getRowCount).sum)
+      .sum
+  }
+
   /** Parquet-backed upsert: merge `updates` into the table at `path`
     * (absent → created), rewriting only the files whose rows it changes.
     *

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.operators.Dedup
+import graft.operators.{Dedup, Graph}
 import graft.sources.MergeWriter
 
 /** Streaming near-duplicate detection — the ingest-time face of d4's
@@ -13,8 +13,9 @@ import graft.sources.MergeWriter
   * everything already ingested WITHOUT re-scanning the corpus. The
   * signature STORE makes that incremental: per micro-batch, only the new
   * docs are shingled and signed (the expensive text kernels run on the
-  * batch alone), the band-key equi-join probes batch bands against the
-  * store — |batch| × band-collision work, never corpus × corpus — and
+  * batch alone), one band-bucket grouping probes the batch's bands
+  * against each other and the store's — |batch| × band-collision work,
+  * never corpus × corpus — and
   * the batch's signatures then upsert into the store so later batches
   * (and concurrent redeliveries) dedup against them.
   *
@@ -33,14 +34,15 @@ object DocStream {
     MergeWriter.upsertParquet(docs.sparkSession, storePath,
       Dedup.signatures(docs), Seq("doc_id"))
 
-  /** Pruning hysteresis: the store probe prunes to LIVE buckets while the
-    * measured live-band fraction stays below [[pruneOnBelow]], and stops
-    * pruning once it exceeds [[pruneOffAbove]] (a dup-dense drift — spam
-    * flood, boilerplate wave — makes nearly every bucket live, and the
-    * pruning passes then cost ~2× for nothing; measured at sf10: d21
-    * 15.5 → 29.9 s with pruning forced on). Between the two thresholds
-    * the current mode sticks, so a fraction hovering at a boundary can't
-    * flap the plan per batch. */
+  /** Pruning hysteresis: the probe takes only the LIVE store bands while
+    * the measured live-band fraction stays below [[pruneOnBelow]], and
+    * the full store bands once it exceeds [[pruneOffAbove]]. Between the
+    * two thresholds the current mode sticks, so a fraction hovering at a
+    * boundary can't flap the plan per batch. The thresholds were set
+    * when pruning cost two extra passes (measured at sf10: d21 15.5 →
+    * 29.9 s with pruning forced on a dup-dense sweep); the live bands
+    * are now pinned for the fraction anyway, so pruning costs no extra
+    * pass, and whether turning it off still pays is not re-measured. */
   private val pruneOffAbove = 0.5
   private val pruneOnBelow = 0.25
 
@@ -51,6 +53,13 @@ object DocStream {
     * the same key instead of growing the table — and the batch's
     * signatures fold into the store afterwards (a doc never races its
     * own probe).
+    *
+    * ONE probe per batch ([[Dedup.batchPairs]]) finds both kinds of hit:
+    * a batch doc near-duplicating a stored one, and two near-dups landing
+    * in the same micro-batch (neither is in the store when the batch
+    * arrives, so without the batch's own pairs both would enter the store
+    * unflagged and never probe each other again). The batch's bands and
+    * the store's go through one grouping exchange.
     *
     * `compactEvery`: both sinks' upserts skip every stored file whose
     * Parquet footer key range misses the batch's (fresh doc ids, and a
@@ -65,69 +74,82 @@ object DocStream {
     * MergeWriter's default-sized files. The store is read in the
     * batch signatures' schema, so no batch runs a schema-inference job.
     *
-    * Store-probe pruning is ADAPTIVE: each batch measures the live-band
-    * fraction (store band rows whose bucket holds a batch member — one
-    * column-pruned aggregate over the skinny band triples, broadcast
-    * batch keys) and flips `pruneToLiveBuckets` by hysteresis
-    * ([[pruneOffAbove]]/[[pruneOnBelow]]): a mostly-novel serving stream
-    * keeps the measured ~8% win of pruning, a store that turns dup-dense
-    * sheds the measured ~2× pruning penalty instead of silently paying
-    * it. The measurement itself costs one extra column-pruned pass over
-    * the store's band columns — the same cost class as the probe's own
-    * band scan. `onBatchMetrics(batchId, liveFraction, pruned)` surfaces
-    * each measured decision to instruments (StreamBench) and tests. */
+    * Store-probe pruning is ADAPTIVE: each batch pins the store band rows
+    * whose bucket holds a batch member ([[Dedup.liveStoreBands]]: one
+    * pass over the store's skinny band columns, the batch's keys
+    * broadcast) in the one job that also counts them; the store's row
+    * total comes from its Parquet footers, so the live-band fraction
+    * costs no further job. The fraction sets the pruning mode by
+    * hysteresis ([[pruneOffAbove]]/[[pruneOnBelow]]): pruned, the probe
+    * takes the pinned live bands; unpruned, the store's full bands.
+    * `onBatchMetrics(batchId, liveFraction, pruned)` surfaces each
+    * measured decision to instruments (StreamBench) and tests; a batch
+    * into a store that does not exist yet measures nothing.
+    *
+    * Emptiness comes from the persisted signatures: a batch with no
+    * shingled document (an empty one, or one whose documents are all too
+    * short to shingle) writes nothing, calls no `onBatchMetrics` and
+    * skips its compaction turn. Each step's jobs carry a job description
+    * (`DocStream batch <id>: probe`, `hits upsert`, `store upsert`,
+    * `compaction`); the stream's own description is restored after the
+    * batch. */
   def nearDupStream(docs: DataFrame, storePath: String, hitsPath: String,
                     threshold: String = Dedup.jacThreshold,
                     compactEvery: Int = 64,
                     onBatchMetrics: (Long, Double, Boolean) => Unit =
                       (_, _, _) => ()): StreamingQuery = {
     val owner = docs.sparkSession
+    val sc = owner.sparkContext
     // pruning mode carries across batches (hysteresis needs memory);
     // foreachBatch runs on the driver, single-threaded per query
     var pruneOn = true
     docs.writeStream
       .foreachBatch { (b: DataFrame, batchId: Long) =>
-        if (!b.isEmpty) {
-          import org.apache.spark.sql.functions.{greatest, least, col}
-          val sig = Dedup.signatures(b).persist()
-          val fs = new Path(storePath)
-            .getFileSystem(owner.sparkContext.hadoopConfiguration)
+        val streamJobs = sc.getLocalProperty("spark.job.description")
+        def step(name: String): Unit =
+          sc.setJobDescription(s"DocStream batch $batchId: $name")
+        step("probe")
+        val sig = Dedup.signatures(b).persist()
+        // the store's live band rows, pinned for the batch once it has a store
+        var live: Option[DataFrame] = None
+        try if (!sig.isEmpty) {
           MergeWriter.recover(owner, storePath)
-          // INTRA-batch pairs too: two near-dups landing in the same
-          // micro-batch would otherwise both enter the store unflagged —
-          // neither ever probes the other again, and the streamed corpus
-          // under-reports duplicates vs the batch d4 pipeline. The
-          // intra-batch self-probe is batch-sized and skips the pruning
-          // passes (see Dedup.probePairs' opt-in note).
-          val intra = Dedup.probePairs(sig, sig, threshold)
-          val pairs =
+          val fs = new Path(storePath).getFileSystem(sc.hadoopConfiguration)
+          val (store, storeBands) =
             if (fs.exists(new Path(storePath))) {
               val store = owner.read.schema(sig.schema).parquet(storePath)
-              val frac = Dedup.liveBucketFraction(sig, store)
+              val pinned = Dedup.liveStoreBands(sig, store)
+                .localCheckpoint(eager = false)
+              live = Some(pinned)
+              // one job both stores the live rows and counts them
+              val liveRows = pinned.queryExecution.toRdd.count()
+              val total = MergeWriter.rowCount(owner, storePath) * Dedup.nBands
+              val frac = if (total == 0L) 0.0 else liveRows.toDouble / total
               pruneOn =
                 if (frac > pruneOffAbove) false
                 else if (frac < pruneOnBelow) true
                 else pruneOn
               onBatchMetrics(batchId, frac, pruneOn)
-              intra.unionByName(Dedup.probePairs(sig, store, threshold,
-                pruneToLiveBuckets = pruneOn))
-            } else intra
-          val hitRows = pairs
-            .select(least(col("new_doc"), col("dup_of")).as("doc_a"),
-              greatest(col("new_doc"), col("dup_of")).as("doc_b"),
-              col("jac"))
-            // the intra probe reports both directions of each pair —
-            // canonical order folds them onto one key, dedupe before
-            // the upsert (merge keeps every update row, even same-key)
-            .dropDuplicates("doc_a", "doc_b")
+              (store, if (pruneOn) pinned else Dedup.bandsOf(store))
+            } else {
+              val none = sig.limit(0)
+              (none, Dedup.bandsOf(none))
+            }
+          val hitRows = Dedup.batchPairs(sig, store, storeBands, threshold)
+          step("hits upsert")
           MergeWriter.upsertParquet(owner, hitsPath, hitRows,
             Seq("doc_a", "doc_b"))
+          step("store upsert")
           MergeWriter.upsertParquet(owner, storePath, sig, Seq("doc_id"))
-          sig.unpersist()
           if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0) {
+            step("compaction")
             MergeWriter.compactParquet(owner, storePath)
             MergeWriter.compactParquet(owner, hitsPath)
           }
+        } finally {
+          live.foreach(Graph.release)
+          sig.unpersist()
+          sc.setJobDescription(streamJobs)
         }
       }
       .start()

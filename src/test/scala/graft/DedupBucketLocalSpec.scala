@@ -118,10 +118,9 @@ class DedupBucketLocalSpec extends SparkSpecBase {
         s"(bucket population is 120; rows must stay chunk-sized)")
   }
 
-  /** The self-probe fast path (reference equality — DocStream's
-    * intra-batch probe, d21's within-batch sweep) runs the one-sided
-    * machinery at half the exchange and half the kernel arithmetic; its
-    * output contract must stay EXACTLY the two-sided plan's: every
+  /** The self-probe fast path (reference equality — d21's within-batch
+    * sweep) runs the one-sided machinery at half the exchange and half
+    * the kernel arithmetic; its output contract must stay EXACTLY the two-sided plan's: every
     * qualifying ordered pair in both orientations, same-id excluded. */
   test("self-probe fast path == two-sided probe on identical content") {
     import spark.implicits._
@@ -160,10 +159,10 @@ class DedupBucketLocalSpec extends SparkSpecBase {
     sig.unpersist(): Unit
   }
 
-  /** Two-sided probe under the cap, including the redelivery case (same
-    * doc_id on both sides must not self-match) and a store-only bucket
-    * (pruned before the shingle join, must not affect results). */
-  test("chunked two-sided probe == uncapped probe, asymmetric contract kept") {
+  /** Batch and store signatures sharing a hot bucket, with ids 10..24
+    * redelivered (on both sides, same text), a batch×store near-dup pair
+    * (800, 801) and a store-only doc (950). */
+  private def probeFixture() = {
     import spark.implicits._
     val mkHot = (r: Range, pfx: String) => r.map(i =>
       (i.toLong, "shared boilerplate navigation header words " * 5 + s" $pfx$i"))
@@ -172,8 +171,15 @@ class DedupBucketLocalSpec extends SparkSpecBase {
     val store = (mkHot(10 until 40, "t") ++ Seq( // ids 10..24 redelivered
       (801L, "a modestly different document body with some edits applied there and more text to shingle"),
       (950L, "completely unrelated store-only text about astronomy detectors and charge transfer"))).toDF("doc_id", "text")
-    val nSig = graft.operators.Dedup.signatures(batch).persist()
-    val sSig = graft.operators.Dedup.signatures(store).persist()
+    (graft.operators.Dedup.signatures(batch).persist(),
+      graft.operators.Dedup.signatures(store).persist())
+  }
+
+  /** Two-sided probe under the cap, including the redelivery case (same
+    * doc_id on both sides must not self-match) and a store-only bucket
+    * (no batch member, must not affect results). */
+  test("chunked two-sided probe == uncapped probe, asymmetric contract kept") {
+    val (nSig, sSig) = probeFixture()
 
     def run(chunk: Int) =
       graft.operators.Dedup.probePairs(nSig, sSig, chunkSize = chunk)
@@ -190,15 +196,89 @@ class DedupBucketLocalSpec extends SparkSpecBase {
     assert(!capped.exists(t => t._1 == t._2))
     assert(capped.exists(t => t._1 == 800L && t._2 == 801L))
     assert(!capped.exists(t => t._1 == 801L), "store docs must stay on the right")
-    // live-bucket pruning (the serving-probe opt-in) composed with the
-    // chunk cap must not change the pair set — pruning only removes
-    // buckets that cannot produce a cross pair
-    val pruned = graft.operators.Dedup
-      .probePairs(nSig, sSig, chunkSize = 6, pruneToLiveBuckets = true)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .sortBy(t => (t._1, t._2))
-    assert(pruned.toSeq == capped.toSeq,
-      "live-bucket pruning changed the probe's pair set")
+    nSig.unpersist(); sSig.unpersist()
+  }
+
+  private def bits(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => (r.getLong(0), r.getLong(1),
+      java.lang.Double.doubleToLongBits(r.getDouble(2)))).sortBy(t => (t._1, t._2))
+
+  /** The streaming probe with its store bands cut to the live buckets
+    * (DocStream's pruned mode) composed with the chunk cap must not
+    * change the pair set: pruning only removes store bands whose bucket
+    * holds no batch member, which pair with nothing. */
+  test("batch probe: live store bands == full store bands, capped and uncapped") {
+    import graft.operators.Dedup
+    val (nSig, sSig) = probeFixture()
+    val live = Dedup.liveStoreBands(nSig, sSig)
+    assert(live.filter(col("doc_id") === 950L).isEmpty,
+      "a store-only bucket survived live-bucket pruning")
+    for (chunk <- Seq(6, 1 << 20)) {
+      val full = bits(Dedup.batchPairs(nSig, sSig, Dedup.bandsOf(sSig),
+        chunkSize = chunk))
+      val pruned = bits(Dedup.batchPairs(nSig, sSig, live, chunkSize = chunk))
+      assert(full.nonEmpty && pruned.toSeq == full.toSeq,
+        s"chunk=$chunk: live-bucket pruning changed the pair set")
+      assert(full.exists(t => t._1 == 800L && t._2 == 801L))
+      assert(full.forall(t => t._1 < t._2), "pair not in canonical order")
+    }
+    nSig.unpersist(); sSig.unpersist()
+  }
+
+  /** The streaming probe's one pass == what it replaced: the batch's
+    * self-probe ∪ its batch×store probe, folded onto (doc_a < doc_b) and
+    * deduplicated per pair. Random near-dup families spread over both
+    * sides, redelivered ids (same text on both sides) and a hot bucket
+    * that chunkSize 6 splits. */
+  test("batch probe == self-probe ∪ two-sided probe, folded, random signatures") {
+    import spark.implicits._
+    import graft.operators.Dedup
+    val rnd = new scala.util.Random(20261020L)
+    val vocab = (0 until 80).map(i => s"w$i")
+    val bases = Seq.fill(12)(Seq.fill(30 + rnd.nextInt(20))(
+      vocab(rnd.nextInt(vocab.size))))
+    def variant(): String = {
+      val w = bases(rnd.nextInt(bases.size)).toArray
+      (0 until rnd.nextInt(6)).foreach(_ =>
+        w(rnd.nextInt(w.length)) = vocab(rnd.nextInt(vocab.size)))
+      w.mkString(" ")
+    }
+    val hot = (i: Long) =>
+      "shared boilerplate navigation header words " * 5 + s" tail$i"
+    val storeRows = (0L until 40L).map(i => (i, variant())) ++
+      (500L until 512L).map(i => (i, hot(i)))
+    // ids 30..39 and 505..511 redelivered with their stored text
+    val batchRows = storeRows.filter(r => (30L until 40L).contains(r._1) ||
+        (505L until 512L).contains(r._1)) ++
+      (100L until 130L).map(i => (i, variant())) ++
+      (600L until 608L).map(i => (i, hot(i)))
+    val nSig = Dedup.signatures(batchRows.toDF("doc_id", "text")).persist()
+    val sSig = Dedup.signatures(storeRows.toDF("doc_id", "text")).persist()
+    for (chunk <- Seq(6, 1 << 20)) {
+      val one = Dedup.batchPairs(nSig, sSig, Dedup.liveStoreBands(nSig, sSig),
+        chunkSize = chunk)
+      val twoProbes = Dedup.probePairs(nSig, nSig, chunkSize = chunk)
+        .unionByName(Dedup.probePairs(nSig, sSig, chunkSize = chunk))
+        .select(least(col("new_doc"), col("dup_of")).as("doc_a"),
+          greatest(col("new_doc"), col("dup_of")).as("doc_b"), col("jac"))
+        .dropDuplicates("doc_a", "doc_b")
+      if (chunk == 6) assert(
+        one.queryExecution.analyzed.toString.contains("c_lo"),
+        "chunkSize 6 kept the plain plan: the hot bucket was not split")
+      val (got, want) = (bits(one), bits(twoProbes))
+      assert(got.toSet == want.toSet && got.length == want.length,
+        s"chunk=$chunk: ${got.length} pairs vs ${want.length} from the " +
+          s"two probes; only in one: ${got.toSet.diff(want.toSet).take(5)}, " +
+          s"only in two: ${want.toSet.diff(got.toSet).take(5)}")
+      val batchIds = batchRows.map(_._1).toSet
+      val storeOnly = storeRows.map(_._1).toSet.diff(batchIds)
+      assert(got.exists(t => batchIds(t._1) && batchIds(t._2)),
+        "no batch×batch pair: the sample checks nothing there")
+      assert(got.exists(t => storeOnly(t._1) || storeOnly(t._2)),
+        "no batch×store pair: the sample checks nothing there")
+      assert(!got.exists(t => storeOnly(t._1) && storeOnly(t._2)),
+        "store×store pair emitted")
+    }
     nSig.unpersist(); sSig.unpersist()
   }
 

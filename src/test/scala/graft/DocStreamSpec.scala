@@ -171,4 +171,60 @@ class DocStreamSpec extends SparkSpecBase {
     assert(spark.read.parquet(store).filter(col("doc_id") >= 100L)
       .count() == 4, "compaction lost signature rows")
   }
+
+  /** A micro-batch against an existing store is a handful of driver
+    * round trips, not a chain of them: one probe over the batch's and
+    * the store's bands, then the two upserts. 13 jobs: the signatures
+    * (1), the batch's bucket keys broadcast and the live store bands
+    * pinned and counted (3), the hot-bucket probe (2), the hits upsert
+    * (5) and the store upsert (2). Every job carries its step's
+    * description, and nothing the batch persisted outlives it. */
+  test("a plain micro-batch runs a bounded number of jobs, all attributed") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_docstream_j").toString
+    val landing = s"$root/landing"
+    Files.createDirectories(java.nio.file.Paths.get(landing))
+    val store = s"$root/sig_store"
+    val hits = s"$root/hits"
+
+    def doc(pfx: String, last: Int = 40) =
+      (1 to 40).map(i => if (i == 40) s"$pfx$last" else s"$pfx$i").mkString(" ")
+    DocStream.seedSignatureStore(
+      Seq((1L, doc("aa")), (2L, doc("bb")), (3L, doc("cc")))
+        .toDF("doc_id", "text"), store)
+    val q = DocStream.nearDupStream(
+      spark.readStream
+        .schema(org.apache.spark.sql.types.StructType(Seq(
+          org.apache.spark.sql.types.StructField("doc_id",
+            org.apache.spark.sql.types.LongType),
+          org.apache.spark.sql.types.StructField("text",
+            org.apache.spark.sql.types.StringType))))
+        .option("recursiveFileLookup", "true")
+        .option("maxFilesPerTrigger", 1).parquet(landing),
+      store, hits)
+    def drop(name: String, rows: Seq[(Long, String)]): Unit =
+      rows.toDF("doc_id", "text").coalesce(1)
+        .write.mode("overwrite").parquet(s"$landing/$name")
+
+    // batch 0 creates the hits table; batch 1 is the measured plain batch:
+    // a near-dup of a stored doc, a near-dup pair inside the batch, and a
+    // fresh doc
+    drop("j0", Seq((100L, doc("aa")), (101L, doc("dd"))))
+    q.processAllAvailable()
+    drop("j1", Seq((102L, doc("bb", 41)), (103L, doc("ee")),
+      (104L, doc("ee", 41)), (105L, doc("ff"))))
+    val m = Metered.of(spark)(q.processAllAvailable())
+    q.stop()
+    val jobs = m.jobs
+
+    assert(jobs.size <= 13, s"a plain micro-batch ran ${jobs.size} jobs " +
+      s"(budget 13):\n${jobs.mkString("\n")}")
+    assert(jobs.forall(_.startsWith("DocStream batch 1: ")),
+      s"jobs without their step's description:\n${jobs.mkString("\n")}")
+    assert(m.retained == 0, s"the batch left ${m.retained} RDDs persisted")
+    val pairs = spark.read.parquet(hits).select("doc_a", "doc_b").as[(Long, Long)]
+      .collect().toSet
+    assert(pairs == Set((1L, 100L), (2L, 102L), (103L, 104L)),
+      s"hits $pairs")
+  }
 }

@@ -5,12 +5,9 @@ import graft.sources.MergeWriter
 import org.apache.hadoop.fs.{CreateFlag, FSDataOutputStream, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-  SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
 /** The local file system under the `failrename` scheme, except that the
@@ -215,44 +212,7 @@ class MergeWriterSpec extends SparkSpecBase {
     }
   }
 
-  /** What the jobs `body` runs did: how many there were, the input
-    * records their tasks read, and the part of those read by stages that
-    * scan files (cache reads aside). */
-  private case class Metered(jobs: Int, records: Long, fileRecords: Long)
-
-  private def metered(body: => Unit): Metered = {
-    val jobs = new AtomicInteger(0)
-    val read, fileRead = new AtomicLong(0)
-    val scanning = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val drained = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-        if (e.stageInfo.rddInfos.exists(_.name == "FileScanRDD"))
-          scanning.add(e.stageInfo.stageId): Unit
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-        val n = e.taskMetrics.inputMetrics.recordsRead
-        read.addAndGet(n)
-        if (scanning.contains(e.stageId)) fileRead.addAndGet(n): Unit
-      }
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(
-            _.getProperty("spark.job.description") == "drain"))
-          drained.countDown()
-        else jobs.incrementAndGet(): Unit
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      body
-      // the listener bus is FIFO: once this marker job's start arrives,
-      // every task end of `body` has been counted
-      sc.setJobDescription("drain")
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setJobDescription(null)
-      assert(drained.await(30, TimeUnit.SECONDS), "listener bus never drained")
-    } finally sc.removeSparkListener(listener)
-    Metered(jobs.get, read.get, fileRead.get)
-  }
+  private def metered(body: => Unit): Metered = Metered.of(spark)(body)
 
   /** Input records read by every task of the jobs `body` runs. */
   private def recordsRead(body: => Unit): Long = metered(body).records
@@ -583,7 +543,7 @@ class MergeWriterSpec extends SparkSpecBase {
       .selectExpr("id AS k", "CAST(id AS STRING) AS s").persist()
     val m = metered(MergeWriter.upsertParquet(spark, dir, batch, Seq("k")))
     batch.unpersist()
-    assert(m.jobs <= 2, s"a disjoint append ran ${m.jobs} jobs")
+    assert(m.jobs.size <= 2, s"a disjoint append ran ${m.jobs.size} jobs")
     assert(m.fileRecords == 0, s"a disjoint append read ${m.fileRecords} " +
       "table records")
     assert(spark.read.parquet(dir).count() == 10100)
@@ -602,7 +562,7 @@ class MergeWriterSpec extends SparkSpecBase {
     val held = stored()
     val m = metered(MergeWriter.upsertParquet(spark, dir, batch, keys,
       Seq("targname")))
-    assert(m.jobs <= 4, s"a no-op redelivery ran ${m.jobs} jobs")
+    assert(m.jobs.size <= 4, s"a no-op redelivery ran ${m.jobs.size} jobs")
     assert(fileStates(dir) == seeded, "a redelivery added or removed files")
     assert((stored() -- held).isEmpty, "the upsert left its batch stored")
   }
