@@ -2,48 +2,56 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.types._
 
-/** Native Catalyst expression for the two-sided bucket-local
-  * pair-verification kernel — the hottest per-row work of the streaming
-  * probe ([[TextKernels.chunkCrossJaccards]] as an `Expression` instead of
-  * a Scala UDF).
+/** The engine's one near-dup pair-verification kernel, a native Catalyst
+  * expression over one grouped bucket row of
+  * [[graft.operators.Dedup.bucketGroups]]. Every Jaccard verification
+  * goes through it: d4/d10/d20's one-sided pairs, the d15/d16 truth
+  * sample, d6's char-3-gram plan, d7/d21's batch × store probe and the
+  * streaming probe.
   *
-  * The UDF pays an encoder round-trip per GROUPED ROW: every member's
-  * (id, shingle-array, tag) struct is deserialized into boxed Scala
-  * tuples, and every surviving pair is re-encoded — on a hot bucket that
-  * is thousands of boxed allocations before the arithmetic even starts.
-  * This expression reads the unsafe `ArrayData` buffers in place
-  * (`toLongArray` on each member's hashes is the only copy) and emits
-  * `InternalRow`s directly. Arithmetic contract (oracle-critical): the
-  * SAME [[TextKernels.intersectCount]] and the same IEEE divide /
-  * `>= minJac` gate as the Scala kernel, so jaccards stay bit-identical
-  * (pinned by KernelExprSpec against the UDF on random buckets).
+  * Members are `struct(doc_id, hs[, is_new])`, read by position; a
+  * member without an `is_new` field counts as new. A null/empty `bmem`
+  * row verifies each pair WITHIN `amem` once; a cross row verifies
+  * `amem` × `bmem` only (chunks partition a bucket, and the upstream
+  * grouping drops a cross row whose partner chunk came up empty). Equal
+  * ids never pair (a redelivered doc does not match its stored copy).
+  * One accept/orient rule per mode:
+  *   - canonical (default): every pair with at least one new member, as
+  *     (smaller id, larger id) — so the same pair found in several
+  *     buckets folds in one `distinct`/`dropDuplicates`;
+  *   - `oriented`: new × store pairs only, as (new id, store id) — the
+  *     asymmetric probe's contract ([[graft.operators.Dedup.probePairs]]).
   *
-  * ADOPTION IS MEASURED, NOT ASSUMED (sf10 same-window ABA, r12): on the
-  * two-sided probe ([[graft.operators.Dedup.probePairs]]) it wins
-  * consistently (d7 9.84 → 9.04 s, tight spreads both arms). The
-  * one-sided paths keep [[TextKernels.chunkPairJaccardsUdf]], which the
-  * one-sided form of this expression did not beat.
+  * Arithmetic (oracle-critical): intersections come from the zero-
+  * allocation merge [[TextKernels.sortedIntersectCount]], and the jaccard
+  * is one IEEE divide of the exact intersection by the exact union,
+  * emitted when `>= minJac`. The merge needs ascending arrays. The
+  * shingle kernels emit them sorted, so the copy `toLongArray` makes of
+  * each member is sorted here only when it is not ascending — a
+  * signature store written while word shingles were kept in
+  * first-occurrence order stays correct.
   *
-  * Members are `struct(doc_id, hs, is_new)`, read by position; equal ids
-  * are skipped (redelivery self-match). By default pairs are (new,
-  * store) only, orientation kept. With `withinBatch` they are every pair
-  * holding at least one new member — new×new and new×store, never
-  * store×store — as (smaller id, larger id): the streaming probe's one
-  * pass over the batch's bands and the store's
-  * ([[graft.operators.Dedup.batchPairs]]). A null/empty `bmem` row
-  * verifies the pairs WITHIN `amem`, a cross row only those across.
-  * `softCap` (> 0) logs the chunk-skew sentinel once per JVM, exactly
-  * like the UDF kernels.
+  * Size gate (lossless): inter ≤ min(|A|, |B|) and union ≥ max, so the
+  * real jaccard is at most min/max, and a correctly rounded divide is
+  * monotone. A pair with fl(min/max) < minJac can never be emitted, and
+  * is skipped before the merge. (The multiply form `min >= minJac * max`
+  * is NOT lossless: at minJac 0.55, 0.55 × 460 rounds above 253, though
+  * fl(253/460) == 0.55.)
+  *
+  * The expression reads the unsafe `ArrayData` buffers in place — no
+  * encoder round-trip per grouped row, no boxed tuple per member — and
+  * emits `InternalRow`s directly. `softCap` (> 0) logs the chunk-skew
+  * sentinel once per JVM ([[TextKernels.warnIfOversized]]).
   */
 case class BucketJaccards(amem: Expression, bmem: Expression,
                           minJac: Expression, softCap: Expression,
-                          withinBatch: Boolean = false)
+                          oriented: Boolean = false)
     extends Expression with CodegenFallback {
 
   override def children: Seq[Expression] = Seq(amem, bmem, minJac, softCap)
@@ -55,6 +63,11 @@ case class BucketJaccards(amem: Expression, bmem: Expression,
     StructField("_1", LongType, nullable = false),
     StructField("_2", LongType, nullable = false),
     StructField("_3", DoubleType, nullable = false))), containsNull = false)
+
+  /** Fields per member struct: 3 when it carries `is_new`. */
+  private lazy val memberFields =
+    amem.dataType.asInstanceOf[ArrayType].elementType
+      .asInstanceOf[StructType].length
 
   override def eval(input: InternalRow): Any = {
     val aRaw = amem.eval(input)
@@ -69,17 +82,22 @@ case class BucketJaccards(amem: Expression, bmem: Expression,
     val bn = if (b == null) 0 else b.numElements()
     TextKernels.warnIfOversized(cap, an, bn)
 
-    // unpack once: ids + hash arrays + side tags, no boxing
+    // unpack once: ids + ascending hash arrays + side tags, no boxing
     val ids = new Array[Long](an + bn)
     val hss = new Array[Array[Long]](an + bn)
     val tag = new Array[Boolean](an + bn)
-    @inline def unpack(mem: ArrayData, n: Int, off: Int): Unit = {
+    val nf = memberFields
+    def unpack(mem: ArrayData, n: Int, off: Int): Unit = {
       var i = 0
       while (i < n) {
-        val m = mem.getStruct(i, 3)
+        val m = mem.getStruct(i, nf)
         ids(off + i) = m.getLong(0)
-        hss(off + i) = m.getArray(1).toLongArray()
-        tag(off + i) = m.getBoolean(2)
+        val hs = m.getArray(1).toLongArray()
+        var k = 1
+        while (k < hs.length && hs(k - 1) < hs(k)) k += 1
+        if (k < hs.length) java.util.Arrays.sort(hs)
+        hss(off + i) = hs
+        tag(off + i) = nf < 3 || m.getBoolean(2)
         i += 1
       }
     }
@@ -87,48 +105,36 @@ case class BucketJaccards(amem: Expression, bmem: Expression,
     if (b != null) unpack(b, bn, an)
 
     val out = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
-    // the jaccard is symmetric in (x, y), so either orientation of a
-    // pair computes the same bits
-    @inline def verify(x: Int, y: Int, a: Long, b: Long): Unit = {
-      val inter = TextKernels.intersectCount(hss(x), hss(y))
-      val jac = inter.toDouble /
-        (hss(x).length + hss(y).length - inter).toDouble
-      if (jac >= min) out += InternalRow(a, b, jac)
+    // the jaccard is symmetric in (x, y): either orientation computes
+    // the same bits; (lo, hi) is the emitted order
+    def verify(x: Int, y: Int, lo: Long, hi: Long): Unit = {
+      val lx = hss(x).length
+      val ly = hss(y).length
+      if (math.min(lx, ly).toDouble / math.max(lx, ly).toDouble >= min) {
+        val inter = TextKernels.sortedIntersectCount(hss(x), hss(y))
+        val jac = inter.toDouble / (lx + ly - inter).toDouble
+        if (jac >= min) out += InternalRow(lo, hi, jac)
+      }
     }
-    if (withinBatch) {
-      // any pair with a new member, equal ids skipped, canonical order.
-      // Intra row: each unordered pair within amem once. Cross row:
-      // amem × bmem.
-      @inline def pair(x: Int, y: Int): Unit =
-        if ((tag(x) || tag(y)) && ids(x) != ids(y))
-          if (ids(x) < ids(y)) verify(x, y, ids(x), ids(y))
-          else verify(x, y, ids(y), ids(x))
-      val hi = if (bn == 0) an else an + bn
-      var x = 0
-      while (x < an) {
-        var y = if (bn == 0) x + 1 else an
-        while (y < hi) { pair(x, y); y += 1 }
-        x += 1
-      }
-    } else {
-      // (new, store) orientation, equal ids skipped. Intra row: all
-      // new×store pairs within amem. Cross row: amem.new × bmem.store
-      // plus bmem.new × amem.store — the chunk split mixes sides.
-      @inline def cross(loN: Int, hiN: Int, loS: Int, hiS: Int): Unit = {
-        var x = loN
-        while (x < hiN) {
-          if (tag(x)) {
-            var y = loS
-            while (y < hiS) {
-              if (!tag(y) && ids(x) != ids(y)) verify(x, y, ids(x), ids(y))
-              y += 1
-            }
+    // candidate index pairs: x < y within amem (intra row), or
+    // amem × bmem (cross row)
+    val hi = if (bn == 0) an else an + bn
+    var x = 0
+    while (x < an) {
+      var y = if (bn == 0) x + 1 else an
+      while (y < hi) {
+        if (ids(x) != ids(y)) {
+          if (oriented) {
+            if (tag(x) && !tag(y)) verify(x, y, ids(x), ids(y))
+            else if (tag(y) && !tag(x)) verify(x, y, ids(y), ids(x))
+          } else if (tag(x) || tag(y)) {
+            if (ids(x) < ids(y)) verify(x, y, ids(x), ids(y))
+            else verify(x, y, ids(y), ids(x))
           }
-          x += 1
         }
+        y += 1
       }
-      if (bn == 0) cross(0, an, 0, an)
-      else { cross(0, an, an, an + bn); cross(an, an + bn, 0, an) }
+      x += 1
     }
     new GenericArrayData(out.toArray[Any])
   }
@@ -140,20 +146,12 @@ case class BucketJaccards(amem: Expression, bmem: Expression,
 }
 
 object BucketJaccards {
-  /** Two-sided chunk kernel ([[TextKernels.chunkCrossJaccards]]) as a
-    * native expression. */
-  def chunkCross(amem: Column, bmem: Column, minJac: Double,
-                 softCap: Int): Column = of(amem, bmem, minJac, softCap, false)
-
-  /** The same kernel in its `withinBatch` mode: every pair with a new
-    * member, as (smaller id, larger id). */
-  def withinBatch(amem: Column, bmem: Column, minJac: Double,
-                  softCap: Int): Column = of(amem, bmem, minJac, softCap, true)
-
-  private def of(amem: Column, bmem: Column, minJac: Double, softCap: Int,
-                 withinBatch: Boolean): Column =
+  /** The kernel over a grouped `(amem, bmem)` row, as an array of
+    * `(_1, _2, _3 = jac)` structs: canonical pairs by default, (new,
+    * store) pairs when `oriented`. */
+  def pairs(amem: Column, bmem: Column, minJac: Double, softCap: Int,
+            oriented: Boolean = false): Column =
     ColumnBridge.toColumn(BucketJaccards(
       ColumnBridge.toExpression(amem), ColumnBridge.toExpression(bmem),
-      org.apache.spark.sql.catalyst.expressions.Literal(minJac),
-      org.apache.spark.sql.catalyst.expressions.Literal(softCap), withinBatch))
+      Literal(minJac), Literal(softCap), oriented))
 }

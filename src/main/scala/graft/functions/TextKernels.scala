@@ -17,8 +17,10 @@ import org.apache.spark.sql.functions.udf
   * UDF-vs-builtin tradeoff: a scalar Scala UDF costs serialization at the
   * row boundary but nothing per array element; for ~100-element arrays ×
   * ~10-char shingles that's two orders of magnitude less interpreter
-  * traffic. (A custom codegen Expression would save the row boundary too;
-  * not needed at current profile.)
+  * traffic. Per-document kernels stay UDFs; the per-bucket near-dup pair
+  * verification, whose grouped rows carry many shingle arrays each, is
+  * the native expression [[BucketJaccards]], which skips the encoder
+  * round-trip.
   */
 object TextKernels {
 
@@ -35,12 +37,23 @@ object TextKernels {
   private def tokensOf(text: String): Array[String] =
     text.split("\\s+")
 
-  /** Distinct word-2gram shingle hashes, in first-occurrence order
-    * (order irrelevant downstream: consumers take min or set ops). */
+  /** An `rlike` pattern a text matches exactly when
+    * [[wordShingleHashes]] of it is non-empty: [[tokensOf]] yields two or
+    * more tokens iff some whitespace char is followed by a non-whitespace
+    * one (a whitespace run before the first token still yields a leading
+    * "" token; a trailing run yields none). Filtering on it keeps
+    * Catalyst from pushing a `size(hs) > 0` filter below the shingle
+    * projection, which evaluates the shingle kernel twice per document. */
+  val shingledText: String = "\\s\\S"
+
+  /** Distinct word-2gram shingle hashes, ASCENDING (like
+    * [[charShingleHashes]]): the merge intersect of
+    * [[BucketJaccards]] reads them as they are, and every other consumer
+    * takes a min, a set op or an explode, which order does not change. */
   def wordShingleHashes(text: String): Array[Long] = {
     val t = tokensOf(text)
     if (t.length < 2) return Array.empty
-    val seen = new java.util.LinkedHashSet[Long]()
+    val hs = new Array[Long](t.length - 1)
     var i = 0
     while (i < t.length - 1) {
       // hash of "tok1_tok2" without building the string
@@ -49,14 +62,17 @@ object TextKernels {
       var j = 0
       val s2 = t(i + 1)
       while (j < s2.length) { h = (h * 31 + s2.charAt(j)) % P; j += 1 }
-      seen.add(h)
+      hs(i) = h
       i += 1
     }
-    val out = new Array[Long](seen.size)
-    val it = seen.iterator()
-    var k = 0
-    while (it.hasNext) { out(k) = it.next(); k += 1 }
-    out
+    java.util.Arrays.sort(hs)
+    var n = 1
+    i = 1
+    while (i < hs.length) {
+      if (hs(i) != hs(n - 1)) { hs(n) = hs(i); n += 1 }
+      i += 1
+    }
+    if (n == hs.length) hs else java.util.Arrays.copyOf(hs, n)
   }
 
   /** Distinct word-2gram shingle STRINGS ("tok1_tok2", first-occurrence
@@ -125,10 +141,6 @@ object TextKernels {
     }
     out
   }
-
-  /** The 12 minhash signature values over word-2gram shingle hashes. */
-  def minhashSigs(text: String): Array[Long] =
-    minhashFromHashes(wordShingleHashes(text))
 
   /** The 12 minhash signature values over char-kgram shingle hashes (the
     * banding key source for the scalable blocked-Jaccard dedup d6). The
@@ -258,7 +270,8 @@ object TextKernels {
 
   // ---- UDF registrations (names used in operator packs)
 
-  val minhashSigsUdf: UserDefinedFunction = udf((t: String) => minhashSigs(t))
+  val minhashFromHashesUdf: UserDefinedFunction =
+    udf((hs: Array[Long]) => minhashFromHashes(hs))
   def charMinhashSigsUdf(k: Int): UserDefinedFunction =
     udf((t: String) => charMinhashSigs(t, k))
   val wordShingleHashesUdf: UserDefinedFunction = udf((t: String) => wordShingleHashes(t))
@@ -279,198 +292,6 @@ object TextKernels {
   val intersectCountUdf: UserDefinedFunction =
     udf((a: Array[Long], b: Array[Long]) => intersectCount(a, b))
 
-  /** Bucket-LOCAL candidate verification: all (id_lo, id_hi, jaccard)
-    * pairs among one LSH band bucket's members, each member = (doc_id,
-    * shingle hashes). The arithmetic per pair is IDENTICAL to the
-    * row-per-candidate formulation ([[intersectCount]] + the same IEEE
-    * divide), but the shingle arrays ship once per (doc, bucket) instead
-    * of once per candidate pair — at 500k docs that is ~3 GB of exchange
-    * instead of ~70 GB (the sf10 run's disk-spill blowup). Duplicate
-    * pairs across shared buckets carry identical jaccards, so the
-    * caller's distinct() sees the same row set. Struct members decode
-    * positionally as tuples; arrays unwrap ONCE per member, not per pair. */
-  def bucketPairJaccards(members: Seq[(Long, Seq[Long])],
-                         minJac: Double): Seq[(Long, Long, Double)] = {
-    val n = members.length
-    val ids = new Array[Long](n)
-    val hss = new Array[Array[Long]](n)
-    var i = 0
-    members.foreach { m => ids(i) = m._1; hss(i) = m._2.toArray; i += 1 }
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-    var a = 0
-    while (a < n) {
-      var b = a + 1
-      while (b < n) {
-        val inter = intersectCount(hss(a), hss(b))
-        val jac = inter.toDouble /
-          (hss(a).length + hss(b).length - inter).toDouble
-        // Threshold INSIDE the kernel: a hot bucket computes C(n,2)
-        // jaccards either way, but only survivors are boxed/exploded
-        // into rows (the sf10 hot buckets are boilerplate-driven — most
-        // of their ~2.7M pairs are sub-threshold noise the old path
-        // materialized just to filter). Same IEEE `>=` as the caller's
-        // SQL filter, which stays in place as the authoritative gate.
-        if (jac >= minJac) {
-          if (ids(a) < ids(b)) out += ((ids(a), ids(b), jac))
-          else out += ((ids(b), ids(a), jac))
-        }
-        b += 1
-      }
-      a += 1
-    }
-    out.toSeq
-  }
-
-  /** [[bucketPairJaccards]] for SORTED member arrays (charShingleHashes
-    * is TreeSet-built): intersection counts come from the zero-
-    * allocation merge [[sortedIntersectCount]] instead of a per-pair
-    * boxed HashSet — same integer, same IEEE divide, bit-identical
-    * jaccards (KernelProps pins it), but the d6 sf10 run's dominant GC
-    * pressure (160 s/run of HashSet churn over ~2000-element arrays)
-    * disappears. Only sorted-input callers may use it. */
-  def bucketPairJaccardsSorted(members: Seq[(Long, Seq[Long])],
-                               minJac: Double): Seq[(Long, Long, Double)] = {
-    val n = members.length
-    val ids = new Array[Long](n)
-    val hss = new Array[Array[Long]](n)
-    var i = 0
-    members.foreach { m => ids(i) = m._1; hss(i) = m._2.toArray; i += 1 }
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-    var a = 0
-    while (a < n) {
-      var b = a + 1
-      while (b < n) {
-        // size gate (lossless): inter ≤ min and union ≥ max, so
-        // jac ≤ min/max — a pair whose smaller set is under
-        // minJac × the larger can never pass; skip the merge outright
-        val la = hss(a).length.toDouble
-        val lb = hss(b).length.toDouble
-        if (math.min(la, lb) >= minJac * math.max(la, lb)) {
-          val inter = sortedIntersectCount(hss(a), hss(b))
-          val jac = inter.toDouble /
-            (hss(a).length + hss(b).length - inter).toDouble
-          if (jac >= minJac) {
-            if (ids(a) < ids(b)) out += ((ids(a), ids(b), jac))
-            else out += ((ids(b), ids(a), jac))
-          }
-        }
-        b += 1
-      }
-      a += 1
-    }
-    out.toSeq
-  }
-
-  /** Sorted-input cross variant (chunk cross rows of a sorted-array
-    * bucket); mirrors [[bucketCrossJaccards]] with the merge intersect. */
-  def bucketCrossJaccardsSorted(am: Seq[(Long, Seq[Long])],
-                                bm: Seq[(Long, Seq[Long])],
-                                minJac: Double): Seq[(Long, Long, Double)] = {
-    val n = am.length
-    val m = bm.length
-    val nid = new Array[Long](n)
-    val nhs = new Array[Array[Long]](n)
-    var i = 0
-    am.foreach { x => nid(i) = x._1; nhs(i) = x._2.toArray; i += 1 }
-    val sid = new Array[Long](m)
-    val shs = new Array[Array[Long]](m)
-    i = 0
-    bm.foreach { x => sid(i) = x._1; shs(i) = x._2.toArray; i += 1 }
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-    var a = 0
-    while (a < n) {
-      var b = 0
-      while (b < m) {
-        if (nid(a) != sid(b)) {
-          val la = nhs(a).length.toDouble
-          val lb = shs(b).length.toDouble
-          if (math.min(la, lb) >= minJac * math.max(la, lb)) {
-            val inter = sortedIntersectCount(nhs(a), shs(b))
-            val jac = inter.toDouble /
-              (nhs(a).length + shs(b).length - inter).toDouble
-            if (jac >= minJac) out += ((nid(a), sid(b), jac))
-          }
-        }
-        b += 1
-      }
-      a += 1
-    }
-    out.toSeq
-  }
-
-  /** [[chunkPairJaccards]] over SORTED member arrays (see
-    * [[bucketPairJaccardsSorted]]). */
-  def chunkPairJaccardsSorted(amem: Seq[(Long, Seq[Long])],
-                              bmem: Seq[(Long, Seq[Long])],
-                              minJac: Double,
-                              softCap: Int = 0): Seq[(Long, Long, Double)] = {
-    warnIfOversized(softCap, amem.length, if (bmem == null) 0 else bmem.length)
-    if (bmem == null || bmem.isEmpty) bucketPairJaccardsSorted(amem, minJac)
-    else bucketCrossJaccardsSorted(amem, bmem, minJac).map { t =>
-      if (t._1 <= t._2) t else (t._2, t._1, t._3)
-    }
-  }
-
-  val chunkPairJaccardsSortedUdf: UserDefinedFunction =
-    udf((a: Seq[(Long, Seq[Long])], b: Seq[(Long, Seq[Long])],
-         minJac: Double, softCap: Int) =>
-      chunkPairJaccardsSorted(a, b, minJac, softCap))
-
-  /** Cross-side variant of [[bucketPairJaccards]] for the asymmetric
-    * probe (new batch × signature store, Dedup.probePairs): verifies
-    * every (new, store) pair sharing this bucket, skipping equal ids
-    * (a redelivered batch whose signatures were already upserted must
-    * not match itself). Output keeps (new_id, store_id) orientation —
-    * NOT id-sorted — the probe's asymmetric contract. Same flat-array
-    * + in-kernel-threshold discipline as the one-sided kernel. */
-  def bucketCrossJaccards(newMembers: Seq[(Long, Seq[Long])],
-                          storeMembers: Seq[(Long, Seq[Long])],
-                          minJac: Double): Seq[(Long, Long, Double)] = {
-    val n = newMembers.length
-    val m = storeMembers.length
-    val nid = new Array[Long](n)
-    val nhs = new Array[Array[Long]](n)
-    var i = 0
-    newMembers.foreach { x => nid(i) = x._1; nhs(i) = x._2.toArray; i += 1 }
-    val sid = new Array[Long](m)
-    val shs = new Array[Array[Long]](m)
-    i = 0
-    storeMembers.foreach { x => sid(i) = x._1; shs(i) = x._2.toArray; i += 1 }
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-    var a = 0
-    while (a < n) {
-      var b = 0
-      while (b < m) {
-        if (nid(a) != sid(b)) {
-          val inter = intersectCount(nhs(a), shs(b))
-          val jac = inter.toDouble /
-            (nhs(a).length + shs(b).length - inter).toDouble
-          if (jac >= minJac) out += ((nid(a), sid(b), jac))
-        }
-        b += 1
-      }
-      a += 1
-    }
-    out.toSeq
-  }
-
-  /** Chunk-pair verification for the CAPPED bucket-local plan (VERDICT
-    * r10 task 2): a bucket's members are split into fixed-size chunks
-    * upstream, and each grouped row carries either ONE chunk (`bmem`
-    * empty — verify all pairs within it) or TWO chunks (verify only the
-    * cross pairs; each chunk's internal pairs arrive on its own row).
-    * Same candidates and the same per-pair arithmetic as
-    * [[bucketPairJaccards]] over the whole bucket — the union of
-    * intra-chunk and cross-chunk pairs IS C(n,2) — but per-task work is
-    * bounded by the chunk size, not the hottest bucket's population
-    * (the single-task C(n,2) straggler / giant-collect_list-row failure
-    * mode an adversarial boilerplate bucket would hit). Output id-sorted
-    * like the one-bucket kernel; cross pairs can't repeat an intra pair:
-    * a doc lives in exactly one chunk per bucket, and the upstream
-    * grouping FILTERS OUT cross rows whose partner chunk came up empty
-    * (hash-assigned chunks can be), so `bmem` empty reliably means "this
-    * row IS the intra row" — the kernel never re-verifies a chunk's
-    * internal pairs on a degenerate cross row. */
   @transient private lazy val log =
     org.slf4j.LoggerFactory.getLogger("graft.functions.TextKernels")
   private val capWarned = new java.util.concurrent.atomic.AtomicBoolean(false)
@@ -490,32 +311,6 @@ object TextKernels {
         "or low-entropy doc_ids); expect a hot task where the chunk cap " +
         "promised none")
 
-  def chunkPairJaccards(amem: Seq[(Long, Seq[Long])],
-                        bmem: Seq[(Long, Seq[Long])],
-                        minJac: Double,
-                        softCap: Int = 0): Seq[(Long, Long, Double)] = {
-    warnIfOversized(softCap, amem.length, if (bmem == null) 0 else bmem.length)
-    if (bmem == null || bmem.isEmpty) bucketPairJaccards(amem, minJac)
-    else bucketCrossJaccards(amem, bmem, minJac).map { t =>
-      if (t._1 <= t._2) t else (t._2, t._1, t._3)
-    }
-  }
-
-  val chunkPairJaccardsUdf: UserDefinedFunction =
-    udf((a: Seq[(Long, Seq[Long])], b: Seq[(Long, Seq[Long])],
-         minJac: Double, softCap: Int) => chunkPairJaccards(a, b, minJac, softCap))
-
-  /** [[chunkPairJaccards]]' contract over PREFIX STRINGS with a
-    * threshold Levenshtein verifier — the bucket-local kernel behind
-    * d9's capped plan (r12). Distances come from Spark's OWN
-    * `UTF8String.levenshteinDistance(other, threshold)` — the exact
-    * routine the SQL `levenshtein(l, r, k)` expression runs — so every
-    * emitted distance is bit-identical to the join formulation it
-    * replaces; pairs past the threshold return -1 there and are not
-    * emitted. Output id-sorted (doc_a < doc_b); intra rows (`bmem`
-    * empty) verify all pairs within `amem`, cross rows only the
-    * amem×bmem product (chunks partition a bucket, so ids never
-    * repeat). */
   /** One member's DP operand (decoded to code points ONCE — Spark's
     * UTF8String DP re-walks the UTF-8 bytes inside the inner loop) plus
     * its 256-bucket character histogram (chars folded by & 0xFF —
@@ -694,6 +489,17 @@ object TextKernels {
     if (pos > neg) pos else neg
   }
 
+  /** [[BucketJaccards]]' grouped-row contract over PREFIX STRINGS with a
+    * threshold Levenshtein verifier — the bucket-local kernel behind
+    * d9's capped plan (r12). Distances come from Spark's OWN
+    * `UTF8String.levenshteinDistance(other, threshold)` — the exact
+    * routine the SQL `levenshtein(l, r, k)` expression runs — so every
+    * emitted distance is bit-identical to the join formulation it
+    * replaces; pairs past the threshold return -1 there and are not
+    * emitted. Output id-sorted (doc_a < doc_b); intra rows (`bmem`
+    * empty) verify all pairs within `amem`, cross rows only the
+    * amem×bmem product (chunks partition a bucket, so ids never
+    * repeat). */
   def chunkPairEdits(amem: Seq[(Long, String)],
                      bmem: Seq[(Long, String)],
                      maxDist: Int,
@@ -729,32 +535,4 @@ object TextKernels {
   val chunkPairEditsUdf: UserDefinedFunction =
     udf((a: Seq[(Long, String)], b: Seq[(Long, String)],
          maxDist: Int, softCap: Int) => chunkPairEdits(a, b, maxDist, softCap))
-
-  /** Chunked TWO-SIDED probe kernel ([[bucketCrossJaccards]] semantics
-    * under the chunk cap): members carry a corpus-side tag (_3 = true
-    * for the NEW batch, false for the store) because chunks are cut
-    * over the bucket's COMBINED membership — a chunk can mix sides.
-    * Pairs are (new, store) only, orientation kept, equal ids skipped
-    * (redelivery self-match), exactly the uncapped kernel's contract;
-    * intra-chunk rows (`bmem` empty) contribute their internal
-    * new×store pairs, cross-chunk rows the across-chunk ones. */
-  def chunkCrossJaccards(amem: Seq[(Long, Seq[Long], Boolean)],
-                         bmem: Seq[(Long, Seq[Long], Boolean)],
-                         minJac: Double,
-                         softCap: Int = 0): Seq[(Long, Long, Double)] = {
-    warnIfOversized(softCap, amem.length, if (bmem == null) 0 else bmem.length)
-    def strip(xs: Seq[(Long, Seq[Long], Boolean)]) = xs.map(t => (t._1, t._2))
-    val (an, as) = amem.partition(_._3)
-    if (bmem == null || bmem.isEmpty)
-      bucketCrossJaccards(strip(an), strip(as), minJac)
-    else {
-      val (bn, bs) = bmem.partition(_._3)
-      bucketCrossJaccards(strip(an), strip(bs), minJac) ++
-        bucketCrossJaccards(strip(bn), strip(as), minJac)
-    }
-  }
-
-  val chunkCrossJaccardsUdf: UserDefinedFunction =
-    udf((a: Seq[(Long, Seq[Long], Boolean)], b: Seq[(Long, Seq[Long], Boolean)],
-         minJac: Double, softCap: Int) => chunkCrossJaccards(a, b, minJac, softCap))
 }

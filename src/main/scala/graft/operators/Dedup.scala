@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{QueryPack, Tables}
-import graft.functions.{TextKernels, TextPrims}
+import graft.functions.{BucketJaccards, TextKernels, TextPrims}
 import graft.functions.TextPrims.{DuckD, SparkD, minhashSeeds, P}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -71,9 +71,9 @@ object Dedup extends QueryPack {
     // both engines: the kernel's Long.MaxValue sentinel and SQL list_min's
     // NULL would otherwise diverge (and overflow band arithmetic in d4).
     val base = Tables.documents(s, dir)
+      .filter(col("text").rlike(TextKernels.shingledText))
       .withColumn("hs", TextKernels.wordShingleHashesUdf(col("text")))
-      .filter(size(col("hs")) > 0)
-      .withColumn("sig", TextKernels.minhashSigsUdf(col("text")))
+      .withColumn("sig", TextKernels.minhashFromHashesUdf(col("hs")))
     val sigs = minhashSeeds.indices.map { k =>
       element_at(col("sig"), k + 1).as(s"sig$k")
     }
@@ -106,15 +106,17 @@ object Dedup extends QueryPack {
     // because it is not free: carrying it unconditionally was measured
     // at sf10 to slow d10 29.6 → 36.5 s — a tax on every signature
     // consumer to save one query's second scan. Only d20 asks for it.
-    val base = if (withLen)
-      docs.select(col("doc_id"), length(col("text")).cast("long").as("len"),
-        TextKernels.minhashSigsUdf(col("text")).as("sig"),
-        TextKernels.wordShingleHashesUdf(col("text")).as("hs"))
-    else
-      docs.select(col("doc_id"),
-        TextKernels.minhashSigsUdf(col("text")).as("sig"),
-        TextKernels.wordShingleHashesUdf(col("text")).as("hs"))
-    base.filter(size(col("hs")) > 0)
+    // Each document is tokenized once: the emptiness filter reads the
+    // text, and `sig` is derived from `hs`.
+    val shingleable = docs.filter(col("text").rlike(TextKernels.shingledText))
+    val hs = TextKernels.wordShingleHashesUdf(col("text")).as("hs")
+    val shingled =
+      if (withLen) shingleable.select(col("doc_id"),
+        length(col("text")).cast("long").as("len"), hs)
+      else shingleable.select(col("doc_id"), hs)
+    val keys = shingled.columns.toSeq.filter(_ != "hs").map(col)
+    shingled.select(keys ++ Seq(
+      TextKernels.minhashFromHashesUdf(col("hs")).as("sig"), col("hs")): _*)
   }
 
   /** Band keys (doc_id, band_id, bh) from a signature table: candidates
@@ -187,7 +189,7 @@ object Dedup extends QueryPack {
     * (doc_id, band_id, bh) rows, side-tagged with `is_new` on the
     * two-sided probes; `members` joins them on the columns both frames
     * carry, and its columns, in order, make each member's struct:
-    * (doc_id, hs), or (doc_id, hs, is_new) — the kernels read the fields
+    * (doc_id, hs), or (doc_id, hs, is_new) — the kernel reads the fields
     * by position. Emits grouped (amem, bmem) rows.
     *
     * When the driver probe finds no bucket over `chunkSize` (a healthy
@@ -260,7 +262,7 @@ object Dedup extends QueryPack {
   }
 
   /** The kernel-side Jaccard gate: `threshold`'s value. The verification
-    * kernels drop pairs below it before they are emitted, so it must be a
+    * kernel drops pairs below it before they are emitted, so it must be a
     * plain numeric literal (every caller passes one); a non-literal
     * expression would leave the kernel emitting every candidate pair for
     * the outer SQL filter to drop — a quiet perf trap (ADVICE r12) — so
@@ -274,18 +276,16 @@ object Dedup extends QueryPack {
 
   /** One-sided verification: every pair of `sig` docs (doc_id, hs) that
     * shares a bucket of `bands`, as (doc_a < doc_b, jac) with jac ≥
-    * `threshold`. A pair sharing several buckets is emitted once per
-    * bucket; callers that need a set add `.distinct()`. The kernel stays
-    * the Scala UDF: the native [[graft.functions.BucketJaccards]] form
-    * measured cost-neutral-to-slightly-worse here (sf10 same-window ABA,
-    * r12: d10 25.1 vs 26.5/27.0 s) — each grouped row amortizes its
-    * C(n,2) arithmetic over one encoder round-trip. */
-  private def oneSidedPairs(bands: DataFrame, sig: DataFrame,
-                            chunkSize: Int, threshold: String): DataFrame = {
+    * `threshold` — [[BucketJaccards]]' canonical mode over members
+    * without a side tag. A pair sharing several buckets is emitted once
+    * per bucket; callers that need a set add `.distinct()`. */
+  private[graft] def oneSidedPairs(bands: DataFrame, sig: DataFrame,
+                                   chunkSize: Int,
+                                   threshold: String): DataFrame = {
     val minJac = kernelGate(threshold)
     bucketGroups(bands, sig.select(col("doc_id"), col("hs")), chunkSize)
-      .select(explode(TextKernels.chunkPairJaccardsUdf(col("amem"),
-        col("bmem"), lit(minJac), lit(chunkSize * 8))).as("p"))
+      .select(explode(BucketJaccards.pairs(col("amem"), col("bmem"),
+        minJac, chunkSize * 8)).as("p"))
       .select(col("p._1").as("doc_a"), col("p._2").as("doc_b"),
         col("p._3").as("jac"))
       .filter(col("jac") >= expr(threshold))
@@ -324,35 +324,22 @@ object Dedup extends QueryPack {
     * [[batchPairs]], which verifies the batch's own pairs in the same
     * pass). Band-key equi-join (batch bands × store bands, never
     * store×store), exact Jaccard on collisions only; output (new_doc,
-    * dup_of, jac).
+    * dup_of, jac) — [[BucketJaccards]]' oriented mode.
     * Same-id rows are excluded so a batch whose signatures were already
-    * upserted into the store does not match itself on redelivery. */
+    * upserted into the store does not match itself on redelivery. A
+    * self-probe `probePairs(sig, sig)` keeps this contract (both
+    * orientations of each pair); a caller that wants each pair once
+    * runs the one-sided [[oneSidedPairs]], as d21's within-batch step
+    * does. */
   def probePairs(newSig: DataFrame,
                  storeSig: DataFrame,
                  threshold: String = jacThreshold,
                  chunkSize: Int = bucketChunkSize)
       : DataFrame = {
-    // SELF-probe fast path (reference equality — d21's within-batch
-    // sweep): the two-sided plan would union the SAME bands twice (2×
-    // the grouping exchange, doubled bucket rows) and the cross kernel
-    // would compute every jaccard twice (a×b and b×a of identical member
-    // sets). The one-sided machinery does C(n,2) once; both orientations
-    // are emitted afterwards on the THRESHOLD-SURVIVING pairs only, so
-    // the output contract (every qualifying (new_doc, dup_of) ordered
-    // pair, same-id excluded) is unchanged.
-    if (newSig eq storeSig)
-      return oneSidedPairs(bandsOf(newSig), newSig, chunkSize, threshold)
-        .distinct()
-        .select(explode(array(
-          struct(col("doc_a").as("new_doc"), col("doc_b").as("dup_of"),
-            col("jac")),
-          struct(col("doc_b").as("new_doc"), col("doc_a").as("dup_of"),
-            col("jac")))).as("q"))
-        .select("q.new_doc", "q.dup_of", "q.jac")
     val minJac = kernelGate(threshold)
     sidedGroups(newSig, storeSig, bandsOf(storeSig), chunkSize)
-      .select(explode(graft.functions.BucketJaccards.chunkCross(
-        col("amem"), col("bmem"), minJac, chunkSize * 8)).as("p"))
+      .select(explode(BucketJaccards.pairs(col("amem"), col("bmem"),
+        minJac, chunkSize * 8, oriented = true)).as("p"))
       .select(col("p._1").as("new_doc"), col("p._2").as("dup_of"),
         col("p._3").as("jac"))
       .filter(col("jac") >= expr(threshold))
@@ -410,11 +397,10 @@ object Dedup extends QueryPack {
     * set is the same, since a store band whose bucket holds no batch
     * member pairs with nothing. Both sides' bands are grouped by ONE
     * [[bucketGroups]] call (one hot-bucket probe, one grouping exchange)
-    * and verified by the `withinBatch` mode of
-    * [[graft.functions.BucketJaccards]], which emits each pair in
-    * canonical order — so the same pair found in several buckets, or
-    * from both copies of a redelivered doc, folds in one
-    * `dropDuplicates`. Equal ids are skipped, so a redelivered batch
+    * and verified by the canonical mode of [[BucketJaccards]], which
+    * emits each pair in canonical order — so the same pair found in
+    * several buckets, or from both copies of a redelivered doc, folds in
+    * one `dropDuplicates`. Equal ids are skipped, so a redelivered batch
     * does not match its own stored signatures. Same pair set as the
     * self-probe ∪ two-sided probe ([[probePairs]] twice), folded the
     * same way, at one exchange and one hot-bucket probe instead of two. */
@@ -424,8 +410,8 @@ object Dedup extends QueryPack {
                  chunkSize: Int = bucketChunkSize): DataFrame = {
     val minJac = kernelGate(threshold)
     sidedGroups(newSig, storeSig, storeBands, chunkSize)
-      .select(explode(graft.functions.BucketJaccards.withinBatch(
-        col("amem"), col("bmem"), minJac, chunkSize * 8)).as("p"))
+      .select(explode(BucketJaccards.pairs(col("amem"), col("bmem"),
+        minJac, chunkSize * 8)).as("p"))
       .select(col("p._1").as("doc_a"), col("p._2").as("doc_b"),
         col("p._3").as("jac"))
       .dropDuplicates("doc_a", "doc_b")
@@ -646,9 +632,10 @@ object Dedup extends QueryPack {
     val cleanSig = sigN
       .join(corpusHit.select("doc_id"), Seq("doc_id"), "left_anti")
       .persist()
-    val within = probePairs(cleanSig, cleanSig)
-      .filter(col("new_doc") < col("dup_of"))
-      .select(col("new_doc").as("doc_a"), col("dup_of").as("doc_b"))
+    val within = oneSidedPairs(bandsOf(cleanSig), cleanSig, bucketChunkSize,
+        jacThreshold)
+      .select("doc_a", "doc_b")
+      .distinct()
       .persist()
     val comp = Graph.connectedComponents(within, "doc_a", "doc_b")
       .select(col("id").as("doc_id"), col("component"))
@@ -1038,13 +1025,18 @@ object Dedup extends QueryPack {
     * they tie (6.5 vs 6.7 s), and at 500k docs (sf10) the join plan
     * OOMs the heap outright — every candidate row carries BOTH ~16 KB
     * 3-gram arrays. The flip sits just above the measured tie so
-    * anything past it gets the memory-bounded kernel. */
+    * anything past it gets the memory-bounded kernel. (Measured with the
+    * boxed UDF kernel that [[BucketJaccards]] replaced; not re-measured.) */
   private val d6JoinMaxDocs = 65536L
 
   // adaptive: one metadata-cheap count picks the plan (the Graph hybrid
-  // discipline — both paths are spec-pinned bit-equal)
-  private val d6CharJaccard: Q = (s, dir) =>
-    if (Tables.documents(s, dir).count() <= d6JoinMaxDocs) d6Plan(s, dir)
+  // discipline — both paths are spec-pinned bit-equal, and DedupGuardSpec
+  // runs the pick at n = threshold ± 1 through `joinMaxDocs`)
+  private[graft] def d6CharJaccard(s: org.apache.spark.sql.SparkSession,
+                                   dir: String,
+                                   joinMaxDocs: Long = d6JoinMaxDocs)
+      : DataFrame =
+    if (Tables.documents(s, dir).count() <= joinMaxDocs) d6Plan(s, dir)
     else d6Kernel(s, dir)
 
   /** d6 through the bucket-local kernel discipline (r13): the candidate
@@ -1101,17 +1093,13 @@ object Dedup extends QueryPack {
     val members = Tables.documents(s, dir)
       .filter(length(col("text")) >= bandK)
       .select(col("doc_id"), TextKernels.charShingle3Udf(col("text")).as("hs"))
-    // sorted kernel: charShingleHashes arrays are TreeSet-sorted, so the
-    // merge intersect replaces the per-pair HashSet (same integer, same
-    // IEEE divide — KernelProps pins sorted == hash on sorted inputs,
-    // and the lossless min/max size gate skips merges that cannot reach
-    // 0.5). Chunk cap 128, not the word-shingle 512: these members are
+    // Chunk cap 128, not the word-shingle 512: these members are
     // ~16 KB arrays (4–30× heavier), so the cap scales down to keep
     // grouped rows ~4 MB (the d15 synthetic-bucket precedent).
     val d6Cap = 128
     val pairs = bucketGroups(banded, members, d6Cap)
-      .select(explode(TextKernels.chunkPairJaccardsSortedUdf(
-        col("amem"), col("bmem"), lit(0.5), lit(d6Cap * 8))).as("p"))
+      .select(explode(BucketJaccards.pairs(col("amem"), col("bmem"), 0.5,
+        d6Cap * 8)).as("p"))
       .select(col("p._1").as("doc_a"), col("p._2").as("doc_b"),
         col("p._3").as("jac"))
       .filter(col("jac") >= 0.5)
@@ -1713,7 +1701,7 @@ object Dedup extends QueryPack {
     "d3_minhash_sig"       -> d3MinhashSig,
     "d4_lsh_neardup_pairs" -> d4LshPairs,
     "d5_simhash"           -> d5Simhash,
-    "d6_char_jaccard"      -> d6CharJaccard,
+    "d6_char_jaccard"      -> (d6CharJaccard(_, _)),
     "d7_decontaminate"     -> d7Decontam,
     "d8_stratified_sample" -> d8Stratified,
     "d10_dup_clusters"     -> d10DupClusters,

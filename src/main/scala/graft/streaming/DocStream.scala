@@ -23,7 +23,11 @@ import graft.sources.MergeWriter
   * an upsert by natural key: re-signing the same docs produces identical
   * rows, re-probing produces identical pairs, and the store's same-id
   * exclusion keeps a redelivered batch from matching its own earlier
-  * upsert. At 100 TB the store carries 12 longs + the shingle hashes per
+  * upsert. A store written while word shingles were kept in
+  * first-occurrence order stays correct (the kernel sorts such `hs`
+  * arrays), and a legacy document redelivered now re-signs with sorted
+  * `hs`, so its row differs and its file is rewritten once. At 100 TB
+  * the store carries 12 longs + the shingle hashes per
   * document — orders below the text — and the probe's only corpus-sized
   * join is the band-key equi-join, the same bound d4 proves.
   */
@@ -33,18 +37,6 @@ object DocStream {
   def seedSignatureStore(docs: DataFrame, storePath: String): Unit =
     MergeWriter.upsertParquet(docs.sparkSession, storePath,
       Dedup.signatures(docs), Seq("doc_id"))
-
-  /** Pruning hysteresis: the probe takes only the LIVE store bands while
-    * the measured live-band fraction stays below [[pruneOnBelow]], and
-    * the full store bands once it exceeds [[pruneOffAbove]]. Between the
-    * two thresholds the current mode sticks, so a fraction hovering at a
-    * boundary can't flap the plan per batch. The thresholds were set
-    * when pruning cost two extra passes (measured at sf10: d21 15.5 →
-    * 29.9 s with pruning forced on a dup-dense sweep); the live bands
-    * are now pinned for the fraction anyway, so pruning costs no extra
-    * pass, and whether turning it off still pays is not re-measured. */
-  private val pruneOffAbove = 0.5
-  private val pruneOnBelow = 0.25
 
   /** Per-micro-batch near-dup detection against `storePath`; hits land
     * in `hitsPath` as (doc_a < doc_b, jac) — d4's canonical pair order,
@@ -74,17 +66,19 @@ object DocStream {
     * MergeWriter's default-sized files. The store is read in the
     * batch signatures' schema, so no batch runs a schema-inference job.
     *
-    * Store-probe pruning is ADAPTIVE: each batch pins the store band rows
-    * whose bucket holds a batch member ([[Dedup.liveStoreBands]]: one
-    * pass over the store's skinny band columns, the batch's keys
-    * broadcast) in the one job that also counts them; the store's row
-    * total comes from its Parquet footers, so the live-band fraction
-    * costs no further job. The fraction sets the pruning mode by
-    * hysteresis ([[pruneOffAbove]]/[[pruneOnBelow]]): pruned, the probe
-    * takes the pinned live bands; unpruned, the store's full bands.
-    * `onBatchMetrics(batchId, liveFraction, pruned)` surfaces each
-    * measured decision to instruments (StreamBench) and tests; a batch
-    * into a store that does not exist yet measures nothing.
+    * The probe takes only the LIVE store bands: each batch pins the
+    * store band rows whose bucket holds a batch member
+    * ([[Dedup.liveStoreBands]]: one pass over the store's skinny band
+    * columns, the batch's keys broadcast) in the one job that also
+    * counts them. A store band whose bucket holds no batch member pairs
+    * with nothing, so the full store bands would find the same pairs at
+    * more work, whatever the live fraction. The store's row total comes
+    * from its Parquet footers, so the live-band fraction costs no
+    * further job. `onBatchMetrics(batchId, liveFraction, pruned)`
+    * surfaces it to instruments (StreamBench, perfbench) and tests;
+    * `pruned` is always true (every batch probes the live bands) and
+    * stays in the signature for the callers that read it. A batch into
+    * a store that does not exist yet measures nothing.
     *
     * Emptiness comes from the persisted signatures: a batch with no
     * shingled document (an empty one, or one whose documents are all too
@@ -100,9 +94,6 @@ object DocStream {
                       (_, _, _) => ()): StreamingQuery = {
     val owner = docs.sparkSession
     val sc = owner.sparkContext
-    // pruning mode carries across batches (hysteresis needs memory);
-    // foreachBatch runs on the driver, single-threaded per query
-    var pruneOn = true
     docs.writeStream
       .foreachBatch { (b: DataFrame, batchId: Long) =>
         val streamJobs = sc.getLocalProperty("spark.job.description")
@@ -125,12 +116,8 @@ object DocStream {
               val liveRows = pinned.queryExecution.toRdd.count()
               val total = MergeWriter.rowCount(owner, storePath) * Dedup.nBands
               val frac = if (total == 0L) 0.0 else liveRows.toDouble / total
-              pruneOn =
-                if (frac > pruneOffAbove) false
-                else if (frac < pruneOnBelow) true
-                else pruneOn
-              onBatchMetrics(batchId, frac, pruneOn)
-              (store, if (pruneOn) pinned else Dedup.bandsOf(store))
+              onBatchMetrics(batchId, frac, true)
+              (store, pinned)
             } else {
               val none = sig.limit(0)
               (none, Dedup.bandsOf(none))

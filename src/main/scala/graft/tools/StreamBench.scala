@@ -11,8 +11,8 @@ import graft.streaming.DocStream
   * seed the signature store from one corpus, then feed N micro-batches
   * of NEW documents through the real `nearDupStream` query (file source,
   * one parquet file per trigger) against the GROWING store, and print
-  * each micro-batch's trigger duration, live-bucket fraction, pruning
-  * decision, and the store's file count. What flat batch times
+  * each micro-batch's trigger duration, live-bucket fraction and the
+  * store's file count. What flat batch times
   * demonstrate: the per-batch probe cost is |batch| signing + banded
   * collisions — independent of corpus TEXT volume — and the per-batch
   * sink cost is O(batch) (append commit + key-range-pruned collision
@@ -92,11 +92,11 @@ object StreamBench {
     println(f"[stream-bench] staged $nBatches%d batches of " +
       f"${batchDocs.count()}%d docs in ${(System.nanoTime() - t0) / 1e9}%.1f s")
 
-    // per-batch adaptive-pruning metrics, keyed by batchId; the store
-    // file count is sampled at the same moment (pre-upsert), so the
+    // per-batch live-band fraction, keyed by batchId; the store file
+    // count is sampled at the same moment (pre-upsert), so the
     // compaction sawtooth is visible against the trigger times
     val metrics = scala.collection.concurrent.TrieMap
-      .empty[Long, (Double, Boolean, Int)]
+      .empty[Long, (Double, Int)]
     val q = DocStream.nearDupStream(
       spark.readStream
         .schema(batchDocs.schema)
@@ -104,8 +104,8 @@ object StreamBench {
         .parquet(inDir.toString),
       s"$work/store", s"$work/hits",
       compactEvery = compactEvery,
-      onBatchMetrics = (id, frac, pruned) =>
-        metrics(id) = (frac, pruned, parquetFiles(s"$work/store")))
+      onBatchMetrics = (id, frac, _) =>
+        metrics(id) = (frac, parquetFiles(s"$work/store")))
     q.processAllAvailable()
     q.stop()
 
@@ -114,8 +114,8 @@ object StreamBench {
       val m = metrics.get(p.batchId)
       println(f"[stream-bench] batch $i%2d: " +
         f"${p.durationMs.get("triggerExecution") / 1000.0}%6.2f s, " +
-        f"${p.numInputRows}%d docs" + m.map { case (frac, pruned, files) =>
-          f", live-frac $frac%.4f, pruned=$pruned, store-files $files%d"
+        f"${p.numInputRows}%d docs" + m.map { case (frac, files) =>
+          f", live-frac $frac%.4f, store-files $files%d"
         }.getOrElse(""))
     }
     val times = prog.map(_.durationMs.get("triggerExecution") / 1000.0)

@@ -118,10 +118,12 @@ class DedupBucketLocalSpec extends SparkSpecBase {
         s"(bucket population is 120; rows must stay chunk-sized)")
   }
 
-  /** The self-probe fast path (reference equality — d21's within-batch
-    * sweep) runs the one-sided machinery at half the exchange and half
-    * the kernel arithmetic; its output contract must stay EXACTLY the two-sided plan's: every
-    * qualifying ordered pair in both orientations, same-id excluded. */
+  /** The self-probe fast path — d21's within-batch sweep calls the
+    * one-sided canonical pairs directly, at half the exchange and half
+    * the kernel arithmetic of a two-sided self-probe — must find EXACTLY
+    * the pairs `probePairs(sig, sig)` finds, folded onto doc_a < doc_b;
+    * the two-sided self-probe keeps its contract: every qualifying
+    * ordered pair in both orientations, same-id excluded. */
   test("self-probe fast path == two-sided probe on identical content") {
     import spark.implicits._
     val hot = (0L until 30L).map(i =>
@@ -131,30 +133,31 @@ class DedupBucketLocalSpec extends SparkSpecBase {
       (901L, "a modestly different document body with some edits applied there and more text to shingle"))
     val lone = Seq(
       (950L, "completely unrelated text about astronomy detectors and charge transfer"))
-    val sig = graft.operators.Dedup.signatures(
+    import graft.operators.Dedup
+    val sig = Dedup.signatures(
       (hot ++ near ++ lone).toDF("doc_id", "text")).persist()
-    // same rows, different Dataset reference → forces the two-sided plan
-    val copy = sig.select(sig.columns.map(col): _*)
     def norm(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
         .sortBy(t => (t._1, t._2, t._3))
     for (chunk <- Seq(1 << 20, 6)) { // plain plan AND forced chunking
-      val fast = norm(graft.operators.Dedup.probePairs(sig, sig,
-        chunkSize = chunk))
-      val twoSided = norm(graft.operators.Dedup.probePairs(sig, copy,
-        chunkSize = chunk))
-      assert(fast.length == twoSided.length,
-        s"chunk=$chunk: fast ${fast.length} pairs, two-sided ${twoSided.length}")
-      fast.zip(twoSided).foreach { case (g, w) =>
+      // d21's within-batch step: the one-sided canonical pairs
+      val fast = norm(Dedup.oneSidedPairs(Dedup.bandsOf(sig), sig, chunk,
+        Dedup.jacThreshold).distinct())
+      val twoSided = norm(Dedup.probePairs(sig, sig, chunkSize = chunk))
+      // the self-probe keeps the ordered-pair contract: both orientations
+      assert(twoSided.map(t => (t._2, t._1, t._3)).sortBy(t => (t._1, t._2, t._3))
+        .sameElements(twoSided), s"chunk=$chunk: self-probe not symmetric")
+      val folded = twoSided.filter(t => t._1 < t._2)
+      assert(fast.length == folded.length,
+        s"chunk=$chunk: fast ${fast.length} pairs, two-sided ${folded.length}")
+      fast.zip(folded).foreach { case (g, w) =>
         assert(g._1 == w._1 && g._2 == w._2, s"chunk=$chunk pair: $g vs $w")
         assert(java.lang.Double.doubleToLongBits(g._3) ==
                java.lang.Double.doubleToLongBits(w._3),
           s"chunk=$chunk jaccard drifted: $g vs $w")
       }
-      assert(!fast.exists(t => t._1 == t._2), "self-match leaked")
-      // both orientations present (the ordered-pair contract)
-      assert(fast.exists(t => t._1 == 900L && t._2 == 901L) &&
-             fast.exists(t => t._1 == 901L && t._2 == 900L))
+      assert(!twoSided.exists(t => t._1 == t._2), "self-match leaked")
+      assert(fast.exists(t => t._1 == 900L && t._2 == 901L))
     }
     sig.unpersist(): Unit
   }

@@ -125,6 +125,52 @@ class DedupGuardSpec extends SparkSpecBase {
     assert(a.nonEmpty, "sf0.001 corpus produced no d6 pairs")
   }
 
+  /** The d6 pick at n = threshold ± 1 (the threshold forced through
+    * `joinMaxDocs`): n ≤ threshold runs the candidate-join plan, n one
+    * past it the kernel plan — told apart by the BucketJaccards node in
+    * the plan — and the two results are bit-equal. */
+  test("d6 plan pick at n = threshold ± 1: join and kernel agree, bit-exact") {
+    import graft.operators.Dedup
+    val n = Tables.documents(spark, sfDir).count()
+    def usesKernel(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.find(_.expressions.exists(
+        _.find(_.isInstanceOf[graft.functions.BucketJaccards]).isDefined))
+        .isDefined
+    def run(threshold: Long) = {
+      val df = Dedup.d6CharJaccard(spark, sfDir, joinMaxDocs = threshold)
+      val rows = df.collect().map(_.toSeq).toVector
+      spark.catalog.clearCache()
+      (usesKernel(df), rows)
+    }
+    val (k0, atN) = run(n)       // n == threshold: join
+    val (k1, below) = run(n + 1) // n == threshold − 1: join
+    val (k2, above) = run(n - 1) // n == threshold + 1: kernel
+    assert(!k0 && !k1 && k2, s"paths picked: n=t $k0, n=t-1 $k1, n=t+1 $k2")
+    assert(atN.nonEmpty, "sf0.001 corpus produced no d6 pairs")
+    assert(below == atN && above == atN, "d6 paths diverge at the threshold")
+    val bits = (rs: Vector[Seq[Any]]) =>
+      rs.map(r => java.lang.Double.doubleToLongBits(r(4).asInstanceOf[Double]))
+    assert(bits(above) == bits(atN), "d6 jaccard bits diverge")
+  }
+
+  /** `Dedup.signatures` derives `sig` from `hs`, so each document is
+    * tokenized and shingled once: the optimized plan holds ONE UDF call
+    * over the text column (Catalyst must not inline the shingle UDF into
+    * both columns, or push a filter on `hs` below its projection). */
+  test("signatures shingle each document once") {
+    val docs = Tables.documents(spark, sfDir)
+    for (withLen <- Seq(false, true)) {
+      val plan = graft.operators.Dedup.signatures(docs, withLen)
+        .queryExecution.optimizedPlan
+      val textUdfs = plan.flatMap(_.expressions.flatMap(_.collect {
+        case u: org.apache.spark.sql.catalyst.expressions.ScalaUDF
+          if u.references.exists(_.name == "text") => u
+      }))
+      assert(textUdfs.size == 1,
+        s"withLen=$withLen: ${textUdfs.size} text UDF calls in\n$plan")
+    }
+  }
+
   test("d15 truth pairs reject a non-literal threshold with a clear message") {
     import spark.implicits._
     def rejects(run: => Any): Unit = {

@@ -74,7 +74,7 @@ class DocStreamSpec extends SparkSpecBase {
       .count() == 1, "intra-batch near-dup pair not flagged")
   }
 
-  test("adaptive pruning: dup-dense batches flip it off, novel batches back on") {
+  test("live-band fraction: dup-dense batches measure high, novel batches low") {
     import spark.implicits._
     val root = Files.createTempDirectory("graft_docstream_p").toString
     val landing = s"$root/landing"
@@ -86,24 +86,22 @@ class DocStreamSpec extends SparkSpecBase {
       .toDF("doc_id", "text")
     DocStream.seedSignatureStore(seed, store)
 
-    val metrics = scala.collection.mutable.ArrayBuffer
-      .empty[(Long, Double, Boolean)]
+    val metrics = scala.collection.mutable.ArrayBuffer.empty[(Long, Double)]
     val q = DocStream.nearDupStream(
       spark.readStream
         .schema(seed.schema)
         .option("recursiveFileLookup", "true")
         .option("maxFilesPerTrigger", 1).parquet(landing),
       store, s"$root/hits",
-      onBatchMetrics = (id, frac, pruned) =>
-        metrics.synchronized { metrics += ((id, frac, pruned)): Unit })
+      onBatchMetrics = (id, frac, _) =>
+        metrics.synchronized { metrics += ((id, frac)): Unit })
 
-    // batch 0: exact copies of every seed doc — every store bucket is
-    // live, the measured fraction must flip pruning OFF for this batch
+    // batch 0: exact copies of every seed doc — every store bucket is live
     Seq((100L, doc("aa")), (101L, doc("bb")), (102L, doc("cc")))
       .toDF("doc_id", "text").coalesce(1)
       .write.mode("overwrite").parquet(s"$landing/p0")
     q.processAllAvailable()
-    // batch 1: fresh vocabulary — near-zero live fraction, pruning back ON
+    // batch 1: fresh vocabulary — near-zero live fraction
     Seq((103L, doc("zz"))).toDF("doc_id", "text").coalesce(1)
       .write.mode("overwrite").parquet(s"$landing/p1")
     q.processAllAvailable()
@@ -111,15 +109,11 @@ class DocStreamSpec extends SparkSpecBase {
 
     val byBatch = metrics.sortBy(_._1)
     assert(byBatch.size == 2, s"expected 2 batch metrics, got $metrics")
-    val (_, frac0, pruned0) = byBatch(0)
-    val (_, frac1, pruned1) = byBatch(1)
-    assert(frac0 > 0.5 && !pruned0,
-      s"dup-dense batch: fraction $frac0, pruned=$pruned0 — expected the " +
-        "high fraction to disable pruning")
-    assert(frac1 < 0.25 && pruned1,
-      s"novel batch: fraction $frac1, pruned=$pruned1 — expected the low " +
-        "fraction to re-enable pruning")
-    // the dup-dense batch's hits were still found with pruning off
+    val (_, frac0) = byBatch(0)
+    val (_, frac1) = byBatch(1)
+    assert(frac0 > 0.5, s"dup-dense batch: fraction $frac0, expected > 0.5")
+    assert(frac1 < 0.25, s"novel batch: fraction $frac1, expected < 0.25")
+    // the dup-dense batch's hits were found through the live bands
     assert(spark.read.parquet(s"$root/hits")
       .filter(col("doc_b") >= 100L && col("jac") === 1.0).count() == 3)
   }

@@ -2,98 +2,106 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** The native [[graft.functions.BucketJaccards]] expression must be
-  * BIT-IDENTICAL to the Scala UDF kernel it replaced on the two-sided
-  * probe — same pairs, same orientation rules, same IEEE jaccards —
-  * across random bucket shapes including null/empty partner chunks and
-  * redelivered (same-id, both-sides) members; its `withinBatch` mode
-  * must match a brute-force reference the same way. */
+import graft.functions.BucketJaccards
+
+/** The native [[graft.functions.BucketJaccards]] expression, run through
+  * Spark on grouped rows the way the plans run it, must match the
+  * brute-force set reference ([[JaccardRef]]) in both modes — same
+  * pairs, same orientation, same IEEE jaccards — across random row
+  * shapes: null/empty partner chunks, mixed sides, redelivered (same-id,
+  * both-sides) members, ascending and shuffled hash arrays, and member
+  * structs with and without `is_new`. */
 class KernelExprSpec extends SparkSpecBase {
 
   private val rnd = new scala.util.Random(20260815L)
+  private val minJac = 0.05
 
-  private def hs(): Seq[Long] =
-    Seq.fill(1 + rnd.nextInt(12))(rnd.nextInt(40).toLong).distinct.sorted
-
-  test("two-sided expression == chunkCrossJaccardsUdf, bit-exact") {
-    import spark.implicits._
-    val rows = Seq.fill(60) {
-      def mem() = Seq.fill(rnd.nextInt(8))(
-        (rnd.nextInt(25).toLong, hs(), rnd.nextBoolean()))
-      val b = if (rnd.nextBoolean()) null else mem()
-      (mem(), Option(b))
-    }
-    val df = rows.toDF("amem", "bmem")
-    val both = df.select(
-      graft.functions.TextKernels.chunkCrossJaccardsUdf(
-        col("amem"), col("bmem"), lit(0.05), lit(0)).as("udf"),
-      graft.functions.BucketJaccards.chunkCross(
-        col("amem"), col("bmem"), 0.05, 0).as("expr"))
-      .collect()
-    both.foreach { r =>
-      val u = r.getSeq[org.apache.spark.sql.Row](0).map(x =>
-        (x.getLong(0), x.getLong(1),
-          java.lang.Double.doubleToLongBits(x.getDouble(2))))
-      val e = r.getSeq[org.apache.spark.sql.Row](1).map(x =>
-        (x.getLong(0), x.getLong(1),
-          java.lang.Double.doubleToLongBits(x.getDouble(2))))
-      assert(u == e, s"two-sided kernel drifted:\n udf=$u\n expr=$e")
-    }
+  /** Distinct hashes, ascending or (as in a store written before word
+    * shingles were sorted) shuffled. */
+  private def hs(): Seq[Long] = {
+    val h = Seq.fill(1 + rnd.nextInt(12))(rnd.nextInt(40).toLong).distinct.sorted
+    if (rnd.nextBoolean()) rnd.shuffle(h) else h
   }
 
-  /** The `withinBatch` mode against a brute-force reference: every pair
-    * of a row (within `amem` for an intra row, `amem` × `bmem` for a
-    * cross row) with at least one new member and distinct ids, as
-    * (smaller id, larger id, jac ≥ minJac). */
-  test("withinBatch expression == brute-force reference, bit-exact") {
+  private type Row3 = (Seq[(Long, Seq[Long], Boolean)],
+    Option[Seq[(Long, Seq[Long], Boolean)]])
+
+  private def taggedRows(n: Int, ids: Int): Seq[Row3] = Seq.fill(n) {
+    def mem() = Seq.fill(rnd.nextInt(8))(
+      (rnd.nextInt(ids).toLong, hs(), rnd.nextBoolean()))
+    (mem(), if (rnd.nextBoolean()) None else Some(mem()))
+  }
+
+  private def collectPairs(df: org.apache.spark.sql.DataFrame,
+                           oriented: Boolean): Seq[JaccardRef.Out] =
+    df.select(BucketJaccards.pairs(col("amem"), col("bmem"), minJac, 0,
+        oriented)).collect().toSeq.map(_.getSeq[org.apache.spark.sql.Row](0)
+      .map(x => (x.getLong(0), x.getLong(1),
+        java.lang.Double.doubleToLongBits(x.getDouble(2)))).sorted)
+
+  private def checkTagged(oriented: Boolean): Unit = {
     import spark.implicits._
-    type M = (Long, Seq[Long], Boolean)
-    val rows = Seq.fill(80) {
-      def mem() = Seq.fill(rnd.nextInt(8))(
-        (rnd.nextInt(12).toLong, hs(), rnd.nextBoolean()))
-      val b = if (rnd.nextBoolean()) null else mem()
-      (mem(), Option(b))
-    }
-    val min = 0.05
-    def reference(a: Seq[M], b: Option[Seq[M]]): Seq[(Long, Long, Long)] = {
-      val pairs = b.filter(_.nonEmpty) match {
-        case None => for (i <- a.indices; j <- a.indices if i < j)
-          yield (a(i), a(j))
-        case Some(bs) => for (x <- a; y <- bs) yield (x, y)
-      }
-      pairs.collect { case (x, y) if (x._3 || y._3) && x._1 != y._1 =>
-        val inter = x._2.toSet.intersect(y._2.toSet).size
-        val jac = inter.toDouble / (x._2.size + y._2.size - inter).toDouble
-        (math.min(x._1, y._1), math.max(x._1, y._1), jac)
-      }.filter(_._3 >= min)
-        .map(t => (t._1, t._2, java.lang.Double.doubleToLongBits(t._3)))
-        .sorted
-    }
-    // the shapes the probe produces, all present in the sample
-    def sides(m: Seq[M]) = m.map(_._3).toSet
-    val intra = rows.filter(_._2.forall(_.isEmpty))
-    val cross = rows.filter(_._2.exists(_.nonEmpty))
-    assert(intra.exists(r => sides(r._1).size == 2), "no mixed intra row")
-    assert(cross.exists(r => sides(r._1 ++ r._2.get).size == 2),
-      "no mixed-side cross row")
+    val rows = taggedRows(80, 12)
+    def ms(m: Seq[(Long, Seq[Long], Boolean)]): Seq[JaccardRef.M] =
+      m.map(t => (t._1, t._2, Some(t._3)))
+    // the shapes the probes produce, all present in the sample
+    def sides(m: Seq[(Long, Seq[Long], Boolean)]) = m.map(_._3).toSet
+    assert(rows.exists(r => r._2.forall(_.isEmpty) && sides(r._1).size == 2),
+      "no mixed intra row")
+    assert(rows.exists(r => r._2.exists(_.nonEmpty) &&
+      sides(r._1 ++ r._2.get).size == 2), "no mixed-side cross row")
     assert(rows.exists { case (a, b) =>
       val all = a ++ b.getOrElse(Nil)
       all.exists(x => x._3 && all.exists(y => !y._3 && y._1 == x._1))
     }, "no doc_id on both sides")
 
-    val got = rows.toDF("amem", "bmem").select(
-      graft.functions.BucketJaccards.withinBatch(
-        col("amem"), col("bmem"), min, 0)).collect()
+    val got = collectPairs(rows.toDF("amem", "bmem"), oriented)
     assert(got.length == rows.length)
-    var emitted = 0
-    got.zip(rows).foreach { case (r, (a, b)) =>
-      val e = r.getSeq[org.apache.spark.sql.Row](0).map(x =>
-        (x.getLong(0), x.getLong(1),
-          java.lang.Double.doubleToLongBits(x.getDouble(2)))).sorted
-      val want = reference(a, b)
-      assert(e == want, s"withinBatch kernel drifted:\n ref=$want\n expr=$e")
-      emitted += e.size
+    got.zip(rows).foreach { case (e, (a, b)) =>
+      val want = JaccardRef.pairs(JaccardRef.rowCandidates(ms(a),
+        ms(b.getOrElse(Nil))), minJac, oriented)
+      assert(e == want, s"kernel (oriented=$oriented) drifted:\n ref=$want\n expr=$e")
     }
-    assert(emitted > 0, "reference emitted no pair: the sample checks nothing")
+    assert(got.exists(_.nonEmpty), "reference emitted no pair: the sample checks nothing")
+  }
+
+  test("canonical mode == brute-force reference, bit-exact") {
+    checkTagged(oriented = false)
+    // members without `is_new` (the one-sided plans): every pair counts
+    import spark.implicits._
+    val rows = Seq.fill(60) {
+      def mem() = Seq.fill(rnd.nextInt(8))((rnd.nextInt(25).toLong, hs()))
+      (mem(), if (rnd.nextBoolean()) None else Some(mem()))
+    }
+    val got = collectPairs(rows.toDF("amem", "bmem"), oriented = false)
+    got.zip(rows).foreach { case (e, (a, b)) =>
+      def ms(m: Seq[(Long, Seq[Long])]): Seq[JaccardRef.M] =
+        m.map(t => (t._1, t._2, None))
+      val want = JaccardRef.pairs(JaccardRef.rowCandidates(ms(a),
+        ms(b.getOrElse(Nil))), minJac, oriented = false)
+      assert(e == want, s"untagged kernel drifted:\n ref=$want\n expr=$e")
+    }
+    assert(got.exists(_.nonEmpty))
+  }
+
+  test("oriented mode == brute-force reference, bit-exact") {
+    checkTagged(oriented = true)
+  }
+
+  /** The multiply form of the size gate, `min >= minJac * max`, drops
+    * this pair: 0.55 × 460 rounds to 253.00000000000003 > 253, though
+    * fl(253/460) == 0.55 and the jaccard of a 253-subset of 460 hashes
+    * is exactly that quotient. The divide form keeps it. */
+  test("size gate keeps a subset pair at fl(m/M) == minJac (253 of 460 at 0.55)") {
+    import spark.implicits._
+    assert(253.0 / 460.0 == 0.55 && 0.55 * 460.0 > 253.0)
+    val a = (1L, (0L until 253L).toSeq)
+    val b = (2L, (0L until 460L).toSeq)
+    val df = Seq((Seq(a, b), Option.empty[Seq[(Long, Seq[Long])]]))
+      .toDF("amem", "bmem")
+    val got = df.select(explode(BucketJaccards.pairs(col("amem"), col("bmem"),
+      0.55, 0)).as("p")).select("p._1", "p._2", "p._3").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    assert(got == Seq((1L, 2L, 0.55)), s"pair lost at the gate: $got")
   }
 }

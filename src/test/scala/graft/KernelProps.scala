@@ -3,7 +3,7 @@ package graft
 import graft.cte.CteAnalytics
 import graft.functions.{LinAlg, PolyFit2D, TextKernels}
 import org.scalacheck.{Gen, Prop, Properties}
-import org.scalacheck.Prop.forAll
+import org.scalacheck.Prop.{forAll, propBoolean}
 
 /** Property-based checks for the driver-side kernels (SURVEY.md §5 item 3). */
 object KernelProps extends Properties("kernels") {
@@ -55,94 +55,99 @@ object KernelProps extends Properties("kernels") {
     forAll(Gen.listOfN(6, Gen.oneOf("aa", "bb", "cc", "dd", "ee"))) { ws =>
       val text = ws.mkString(" ")
       val hs = TextKernels.wordShingleHashes(text)
-      val sigs = TextKernels.minhashSigs(text)
-      hs.isEmpty || graft.functions.TextPrims.minhashSeeds.zipWithIndex.forall {
-        case ((a, b), k) => sigs(k) == hs.map(h => (a * h + b) % TextKernels.P).min
-      }
+      val sigs = TextKernels.minhashFromHashes(hs)
+      // shingle hashes come out distinct and ascending (the kernel's merge
+      // intersect reads them as they are)
+      hs.toSeq == hs.distinct.sorted.toSeq && (hs.isEmpty ||
+        graft.functions.TextPrims.minhashSeeds.zipWithIndex.forall {
+          case ((a, b), k) => sigs(k) == hs.map(h => (a * h + b) % TextKernels.P).min
+        })
+    }
+
+  property("shingledText matches exactly the texts with word shingles") =
+    forAll(Gen.listOf(Gen.oneOf(Gen.oneOf(" ", "  ", "\t", "\n", "\r\n", "\u000B",
+        "\f", "\u00A0"), Gen.alphaStr))) { parts =>
+      val text = parts.mkString
+      TextKernels.wordShingleHashes(text).nonEmpty ==
+        TextKernels.shingledText.r.findFirstIn(text).isDefined
     }
 
   private val coefGen: Gen[Array[Double]] =
     Gen.listOfN(9, Gen.choose(-2.0, 2.0)).map(_.toArray)
 
-  // ---- chunk-kernel algebra: an ARBITRARY chunking of a bucket's
-  // membership, run through the per-row chunk kernels with the upstream
-  // contract applied (intra row per chunk; one cross row per chunk pair;
-  // cross rows with an empty side dropped), must reproduce the
-  // whole-bucket kernel EXACTLY — pair set and IEEE-bit jaccards. This
-  // is the algebra Dedup's capped plans stand on, checked beyond the
-  // few hand-built spec cases.
+  // ---- the near-dup kernel ([[graft.functions.BucketJaccards]]): an
+  // ARBITRARY chunking of a bucket's membership, run row by row with the
+  // upstream contract applied (intra row per chunk; one cross row per
+  // chunk pair; cross rows with an empty side dropped), must reproduce
+  // the kernel over the whole bucket and the brute-force set reference
+  // EXACTLY — pair multiset and IEEE-bit jaccards. Members carry
+  // distinct hashes ascending or shuffled (a store written before word
+  // shingles were sorted), with or without an `is_new` field, and a
+  // doc_id may sit on both sides (a redelivered doc). This is the
+  // algebra Dedup's capped plans stand on.
 
-  private val member: Gen[(Long, Seq[Long])] = for {
-    id <- Gen.choose(0L, 30L)
+  private def hashesGen: Gen[Seq[Long]] = for {
     hs <- Gen.nonEmptyListOf(Gen.choose(0L, 40L)).map(_.distinct.sorted)
-  } yield (id, hs)
+    shuffled <- Gen.oneOf(true, false)
+    seed <- Gen.long
+  } yield if (shuffled) new scala.util.Random(seed).shuffle(hs) else hs
 
-  private def membersGen: Gen[List[(Long, Seq[Long])]] =
-    Gen.choose(2, 18).flatMap(n => Gen.listOfN(n, member))
-      .map(_.groupBy(_._1).map(_._2.head).toList) // unique ids, like a bucket
+  /** A bucket: unique (doc_id, side) members; untagged buckets have one
+    * member per doc_id. */
+  private def bucketGen(tagged: Boolean): Gen[List[JaccardRef.M]] =
+    Gen.choose(2, 18).flatMap(n => Gen.listOfN(n, for {
+      id <- Gen.choose(0L, 30L)
+      hs <- hashesGen
+      side <- Gen.oneOf(true, false)
+    } yield (id, hs, if (tagged) Some(side) else None)))
+      .map(_.groupBy(m => (m._1, m._3)).map(_._2.head).toList)
 
-  private def sortPairs(ps: Seq[(Long, Long, Double)]) =
-    ps.sortBy(t => (t._1, t._2, t._3))
+  private val minJacGen = Gen.oneOf(0.0, 0.1, 0.25, 0.5)
+
+  private def chunkedAgrees(mem: List[JaccardRef.M], nch: Int, seed: Long,
+                            minJac: Double, oriented: Boolean): Prop = {
+    val got = JaccardRef.chunkRows(mem, nch, seed).flatMap { case (a, b) =>
+      JaccardRef.kernel(a, b, minJac, oriented)
+    }.sorted
+    val whole = JaccardRef.kernel(mem, Nil, minJac, oriented)
+    val want = JaccardRef.bucket(mem, minJac, oriented)
+    (got == want) :| s"chunked $got != reference $want" &&
+      (whole == want) :| s"whole bucket $whole != reference $want"
+  }
 
   property("chunked one-sided kernel == whole-bucket kernel, any chunking") =
-    forAll(membersGen, Gen.choose(1, 6), Gen.long) { (mem, nch, seed) =>
-      val rnd = new scala.util.Random(seed)
-      val chunkOf = mem.map(m => m._1 -> rnd.nextInt(nch)).toMap
-      val truth = sortPairs(TextKernels.bucketPairJaccards(mem, 0.0))
-      val rows = for {
-        cLo <- 0 until nch; cHi <- cLo until nch
-        a = mem.filter(m => chunkOf(m._1) == cLo)
-        b = if (cLo == cHi) Nil else mem.filter(m => chunkOf(m._1) == cHi)
-        if cLo == cHi || (a.nonEmpty && b.nonEmpty) // the upstream filter
-      } yield TextKernels.chunkPairJaccards(a, b, 0.0)
-      val got = sortPairs(rows.flatten)
-      // exact pair multiset (no duplicates: a doc lives in ONE chunk)
-      got.map(t => (t._1, t._2)) == truth.map(t => (t._1, t._2)) &&
-        got.zip(truth).forall { case (g, w) =>
-          java.lang.Double.doubleToLongBits(g._3) ==
-            java.lang.Double.doubleToLongBits(w._3) }
+    forAll(Gen.oneOf(true, false).flatMap(bucketGen), Gen.choose(1, 6),
+           Gen.long, minJacGen) { (mem, nch, seed, minJac) =>
+      chunkedAgrees(mem, nch, seed, minJac, oriented = false)
     }
-
-  property("sorted-kernel jaccards == hash-kernel jaccards, bit-exact") =
-    forAll(membersGen, Gen.choose(0, 3)) { (mem, split) =>
-      // sorted-input contract: sort each member's hashes first
-      val sortedMem = mem.map { case (id, hs) => (id, hs.distinct.sorted) }
-      val (a, b0) = sortedMem.splitAt(
-        if (split == 0) sortedMem.length else sortedMem.length / split.max(1))
-      val b = if (b0.isEmpty) null else b0
-      val hash = sortPairs(TextKernels.chunkPairJaccards(a, b, 0.0))
-      val srt = sortPairs(TextKernels.chunkPairJaccardsSorted(a, b, 0.0))
-      hash.map(t => (t._1, t._2)) == srt.map(t => (t._1, t._2)) &&
-        hash.zip(srt).forall { case (g, w) =>
-          java.lang.Double.doubleToLongBits(g._3) ==
-            java.lang.Double.doubleToLongBits(w._3) }
-    }
-
-  private val taggedMember: Gen[(Long, Seq[Long], Boolean)] = for {
-    (id, hs) <- member
-    isNew <- Gen.oneOf(true, false)
-  } yield (id, hs, isNew)
 
   property("chunked two-sided kernel == whole-bucket cross kernel, any chunking") =
-    forAll(Gen.choose(2, 18).flatMap(n => Gen.listOfN(n, taggedMember))
-             .map(_.groupBy(_._1).map(_._2.head).toList),
-           Gen.choose(1, 6), Gen.long) { (mem, nch, seed) =>
-      val rnd = new scala.util.Random(seed)
-      val chunkOf = mem.map(m => m._1 -> rnd.nextInt(nch)).toMap
-      def strip(xs: Seq[(Long, Seq[Long], Boolean)]) = xs.map(t => (t._1, t._2))
-      val (nw, st) = mem.partition(_._3)
-      val truth = sortPairs(TextKernels.bucketCrossJaccards(strip(nw), strip(st), 0.0))
-      val rows = for {
-        cLo <- 0 until nch; cHi <- cLo until nch
-        a = mem.filter(m => chunkOf(m._1) == cLo)
-        b = if (cLo == cHi) Nil else mem.filter(m => chunkOf(m._1) == cHi)
-        if cLo == cHi || (a.nonEmpty && b.nonEmpty)
-      } yield TextKernels.chunkCrossJaccards(a, b, 0.0)
-      val got = sortPairs(rows.flatten)
-      got.map(t => (t._1, t._2)) == truth.map(t => (t._1, t._2)) &&
-        got.zip(truth).forall { case (g, w) =>
-          java.lang.Double.doubleToLongBits(g._3) ==
-            java.lang.Double.doubleToLongBits(w._3) }
+    forAll(bucketGen(tagged = true), Gen.choose(1, 6), Gen.long,
+           minJacGen) { (mem, nch, seed, minJac) =>
+      chunkedAgrees(mem, nch, seed, minJac, oriented = true)
+    }
+
+  // ---- the kernel's size gate skips a pair when fl(min/max) < minJac.
+  // Adversarial shapes: an overlap of `inter` hashes between sets of
+  // sizes m ≤ M (a subset when inter == m, where the jaccard IS m/M),
+  // with minJac at, just above and just below fl(m/M) and the jaccard.
+  property("size gate never drops a pair the ungated jaccard emits") =
+    forAll(for {
+      big <- Gen.choose(1, 600)
+      small <- Gen.choose(1, big)
+      inter <- Gen.oneOf(Gen.const(small), Gen.choose(0, small))
+      pick <- Gen.choose(0, 5)
+    } yield (big, small, inter, pick)) { case (big, small, inter, pick) =>
+      val a: JaccardRef.M = (1L, (0L until small.toLong), None)
+      val b: JaccardRef.M =
+        (2L, ((small - inter).toLong until (small - inter + big).toLong), None)
+      val ratio = small.toDouble / big.toDouble
+      val jac = inter.toDouble / (small + big - inter).toDouble
+      val minJac = Seq(ratio, Math.nextUp(ratio), Math.nextDown(ratio),
+        jac, Math.nextUp(jac), Math.nextDown(jac))(pick)
+      val want = JaccardRef.pairs(Seq((a, b)), minJac, oriented = false)
+      (JaccardRef.kernel(Seq(a, b), Nil, minJac, oriented = false) == want) :|
+        s"|A|=$small |B|=$big inter=$inter minJac=$minJac"
     }
 
   property("polyfit on an exact grid surface recovers predictions") =
