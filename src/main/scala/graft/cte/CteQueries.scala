@@ -35,11 +35,6 @@ object CteQueries {
   def filterFileinfo(fileinfo: DataFrame, preds: Map[String, Any]): DataFrame =
     preds.foldLeft(fileinfo) { case (df, (k, v)) => df.filter(col(k) === lit(v)) }
 
-  /** query_for_all_dateobss (database_queries.py:87): distinct epochs. */
-  def allDateobss(fileinfo: DataFrame, targname: String): DataFrame =
-    fileinfo.filter(col("targname") === targname)
-      .select("dateobs").distinct().orderBy("dateobs")
-
   /** query_for_dateobss (:112): epochs for one (proposid, filter, exptime). */
   def dateobss(fileinfo: DataFrame, targname: String, proposid: String,
                filt: String, exptime: Double): DataFrame =
@@ -170,19 +165,6 @@ object CteQueries {
       .select("imagename_1", "imagename_2")
       .orderBy("imagename_1")
   }
-
-  /** query_results_for_slopes (:745): slope/stdev/numpoints for one pair,
-    * aperture and flux bin, from the long results table (P2 dynamic
-    * columns → predicates). */
-  def resultsForSlopes(resultsLong: DataFrame, targname: String,
-                       imagename1: String, imagename2: String,
-                       aperture: Int, binLo: Int, binHi: Int): DataFrame =
-    resultsLong.filter(col("targname") === targname &&
-        col("imagename_1") === imagename1 &&
-        col("imagename_2") === imagename2 &&
-        col("aperture") === aperture &&
-        col("bin_lo") === binLo && col("bin_hi") === binHi)
-      .select("slope", "slopestdev", "numpoints")
 
   /** FK-integrity validation (J6): orphans must be zero. */
   def orphanPhot(photLong: DataFrame, master: DataFrame,

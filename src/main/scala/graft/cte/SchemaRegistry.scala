@@ -42,11 +42,6 @@ object SchemaRegistry {
     StructType(fields.toSeq)
   }
 
-  /** Parse a definition file from disk. */
-  def parseFile(path: String): StructType =
-    parse(new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path)), "UTF-8"))
-
   // ---- The four table kinds, generated (not copied) from the data model
   //      in SURVEY.md §1.2. A `targname` partition column replaces the
   //      reference's per-target table triplication.

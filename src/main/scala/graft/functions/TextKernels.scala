@@ -9,10 +9,20 @@ import org.apache.spark.sql.functions.udf
   * interpreted per element — fine for correctness, but a
   * shingle→hash→minhash chain touches every character of every document
   * and the interpreter overhead dominates (measured ~70% of the sf0.1
-  * dedup bench). These kernels implement the *identical* integer
-  * arithmetic as TextPrims' SQL fragments (spec- and oracle-enforced), in
-  * tight single-pass Scala; registered as UDFs they run once per row with
-  * zero per-element dispatch.
+  * dedup bench). These kernels run the integer arithmetic the DuckDB
+  * oracle renders in SQL (`TextPrims` and the Dedup oracle fragments),
+  * in tight single-pass Scala; registered as UDFs they run once per row
+  * with zero per-element dispatch.
+  *
+  * Every word n-gram hash comes from ONE fold, [[gramHash]]: the
+  * [[polyhash]] of the tokens joined by '_', folded without building
+  * the joined string. [[wordNgramHashesAll]] is the positional face
+  * (d14 at n = 3, d19 at n = 13), [[wordShingleHashes]] its n = 2 set
+  * face and [[ngramBuckets]] its n ∈ {1, 2} bag face. Every hash SET
+  * ([[wordShingleHashes]], [[charShingleHashes]]) comes out of ONE
+  * sort-and-compact, [[distinctAscending]], which leaves it distinct and
+  * ascending: [[BucketJaccards]] and [[sortedIntersectCount]] read it as
+  * it is.
   *
   * UDF-vs-builtin tradeoff: a scalar Scala UDF costs serialization at the
   * row boundary but nothing per array element; for ~100-element arrays ×
@@ -46,28 +56,37 @@ object TextKernels {
     * projection, which evaluates the shingle kernel twice per document. */
   val shingledText: String = "\\s\\S"
 
-  /** Distinct word-2gram shingle hashes, ASCENDING (like
-    * [[charShingleHashes]]): the merge intersect of
-    * [[BucketJaccards]] reads them as they are, and every other consumer
-    * takes a min, a set op or an explode, which order does not change. */
-  def wordShingleHashes(text: String): Array[Long] = {
-    val t = tokensOf(text)
-    if (t.length < 2) return Array.empty
-    val hs = new Array[Long](t.length - 1)
-    var i = 0
-    while (i < t.length - 1) {
-      // hash of "tok1_tok2" without building the string
-      var h = polyhash(t(i))
+  /** The word n-gram hash: polyhash(t(i) + "_" + … + "_" + t(i+n-1)),
+    * folded token by token without building the string. */
+  private def gramHash(t: Array[String], i: Int, n: Int): Long = {
+    var h = polyhash(t(i))
+    var k = 1
+    while (k < n) {
       h = (h * 31 + '_') % P
+      val s = t(i + k)
       var j = 0
-      val s2 = t(i + 1)
-      while (j < s2.length) { h = (h * 31 + s2.charAt(j)) % P; j += 1 }
-      hs(i) = h
-      i += 1
+      while (j < s.length) { h = (h * 31 + s.charAt(j)) % P; j += 1 }
+      k += 1
     }
+    h
+  }
+
+  /** [[gramHash]] at every position of `t`, duplicates kept. */
+  private def gramHashes(t: Array[String], n: Int): Array[Long] = {
+    if (t.length < n) return Array.empty
+    val out = new Array[Long](t.length - n + 1)
+    var i = 0
+    while (i < out.length) { out(i) = gramHash(t, i, n); i += 1 }
+    out
+  }
+
+  /** Sorts `hs` in place and compacts away repeats: the distinct values,
+    * ascending (a prefix copy only when something repeated). */
+  private def distinctAscending(hs: Array[Long]): Array[Long] = {
+    if (hs.length < 2) return hs
     java.util.Arrays.sort(hs)
     var n = 1
-    i = 1
+    var i = 1
     while (i < hs.length) {
       if (hs(i) != hs(n - 1)) { hs(n) = hs(i); n += 1 }
       i += 1
@@ -75,16 +94,25 @@ object TextKernels {
     if (n == hs.length) hs else java.util.Arrays.copyOf(hs, n)
   }
 
+  /** ALL word-n-gram hashes in position order, duplicates kept: the array
+    * index IS the token position (d14's duplicated spans, n = 3; d19's
+    * exact decontamination, n = 13). The DuckDB mirror is
+    * polyhash(tok1 || '_' || … || tokN). */
+  def wordNgramHashesAll(text: String, n: Int): Array[Long] =
+    gramHashes(tokensOf(text), n)
+
+  /** Distinct word-2gram shingle hashes, ascending — the MinHash input of
+    * every word-shingle near-dup query. */
+  def wordShingleHashes(text: String): Array[Long] =
+    distinctAscending(wordNgramHashesAll(text, 2))
+
   /** Distinct word-2gram shingle STRINGS ("tok1_tok2", first-occurrence
     * order) — the string face of [[wordShingleHashes]], for vocabulary
     * queries (t8) where the bigram itself is the output. */
   def wordBigrams(text: String): Array[String] = {
     val t = tokensOf(text)
-    if (t.length < 2) return Array.empty
-    val seen = new java.util.LinkedHashSet[String]()
-    var i = 0
-    while (i < t.length - 1) { seen.add(t(i) + "_" + t(i + 1)); i += 1 }
-    seen.toArray(new Array[String](seen.size))
+    Array.tabulate(math.max(t.length - 1, 0))(i => t(i) + "_" + t(i + 1))
+      .distinct
   }
 
   /** ALL word-3gram strings ("a_b_c"), duplicates KEPT in order — the
@@ -102,25 +130,20 @@ object TextKernels {
     out
   }
 
-  /** Distinct char-kgram shingle hashes (sorted, for fast intersection). */
+  /** Distinct char-kgram shingle hashes, ascending. */
   def charShingleHashes(text: String, k: Int): Array[Long] = {
     if (text.length < k) return Array.empty
-    val seen = new java.util.TreeSet[Long]()
+    val hs = new Array[Long](text.length - k + 1)
     var i = 0
-    while (i + k <= text.length) {
+    while (i < hs.length) {
       var h = 0L
       var j = i
       while (j < i + k) { h = (h * 31 + text.charAt(j)) % P; j += 1 }
-      seen.add(h)
+      hs(i) = h
       i += 1
     }
-    val out = new Array[Long](seen.size)
-    val it = seen.iterator()
-    var idx = 0
-    while (it.hasNext) { out(idx) = it.next(); idx += 1 }
-    out
+    distinctAscending(hs)
   }
-
   /** The 12 minhash signature values over a shingle-hash array.
     * Empty input yields Long.MaxValue sentinels — callers must filter
     * empty-shingle docs out *before* banding (the sentinel otherwise
@@ -182,89 +205,16 @@ object TextKernels {
     n
   }
 
-  /** Intersection size of two unsorted distinct long arrays (hash set). */
-  def intersectCount(a: Array[Long], b: Array[Long]): Int = {
-    val (small, big) = if (a.length <= b.length) (a, b) else (b, a)
-    val set = new java.util.HashSet[Long](small.length * 2)
-    small.foreach(set.add)
-    var n = 0
-    var i = 0
-    while (i < big.length) { if (set.contains(big(i))) n += 1; i += 1 }
-    n
-  }
-
-  /** ALL word-3gram hashes in position order, duplicates kept — the
-    * hashed face of [[wordTrigramsAll]], for positional duplicated-span
-    * detection (d14) where the array index IS the token position. */
-  def wordTrigramHashesAll(text: String): Array[Long] = {
-    val t = tokensOf(text)
-    if (t.length < 3) return Array.empty
-    val out = new Array[Long](t.length - 2)
-    var i = 0
-    while (i < t.length - 2) {
-      var h = polyhash(t(i))
-      h = (h * 31 + '_') % P
-      var j = 0
-      val s2 = t(i + 1)
-      while (j < s2.length) { h = (h * 31 + s2.charAt(j)) % P; j += 1 }
-      h = (h * 31 + '_') % P
-      val s3 = t(i + 2)
-      j = 0
-      while (j < s3.length) { h = (h * 31 + s3.charAt(j)) % P; j += 1 }
-      out(i) = h
-      i += 1
-    }
-    out
-  }
-
-  /** ALL word-n-gram hashes in position order, duplicates kept — the
-    * general-n face of [[wordTrigramHashesAll]] with identical
-    * arithmetic (tokens joined by '_' under the rolling polyhash), so
-    * the DuckDB mirror is polyhash(tok1 || '_' || … || tokN). Used by
-    * the exact n-gram decontamination query (d19, n = 13). */
-  def wordNgramHashesAll(text: String, n: Int): Array[Long] = {
-    val t = tokensOf(text)
-    if (t.length < n) return Array.empty
-    val out = new Array[Long](t.length - n + 1)
-    var i = 0
-    while (i <= t.length - n) {
-      var h = polyhash(t(i))
-      var k = 1
-      while (k < n) {
-        h = (h * 31 + '_') % P
-        val s = t(i + k)
-        var j = 0
-        while (j < s.length) { h = (h * 31 + s.charAt(j)) % P; j += 1 }
-        k += 1
-      }
-      out(i) = h
-      i += 1
-    }
-    out
-  }
-
   /** Hashed n-gram feature buckets for the linear scorer (t12): all word
     * unigrams then all adjacent bigrams (duplicates kept — a bag, not a
-    * set), each polyhashed mod `nBuckets`. Identical arithmetic to the
-    * TextPrims SQL fragments; one pass, no per-element dispatch. (The
-    * HOF formulation re-evaluated split() per element_at — O(tokens²)
-    * string work that measured ~17 s on the 500-doc table.) */
+    * set), each [[gramHash]] mod `nBuckets`. One pass, no per-element
+    * dispatch. (The HOF formulation re-evaluated split() per element_at —
+    * O(tokens²) string work that measured ~17 s on the 500-doc table.) */
   def ngramBuckets(text: String, nBuckets: Long): Array[Long] = {
     val t = tokensOf(text)
-    val n = t.length
-    val out = new Array[Long](if (n < 2) n else 2 * n - 1)
+    val out = Array.concat(gramHashes(t, 1), gramHashes(t, 2))
     var i = 0
-    while (i < n) { out(i) = polyhash(t(i)) % nBuckets; i += 1 }
-    i = 0
-    while (i < n - 1) {
-      var h = polyhash(t(i))
-      h = (h * 31 + '_') % P
-      val s2 = t(i + 1)
-      var j = 0
-      while (j < s2.length) { h = (h * 31 + s2.charAt(j)) % P; j += 1 }
-      out(n + i) = h % nBuckets
-      i += 1
-    }
+    while (i < out.length) { out(i) %= nBuckets; i += 1 }
     out
   }
 
@@ -281,16 +231,12 @@ object TextKernels {
   val simhash16Udf: UserDefinedFunction = udf((t: String) => simhash16(t))
   // Array[Long] signatures hit Spark's primitive fast path
   // (ArrayData.toLongArray) — no per-element boxing at the UDF boundary.
-  val wordTrigramHashesAllUdf: UserDefinedFunction =
-    udf((t: String) => wordTrigramHashesAll(t))
   def wordNgramHashesAllUdf(n: Int): UserDefinedFunction =
     udf((t: String) => wordNgramHashesAll(t, n))
   def ngramBucketsUdf(nBuckets: Long): UserDefinedFunction =
     udf((t: String) => ngramBuckets(t, nBuckets))
   val sortedIntersectUdf: UserDefinedFunction =
     udf((a: Array[Long], b: Array[Long]) => sortedIntersectCount(a, b))
-  val intersectCountUdf: UserDefinedFunction =
-    udf((a: Array[Long], b: Array[Long]) => intersectCount(a, b))
 
   @transient private lazy val log =
     org.slf4j.LoggerFactory.getLogger("graft.functions.TextKernels")

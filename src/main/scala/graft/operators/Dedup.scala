@@ -62,32 +62,57 @@ object Dedup extends QueryPack {
     TextPrims.hashEach(
       TextPrims.wordShingles(TextPrims.tokens("text", d), d), d)
 
+  /** The 12 MinHash columns `sig0 … sig11` over the hash-array column
+    * `hashes` (`hs`, or d6/d9's char-7-gram `sh7`) — the oracle side of
+    * [[signatures]]' `sig`. */
+  private def sigColumns(hashes: String): String =
+    minhashSeeds.zipWithIndex.map { case ((a, b), k) =>
+      s"${TextPrims.minhashOne(hashes, a, b, DuckD)} AS sig$k"
+    }.mkString(",\n       ")
+
+  /** The band rows of the CTE `src` (which carries `sig0 … sig11`) — the
+    * oracle side of [[bandRows]], one `SELECT` per band, `UNION ALL`ed:
+    * doc_id, the `carry` columns, band_id and the band key, which folds
+    * the band's r signature values as bh = (bh·131 + sig) mod P. */
+  private def bandSelects(src: String, r: Int,
+                          carry: Seq[String] = Nil): String =
+    (0 until minhashSeeds.length / r).map { i =>
+      val bh = (1 until r).foldLeft(s"sig${r * i}") { (h, j) =>
+        s"($h*131 + sig${r * i + j}) % $P"
+      }
+      val cols = ("doc_id" +: carry).mkString(", ")
+      s"SELECT $cols, $i AS band_id, $bh AS bh FROM $src"
+    }.mkString("\n  UNION ALL\n  ")
+
+  /** The polyhash of the n-gram at token position p of the `toks` list,
+    * its tokens joined by '_' — the oracle side of
+    * [[TextKernels.wordNgramHashesAll]] (d14, d19). */
+  private def gramHash(n: Int): String = {
+    val gram = (1 to n).map(i => s"toks[CAST(p+$i AS INT)]")
+      .mkString(" || '_' || ")
+    TextPrims.polyhash(s"($gram)", DuckD)
+  }
+
   // -- d3: MinHash signatures — 12 permutation-min hashes per document
   //    over word-2gram shingles. Pure scan + per-row compiled kernel (the
   //    interpreted higher-order-function formulation measured 3× slower
   //    at sf0.1; arithmetic is identical — see TextKernels).
   private val d3MinhashSig: Q = (s, dir) => {
     // Docs with no shingles (<2 tokens) are filtered out BEFORE signing on
-    // both engines: the kernel's Long.MaxValue sentinel and SQL list_min's
-    // NULL would otherwise diverge (and overflow band arithmetic in d4).
-    val base = Tables.documents(s, dir)
-      .filter(col("text").rlike(TextKernels.shingledText))
-      .withColumn("hs", TextKernels.wordShingleHashesUdf(col("text")))
-      .withColumn("sig", TextKernels.minhashFromHashesUdf(col("hs")))
+    // both engines (inside `signatures` here): the kernel's Long.MaxValue
+    // sentinel and SQL list_min's NULL would otherwise diverge (and
+    // overflow band arithmetic in d4).
     val sigs = minhashSeeds.indices.map { k =>
       element_at(col("sig"), k + 1).as(s"sig$k")
     }
-    base.select(col("doc_id") +: sigs: _*).orderBy("doc_id")
+    signatures(Tables.documents(s, dir))
+      .select(col("doc_id") +: sigs: _*).orderBy("doc_id")
   }
 
-  private val d3Sql = {
-    val sigs = minhashSeeds.zipWithIndex.map { case ((a, b), k) =>
-      s"${TextPrims.minhashOne("hs", a, b, DuckD)} AS sig$k"
-    }
+  private val d3Sql =
     s"""WITH h AS (SELECT doc_id, ${shingleHashes(DuckD)} AS hs FROM documents)
-       |SELECT doc_id, ${sigs.mkString(",\n       ")}
+       |SELECT doc_id, ${sigColumns("hs")}
        |FROM h WHERE len(hs) > 0 ORDER BY doc_id""".stripMargin
-  }
 
   // -- d4: MinHash-LSH near-dup pairs — 6 bands × 2 rows: documents
   //    sharing any band bucket become candidates (equi-join on the band
@@ -119,19 +144,43 @@ object Dedup extends QueryPack {
       TextKernels.minhashFromHashesUdf(col("hs")).as("sig"), col("hs")): _*)
   }
 
+  /** The LSH band rows of the 12-value signature column `sig`: the
+    * `carry` columns, then (band_id, bh), one row per band. With r rows
+    * per band there are 12 / r bands, and a band's key folds its r
+    * signature values as bh = (bh·131 + sig) mod P — r = 2 is the
+    * production [[nBands]] × 2 banding, r = 1 makes each value its own
+    * band (d16). The one band-key rule of the Spark side; the oracle's
+    * is [[bandSelects]]. */
+  private[graft] def bandRows(df: DataFrame, sig: String, r: Int,
+                              carry: Seq[String] = Seq("doc_id")): DataFrame = {
+    val bands = (0 until minhashSeeds.length / r).map { i =>
+      val bh = (1 until r).foldLeft(element_at(col(sig), r * i + 1)) {
+        (h, j) => (h * 131 + element_at(col(sig), r * i + j + 1)) % P
+      }
+      struct(lit(i).as("band_id"), bh.as("bh"))
+    }
+    val keep = carry.map(col)
+    df.select(keep :+ explode(array(bands: _*)).as("band"): _*)
+      .select(keep ++ Seq(col("band.band_id").as("band_id"),
+        col("band.bh").as("bh")): _*)
+  }
+
   /** Band keys (doc_id, band_id, bh) from a signature table: candidates
     * travel as compact triples; shingles join back only for survivors. */
-  def bandsOf(sigTable: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    val bandCols = (0 until nBands).map { i =>
-      expr(s"struct(CAST($i AS INT) AS band_id, " +
-           s"(element_at(sig, ${2 * i + 1})*131 + element_at(sig, ${2 * i + 2})) % $P AS bh)")
-    }
-    sigTable
-      .select(col("doc_id"), explode(array(bandCols: _*)).as("band"))
-      .select(col("doc_id"), col("band.band_id").as("band_id"),
-              col("band.bh").as("bh"))
-  }
+  def bandsOf(sigTable: DataFrame): DataFrame = bandRows(sigTable, "sig", 2)
+
+  /** The textbook band self-join: every (doc_a < doc_b) pair sharing a
+    * bucket of `bands`, once. `extraKeys` must match too (d6's lang and
+    * source). The audits (d15, d16), d17 and d6's small-corpus plan use
+    * it; the verifying plans group buckets instead ([[bucketGroups]]). */
+  private def bandCandidates(bands: DataFrame,
+                             extraKeys: Seq[String] = Nil): DataFrame =
+    bands.as("a").join(bands.as("b"),
+        (Seq("band_id", "bh") ++ extraKeys)
+          .map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _) &&
+        col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+      .distinct()
 
   /** MinHash-LSH near-duplicate pairs (doc_a < doc_b, exact Jaccard ≥
     * threshold) — d4's machinery as a reusable operator. */
@@ -440,39 +489,26 @@ object Dedup extends QueryPack {
     * funnel runs two: train-side and held-out-side). Emits three CTE
     * definitions `${pfx}h` / `${pfx}sg` / `${pfx}bd`; callers join bands
     * on `${pfx}bd` and shingle sets on `${pfx}sg`. */
-  private[operators] def lshCtes(src: String, pfx: String): String = {
-    val sigs = minhashSeeds.zipWithIndex.map { case ((a, b), k) =>
-      s"${TextPrims.minhashOne("hs", a, b, DuckD)} AS sig$k"
-    }
-    val bandSelects = (0 until nBands).map { i =>
-      s"SELECT doc_id, $i AS band_id, (sig${2 * i}*131 + sig${2 * i + 1}) % $P AS bh FROM ${pfx}sg"
-    }
+  private[operators] def lshCtes(src: String, pfx: String): String =
     s"""${pfx}h AS (
        |  SELECT doc_id, list_distinct(${shingleHashes(DuckD)}) AS hs FROM $src),
-       |${pfx}sg AS (SELECT doc_id, hs, ${sigs.mkString(",\n       ")}
+       |${pfx}sg AS (SELECT doc_id, hs, ${sigColumns("hs")}
        |       FROM ${pfx}h WHERE len(hs) > 0),
-       |${pfx}bd AS (${bandSelects.mkString("\n  UNION ALL\n  ")})""".stripMargin
-  }
+       |${pfx}bd AS (${bandSelects(s"${pfx}sg", 2)})""".stripMargin
 
   private val d4LshPairs: Q = (s, dir) =>
     nearDupPairs(Tables.documents(s, dir)).orderBy("doc_a", "doc_b")
 
   /** The d4 CTE chain (shingles → signatures → bands → candidates →
     * exact Jaccard), shared by the d4 and d10 oracles. */
-  private[operators] val d4Ctes = {
-    val sigs = minhashSeeds.zipWithIndex.map { case ((a, b), k) =>
-      s"${TextPrims.minhashOne("hs", a, b, DuckD)} AS sig$k"
-    }
-    val bandSelects = (0 until nBands).map { i =>
-      s"SELECT doc_id, sh, $i AS band_id, (sig${2 * i}*131 + sig${2 * i + 1}) % $P AS bh FROM sigs"
-    }
+  private[operators] val d4Ctes =
     s"""h AS (
        |  SELECT doc_id,
        |         list_distinct(${shingleHashes(DuckD)}) AS hs
        |  FROM documents),
-       |sigs AS (SELECT doc_id, hs AS sh, ${sigs.mkString(",\n       ")}
+       |sigs AS (SELECT doc_id, hs AS sh, ${sigColumns("hs")}
        |         FROM h WHERE len(hs) > 0),
-       |banded AS (${bandSelects.mkString("\n  UNION ALL\n  ")}),
+       |banded AS (${bandSelects("sigs", 2, Seq("sh"))}),
        |cand AS (
        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
        |  FROM banded a JOIN banded b
@@ -484,7 +520,6 @@ object Dedup extends QueryPack {
        |  FROM cand c
        |  JOIN sigs sa ON sa.doc_id = c.doc_a
        |  JOIN sigs sb ON sb.doc_id = c.doc_b)""".stripMargin
-  }
 
   private val d4Sql =
     s"""WITH $d4Ctes
@@ -769,13 +804,7 @@ object Dedup extends QueryPack {
     val sub = d15Sample(s, dir)
     val base = signatures(sub).persist()
     val truth = sampleTruthPairs(base, jacThreshold)
-    val banded = bandsOf(base)
-    val cand = banded.as("a").join(banded.as("b"),
-        col("a.band_id") === col("b.band_id") && col("a.bh") === col("b.bh") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
-      .withColumn("hit", lit(1L))
+    val cand = bandCandidates(bandsOf(base)).withColumn("hit", lit(1L))
     val nDocs = base.groupBy().agg(count(lit(1)).as("n_docs"))
     truth.join(cand, Seq("doc_a", "doc_b"), "left")
       .groupBy()
@@ -787,17 +816,11 @@ object Dedup extends QueryPack {
           .as("recall"))
   }
 
-  private val d15Sql = {
-    val sigs = minhashSeeds.zipWithIndex.map { case ((a, b), k) =>
-      s"${TextPrims.minhashOne("hs", a, b, DuckD)} AS sig$k"
-    }
-    val bandSelects = (0 until nBands).map { i =>
-      s"SELECT doc_id, $i AS band_id, (sig${2 * i}*131 + sig${2 * i + 1}) % $P AS bh FROM s"
-    }
+  private val d15Sql =
     s"""WITH h AS (
        |  SELECT doc_id, ${shingleHashes(DuckD)} AS hs
        |  FROM $d15SampleSql),
-       |s AS (SELECT doc_id, hs, ${sigs.mkString(",\n       ")}
+       |s AS (SELECT doc_id, hs, ${sigColumns("hs")}
        |      FROM h WHERE len(hs) > 0),
        |truth AS (
        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -805,7 +828,7 @@ object Dedup extends QueryPack {
        |  WHERE CAST(len(list_intersect(a.hs, b.hs)) AS DOUBLE) /
        |        CAST(len(a.hs) + len(b.hs) - len(list_intersect(a.hs, b.hs))
        |          AS DOUBLE) >= $jacThreshold),
-       |banded AS (${bandSelects.mkString("\n  UNION ALL\n  ")}),
+       |banded AS (${bandSelects("s", 2)}),
        |cand AS (
        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
        |  FROM banded a JOIN banded b
@@ -821,7 +844,6 @@ object Dedup extends QueryPack {
        |       CAST(sum(hit) AS BIGINT) AS n_caught,
        |       CAST(sum(hit) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS recall
        |FROM j""".stripMargin
-  }
 
   // -- d16: banding TUNED from d15's finding — the re-measure half of the
   //    audit loop. d15 shows 6-band×2-row banding recalls only ~5–8% of
@@ -835,32 +857,14 @@ object Dedup extends QueryPack {
   //    side — the measurement that justifies (or vetoes) the retune
   //    before anyone re-runs a 100 TB dedup. Signatures are computed
   //    once; only the banding differs.
-  /** r=1 banding: each of the 12 minhash values IS a band key. */
-  private def bandsR1(sigTable: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    val bandCols = minhashSeeds.indices.map { i =>
-      expr(s"struct(CAST($i AS INT) AS band_id, element_at(sig, ${i + 1}) AS bh)")
-    }
-    sigTable.select(col("doc_id"), explode(array(bandCols: _*)).as("band"))
-      .select(col("doc_id"), col("band.band_id").as("band_id"),
-              col("band.bh").as("bh"))
-  }
-
   private val d16LshTuned: Q = (s, dir) => {
     val sub = d15Sample(s, dir)
     val base = signatures(sub).persist()
     val truth = sampleTruthPairs(base, jacThreshold)
-    def candsFrom(banded: org.apache.spark.sql.DataFrame)
-        : org.apache.spark.sql.DataFrame =
-      banded.as("a").join(banded.as("b"),
-          col("a.band_id") === col("b.band_id") && col("a.bh") === col("b.bh") &&
-          col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-        .distinct()
     // each candidate set is read twice (count + recall join) — persist so
     // the band self-join runs once per configuration
-    val c62 = candsFrom(bandsOf(base)).persist()
-    val c121 = candsFrom(bandsR1(base)).persist()
+    val c62 = bandCandidates(bandsOf(base)).persist()
+    val c121 = bandCandidates(bandRows(base, "sig", 1)).persist()
     val n62 = c62.groupBy().agg(count(lit(1)).as("n_cand_6x2"))
     val n121 = c121.groupBy().agg(count(lit(1)).as("n_cand_12x1"))
     truth
@@ -881,20 +885,11 @@ object Dedup extends QueryPack {
           .as("recall_12x1"))
   }
 
-  private val d16Sql = {
-    val sigs = minhashSeeds.zipWithIndex.map { case ((a, b), k) =>
-      s"${TextPrims.minhashOne("hs", a, b, DuckD)} AS sig$k"
-    }
-    val bandSelects62 = (0 until nBands).map { i =>
-      s"SELECT doc_id, $i AS band_id, (sig${2 * i}*131 + sig${2 * i + 1}) % $P AS bh FROM s"
-    }
-    val bandSelects121 = minhashSeeds.indices.map { i =>
-      s"SELECT doc_id, $i AS band_id, sig$i AS bh FROM s"
-    }
+  private val d16Sql =
     s"""WITH h AS (
        |  SELECT doc_id, ${shingleHashes(DuckD)} AS hs
        |  FROM $d15SampleSql),
-       |s AS (SELECT doc_id, hs, ${sigs.mkString(",\n       ")}
+       |s AS (SELECT doc_id, hs, ${sigColumns("hs")}
        |      FROM h WHERE len(hs) > 0),
        |truth AS (
        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -902,13 +897,13 @@ object Dedup extends QueryPack {
        |  WHERE CAST(len(list_intersect(a.hs, b.hs)) AS DOUBLE) /
        |        CAST(len(a.hs) + len(b.hs) - len(list_intersect(a.hs, b.hs))
        |          AS DOUBLE) >= $jacThreshold),
-       |banded62 AS (${bandSelects62.mkString("\n  UNION ALL\n  ")}),
+       |banded62 AS (${bandSelects("s", 2)}),
        |cand62 AS (
        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
        |  FROM banded62 a JOIN banded62 b
        |    ON a.band_id = b.band_id AND a.bh = b.bh
        |   AND a.doc_id < b.doc_id),
-       |banded121 AS (${bandSelects121.mkString("\n  UNION ALL\n  ")}),
+       |banded121 AS (${bandSelects("s", 1)}),
        |cand121 AS (
        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
        |  FROM banded121 a JOIN banded121 b
@@ -929,7 +924,6 @@ object Dedup extends QueryPack {
        |       CAST(sum(h121) AS BIGINT) AS n_caught_12x1,
        |       CAST(sum(h121) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS recall_12x1
        |FROM j""".stripMargin
-  }
 
   // -- d17: containment near-dups — the ASYMMETRIC overlap d4's Jaccard
   //    structurally misses: a short document pasted inside a much longer
@@ -945,17 +939,12 @@ object Dedup extends QueryPack {
   //    this query is precisely the extra coverage.
   private val d17Containment: Q = (s, dir) => {
     val base = signatures(Tables.documents(s, dir)).persist()
-    val banded = bandsOf(base)
-    val cand = banded.as("a").join(banded.as("b"),
-        col("a.band_id") === col("b.band_id") && col("a.bh") === col("b.bh") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
     val sh = base.select(col("doc_id"), col("hs"))
-    cand
+    // `signatures` emits hs distinct and ascending: a merge intersect
+    bandCandidates(bandsOf(base))
       .join(sh.select(col("doc_id").as("doc_a"), col("hs").as("hs_a")), "doc_a")
       .join(sh.select(col("doc_id").as("doc_b"), col("hs").as("hs_b")), "doc_b")
-      .withColumn("inter", TextKernels.intersectCountUdf(col("hs_a"), col("hs_b")))
+      .withColumn("inter", TextKernels.sortedIntersectUdf(col("hs_a"), col("hs_b")))
       .withColumn("n_a", expr("size(hs_a)").cast("long"))
       .withColumn("n_b", expr("size(hs_b)").cast("long"))
       .withColumn("containment",
@@ -1080,16 +1069,10 @@ object Dedup extends QueryPack {
     val blockDf = broadcast(blocks
       .map { case ((l, src), i) => (l, src, i.toLong) }.toSeq
       .toDF("lang", "source", "block"))
-    val bandCols = (0 until nBands).map { i =>
-      expr(s"struct(CAST($i AS INT) AS band_id, " +
-           s"(element_at(csig, ${2 * i + 1})*131 + element_at(csig, ${2 * i + 2})) % $P AS bh)")
-    }
-    val banded = base
-      .join(blockDf, Seq("lang", "source"))
-      .select(col("doc_id"), col("block"),
-        explode(array(bandCols: _*)).as("band"))
-      .select(col("doc_id"), col("band.band_id").as("band_id"),
-        (col("block") * lit(P) + col("band.bh")).as("bh"))
+    val banded = bandRows(base.join(blockDf, Seq("lang", "source")), "csig", 2,
+        Seq("doc_id", "block"))
+      .select(col("doc_id"), col("band_id"),
+        (col("block") * lit(P) + col("bh")).as("bh"))
     val members = Tables.documents(s, dir)
       .filter(length(col("text")) >= bandK)
       .select(col("doc_id"), TextKernels.charShingle3Udf(col("text")).as("hs"))
@@ -1117,9 +1100,10 @@ object Dedup extends QueryPack {
   // drop — but BEFORE the heavy 3-gram shingle arrays are fetched for
   // them (guide §2.3: decide with small rows, move heavy bytes once),
   // and it shrinks the largest buckets (boilerplate shared across
-  // sources collides cross-block). The post-join filter stays, now
-  // redundant; the oracle's d6Sql bands without the block key, so the
-  // oracle check pins the split against the unsplit banding.
+  // sources collides cross-block). Every candidate pair therefore shares
+  // lang and source, which is all the oracle's post-join filter asks;
+  // d6Sql bands without the block key, so the oracle check pins the
+  // split against the unsplit banding.
   private[graft] def d6Plan(s: org.apache.spark.sql.SparkSession,
                             dir: String)
       : org.apache.spark.sql.DataFrame = {
@@ -1129,28 +1113,13 @@ object Dedup extends QueryPack {
         TextKernels.charMinhashSigsUdf(bandK)(col("text")).as("csig"))
       .filter(size(col("sh")) > 0 && length(col("text")) >= bandK)
       .persist()
-    val bandCols = (0 until nBands).map { i =>
-      expr(s"struct(CAST($i AS INT) AS band_id, " +
-           s"(element_at(csig, ${2 * i + 1})*131 + element_at(csig, ${2 * i + 2})) % $P AS bh)")
-    }
-    val bandKey = Seq("band_id", "bh", "lang", "source")
-    val banded = base
-      .select(col("doc_id"), col("lang"), col("source"),
-        explode(array(bandCols: _*)).as("band"))
-      .select(col("doc_id"), col("lang"), col("source"),
-        col("band.band_id").as("band_id"), col("band.bh").as("bh"))
-    val cand = banded.as("a").join(banded.as("b"),
-        bandKey.map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _) &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
+    val cand = bandCandidates(
+      bandRows(base, "csig", 2, Seq("doc_id", "lang", "source")),
+      Seq("lang", "source"))
     val sa = base.select(col("doc_id").as("doc_a"), col("lang"),
       col("source"), col("sh").as("sh_a"))
-    val sb = base.select(col("doc_id").as("doc_b"),
-      col("lang").as("lang_b"), col("source").as("source_b"),
-      col("sh").as("sh_b"))
+    val sb = base.select(col("doc_id").as("doc_b"), col("sh").as("sh_b"))
     cand.join(sa, "doc_a").join(sb, "doc_b")
-      .filter(col("lang") === col("lang_b") && col("source") === col("source_b"))
       .withColumn("inter", TextKernels.sortedIntersectUdf(col("sh_a"), col("sh_b")))
       .withColumn("jac",
         col("inter").cast("double") /
@@ -1165,16 +1134,10 @@ object Dedup extends QueryPack {
       TextPrims.charShingles("text", 3, DuckD), DuckD)})"
     val sh7 = s"list_distinct(${TextPrims.hashEach(
       TextPrims.charShingles("text", bandK, DuckD), DuckD)})"
-    val sigs = minhashSeeds.zipWithIndex.map { case ((a, b), k) =>
-      s"${TextPrims.minhashOne("sh7", a, b, DuckD)} AS sig$k"
-    }
-    val bandSelects = (0 until nBands).map { i =>
-      s"SELECT doc_id, $i AS band_id, (sig${2 * i}*131 + sig${2 * i + 1}) % $P AS bh FROM sigs"
-    }
     s"""WITH s AS (SELECT doc_id, lang, source, $sh AS sh, $sh7 AS sh7 FROM documents),
        |s2 AS (SELECT * FROM s WHERE len(sh) > 0 AND len(sh7) > 0),
-       |sigs AS (SELECT doc_id, ${sigs.mkString(",\n       ")} FROM s2),
-       |banded AS (${bandSelects.mkString("\n  UNION ALL\n  ")}),
+       |sigs AS (SELECT doc_id, ${sigColumns("sh7")} FROM s2),
+       |banded AS (${bandSelects("sigs", 2)}),
        |cand AS (
        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
        |  FROM banded a JOIN banded b
@@ -1232,14 +1195,7 @@ object Dedup extends QueryPack {
         TextKernels.charMinhashSigsUdf(bandK)(col("text")).as("csig"))
       .filter(length(col("pfx")) >= bandK)
       .persist()
-    val bandCols = (0 until nBands).map { i =>
-      expr(s"struct(CAST($i AS INT) AS band_id, " +
-           s"(element_at(csig, ${2 * i + 1})*131 + element_at(csig, ${2 * i + 2})) % $P AS bh)")
-    }
-    val banded = base
-      .select(col("doc_id"), explode(array(bandCols: _*)).as("band"))
-      .select(col("doc_id"), col("band.band_id").as("band_id"),
-              col("band.bh").as("bh"))
+    val banded = bandRows(base, "csig", 2)
     // BUCKET-LOCAL capped verification (r12): the textbook band
     // self-join + per-candidate prefix joins had NO hot-bucket
     // discipline — the one pair family that missed the r10/r11 chunk-cap
@@ -1284,12 +1240,6 @@ object Dedup extends QueryPack {
   private val d9Sql = {
     val sh7 = s"list_distinct(${TextPrims.hashEach(
       TextPrims.charShingles("text", bandK, DuckD), DuckD)})"
-    val sigs = minhashSeeds.zipWithIndex.map { case ((a, b), k) =>
-      s"${TextPrims.minhashOne("sh7", a, b, DuckD)} AS sig$k"
-    }
-    val bandSelects = (0 until nBands).map { i =>
-      s"SELECT doc_id, $i AS band_id, (sig${2 * i}*131 + sig${2 * i + 1}) % $P AS bh FROM sigs"
-    }
     s"""WITH reps AS (
        |  SELECT min(doc_id) AS doc_id FROM documents
        |  GROUP BY md5(substr(text, 1, $d9Prefix))),
@@ -1297,8 +1247,8 @@ object Dedup extends QueryPack {
        |  SELECT d.doc_id, substr(d.text, 1, $d9Prefix) AS pfx, $sh7 AS sh7
        |  FROM documents d JOIN reps USING (doc_id)),
        |s2 AS (SELECT * FROM s WHERE len(pfx) >= $bandK AND len(sh7) > 0),
-       |sigs AS (SELECT doc_id, ${sigs.mkString(",\n       ")} FROM s2),
-       |banded AS (${bandSelects.mkString("\n  UNION ALL\n  ")}),
+       |sigs AS (SELECT doc_id, ${sigColumns("sh7")} FROM s2),
+       |banded AS (${bandSelects("sigs", 2)}),
        |cand AS (
        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
        |  FROM banded a JOIN banded b
@@ -1326,20 +1276,14 @@ object Dedup extends QueryPack {
       .orderBy("train_doc")
   }
 
-  private val d7Sql = {
-    val sigs = minhashSeeds.zipWithIndex.map { case ((a, b), k) =>
-      s"${TextPrims.minhashOne("hs", a, b, DuckD)} AS sig$k"
-    }
-    val bandSelects = (0 until nBands).map { i =>
-      s"SELECT doc_id, sh, $i AS band_id, (sig${2 * i}*131 + sig${2 * i + 1}) % $P AS bh FROM sigs"
-    }
+  private val d7Sql =
     s"""WITH h AS (
        |  SELECT doc_id,
        |         list_distinct(${shingleHashes(DuckD)}) AS hs
        |  FROM documents),
-       |sigs AS (SELECT doc_id, hs AS sh, ${sigs.mkString(",\n       ")}
+       |sigs AS (SELECT doc_id, hs AS sh, ${sigColumns("hs")}
        |         FROM h WHERE len(hs) > 0),
-       |banded AS (${bandSelects.mkString("\n  UNION ALL\n  ")}),
+       |banded AS (${bandSelects("sigs", 2, Seq("sh"))}),
        |cand AS (
        |  SELECT DISTINCT a.doc_id AS train_doc, b.doc_id AS eval_doc
        |  FROM banded a JOIN banded b
@@ -1356,7 +1300,6 @@ object Dedup extends QueryPack {
        |       max(CAST(inter AS DOUBLE)/CAST(na + nb - inter AS DOUBLE)) AS max_jac
        |FROM j WHERE CAST(inter AS DOUBLE)/CAST(na + nb - inter AS DOUBLE) >= $jacThreshold
        |GROUP BY train_doc ORDER BY train_doc""".stripMargin
-  }
 
   // -- d8: deterministic stratified sampling — per-stratum keep rates on
   //    a multiplicative hash of the key (no rand(), so re-runs and both
@@ -1586,7 +1529,7 @@ object Dedup extends QueryPack {
   private val d14DupSpans: Q = (s, dir) => {
     val grams = Tables.documents(s, dir)
       .select(col("doc_id"), posexplode(
-        TextKernels.wordTrigramHashesAllUdf(col("text"))).as(Seq("pos", "gh")))
+        TextKernels.wordNgramHashesAllUdf(3)(col("text"))).as(Seq("pos", "gh")))
     val dup = grams.groupBy("gh")
       .agg(countDistinct(col("doc_id")).as("nd"))
       .filter(col("nd") >= 2).select("gh")
@@ -1606,11 +1549,9 @@ object Dedup extends QueryPack {
 
   private val d14Sql = {
     val toks = TextPrims.tokens("text", DuckD)
-    def tok(i: String) = s"toks[CAST($i AS INT)]"
-    val gram = s"${tok("p+1")} || '_' || ${tok("p+2")} || '_' || ${tok("p+3")}"
     s"""WITH t AS (SELECT doc_id, $toks AS toks FROM documents),
        |g AS (
-       |  SELECT doc_id, p AS pos, ${TextPrims.polyhash(s"($gram)", DuckD)} AS gh
+       |  SELECT doc_id, p AS pos, ${gramHash(3)} AS gh
        |  FROM t, LATERAL unnest(range(0, len(toks) - 2)) AS u(p)),
        |dup AS (
        |  SELECT gh FROM g GROUP BY gh HAVING count(DISTINCT doc_id) >= 2),
@@ -1665,13 +1606,10 @@ object Dedup extends QueryPack {
 
   private val d19Sql = {
     val toks = TextPrims.tokens("text", DuckD)
-    def tok(i: String) = s"toks[CAST($i AS INT)]"
-    val gram = (1 to decontamN).map(i => tok(s"p+$i"))
-      .mkString(" || '_' || ")
     s"""WITH t AS (SELECT doc_id, $toks AS toks FROM documents),
        |g AS (
        |  SELECT DISTINCT doc_id,
-       |         ${TextPrims.polyhash(s"($gram)", DuckD)} AS gh
+       |         ${gramHash(decontamN)} AS gh
        |  FROM t, LATERAL unnest(range(0, len(toks) - ${decontamN - 1}))
        |    AS u(p)),
        |tr AS (SELECT doc_id, gh FROM g WHERE doc_id % 7 <> 0),

@@ -22,8 +22,7 @@ class DedupBucketLocalSpec extends SparkSpecBase {
       .distinct()
       .join(sh.select(col("doc_id").as("doc_a"), col("hs").as("hs_a")), "doc_a")
       .join(sh.select(col("doc_id").as("doc_b"), col("hs").as("hs_b")), "doc_b")
-      .withColumn("inter", graft.functions.TextKernels
-        .intersectCountUdf(col("hs_a"), col("hs_b")))
+      .withColumn("inter", size(array_intersect(col("hs_a"), col("hs_b"))))
       .withColumn("jac",
         col("inter").cast("double") /
         (expr("size(hs_a)") + expr("size(hs_b)") - col("inter")).cast("double"))

@@ -156,18 +156,27 @@ class DedupGuardSpec extends SparkSpecBase {
   /** `Dedup.signatures` derives `sig` from `hs`, so each document is
     * tokenized and shingled once: the optimized plan holds ONE UDF call
     * over the text column (Catalyst must not inline the shingle UDF into
-    * both columns, or push a filter on `hs` below its projection). */
+    * both columns, or push a filter on `hs` below its projection). d3
+    * selects the 12 values of `signatures`' `sig`, and must keep that. */
   test("signatures shingle each document once") {
+    import graft.operators.Dedup
     val docs = Tables.documents(spark, sfDir)
-    for (withLen <- Seq(false, true)) {
-      val plan = graft.operators.Dedup.signatures(docs, withLen)
-        .queryExecution.optimizedPlan
+    val frames = Seq(false, true).map(withLen =>
+        s"withLen=$withLen" -> Dedup.signatures(docs, withLen)) :+
+      ("d3" -> Dedup.queries("d3_minhash_sig")(spark, sfDir))
+    for ((name, df) <- frames) {
+      import org.apache.spark.sql.catalyst.expressions.{AttributeReference, ScalaUDF}
+      val plan = df.queryExecution.optimizedPlan
+      // UDFs whose argument IS the text column: d3's collapsed
+      // UDF(UDF(text)) is one shingling with the minhash over its output
       val textUdfs = plan.flatMap(_.expressions.flatMap(_.collect {
-        case u: org.apache.spark.sql.catalyst.expressions.ScalaUDF
-          if u.references.exists(_.name == "text") => u
+        case u: ScalaUDF if u.children.exists {
+          case a: AttributeReference => a.name == "text"
+          case _ => false
+        } => u
       }))
       assert(textUdfs.size == 1,
-        s"withLen=$withLen: ${textUdfs.size} text UDF calls in\n$plan")
+        s"$name: ${textUdfs.size} text UDF calls in\n$plan")
     }
   }
 

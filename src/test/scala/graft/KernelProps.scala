@@ -33,8 +33,7 @@ object KernelProps extends Properties("kernels") {
   property("sorted and hashed intersection counts agree with set semantics") =
     forAll(hashArr, hashArr) { (a, b) =>
       val want = a.toSet.intersect(b.toSet).size
-      TextKernels.sortedIntersectCount(a, b) == want &&
-      TextKernels.intersectCount(a, b) == want
+      TextKernels.sortedIntersectCount(a, b) == want
     }
 
   property("polyhash stays in [0, P) and matches the reference fold") =
@@ -42,6 +41,34 @@ object KernelProps extends Properties("kernels") {
       val h = TextKernels.polyhash(s)
       val want = s.foldLeft(0L)((acc, c) => (acc * 31 + c) % TextKernels.P)
       h == want && h >= 0 && h < TextKernels.P
+    }
+
+  // Texts mixing whitespace runs (a leading run yields a "" token) with
+  // words long enough that the 13-gram case sees real grams.
+  private val wordyText: Gen[String] =
+    Gen.choose(0, 60).flatMap(n => Gen.listOfN(n, Gen.oneOf(
+      Gen.oneOf(" ", "  ", "\t", "\n"),
+      Gen.oneOf("a", "bb", "x_y", "d\u00e9", "\u4e2d"), Gen.alphaStr)))
+      .map(_.mkString)
+
+  property("text hashers == polyhash of the string-built grams") =
+    forAll(wordyText, Gen.choose(1, 9), Gen.choose(1L, 300L)) {
+      (text, k, nBuckets) =>
+        import TextKernels.polyhash
+        val toks = text.split("\\s+")
+        def grams(n: Int): Seq[Long] = (0 to toks.length - n)
+          .map(i => polyhash(toks.slice(i, i + n).mkString("_")))
+        val chars = (0 to text.length - k)
+          .map(i => polyhash(text.substring(i, i + k)))
+        Seq(1, 2, 3, 13).forall(n =>
+          TextKernels.wordNgramHashesAll(text, n).toSeq == grams(n)) :|
+          "wordNgramHashesAll" &&
+        (TextKernels.wordShingleHashes(text).toSeq ==
+          grams(2).distinct.sorted) :| "wordShingleHashes" &&
+        (TextKernels.charShingleHashes(text, k).toSeq ==
+          chars.distinct.sorted) :| "charShingleHashes" &&
+        (TextKernels.ngramBuckets(text, nBuckets).toSeq ==
+          (grams(1) ++ grams(2)).map(_ % nBuckets)) :| "ngramBuckets"
     }
 
   property("simhash16 is a 16-bit value, invariant to token order") =

@@ -76,6 +76,28 @@ class CteQueriesSpec extends SparkSpecBase {
     assert(sub.count() == 0)
   }
 
+  test("fluxByMasterId honours the chip predicate (the reference ignores it)") {
+    def rows(preds: Map[String, Any]) =
+      CteQueries.fluxByMasterId(ph, fi, CteFixtures.T, 3, 3, preds).collect()
+        .map(r => (r.getAs[String]("imagename"), r.getAs[Int]("chip"),
+          r.getAs[Int]("master_id"), r.getAs[Double]("flux"))).toSeq
+    // star 3 sits at ypos 300: chip 1 reads 10 + 300·0.97, chip 2 10 + 300
+    assert(rows(Map.empty) ==
+      Seq(("iaaa01a1q", 1, 3, 301.0), ("iaaa01a2q", 2, 3, 310.0)))
+    assert(rows(Map("chip" -> 1)) == Seq(("iaaa01a1q", 1, 3, 301.0)))
+    assert(rows(Map("chip" -> 2)) == Seq(("iaaa01a2q", 2, 3, 310.0)))
+  }
+
+  test("fluxesByYpos keeps rows with ypix >= cut, inclusive") {
+    def ypixs(cut: Double, preds: Map[String, Any]) =
+      CteQueries.fluxesByYpos(ph, fi, CteFixtures.T, 3, cut, preds)
+        .collect().map(_.getAs[Double]("ypix")).sorted.toSeq
+    // stars sit at ypix 100·i, i = 1..8, on both chips of pair A
+    assert(ypixs(500.0, Map("chip" -> 1)) == Seq(500.0, 600.0, 700.0, 800.0))
+    assert(ypixs(500.5, Map("chip" -> 1)) == Seq(600.0, 700.0, 800.0))
+    assert(ypixs(800.0, Map.empty) == Seq(800.0, 800.0))
+  }
+
   test("globalBkgrd is head-1") {
     val g = CteQueries.globalBkgrd(fi, CteFixtures.T, "iaaa01a1q").collect()
     assert(g.length == 1 && g(0).getDouble(1) == 3.5)
