@@ -1,5 +1,7 @@
 package graft.cte
 
+import java.util.Locale
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -37,6 +39,13 @@ object CteIngest {
   private val chip1Codes180 =
     Seq("etq", "euq", "ewq", "f2q", "xsq", "xtq", "xvq", "y1q")
 
+  /** ASCII upper-case fold. FITS header values are ASCII by the standard,
+    * so this is `upper` on every legal input; unlike `upper`/`lower` it
+    * does not reach Spark's ICU case mapping, whose one-time class
+    * initialization costs over a second on the first call in a JVM. */
+  private def fold(c: Column): Column =
+    translate(c, "abcdefghijklmnopqrstuvwxyz", "ABCDEFGHIJKLMNOPQRSTUVWXYZ")
+
   /** Derive all fileinfo columns + the `gate` column ('ok' or the
     * reference's false_* drop reason, first matching rule wins). */
   def deriveFileinfo(headers: DataFrame, p: IngestParams): DataFrame = {
@@ -54,7 +63,7 @@ object CteIngest {
     // flash with a MISSING level keyword reads as 0 — the reference would
     // KeyError there; treating it as 0 routes the row through the pf gate
     // instead of crashing the ingest (or silently null-skipping the gate).
-    val flashOk = lower(col("flashsta")) === "successful"
+    val flashOk = fold(col("flashsta")) === "SUCCESSFUL"
     val flashEff =
       when(flashOk, coalesce(col("flashlvl").cast("int"), lit(0)))
         .otherwise(lit(0))
@@ -70,7 +79,8 @@ object CteIngest {
           .otherwise(lit(null).cast("int"))) // sub-dither, no usable chip
 
     val gate =
-      when(upper(col("chinject")) =!= lit(p.chargeInject.toUpperCase),
+      when(fold(col("chinject")) =!=
+          lit(p.chargeInject.toUpperCase(Locale.ROOT)),
         "false_chinject")                                       // :274-277
       .when(flashOk && flashEff =!= p.flashlvlDesired, "false_pf") // :283-285
       .when(!flashOk && lit(p.flashlvlDesired) =!= 0, "false_pf")  // :286-287
@@ -90,7 +100,8 @@ object CteIngest {
     val ctecorr = when(col("imagename").contains("flc.fits"), 1).otherwise(0)
     val exptimeI = col("exptime").cast("int")   // int() truncation (:417)
     val flashPad = lpad(flashEff.cast("string"), 3, "0") // '{0:03}' (:421)
-    val chinj2 = upper(substring(col("chinject"), 1, 2)) // [0:2] (:420)
+    val chinj2 = fold(substring(col("chinject"), 1, 2)) // [0:2] (:420)
+    val filter = fold(col("filter"))
     // dateobs = str(expstart)[0:5]: string truncation of a 5-digit MJD ==
     // floor (:308-310).
     val dateobs = floor(col("expstart")).cast("double")
@@ -121,7 +132,7 @@ object CteIngest {
         concat(lit("ngc"), col("targ_stripped")),
         col("proposid").cast("string"),
         dateobs.cast("int").cast("string"),
-        upper(col("filter")),
+        filter,
         exptimeI.cast("string"),
         concat(lit("ci"), chinj2),
         concat(lit("pf"), flashPad),
@@ -130,7 +141,7 @@ object CteIngest {
       current_date().as("ingest_date"),
       col("proposid").cast("string").as("proposid"),
       dateobs.as("dateobs"),
-      upper(col("filter")).as("filter"),
+      filter.as("filter"),
       exptimeI.cast("double").as("exptime"),
       chinj2.as("chinject"),
       col("flashlvl_eff").cast("double").as("flashlvl"),

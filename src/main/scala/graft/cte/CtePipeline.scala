@@ -1,12 +1,17 @@
 package graft.cte
 
+import java.io.{File, FileNotFoundException}
+import java.nio.charset.StandardCharsets
+import java.nio.file.Files
 import java.util.concurrent.{CompletionException, ConcurrentLinkedQueue, Executors}
 
+import scala.jdk.CollectionConverters._
+
 import graft.sources.{MergeWriter, TsvTables}
-import org.apache.spark.sql.{classic, DataFrame, SparkSession}
+import org.apache.spark.sql.{classic, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types._
 
 /** End-to-end pipeline — the reference's `run_uvis_external_cte.py`
   * lifecycle (SURVEY.md §3.1) as three composable stages over a parquet
@@ -29,6 +34,7 @@ import org.apache.spark.sql.types.StructType
   * results (targname, imagename_1, imagename_2, aperture, bin_lo, bin_hi).
   */
 class CtePipeline(spark: SparkSession, warehouse: String) {
+  import CtePipeline.{binKey, readArtifact}
 
   private def path(t: String) = s"$warehouse/$t"
 
@@ -91,8 +97,6 @@ class CtePipeline(spark: SparkSession, warehouse: String) {
     * (database_update.py:481-485). */
   def ingestIrafPhot(magPath: String, cooPath: String, targname: String,
                      imagename: String): Unit = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
     val mag = TsvTables.readDaophotMag(spark, magPath)
     val cooSchema = StructType(Seq(
       StructField("master_id", IntegerType),
@@ -161,28 +165,34 @@ class CtePipeline(spark: SparkSession, warehouse: String) {
     * flux grid (*fitvals.txt) evaluated at the latest combined epoch.
     *
     * Shared inputs are evaluated once: each warehouse table is read once,
-    * the epoch cohorts are collected once, and the fitted coefficients —
-    * one row per target — are collected once and feed both the coeffs
-    * and fitvals artifacts. The artifacts do not depend on each other
-    * (fitvals only on the collected coefficients), so their six job
-    * chains run at the same time ([[CtePipeline.concurrently]]). Each
-    * artifact is one file written by one task, which also puts its rows
-    * in key order ([[TsvTables.write]]). */
+    * the epoch cohorts are collected once (by the first step that needs
+    * them), and the fitted coefficients — one row per target — are
+    * collected once and feed both the coeffs and fitvals artifacts. The
+    * artifacts do not depend on each other (fitvals only on the collected
+    * coefficients), so their six job chains run at the same time
+    * ([[CtePipeline.concurrently]]); every job of a chain is described as
+    * `publish <targname>: <artifacts>`. Each artifact is one file written
+    * by one task, which also puts its rows in key order
+    * ([[TsvTables.write]]). */
   def publish(targname: String, outDir: String): Unit = {
     val results = table("results").filter(col("targname") === targname)
     val fileinfo = table("fileinfo")
-    val cohorts = CteAnalytics.epochCohorts(fileinfo, targname)
-    val rows = slopeRows(results, fileinfo, cohorts, targname)
+    lazy val cohorts = CteAnalytics.epochCohorts(fileinfo, targname)
+    lazy val rows = slopeRows(results, fileinfo, cohorts, targname)
     def write(artifact: String, df: DataFrame, orderBy: String*): Unit =
       TsvTables.write(df, s"$outDir/${targname}_$artifact", orderBy: _*)
+    def step(artifacts: String)(body: => Unit): () => Unit = () => {
+      spark.sparkContext.setJobDescription(s"publish $targname: $artifacts")
+      body
+    }
     CtePipeline.concurrently(spark, Seq(
       // the slopes file keeps computeSlopes' column order, not the table's
-      () => write("slopes",
+      step("slopes")(write("slopes",
         results.select("imagename_1", "imagename_2", "aperture", "bin_lo",
           "bin_hi", "slope", "slopestdev", "numpoints", "slopefile",
           "slopefile_path", "targname"),
-        "imagename_1", "imagename_2", "aperture", "bin_lo", "bin_hi"),
-      () => {
+        "imagename_1", "imagename_2", "aperture", "bin_lo", "bin_hi")),
+      step("coeffs, fitvals") {
         val fit = CteAnalytics.polyfitByTarget(rows)
         val coeffs = spark.createDataFrame(
           java.util.Arrays.asList(fit.collect(): _*), fit.schema)
@@ -195,58 +205,53 @@ class CtePipeline(spark: SparkSession, warehouse: String) {
         write("fitvals", CteAnalytics.fitvalsTable(coeffs, latestEpoch),
           "logflux")
       },
-      () => write("coeffs_history", CteAnalytics.polyfitHistory(rows),
-        "targname", "as_of_epoch"),
-      () => write("fluxratios",
+      step("coeffs_history")(write("coeffs_history",
+        CteAnalytics.polyfitHistory(rows), "targname", "as_of_epoch")),
+      step("fluxratios")(write("fluxratios",
         CteAnalytics.clippedRatios(table("phot"), fileinfo, targname),
         "imagename_1", "imagename_2", "aperture", "bin_lo", "bin_hi",
-        "master_id"),
-      () => write("cteVStime", CteAnalytics.cteVsTime(results, fileinfo),
-        "aperture", "mjd", "fluxbin"),
-      () => write("cteVSflashlvl",
+        "master_id")),
+      step("cteVStime")(write("cteVStime",
+        CteAnalytics.cteVsTime(results, fileinfo), "aperture", "mjd",
+        "fluxbin")),
+      step("cteVSflashlvl")(write("cteVSflashlvl",
         CteAnalytics.cteVsFlashlvl(results, fileinfo, targname, cohorts),
-        "aperture", "fluxbin", "epoch", "flashlvl", "imagename_1")))
+        "aperture", "fluxbin", "epoch", "flashlvl", "imagename_1"))))
   }
 
   /** Render the reference's flux-ratio-vs-ypos slope figures (S7): one
     * PNG per (pair, aperture) with a scatter per flux bin and its fitted
     * line, named `<stem>_slopes.png` like the original
-    * (uvis_external_cte_plots.py:247-289). The collected frame is PLOT
-    * data — the clipped ratio points and per-bin slopes the reference
-    * itself hands matplotlib — dimension-sized (stars per pair), never a
-    * raw table. The fit line re-derives the OLS intercept as
+    * (uvis_external_cte_plots.py:247-289).
+    *
+    * Publish first: the figures are drawn from the `_fluxratios` (the
+    * clipped ratio points) and `_slopes` (each bin's slope) artifacts that
+    * [[publish]] wrote into `outDir`, read on the driver with no Spark
+    * job; a missing one throws [[CtePipeline.UnpublishedArtifact]] before
+    * any PNG is written. The fit line re-derives the OLS intercept as
     * ȳ − slope·x̄ over the same clipped points the slope came from. */
   def publishPlots(targname: String, outDir: String): Unit = {
-    val pts = CteAnalytics
-      .clippedRatios(table("phot"), table("fileinfo"), targname)
-      .select("imagename_1", "imagename_2", "aperture", "bin_lo", "bin_hi",
-        "ypos", "fluxratio_sigclpd")
-      .collect()
-    val slopeOf = table("results").filter(col("targname") === targname)
-      .select("imagename_1", "imagename_2", "aperture", "bin_lo", "slope")
-      .collect()
-      .map(r => (r.getString(0), r.getString(1),
-        r.getAs[Number]("aperture").intValue, r.getAs[Number]("bin_lo").intValue)
-        -> r.getAs[Number]("slope").doubleValue)
+    val pts = readArtifact(s"$outDir/${targname}_fluxratios",
+      binKey.add("ypos", DoubleType).add("fluxratio_sigclpd", DoubleType))
+    val slopeOf = readArtifact(s"$outDir/${targname}_slopes",
+        binKey.add("slope", DoubleType))
+      .map(r => (r.getString(0), r.getString(1), r.getInt(2), r.getInt(3),
+        r.getInt(4)) -> r.getDouble(5))
       .toMap
-    pts.groupBy(r => (r.getString(0), r.getString(1),
-        r.getAs[Number]("aperture").intValue)).foreach {
+    pts.groupBy(r => (r.getString(0), r.getString(1), r.getInt(2))).foreach {
       case ((i1, i2, ap), rows) =>
-        val series = rows
-          .groupBy(r => (r.getAs[Number]("bin_lo").intValue,
-            r.getAs[Number]("bin_hi").intValue))
+        val series = rows.groupBy(r => (r.getInt(3), r.getInt(4)))
           .toSeq.sortBy(_._1)
           .map { case ((lo, hi), rs) =>
-            val xs = rs.map(_.getAs[Number]("ypos").doubleValue).toArray
-            val ys = rs.map(_.getAs[Number]("fluxratio_sigclpd").doubleValue)
-              .toArray
-            val fit = slopeOf.get((i1, i2, ap, lo)).map { m =>
+            val xs = rs.map(_.getDouble(5)).toArray
+            val ys = rs.map(_.getDouble(6)).toArray
+            val fit = slopeOf.get((i1, i2, ap, lo, hi)).map { m =>
               (ys.sum / ys.length - m * xs.sum / xs.length, m)
             }
             PlotSink.Series(s"$lo-$hi e-", xs, ys, fit)
           }
         PlotSink.scatterPng(
-          new java.io.File(outDir, Artifacts.slopePlotName(i1, i2, ap)),
+          new File(outDir, Artifacts.slopePlotName(i1, i2, ap)),
           targname, "Y-position_chip2 [pxl]", "Flux_chip1 / Flux_chip2",
           series)
     }
@@ -254,25 +259,25 @@ class CtePipeline(spark: SparkSession, warehouse: String) {
 
   /** The monitor's primary figure (uvis_external_cte_plots.py:312-421):
     * CTE slope vs MJD, one scatter series per tracked flux bin, per
-    * aperture — rendered from the same cteVStime product the text sink
-    * publishes. File per aperture: `<targname>_cteVStime_r<ap>.png`. */
+    * aperture. File per aperture: `<targname>_cteVStime_r<ap>.png`.
+    *
+    * Publish first: the figure is drawn from the `_cteVStime` artifact
+    * that [[publish]] wrote into `outDir`, read on the driver with no
+    * Spark job; a missing one throws [[CtePipeline.UnpublishedArtifact]]
+    * before any PNG is written. */
   def publishCteVsTimePlot(targname: String, outDir: String): Unit = {
-    val rows = CteAnalytics.cteVsTime(
-        table("results").filter(col("targname") === targname),
-        table("fileinfo"))
-      .select("aperture", "fluxbin", "mjd", "slope")
-      .collect()
-    rows.groupBy(_.getAs[Number]("aperture").intValue).foreach {
-      case (ap, rs) =>
-        val series = rs.groupBy(_.getString(1)).toSeq.sortBy(_._1)
-          .map { case (bin, b) =>
-            PlotSink.Series(s"$bin e-",
-              b.map(_.getAs[Number]("mjd").doubleValue),
-              b.map(_.getAs[Number]("slope").doubleValue))
-          }
-        PlotSink.scatterPng(
-          new java.io.File(outDir, s"${targname}_cteVStime_r$ap.png"),
-          targname, "MJD Date", "CTE loss [flux / 2048 pxl]", series)
+    val rows = readArtifact(s"$outDir/${targname}_cteVStime",
+      new StructType().add("aperture", IntegerType).add("fluxbin", StringType)
+        .add("mjd", DoubleType).add("slope", DoubleType))
+    rows.groupBy(_.getInt(0)).foreach { case (ap, rs) =>
+      val series = rs.groupBy(_.getString(1)).toSeq.sortBy(_._1)
+        .map { case (bin, b) =>
+          PlotSink.Series(s"$bin e-", b.map(_.getDouble(2)).toArray,
+            b.map(_.getDouble(3)).toArray)
+        }
+      PlotSink.scatterPng(
+        new File(outDir, s"${targname}_cteVStime_r$ap.png"),
+        targname, "MJD Date", "CTE loss [flux / 2048 pxl]", series)
     }
   }
 
@@ -287,6 +292,60 @@ class CtePipeline(spark: SparkSession, warehouse: String) {
 }
 
 object CtePipeline {
+
+  /** A published artifact that is not in its directory: the figures are
+    * drawn from what [[CtePipeline.publish]] wrote, so it runs first. */
+  final class UnpublishedArtifact(dir: String)
+      extends FileNotFoundException(s"no published artifact in $dir: " +
+        "publish first")
+
+  /** The (pair, aperture, flux bin) key columns of the per-bin artifacts. */
+  private val binKey = new StructType()
+    .add("imagename_1", StringType).add("imagename_2", StringType)
+    .add("aperture", IntegerType)
+    .add("bin_lo", IntegerType).add("bin_hi", IntegerType)
+
+  /** The rows of a published artifact — the one headered TSV `part-`
+    * file [[TsvTables.write]] wrote into `dir` — in file order, parsed on
+    * the driver with no Spark job. `schema` picks the columns by header
+    * name and types them as Spark's CSV reader would: an empty field is
+    * null and a number is read back from its `toString` form, so a
+    * double round-trips exactly. The writer quotes the empty string and
+    * any value that holds a tab, a quote or a line break; this reader
+    * takes no quoted field, so such a file, like a missing column or a
+    * ragged line, fails instead of being misread. */
+  private[cte] def readArtifact(dir: String, schema: StructType): Seq[Row] = {
+    def fail(why: String) =
+      throw new IllegalStateException(s"artifact $dir: $why")
+    val parts = Option(new File(dir).listFiles()).toSeq.flatten
+      .filter(_.getName.startsWith("part-"))
+    if (parts.isEmpty) throw new UnpublishedArtifact(dir)
+    if (parts.length > 1) fail(s"${parts.length} part files, not one")
+    val lines = Files.readAllLines(parts.head.toPath, StandardCharsets.UTF_8)
+      .asScala.toSeq
+    lines.find(_.contains('"')).foreach(l => fail(s"quoted field in: $l"))
+    val header = lines.headOption.getOrElse(fail("no header line"))
+      .split("\t", -1)
+    val at = schema.fields.map { f =>
+      val i = header.indexOf(f.name)
+      if (i < 0) fail(s"no column ${f.name} in ${header.mkString(", ")}")
+      i
+    }
+    lines.tail.map { line =>
+      val fields = line.split("\t", -1)
+      if (fields.length != header.length)
+        fail(s"${fields.length} fields under ${header.length} columns: $line")
+      Row.fromSeq(schema.fields.toSeq.zip(at).map { case (f, i) =>
+        val v = fields(i)
+        if (v.isEmpty) null else f.dataType match {
+          case StringType => v
+          case IntegerType => v.toInt
+          case DoubleType => v.toDouble
+          case t => fail(s"column ${f.name} of type $t is not read back")
+        }
+      })
+    }
+  }
 
   /** Run `steps` at the same time, one daemon thread each, and return
     * when all of them have finished. Every step runs under the caller's

@@ -1,7 +1,10 @@
 package graft.cte
 
+import java.util.Locale
+
 import graft.SparkSpecBase
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.expressions.{Lower, Upper}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -131,6 +134,43 @@ class CteIngestSpec extends SparkSpecBase {
     assert(b5.getAs[Double]("mnclip_bkgrd") == 0.0)
     assert(b5.getAs[String]("gate") == "ok")
     assert(b5.isNullAt(b5.fieldIndex("chip")))
+  }
+
+  test("header values fold case: lower-case headers give the upper-case rows") {
+    val p = CteIngest.IngestParams(flashlvlDesired = 12)
+    def rows(chinject: String, flashsta: String, filter: String) =
+      run(Seq(
+        hdr("/d/e1_flt.fits", chinject, flashsta, 12.0, filter = filter),
+        hdr("/d/e2_flt.fits", chinject, flashsta, 6.0, filter = filter,
+          postarg2 = 82.0)), p)
+    val upper = rows("NONE", "SUCCESSFUL", "F502N")
+    assert(upper("/d/e1_flt.fits").getAs[String]("gate") == "ok")
+    assert(rows("none", "Successful", "f502n") == upper)
+  }
+
+  test("the header case folds plan no Upper or Lower expression") {
+    val df = spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(hdr("/d/f1_flt.fits")), 1), schema)
+    val plan = CteIngest.deriveFileinfo(df, CteIngest.IngestParams())
+      .queryExecution.optimizedPlan
+    val folds = plan.flatMap(_.expressions.flatMap(_.collect {
+      case e: Upper => e
+      case e: Lower => e
+    }))
+    assert(folds.isEmpty, folds.mkString(", "))
+  }
+
+  test("the charge-injection parameter folds case in any default locale") {
+    // Turkish upper-cases 'i' to the dotted 'İ', which no header matches
+    val saved = Locale.getDefault
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(
+      Seq(hdr("/d/g1_flt.fits", chinject = "CONTINUOUS")), 1), schema)
+    val derived = try {
+      Locale.setDefault(Locale.forLanguageTag("tr-TR"))
+      CteIngest.deriveFileinfo(df,
+        CteIngest.IngestParams(chargeInject = "continuous"))
+    } finally Locale.setDefault(saved)
+    assert(derived.select("gate").head().getString(0) == "ok")
   }
 
   test("fileinfoRows keeps only survivors and drops the gate column") {

@@ -7,10 +7,11 @@ import java.util.concurrent.atomic.AtomicBoolean
 
 import scala.jdk.CollectionConverters._
 
-import graft.SparkSpecBase
+import graft.{Metered, SparkSpecBase}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, StringType, StructType}
 
 /** End-to-end: ingest from reference-dialect files → warehouse upserts →
   * slope analytics → published TSV artifacts; idempotent under re-runs. */
@@ -59,18 +60,15 @@ class CtePipelineSpec extends SparkSpecBase {
     assert(slopesTsv.count() == pipe.table("results").count())
     // the file's rows come in full-key order: the overlapping bins that
     // share a lower edge (500-1000/500-2000) are ordered by bin_hi too
-    val part = new java.io.File(s"$root/out/${CteFixtures.T}_slopes")
-      .listFiles().filter(_.getName.startsWith("part-")).head
-    val lines = Files.readAllLines(part.toPath).toArray(Array.empty[String])
-    val hdr = lines.head.split("\t")
-    def at(c: String) = hdr.indexOf(c)
-    val keys = lines.tail.map(_.split("\t", -1)).map { f =>
-      (f(at("imagename_1")), f(at("imagename_2")), f(at("aperture")).toDouble,
-        f(at("bin_lo")).toDouble, f(at("bin_hi")).toDouble)
-    }.toSeq
+    val keys = CtePipeline.readArtifact(s"$root/out/${CteFixtures.T}_slopes",
+        new StructType().add("imagename_1", StringType)
+          .add("imagename_2", StringType).add("aperture", IntegerType)
+          .add("bin_lo", IntegerType).add("bin_hi", IntegerType))
+      .map(r => (r.getString(0), r.getString(1), r.getInt(2), r.getInt(3),
+        r.getInt(4)))
     assert(keys.nonEmpty && keys == keys.sorted)
-    val first500 = keys.filter(_._4 == 500.0).take(2).map(_._5)
-    assert(first500 == Seq(1000.0, 2000.0))
+    val first500 = keys.filter(_._4 == 500).take(2).map(_._5)
+    assert(first500 == Seq(1000, 2000))
     val coeffs = spark.read.option("sep", "\t").option("header", "true")
       .csv(s"$root/out/${CteFixtures.T}_coeffs")
     assert(coeffs.columns.count(_.startsWith("c")) == 9)
@@ -78,24 +76,7 @@ class CtePipelineSpec extends SparkSpecBase {
 
     // every artifact holds exactly the rows CteAnalytics gives for it
     val T = CteFixtures.T
-    val results = pipe.table("results").filter(col("targname") === T)
-    val fileinfo = pipe.table("fileinfo")
-    val cohorts = CteAnalytics.epochCohorts(fileinfo, T)
-    val rows = pipe.slopeRows(results, fileinfo, cohorts, T)
-    val fit = CteAnalytics.polyfitByTarget(rows)
-    val latest = cohorts.collect().map(_.getAs[Double]("epoch")).max
-    for ((artifact, expected) <- Seq(
-        "slopes" -> results.select("imagename_1", "imagename_2", "aperture",
-          "bin_lo", "bin_hi", "slope", "slopestdev", "numpoints",
-          "slopefile", "slopefile_path", "targname"),
-        "coeffs" -> fit,
-        "fitvals" -> CteAnalytics.fitvalsTable(fit, latest),
-        "coeffs_history" -> CteAnalytics.polyfitHistory(rows),
-        "fluxratios" ->
-          CteAnalytics.clippedRatios(pipe.table("phot"), fileinfo, T),
-        "cteVStime" -> CteAnalytics.cteVsTime(results, fileinfo),
-        "cteVSflashlvl" ->
-          CteAnalytics.cteVsFlashlvl(results, fileinfo, T, cohorts))) {
+    for ((artifact, expected) <- expectedArtifacts(pipe, T)) {
       val back = spark.read.option("sep", "\t").option("header", "true")
         .schema(expected.schema).csv(s"$root/out/${T}_$artifact")
       assert(back.columns.toSeq == expected.columns.toSeq, artifact)
@@ -105,6 +86,75 @@ class CtePipelineSpec extends SparkSpecBase {
       got.zip(want).foreach { case (g, w) =>
         assert(sameRow(g, w), s"$artifact: $g != $w") }
     }
+  }
+
+  /** Each published artifact's name and the frame `CteAnalytics` gives
+    * for it, over the warehouse of `pipe`. */
+  private def expectedArtifacts(pipe: CtePipeline, T: String)
+      : Seq[(String, DataFrame)] = {
+    val results = pipe.table("results").filter(col("targname") === T)
+    val fileinfo = pipe.table("fileinfo")
+    val cohorts = CteAnalytics.epochCohorts(fileinfo, T)
+    val rows = pipe.slopeRows(results, fileinfo, cohorts, T)
+    val fit = CteAnalytics.polyfitByTarget(rows)
+    val latest = cohorts.collect().map(_.getAs[Double]("epoch")).max
+    Seq(
+      "slopes" -> results.select("imagename_1", "imagename_2", "aperture",
+        "bin_lo", "bin_hi", "slope", "slopestdev", "numpoints",
+        "slopefile", "slopefile_path", "targname"),
+      "coeffs" -> fit,
+      "fitvals" -> CteAnalytics.fitvalsTable(fit, latest),
+      "coeffs_history" -> CteAnalytics.polyfitHistory(rows),
+      "fluxratios" ->
+        CteAnalytics.clippedRatios(pipe.table("phot"), fileinfo, T),
+      "cteVStime" -> CteAnalytics.cteVsTime(results, fileinfo),
+      "cteVSflashlvl" ->
+        CteAnalytics.cteVsFlashlvl(results, fileinfo, T, cohorts))
+  }
+
+  /** An analyzed fixture warehouse, published once under a meter: the
+    * pipeline, the artifact directory and what the publish ran. */
+  private lazy val published: (CtePipeline, String, Metered) = {
+    val root = Files.createTempDirectory("graft_pipe_published").toString
+    val pipe = new CtePipeline(spark, s"$root/warehouse")
+    pipe.ingestFileinfo(CteFixtures.fileinfo(spark))
+    pipe.ingestPhot(CteFixtures.photLong(spark))
+    pipe.computeSlopes(CteFixtures.T)
+    val out = s"$root/out"
+    (pipe, out, Metered.of(spark)(pipe.publish(CteFixtures.T, out)))
+  }
+
+  test("publish: every job is described by its artifact step") {
+    val (_, _, metered) = published
+    val T = CteFixtures.T
+    val steps = Seq("slopes", "coeffs, fitvals", "coeffs_history",
+      "fluxratios", "cteVStime", "cteVSflashlvl").map(a => s"publish $T: $a")
+    assert(metered.jobs.nonEmpty)
+    assert(metered.jobs.forall(steps.contains), metered.jobs.distinct)
+    assert(metered.jobs.distinct.sorted == steps.sorted)
+  }
+
+  test("readArtifact: every artifact reads back as Spark's CSV reader does") {
+    val (pipe, out, _) = published
+    for ((artifact, expected) <- expectedArtifacts(pipe, CteFixtures.T)) {
+      val dir = s"$out/${CteFixtures.T}_$artifact"
+      val viaSpark = spark.read.option("sep", "\t").option("header", "true")
+        .schema(expected.schema).csv(dir).collect().toSeq
+      val read = CtePipeline.readArtifact(dir, expected.schema)
+      assert(read.nonEmpty, s"$artifact has no rows")
+      assert(read == viaSpark, artifact)
+    }
+  }
+
+  test("readArtifact: a quoted field or a missing artifact fails loudly") {
+    val root = Files.createTempDirectory("graft_artifact_read")
+    val schema = new StructType().add("a", StringType).add("b", DoubleType)
+    intercept[CtePipeline.UnpublishedArtifact](
+      CtePipeline.readArtifact(root.resolve("absent").toString, schema))
+    val dir = Files.createDirectory(root.resolve("quoted"))
+    Files.writeString(dir.resolve("part-00000.csv"), "a\tb\n\"x\ty\"\t1.0\n")
+    intercept[IllegalStateException](
+      CtePipeline.readArtifact(dir.toString, schema))
   }
 
   /** Rows in a fixed order: by their fields, doubles to 9 digits. */

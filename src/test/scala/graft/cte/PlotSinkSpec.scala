@@ -1,8 +1,11 @@
 package graft.cte
 
-import graft.SparkSpecBase
+import java.io.File
 import java.nio.file.Files
 import javax.imageio.ImageIO
+
+import graft.{Metered, SparkSpecBase}
+import org.apache.spark.sql.functions.col
 
 /** The S7 PNG sink: JDK-only rasterization must produce decodable,
   * deterministic figures, and the pipeline hook must emit them under the
@@ -40,14 +43,26 @@ class PlotSinkSpec extends SparkSpecBase {
       "two renders of the same figure differ byte-wise")
   }
 
-  test("publishPlots emits one reference-named PNG per populated pair/aperture") {
+  /** An analyzed and published fixture: the pipeline and its artifact
+    * directory. */
+  private lazy val published: (CtePipeline, String) = {
     val root = Files.createTempDirectory("graft_plotpipe").toString
     val pipe = new CtePipeline(spark, s"$root/warehouse")
     pipe.ingestFileinfo(CteFixtures.fileinfo(spark))
     pipe.ingestPhot(CteFixtures.photLong(spark))
     pipe.computeSlopes(CteFixtures.T)
-    pipe.publishPlots(CteFixtures.T, s"$root/out")
-    val pngs = new java.io.File(s"$root/out").listFiles()
+    pipe.publish(CteFixtures.T, s"$root/out")
+    (pipe, s"$root/out")
+  }
+
+  private def pngsIn(dir: String): Seq[File] =
+    Option(new File(dir).listFiles()).toSeq.flatten
+      .filter(_.getName.endsWith(".png"))
+
+  test("publishPlots emits one reference-named PNG per populated pair/aperture") {
+    val (pipe, out) = published
+    pipe.publishPlots(CteFixtures.T, out)
+    val pngs = new File(out).listFiles()
       .filter(_.getName.endsWith("_slopes.png"))
     assert(pngs.nonEmpty, "no slope PNGs were rendered")
     // naming follows the reference scheme: <im1>_<im2>_r<ap>_slopes.png
@@ -60,10 +75,81 @@ class PlotSinkSpec extends SparkSpecBase {
     }
 
     // the monitor's primary figure: slope vs time per aperture
-    pipe.publishCteVsTimePlot(CteFixtures.T, s"$root/out")
-    val timePngs = new java.io.File(s"$root/out").listFiles()
+    pipe.publishCteVsTimePlot(CteFixtures.T, out)
+    val timePngs = new File(out).listFiles()
       .filter(_.getName.matches(s"${CteFixtures.T}_cteVStime_r\\d+\\.png"))
     assert(timePngs.nonEmpty, "no cteVStime PNGs were rendered")
     timePngs.foreach(f => assert(ImageIO.read(f) != null))
+  }
+
+  test("the figures need the published artifacts and write no PNG without them") {
+    val (pipe, out) = published
+    val bare = Files.createTempDirectory("graft_plot_unpublished").toString
+    intercept[CtePipeline.UnpublishedArtifact](
+      pipe.publishPlots(CteFixtures.T, bare))
+    intercept[CtePipeline.UnpublishedArtifact](
+      pipe.publishCteVsTimePlot(CteFixtures.T, bare))
+    assert(pngsIn(bare).isEmpty)
+    // the points alone are not enough: the slopes artifact is read first
+    val partial = Files.createTempDirectory("graft_plot_partial")
+    val ratios = s"${CteFixtures.T}_fluxratios"
+    val copy = Files.createDirectory(partial.resolve(ratios))
+    new File(s"$out/$ratios").listFiles().foreach(f =>
+      Files.copy(f.toPath, copy.resolve(f.getName)))
+    val e = intercept[CtePipeline.UnpublishedArtifact](
+      pipe.publishPlots(CteFixtures.T, partial.toString))
+    assert(e.getMessage.contains("publish first"))
+    assert(pngsIn(partial.toString).isEmpty)
+  }
+
+  test("the figures run no Spark job") {
+    val (pipe, out) = published
+    val metered = Metered.of(spark) {
+      pipe.publishPlots(CteFixtures.T, out)
+      pipe.publishCteVsTimePlot(CteFixtures.T, out)
+    }
+    assert(metered.jobs.isEmpty, metered.jobs)
+  }
+
+  test("each slope PNG is the figure of the clipped ratios and stored slopes") {
+    val (pipe, out) = published
+    val T = CteFixtures.T
+    pipe.publishPlots(T, out)
+    // the reference figures, from the analysis itself: the clipped points
+    // in the artifact's key order, each bin's slope from `results`
+    val pts = CteAnalytics
+      .clippedRatios(pipe.table("phot"), pipe.table("fileinfo"), T)
+      .orderBy("imagename_1", "imagename_2", "aperture", "bin_lo", "bin_hi",
+        "master_id")
+      .select("imagename_1", "imagename_2", "aperture", "bin_lo", "bin_hi",
+        "ypos", "fluxratio_sigclpd")
+      .collect().toSeq
+    val slopes = pipe.table("results").filter(col("targname") === T)
+      .select("imagename_1", "imagename_2", "aperture", "bin_lo", "bin_hi",
+        "slope")
+      .collect()
+      .map(r => (r.getString(0), r.getString(1), r.getInt(2), r.getInt(3),
+        r.getInt(4)) -> r.getDouble(5))
+      .toMap
+    val ref = Files.createTempDirectory("graft_plot_ref").toFile
+    val figures = pts.groupBy(r => (r.getString(0), r.getString(1), r.getInt(2)))
+    assert(figures.nonEmpty)
+    for (((i1, i2, ap), rows) <- figures) {
+      val series = rows.groupBy(r => (r.getInt(3), r.getInt(4))).toSeq
+        .sortBy(_._1).map { case ((lo, hi), rs) =>
+          val xs = rs.map(_.getDouble(5)).toArray
+          val ys = rs.map(_.getDouble(6)).toArray
+          val fit = slopes.get((i1, i2, ap, lo, hi)).map(m =>
+            (ys.sum / ys.length - m * xs.sum / xs.length, m))
+          PlotSink.Series(s"$lo-$hi e-", xs, ys, fit)
+        }
+      val name = Artifacts.slopePlotName(i1, i2, ap)
+      PlotSink.scatterPng(new File(ref, name), T, "Y-position_chip2 [pxl]",
+        "Flux_chip1 / Flux_chip2", series)
+      assert(java.util.Arrays.equals(
+        Files.readAllBytes(new File(ref, name).toPath),
+        Files.readAllBytes(new File(out, name).toPath)), name)
+    }
+    assert(pngsIn(out).count(_.getName.endsWith("_slopes.png")) == figures.size)
   }
 }
